@@ -40,6 +40,22 @@ object Memo {
     }
   }
 
+  /** [[cached]]'s check → build → putIfAbsent order for a driver-side
+    * model held in the caller's own map (a merge table, a sketch):
+    * the build runs outside any map lock, so a Spark job inside it
+    * never blocks other keys' readers; a racing duplicate build of an
+    * immutable value is discarded.
+    */
+  def getOrBuild[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V], k: K)(build: => V): V = {
+    val existing = m.get(k)
+    if (existing != null) existing
+    else {
+      val fresh = build
+      val prev = m.putIfAbsent(k, fresh)
+      if (prev != null) prev else fresh
+    }
+  }
+
   /** Unpersist + drop every memo held for a session (test hygiene). */
   def clear(spark: SparkSession): Unit = {
     val it = m.entrySet().iterator()

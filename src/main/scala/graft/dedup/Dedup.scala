@@ -1109,7 +1109,7 @@ object Dedup {
     // aggregate + driver action) on every invocation; pin one per
     // (session, dataset). The membership probes, the confirm join and
     // the keep-first window stay live.
-    val sketch = bloomSketchMemo.computeIfAbsent((spark, dir), _ => corpus
+    val sketch = graft.Memo.getOrBuild(bloomSketchMemo, (spark, dir))(corpus
       .agg(BloomFuncs.bloomAgg(spark, col("ch"), 100000L, 800000L).as("bf"))
       .head.getAs[Array[Byte]](0))
     val survivors = batch

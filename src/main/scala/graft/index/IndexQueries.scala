@@ -118,31 +118,31 @@ object IndexQueries {
 
   /** A2 */
   def matchEq(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(LabelMatcher("typ", Eql, "click"))))
+    series(idx(spark, dir).resolveMatchers(Seq(LabelMatcher("typ", Eql, "click"))))
 
   /** A3 */
   def matchNeq(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(
+    series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("typ", Eql, "click"), LabelMatcher("usr", Neq, "7"))))
 
   /** A4: lexicographic value range (labels are strings in the reference). */
   def matchRange(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(
+    series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("usr", Gte, "2"), LabelMatcher("usr", Lte, "5"))))
 
   /** A5: anchored regex. */
   def matchRegex(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(
+    series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("typ", EqlRegex, "(click|view)"))))
 
   /** A6: negated regex subtracting from an inclusive set. */
   def matchNregex(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(
+    series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("usr", Eql, "3"), LabelMatcher("typ", NeqRegex, "(error|signup)"))))
 
   /** A7: conjunction mixing =, range and != */
   def matchConj(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchersMemo(Seq(
+    series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("typ", Eql, "purchase"),
       LabelMatcher("usr", Gte, "10"),
       LabelMatcher("usr", Neq, "12"))))
@@ -222,7 +222,7 @@ object IndexQueries {
     }
 
   def matchJsonLabel(spark: SparkSession, dir: String): DataFrame =
-    jsonIdx(spark, dir).resolveMatchersMemo(Seq(
+    jsonIdx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("typ", Eql, "view"),
       LabelMatcher("kb", Eql, "3"),
       LabelMatcher("usr", Lte, "5")))
@@ -514,7 +514,7 @@ object IndexQueries {
     * (PromQL's alerting primitive for missing series). Always one row.
     */
   def absent(spark: SparkSession, dir: String): DataFrame =
-    idx(spark, dir).resolveMatchersMemo(Seq(LabelMatcher("typ", Eql, "nonexistent")))
+    idx(spark, dir).resolveMatchers(Seq(LabelMatcher("typ", Eql, "nonexistent")))
       .agg(count(lit(1)).as("__n"))
       .select(when(col("__n") === 0, 1).otherwise(0).as("absent"))
 

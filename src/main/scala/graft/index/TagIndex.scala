@@ -38,27 +38,29 @@ final case class LabelMatcher(name: String, op: MatchOp, value: String) {
     * For exclusive ops this is the predicate of the *positive* form;
     * the caller subtracts.
     */
-  def indexPredicate: Column = {
-    val v = col("label_value")
-    val positive = op match {
-      case Eql | Neq => v === value
-      case Lss => v < value
-      case Gtr => v > value
-      case Lte => v <= value
-      case Gte => v >= value
-      case EqlRegex | NeqRegex =>
-        // rlike cannot reach a parquet scan, but a derived literal
-        // prefix can (StringStartsWith pushes into row-group stats on
-        // the IndexStore path — the Spark analog of the reference's
-        // tree descent by value prefix). Conjoining it is semantics-
-        // preserving: every match of ^(?:prefix...)$ starts with the
-        // prefix, and LabelMatcher.literalPrefix is conservative
-        // (empty on alternation, quantified tails dropped).
-        val base = v.rlike("^(?:" + value + ")$")
-        val p = LabelMatcher.literalPrefix(value)
-        if (p.nonEmpty) v.startsWith(p) && base else base
-    }
-    col("label_name") === name && positive
+  def indexPredicate: Column =
+    col("label_name") === name && valuePredicate(col("label_value"))
+
+  /** The positive form of this matcher over a string label value `v`
+    * (null when `v` is null, so callers coalesce an absent label).
+    */
+  def valuePredicate(v: Column): Column = op match {
+    case Eql | Neq => v === value
+    case Lss => v < value
+    case Gtr => v > value
+    case Lte => v <= value
+    case Gte => v >= value
+    case EqlRegex | NeqRegex =>
+      // rlike cannot reach a parquet scan, but a derived literal
+      // prefix can (StringStartsWith pushes into row-group stats on
+      // the IndexStore path — the Spark analog of the reference's
+      // tree descent by value prefix). Conjoining it is semantics-
+      // preserving: every match of ^(?:prefix...)$ starts with the
+      // prefix, and LabelMatcher.literalPrefix is conservative
+      // (empty on alternation, quantified tails dropped).
+      val base = v.rlike("^(?:" + value + ")$")
+      val p = LabelMatcher.literalPrefix(value)
+      if (p.nonEmpty) v.startsWith(p) && base else base
   }
 }
 
@@ -84,12 +86,14 @@ object LabelMatcher {
   *
   * Reference model (/root/reference/include/tagtree/index/mem_index.h):
   * per (label_name, label_value) a Roaring posting list of TSIDs plus
-  * [min_timestamp, max_timestamp]. Here the posting list is a DataFrame
-  * (label_name, label_value, tsid, min_ts, max_ts, n_samples) — at
-  * 100 TB this derived table is ∝ #series (millions of rows, not
-  * trillions of samples), partitioned by label_name and broadcastable
-  * into the sample scan, which is the Spark analog of the reference's
-  * full-cache mode (index_server.h:26).
+  * [min_timestamp, max_timestamp]. Here the index is the series
+  * catalog — one row per series with its labels as columns, its tsid
+  * and [min_ts, max_ts] — persisted in memory: at 100 TB it is
+  * ∝ #series (millions of rows, not trillions of samples), the Spark
+  * analog of the reference's full-cache mode (index_server.h:26).
+  * Matcher resolution is one filter over it; the posting-list view
+  * (label_name, label_value, tsid, …) is derived from it on demand
+  * for the index surfaces and for flushes into an [[IndexStore]].
   *
   * Series identity: xxhash64 over the canonical label encoding —
   * the Spark analog of add_series' TSID assignment
@@ -97,15 +101,14 @@ object LabelMatcher {
   * so a 1000-executor ingest needs no id counter.
   */
 class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
-    preCatalog: Option[DataFrame] = None,
-    preInverted: Option[DataFrame] = None) {
+    preCatalog: Option[DataFrame] = None) {
 
   /** Set by [[TagIndex.memo]] for instances that are themselves
-    * memoized per (session, dir, label set): the gate for the
-    * posting-resolution memo below. A fresh per-call instance (e.g. a
-    * recorded-rule StoreTagIndex) stays untagged, so memoizing on it
-    * could only leak one cache entry per invocation — untagged
-    * indexes always resolve live.
+    * memoized per (session, dir, label set), unique per instance: the
+    * key for frames memoized over this index (the alert grid). A fresh
+    * per-call instance (e.g. a recorded-rule StoreTagIndex) stays
+    * untagged, so memoizing on it could only leak one cache entry per
+    * invocation — callers skip their memo for untagged indexes.
     */
   private[graft] var memoTag: Option[String] = None
 
@@ -115,87 +118,67 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
       xxhash64(concat_ws("\u0000", labelNames.map(col): _*)))
   }
 
-  /** One row per series: labels, tsid, time bounds, sample count.
-    * Persisted — the reference's full-cache mode (index_server.h:26):
-    * the index lives in memory, only sample scans hit storage. Size is
-    * ∝ #series, so this holds on a cluster (executors cache partitions).
-    */
-  lazy val seriesCatalog: DataFrame =
+  /** One row per series: labels, tsid, time bounds, sample count. */
+  private lazy val catalogPlan: DataFrame =
     preCatalog.getOrElse(
       labeled.groupBy(col("tsid") +: labelNames.map(col): _*)
         .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
           count(lit(1)).as("n_samples")))
-      .persist()
 
-  /** Inverted index: (label_name, label_value, tsid, min_ts, max_ts).
-    * Persisted like the catalog: resolveMatchers references it once per
-    * matcher, and without the cache each branch would re-run the whole
-    * catalog derivation.
+  /** [[catalogPlan]], persisted — the reference's full-cache mode
+    * (index_server.h:26): the index lives in memory, only sample scans
+    * hit storage. Size is ∝ #series, so this holds on a cluster
+    * (executors cache partitions).
     */
-  lazy val invertedIndex: DataFrame = preInverted.getOrElse {
+  lazy val seriesCatalog: DataFrame = catalogPlan.persist()
+
+  /** Inverted index: (label_name, label_value, tsid, min_ts, max_ts,
+    * n_samples), one row per (series, label) — null values included
+    * for labels a series does not carry. A view over the catalog plan,
+    * never persisted itself: where the catalog is cached, Spark's
+    * CacheManager substitutes the cache into this plan; a single-shot
+    * index (a flush into an [[IndexStore]]) derives it once and pins
+    * nothing.
+    */
+  lazy val invertedIndex: DataFrame = {
     val kvs = labelNames.flatMap(n => Seq(lit(n), col(n).cast("string")))
-    seriesCatalog
+    catalogPlan
       .select(col("tsid"), col("min_ts"), col("max_ts"), col("n_samples"),
         explode(map(kvs: _*)).as(Seq("label_name", "label_value")))
       .select("label_name", "label_value", "tsid", "min_ts", "max_ts", "n_samples")
-  }.persist()
+  }
 
   /** resolve_label_matchers(matchers, start, end) → series.
     *
-    * Inclusive matchers each select a posting set from the inverted
-    * index; the conjunction is a single shuffle (union + groupBy tsid
-    * HAVING count = k) rather than k-1 joins. Exclusive matchers are
-    * applied as left_anti — the reference's bitmap and-not
-    * (index_server.cpp:94-140). Time pruning uses the per-series
-    * [min_ts, max_ts] exactly like index_tree.cpp:92-110.
+    * One filter over the persisted catalog — no union, shuffle or join.
+    * An inclusive matcher keeps the series whose label value satisfies
+    * it (a null value, i.e. a label the series does not carry, does
+    * not); an exclusive matcher keeps the rest — the reference's
+    * posting intersection and bitmap and-not (index_server.cpp:94-140)
+    * as a conjunction of per-row predicates. A label the index does
+    * not carry at all matches no series inclusively and every series
+    * exclusively. Time pruning uses the per-series [min_ts, max_ts]
+    * exactly like index_tree.cpp:92-110. Same semantics as
+    * [[TagIndex.resolvePostings]] over [[invertedIndex]].
     *
     * Returns the series catalog rows that match.
     */
   def resolveMatchers(matchers: Seq[LabelMatcher],
       startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame = {
-    val resolved = TagIndex.resolvePostings(invertedIndex, matchers, startTs, endTs)
-    // Postings → series. At scale `resolved` is small; broadcast it.
-    seriesCatalog.join(resolved, Seq("tsid"), "left_semi")
-  }
-
-  /** Memoized tsid resolution (round 15, optimization): the inverted-
-    * index union + conjunction aggregate re-ran per QUERY INVOCATION
-    * even though this index is immutable — the reference keeps a warm
-    * posting cache for exactly this reason (index_server.h full-cache
-    * mode). The memo pins the RESOLVED tsid frame (∝ matched series,
-    * tiny) per (index, matcher set, time window); resolution semantics
-    * are untouched because the build goes through the VIRTUAL
-    * [[resolveMatchers]] (a [[StoreTagIndex]] still resolves from its
-    * materialized store). Only memoized index instances participate
-    * (see [[memoTag]]); value-based keys mean a different matcher set
-    * or window never reuses a stale frame.
-    */
-  def resolveTsidsMemo(matchers: Seq[LabelMatcher],
-      loUs: Option[Long] = None, hiUs: Option[Long] = None): DataFrame = {
-    def live = resolveMatchers(matchers,
-      loUs.map(u => timestamp_micros(lit(u))),
-      hiUs.map(u => timestamp_micros(lit(u)))).select("tsid")
-    memoTag match {
-      case Some(tag) => graft.Memo.cached(labeled.sparkSession,
-        s"tagindex.tsids:$tag:${matchers.mkString("|")}:" +
-          s"${loUs.getOrElse("-")}:${hiUs.getOrElse("-")}")(live)
-      case None => live
+    require(matchers.nonEmpty, "need at least one matcher")
+    val byMatcher = matchers.map { m =>
+      val hit =
+        if (labelNames.contains(m.name))
+          coalesce(m.valuePredicate(col(m.name).cast("string")), lit(false))
+        else lit(false)
+      if (m.inclusive) hit else !hit
     }
+    val inWindow = (startTs, endTs) match {
+      case (Some(s), Some(e)) => Seq(col("max_ts") >= s && col("min_ts") <= e)
+      case _ => Nil
+    }
+    seriesCatalog.filter((byMatcher ++ inWindow).reduce(_ && _))
   }
-
-  /** [[resolveMatchers]] riding the [[resolveTsidsMemo]] posting cache:
-    * the catalog semi-join stays live (one broadcast stage), only the
-    * conjunction work is pinned. Series-returning callers on the
-    * gated-query path use this; semantics ≡ resolveMatchers.
-    */
-  def resolveMatchersMemo(matchers: Seq[LabelMatcher],
-      loUs: Option[Long] = None, hiUs: Option[Long] = None): DataFrame =
-    if (memoTag.isEmpty)
-      resolveMatchers(matchers,
-        loUs.map(u => timestamp_micros(lit(u))),
-        hiUs.map(u => timestamp_micros(lit(u))))
-    else seriesCatalog.join(resolveTsidsMemo(matchers, loUs, hiUs),
-      Seq("tsid"), "left_semi")
 
   /** label_values(name) → distinct values (index_server.h:44). */
   def labelValues(name: String): DataFrame =
@@ -208,20 +191,20 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
     * series only). Cost ∝ matched series, never samples.
     */
   def labelValues(name: String, matchers: Seq[LabelMatcher]): DataFrame =
-    resolveMatchersMemo(matchers)
+    resolveMatchers(matchers)
       .select(col(name).cast("string").as("value")).distinct()
 
   /** label_names(matchers...) — the constrained /api/v1/labels form:
     * the names carrying a non-null value on at least one MATCHED
     * series (a label a series does not define is a null catalog
     * column — the n-label generalization A14 introduced). One plan,
-    * cost ∝ matched series: resolve postings, then explode the
+    * cost ∝ matched series: resolve the matchers, then explode the
     * per-series defined-name set and distinct.
     */
   def labelNames(matchers: Seq[LabelMatcher]): DataFrame = {
     val defined = array(labelNames.map(n =>
       when(col(n).isNotNull, lit(n))): _*)
-    resolveMatchersMemo(matchers)
+    resolveMatchers(matchers)
       .select(explode(defined).as("label_name"))
       .filter(col("label_name").isNotNull)
       .distinct()
@@ -229,7 +212,7 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
 
   /** exists(labels): exact label-set lookup (index_server.h:36). */
   def exists(labels: Map[String, String]): DataFrame =
-    resolveMatchersMemo(labels.toSeq.map { case (n, v) => LabelMatcher(n, MatchOp.Eql, v) })
+    resolveMatchers(labels.toSeq.map { case (n, v) => LabelMatcher(n, MatchOp.Eql, v) })
 
   /** select(matchers, mint, maxt): resolve postings then fetch samples
     * in range (storage.h Querier.select + adapters/prom/querier.cpp).
@@ -269,8 +252,11 @@ class StoreTagIndex(samples: DataFrame, labelNames: Seq[String],
 object TagIndex {
 
   /** Matcher resolution against any inverted-index DataFrame
-    * (label_name, label_value, tsid, min_ts, max_ts) — in-memory
-    * derived or materialized (IndexStore) — returning matching tsids.
+    * (label_name, label_value, tsid, min_ts, max_ts) — materialized
+    * (IndexStore) or derived — returning matching tsids. The path for
+    * callers that hold postings and no catalog ([[IndexStore]],
+    * [[StoreTagIndex]]); an in-memory [[TagIndex]] resolves as one
+    * catalog filter instead, with the same semantics.
     *
     * Inclusive matchers each select a posting set; the conjunction is
     * a single shuffle (union tagged by matcher id + groupBy tsid
@@ -312,36 +298,40 @@ object TagIndex {
         Seq("tsid"), "left_anti")
     }
   }
+
   /** The events table as a TSDB: series = {usr, typ}, samples (ts, value).
     * user_id is carried as a *string* label — tagtree labels are
     * strings and its value ordering (LSS/GTR/…) is lexicographic.
     */
   // one index per (session, data dir, label set) — repeated queries
-  // reuse the persisted catalog/index instead of re-deriving them from
+  // reuse the persisted catalog instead of re-deriving it from
   // raw samples (the reference keeps exactly one warm MemIndex per store)
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), TagIndex]()
 
+  private val memoTags = new java.util.concurrent.atomic.AtomicLong()
+
   /** Memoized index construction; `tag` distinguishes label models.
-    * Stamps [[TagIndex.memoTag]] so the per-matcher posting memo knows
-    * this instance is session-pinned (one instance per key → value-
-    * keyed posting caches can never go stale or leak per call).
+    * Stamps [[TagIndex.memoTag]] so frames memoized over this index
+    * know it is session-pinned. The stamp is unique per instance: an
+    * index rebuilt after [[clearMemos]] (perhaps over rewritten data at
+    * the same dir) never reuses an evicted instance's memo keys.
     */
   def memo(spark: SparkSession, dir: String, tag: String)(build: => TagIndex): TagIndex =
     cache.computeIfAbsent((spark, dir, tag), _ => {
       val i = build
-      i.memoTag = Some(s"$dir#$tag")
+      i.memoTag = Some(s"$dir#$tag#${memoTags.incrementAndGet()}")
       i
     })
 
   /** Disk-warm memoized construction: the first JVM to build this
-    * index persists its catalog + inverted index as parquet under a
-    * dataset-fingerprinted directory; every later session LOADS the two
-    * small tables (∝ #series) instead of re-deriving them from the raw
+    * index persists its series catalog as parquet under a
+    * dataset-fingerprinted directory; every later session LOADS that
+    * small table (∝ #series) instead of re-deriving it from the raw
     * samples — the reference's warm full-cache serving mode
     * (index_server.h:26) surviving process restarts, so a fresh
     * session's first matcher query skips the 3-4 s catalog groupBy.
-    * `_done` commits the pair atomically-enough: a crash mid-write
+    * `_done` commits the write: a crash mid-write
     * leaves no marker and the next session rebuilds; a stale dataset
     * changes the fingerprint and falls out naturally. Failures to
     * persist degrade to the in-memory path, never to an error.
@@ -355,19 +345,16 @@ object TagIndex {
         s"graft_warmidx_${fp}_$safe")
       val done = new java.io.File(base, "_done")
       val catP = new java.io.File(base, "catalog").toString
-      val invP = new java.io.File(base, "inverted").toString
       if (done.exists())
-        new TagIndex(samplesBuild, labels,
-          Some(spark.read.parquet(catP)), Some(spark.read.parquet(invP)))
+        new TagIndex(samplesBuild, labels, Some(spark.read.parquet(catP)))
       else {
         val i = new TagIndex(samplesBuild, labels)
         try {
-          // single-file layout: the tables are ∝ #series (MBs), and a
+          // single-file layout: the table is ∝ #series (MBs), and a
           // 32-file shuffle layout costs 32 footer reads + 32 reader
           // inits on every warm load — the exact latency this cache
           // exists to remove (at huge #series, bump to a few files)
           i.seriesCatalog.coalesce(1).write.mode("overwrite").parquet(catP)
-          i.invertedIndex.coalesce(1).write.mode("overwrite").parquet(invP)
           done.createNewFile()
         } catch {
           case e: Throwable =>
@@ -377,14 +364,11 @@ object TagIndex {
       }
     }
 
-  /** Evict all memoized indexes (unpersisting their cached tables) —
+  /** Evict all memoized indexes (unpersisting their cached catalogs) —
     * for long-lived services; the memos otherwise live for the JVM.
     */
   def clearMemos(): Unit = {
-    cache.values().forEach { i =>
-      i.seriesCatalog.unpersist(false)
-      i.invertedIndex.unpersist(false)
-    }
+    cache.values().forEach(_.seriesCatalog.unpersist(false))
     cache.clear()
   }
 

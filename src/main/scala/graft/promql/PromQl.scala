@@ -683,11 +683,7 @@ object PromQl {
         val atUs = at * 1000000L
         val lo = timestamp_micros(lit(atUs - offUs - spanUs))
         val hi = timestamp_micros(lit(atUs - offUs))
-        // round 15 (optimization): posting resolution rides the
-        // per-(index, matchers, window) memo — the conjunction
-        // union+aggregate ran per query invocation before (guide §1.2)
-        val tsids = idx.resolveTsidsMemo(sel.matchers,
-          Some(atUs - offUs - spanUs), Some(atUs - offUs))
+        val tsids = idx.resolveMatchers(sel.matchers, Some(lo), Some(hi)).select("tsid")
         Tables.tsBetween(idx.labeled, lo, hi)
           .join(broadcast(tsids), Seq("tsid"), "left_semi")
           .withColumn("__i", explode(sequence(lit(0L), lit((grid.n - 1).toLong))))
@@ -696,11 +692,7 @@ object PromQl {
       case None =>
         val lo = timestamp_micros(lit(grid.startUs - offUs - spanUs))
         val hi = timestamp_micros(lit(grid.startUs + (grid.n - 1).toLong * grid.stepUs - offUs))
-        // round 15 (optimization): memoized posting resolution — see
-        // the `@` branch above
-        val tsids = idx.resolveTsidsMemo(sel.matchers,
-          Some(grid.startUs - offUs - spanUs),
-          Some(grid.startUs + (grid.n - 1).toLong * grid.stepUs - offUs))
+        val tsids = idx.resolveMatchers(sel.matchers, Some(lo), Some(hi)).select("tsid")
         val base = Tables.tsBetween(idx.labeled, lo, hi)
           .join(broadcast(tsids), Seq("tsid"), "left_semi")
         // grid indices containing this sample: ceil((ts'-start)/step) ≤ i ≤

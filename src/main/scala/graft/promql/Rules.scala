@@ -62,16 +62,17 @@ object Rules {
     // (guide §1.2): cache the small frame, keep the window math live.
     // Key excludes forSec/keepFiringSec/alertName — the frame depends
     // on none of them, so promql_alerts and promql_alerts_keep (same
-    // rule expr/grid) share one evaluation. idx identity keys the
-    // dataset: TagIndex.forEvents is itself memoized per (session,
-    // dir), and evalGroup's chained entry indexes are fresh instances
-    // behind a memoized group run — no staleness, no per-call leak.
-    val v = graft.Memo.cached(idx.labeled.sparkSession,
-      s"rules.alertgrid:${System.identityHashCode(idx)}:$expr:$start:" +
-        s"$end:$stepSec:$lookbackSec:$limit") {
-      capSeries(
-        PromQl.evalRangeIndexed(idx, expr, start, end, stepSec, lookbackSec),
-        limit)
+    // rule expr/grid) share one evaluation. The index's memo tag keys
+    // the dataset: it is a value unique to one memoized index instance
+    // (TagIndex.memo), so no other dataset's grid can ever be served.
+    // Untagged indexes (evalGroup's chained entry indexes, fresh per
+    // call) evaluate live — memoizing on them would leak per call.
+    def grid = capSeries(
+      PromQl.evalRangeIndexed(idx, expr, start, end, stepSec, lookbackSec),
+      limit)
+    val v = idx.memoTag.fold(grid) { tag =>
+      graft.Memo.cached(idx.labeled.sparkSession,
+        s"rules.alertgrid:$tag:$expr:$start:$end:$stepSec:$lookbackSec:$limit")(grid)
     }
     val labels = v.columns.filterNot(Set("t_sec", "value")).toSeq
     val wOrd = Window.partitionBy(labels.map(col): _*).orderBy(col("t_sec"))

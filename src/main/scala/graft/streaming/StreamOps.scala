@@ -1811,19 +1811,13 @@ object StreamOps extends Serializable {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.persist()
-        val ti = new graft.index.TagIndex(batch.toDF(), labelNames)
         try {
           batch.withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
             .write.mode("overwrite").partitionBy("day")
             .parquet(s"$outPath/batch=$batchId")
-          graft.index.IndexStore.flushBatch(ti, indexPath, batchId)
-        } finally {
-          // TagIndex persists its derived tables for reuse; a per-batch
-          // index is single-shot, so drop them with the batch
-          ti.invertedIndex.unpersist(false)
-          ti.seriesCatalog.unpersist(false)
-          batch.unpersist()
-        }
+          graft.index.IndexStore.flushBatch(
+            new graft.index.TagIndex(batch.toDF(), labelNames), indexPath, batchId)
+        } finally batch.unpersist()
       }
       .start()
 

@@ -1181,8 +1181,11 @@ object TextAnalysis {
     * it is here. Returns merges in rank order with the pair count at
     * selection time.
     */
-  private val bpeModelMemo = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val bpeModelMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Seq[(String, String, Long)]]()
+
+  /** Drop the driver-side BPE merge tables ([[graft.Caches.clear]]). */
+  def clearMemos(): Unit = bpeModelMemo.clear()
 
   private[graft] def bpeTrain(spark: SparkSession, dir: String,
       rounds: Int = 8, minCount: Long = 2L): Seq[(String, String, Long)] =
@@ -1193,9 +1196,8 @@ object TextAnalysis {
     // re-ran the word-frequency aggregate + collect + driver rounds
     // per invocation; one train per (session, dataset, rounds,
     // minCount) serves both. The encode/aggregation work stays live.
-    bpeModelMemo.computeIfAbsent(
-      (spark, s"$dir:r=$rounds:mc=$minCount"),
-      _ => bpeTrainNow(spark, dir, rounds, minCount))
+    graft.Memo.getOrBuild(bpeModelMemo, (spark, s"$dir:r=$rounds:mc=$minCount"))(
+      bpeTrainNow(spark, dir, rounds, minCount))
 
   private def bpeTrainNow(spark: SparkSession, dir: String,
       rounds: Int, minCount: Long): Seq[(String, String, Long)] = {

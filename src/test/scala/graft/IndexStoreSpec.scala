@@ -338,6 +338,27 @@ class IndexStoreSpec extends AnyFunSuite {
     * ids would re-flush merged rows and double-count them in the
     * merge-on-read fold. Replay of the max id stays a legal no-op.
     */
+  test("flushBatch and materializeIncremental of a fresh index pin nothing") {
+    import org.apache.spark.sql.functions._
+    val samples = graft.Tables.eventsRaw(spark, dir).select(
+      col("event_id"), col("ts_ns"),
+      timestamp_micros(expr("ts_ns div 1000")).as("ts"), col("value"),
+      col("user_id").cast("string").as("usr"),
+      col("event_type").as("typ"))
+    val cut = "2024-01-15 00:00:00"
+    val base = java.nio.file.Files.createTempDirectory("graft_pin").toString
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    IndexStore.flushBatch(new TagIndex(samples, Seq("usr", "typ")), s"$base/bidx", 0L)
+    // the first call lands a full segment, the second an incremental one
+    // through the store's own internal index over the fresh samples
+    IndexStore.materializeIncremental(
+      new TagIndex(samples.filter(col("ts") <= lit(cut)), Seq("usr", "typ")), s"$base/idx")
+    IndexStore.materializeIncremental(new TagIndex(samples, Seq("usr", "typ")), s"$base/idx")
+    assert(new java.io.File(s"$base/idx").listFiles().count(_.getName.startsWith("seg=")) == 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
+      "a flush left cached frames behind")
+  }
+
   test("flushBatch refuses batch ids below the committed maximum") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_mono").toString + "/bidx"
     val idx = mkIdx(Seq((1L, t0, "1", "click", 1.0)))

@@ -240,6 +240,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(before == after && after > 0)
   }
 
+  test("Caches.clear drops the driver-side BPE merge tables") {
+    text.TextAnalysis.bpeTrain(spark, dir)
+    assert(!text.TextAnalysis.bpeModelMemo.isEmpty)
+    Caches.clear()
+    assert(text.TextAnalysis.bpeModelMemo.isEmpty)
+  }
+
   test("pipelineWith accepts a custom decoder behind the MediaDecoder trait") {
     val constant = new multimodal.Multimodal.MediaDecoder {
       override def decode(items: Iterator[multimodal.MediaItem]) =

@@ -111,6 +111,63 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("catalog resolution equals posting resolution over the inverted index") {
+    // a sparse label (`ab`, null on some series), matchers on a label
+    // the index does not carry (`zz`), random time windows: the one
+    // catalog filter must select exactly the tsids the posting algebra
+    // (union + conjunction aggregate + and-not) selects
+    val rnd = new Random(4242L)
+    import spark.implicits._
+    var nonEmpty = 0
+    for (_ <- 1 to 3) {
+      val users = (0 until rnd.between(3, 9)).map(_.toString)
+      val types = Seq("click", "view", "purchase", "error")
+      val bands = Seq("0", "1", "2")
+      val rows = (0 until rnd.between(40, 90)).map { i =>
+        val ab = if (rnd.nextInt(3) == 0) None else Some(bands(rnd.nextInt(bands.length)))
+        (i.toLong, rnd.between(0L, 1000L), rnd.nextDouble() * 10,
+          users(rnd.nextInt(users.length)), types(rnd.nextInt(types.length)), ab)
+      }
+      val df = rows.toDF("event_id", "ts_sec", "value", "usr", "typ", "ab")
+        .withColumn("ts", timestamp_seconds(col("ts_sec")))
+      val idx = new TagIndex(df, Seq("usr", "typ", "ab"))
+      val pools = Map("usr" -> users, "typ" -> types, "ab" -> bands, "zz" -> Seq("0", "x"))
+      def randMatcher(): LabelMatcher = {
+        val name = Seq("usr", "typ", "ab", "zz")(rnd.nextInt(4))
+        val pool = pools(name)
+        val v = pool(rnd.nextInt(pool.length))
+        val re = pool.take(2).mkString("(", "|", ")")
+        Seq(LabelMatcher(name, Eql, v), LabelMatcher(name, Neq, v),
+          LabelMatcher(name, Lss, v), LabelMatcher(name, Gtr, v),
+          LabelMatcher(name, Lte, v), LabelMatcher(name, Gte, v),
+          LabelMatcher(name, EqlRegex, re), LabelMatcher(name, NeqRegex, re))(rnd.nextInt(8))
+      }
+      // the edge cases every dataset must see, then random sets
+      val edges = Seq(
+        Seq(LabelMatcher("ab", Neq, "1")),
+        Seq(LabelMatcher("typ", Eql, "view"), LabelMatcher("ab", NeqRegex, "(0|1)")),
+        Seq(LabelMatcher("ab", Gte, "1")),
+        Seq(LabelMatcher("zz", Neq, "0")),
+        Seq(LabelMatcher("usr", Gte, "2"), LabelMatcher("zz", Eql, "0")))
+      for (ms <- edges ++ Seq.fill(8)(Seq.fill(rnd.between(1, 4))(randMatcher()))) {
+        val window =
+          if (rnd.nextBoolean()) None
+          else {
+            val a = rnd.between(0L, 1000L); val b = rnd.between(0L, 1000L)
+            Some((timestamp_seconds(lit(math.min(a, b))), timestamp_seconds(lit(math.max(a, b)))))
+          }
+        val (s, e) = (window.map(_._1), window.map(_._2))
+        def tsids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+          df.select("tsid").collect().map(_.getLong(0)).toSet
+        val got = tsids(idx.resolveMatchers(ms, s, e))
+        val want = tsids(TagIndex.resolvePostings(idx.invertedIndex, ms, s, e))
+        assert(got == want, s"matchers $ms window $window: got $got want $want")
+        if (got.nonEmpty) nonEmpty += 1
+      }
+    }
+    assert(nonEmpty > 0, "every random matcher set resolved to nothing")
+  }
+
   test("TopKAgg equals sort-based top-k on random groups") {
     val rnd = new Random(77L)
     import spark.implicits._

@@ -204,6 +204,30 @@ class RulesSpec extends AnyFunSuite {
       "second evalGroup call with different rules returned the first's frame")
   }
 
+  test("alert grid: untagged indexes over different data each get their own " +
+      "rows, and nothing is memoized on them") {
+    val raw = Tables.eventsRaw(spark, dir)
+    val ev = raw.select(col("event_id"), col("ts_ns"), Tables.tsCol(raw).as("ts"),
+      col("value"), col("user_id").cast("string").as("usr"), col("event_type").as("typ"))
+    val Seq(evenIdx, oddIdx) = Seq(0, 1).map { parity =>
+      val i = new index.TagIndex(ev.filter(pmod(col("usr").cast("long"), lit(2)) === parity),
+        Seq("usr", "typ"))
+      assert(i.memoTag.isEmpty)
+      i.seriesCatalog.count() // the index's own cached catalog is not the memo under test
+      i
+    }
+    def alertUsers(i: index.TagIndex): Set[String] =
+      promql.Rules.alerts(i, expr, start, end, step, 0L, "P")
+        .select("usr").collect().map(_.getString(0)).toSet
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val even = alertUsers(evenIdx)
+    val odd = alertUsers(oddIdx)
+    assert(even.nonEmpty && even.forall(_.toLong % 2 == 0), s"even index served $even")
+    assert(odd.nonEmpty && odd.forall(_.toLong % 2 == 1), s"odd index served $odd")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
+      "an alert grid was pinned for an untagged index")
+  }
+
   test("Group.intervalSec IS the evaluation grid step") {
     val out = promql.Rules.evalGroupDef(spark, dir,
       promql.Rules.Group("spec_ivl", 2 * 86400L, Seq(
