@@ -1,17 +1,18 @@
 package graft
 
-/** Session-memo hygiene for long-lived services: the library memoizes
-  * derived state per (session, dataset) — tag indexes (persisted
-  * series catalogs), duplicate-cluster assignments, driver-side models
-  * (BPE merge tables, Bloom sketches) — which is the right trade for a
-  * query server (the reference keeps one warm MemIndex per store) but
-  * would accumulate in a process that cycles through many datasets.
-  * Call between dataset generations.
+/** Derived-state hygiene for long-lived services. The library keeps
+  * derived state per (session, dataset) in the [[Memo]] registry —
+  * tag indexes (persisted series catalogs), duplicate-cluster
+  * assignments, streaming-gate sink tables, landed fixtures,
+  * broadcasts and driver-side models (BPE merge tables, Bloom
+  * sketches, IVF/PQ codebooks). That is the right trade for a query
+  * server (the reference keeps one warm MemIndex per store) but would
+  * accumulate in a process that cycles through many datasets.
+  * [[clear]] drops and releases every entry of every session; call it
+  * between dataset generations. Fixture directories stay on disk:
+  * `_done`-marked ones are reused by the next build, the rest are
+  * rebuilt.
   */
 object Caches {
-  def clear(): Unit = {
-    index.TagIndex.clearMemos()
-    dedup.Dedup.clearMemos()
-    text.TextAnalysis.clearMemos()
-  }
+  def clear(): Unit = Memo.clearAll()
 }

@@ -337,10 +337,7 @@ object ScaleProbe {
         (headlineOnly && headline("rowlevel_update"))) {
       val rloDir = new java.io.File(
         System.getProperty("java.io.tmpdir"), s"graft_probe_rlo_$factor")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(rloDir)
+      Memo.wipe(rloDir)
       val tdir = new java.io.File(rloDir, "wh/t").toString
       sources.Io.tableAppend(
         big.select(col("event_id"), col("event_type").as("typ"),
@@ -368,10 +365,7 @@ object ScaleProbe {
         (headlineOnly && headline("mor_update"))) {
       val morDir = new java.io.File(
         System.getProperty("java.io.tmpdir"), s"graft_probe_mor_$factor")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(morDir)
+      Memo.wipe(morDir)
       val tdir = new java.io.File(morDir, "wh/t").toString
       sources.Io.tableAppend(
         big.select(col("event_id"), col("event_type").as("typ"),
@@ -400,10 +394,7 @@ object ScaleProbe {
         (headlineOnly && headline("mor_bulk_delete"))) {
       val mbDir = new java.io.File(
         System.getProperty("java.io.tmpdir"), s"graft_probe_morbulk_$factor")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(mbDir)
+      Memo.wipe(mbDir)
       val tdir = new java.io.File(mbDir, "wh/t").toString
       sources.Io.tableAppend(
         big.select(col("event_id"), col("event_type").as("typ"),

@@ -157,13 +157,10 @@ object Dedup {
   // the snippet-offset collision guard is a DATASET property — one
   // driver action per (session, dir), not one per invocation (round 15:
   // the bench's min-of-3 paid a full scan+agg stage round per run)
-  private val maxDocIds =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   def containment(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val maxId = maxDocIds.computeIfAbsent((spark, dir),
-      _ => docs.agg(max(col("doc_id"))).head().getLong(0)).longValue()
+    val maxId = graft.Memo(spark, s"dedup.max_doc_id:$dir")(
+      docs.agg(max(col("doc_id"))).head().getLong(0))
     require(maxId < 2000000L,
       s"containment puts snippets at doc_id+2000000 but the corpus already " +
         s"holds doc_id=$maxId — raise the offset in query AND oracle")
@@ -370,18 +367,8 @@ object Dedup {
     */
   // the cluster assignment is deterministic per corpus — memoize so the
   // standalone query and the curation composite share one computation
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.computeIfAbsent((spark, dir), _ => computeClusters(spark, dir).cache())
-
-  /** Evict memoized cluster assignments (long-lived-service hygiene). */
-  def clearMemos(): Unit = {
-    clusterCache.values().forEach(_.unpersist(false))
-    clusterCache.clear()
-    bloomSketchMemo.clear()
-  }
+    graft.Memo.cached(spark, s"dedup.clusters:$dir")(computeClusters(spark, dir))
 
   private[graft] def computeClusters(spark: SparkSession, dir: String): DataFrame = {
     // ngramJaccard is Memo-backed: the select rides its pinned cache,
@@ -1084,9 +1071,6 @@ object Dedup {
         floor(col("n_shared") / col("n_windows").cast("double") * 1e4 + 0.5) / 1e4)
   }
 
-  private val bloomSketchMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[Byte]]()
-
   def bloomDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomFuncs
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -1105,11 +1089,11 @@ object Dedup {
     // round 15 (optimization, guide §1.2): the sketch IS the index
     // artifact of this operator — a 100 KB byte array that is a pure
     // function of the fingerprinted corpus, the same model shape as
-    // ivfModelMemo/bpeModelMemo. It was rebuilt (one full corpus
+    // the IVF centroids and BPE merges. It was rebuilt (one full corpus
     // aggregate + driver action) on every invocation; pin one per
     // (session, dataset). The membership probes, the confirm join and
     // the keep-first window stay live.
-    val sketch = graft.Memo.getOrBuild(bloomSketchMemo, (spark, dir))(corpus
+    val sketch = graft.Memo(spark, s"dedup.bloom_sketch:$dir")(corpus
       .agg(BloomFuncs.bloomAgg(spark, col("ch"), 100000L, 800000L).as("bf"))
       .head.getAs[Array[Byte]](0))
     val survivors = batch

@@ -240,16 +240,16 @@ object IndexQueries {
       """sum by (kb, typ) (count_over_time({typ=~"(view|click)", usr<="5"}[30d]))""",
       "2024-01-31 00:00:00")
 
-  // one materialized store per source dataset (written once per JVM)
-  private val stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def tmpStore(prefix: String, dir: String): java.io.File =
+    graft.Memo.tmp(prefix + graft.Tables.fingerprint(s"$dir/events.parquet"))
 
+  // one materialized store per source dataset (written once per JVM)
   private def storeFor(spark: SparkSession, dir: String): String =
-    stores.computeIfAbsent(dir, _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_idxstore_" + graft.Tables.fingerprint(s"$dir/events.parquet")).toString
+    graft.Memo.global(s"index.store:$dir") {
+      val p = tmpStore("graft_idxstore_", dir).toString
       IndexStore.materialize(idx(spark, dir), p)
       p
-    })
+    }
 
   /** C9 (oracle-gated): the A7 conjunction resolved from the
     * MATERIALIZED store instead of the in-memory index — the two paths
@@ -271,21 +271,15 @@ object IndexQueries {
 
   // a PRIVATE store compacted down to one segment (separate from
   // storeFor so compaction can't mask a merge-on-read bug there)
-  private val compactStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def compactStoreFor(spark: SparkSession, dir: String): String =
-    compactStores.computeIfAbsent(dir, _ => {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_compactstore_" + graft.Tables.fingerprint(s"$dir/events.parquet"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(base)
+    graft.Memo.global(s"index.compactstore:$dir") {
+      val base = tmpStore("graft_compactstore_", dir)
+      graft.Memo.wipe(base)
       val p = base.toString
       IndexStore.materialize(idx(spark, dir), p)
       IndexStore.compact(spark, p)
       p
-    })
+    }
 
   /** C9+ (oracle-gated, round 9 s4): the A7 conjunction resolved from
     * a COMPACTED store — the reference's try_compact outcome
@@ -310,23 +304,17 @@ object IndexQueries {
   // from storeFor — deletes must not contaminate the other gates);
   // rebuilt from scratch per JVM so a crashed prior build can't leave
   // a partial store or stacked tombstones behind
-  private val tombStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def tombStoreFor(spark: SparkSession, dir: String): String =
-    tombStores.computeIfAbsent(dir, _ => {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_tombstore_" + graft.Tables.fingerprint(s"$dir/events.parquet"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(base)
+    graft.Memo.global(s"index.tombstore:$dir") {
+      val base = tmpStore("graft_tombstore_", dir)
+      graft.Memo.wipe(base)
       val p = base.toString
       IndexStore.materialize(idx(spark, dir), p)
       val n = IndexStore.deleteSeries(spark, p,
         Seq(LabelMatcher("typ", Eql, "error")))
       require(n > 0, s"delete_series matched no series at $p")
       p
-    })
+    }
 
   /** A24/C9+ (oracle-gated, round 9 s4): matcher resolution through a
     * store with a delete_series TOMBSTONE applied — the reference's
@@ -350,42 +338,24 @@ object IndexQueries {
   // (one per dataset; `_done` marks a completed build — a partial
   // leftover from a crashed run is wiped and rebuilt, never resumed
   // into, so replayed landings can't double-flush under fresh batch ids)
-  private val streamedStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def streamedStoreFor(spark: SparkSession, dir: String): String =
-    streamedStores.computeIfAbsent(dir, _ => {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_streamstore_" + graft.Tables.fingerprint(s"$dir/events.parquet"))
-      val idxPath = new java.io.File(base, "index").toString
-      val done = new java.io.File(base, "_done")
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
-        }
+    graft.Memo.global(s"index.streamstore:$dir") {
+      val base = graft.Memo.landed("graft_streamstore",
+          graft.Tables.fingerprint(s"$dir/events.parquet")) { b =>
         val raw = graft.Tables.eventsRaw(spark, dir)
         val ev = raw.select(
           col("event_id"), col("ts_ns"), graft.Tables.tsCol(raw).as("ts"),
           col("value"), col("user_id").cast("string").as("usr"),
           col("event_type").as("typ"))
-        // land the events as 4 files; maxFilesPerTrigger=1 turns them
+        // land the events as 4 files; one file per trigger turns them
         // into 4 micro-batches through the checkpointed ingest loop
-        val landing = new java.io.File(base, "landing").toString
-        ev.repartition(4).write.mode("overwrite").parquet(landing)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = graft.streaming.StreamOps.streamToStoreIndexed(
-          stream, new java.io.File(base, "lake").toString,
-          new java.io.File(base, "ckpt").toString, idxPath)
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
+        graft.streaming.StreamOps.landParts(ev, s"$b/landing")
+        graft.streaming.StreamOps.replayed(spark, s"$b/landing")(
+          graft.streaming.StreamOps.streamToStoreIndexed(
+            _, s"$b/lake", s"$b/ckpt", s"$b/index"))
       }
-      idxPath
-    })
+      s"$base/index"
+    }
 
   /** H9 (oracle-gated): the A7 conjunction resolved from a store that
     * was populated ONLY via the streaming WAL→flush loop
@@ -438,13 +408,9 @@ object IndexQueries {
   // index than the live view — the store is built as three incremental
   // time-watermark flushes (ts < Jan-10, < Jan-20, rest) and the memo
   // remembers the FIRST segment's ordinal as the snapshot point.
-  private val snapStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   private def snapStoreFor(spark: SparkSession, dir: String): (String, Long) =
-    snapStores.computeIfAbsent(dir, _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_snapstore_" + graft.Tables.fingerprint(s"$dir/events.parquet")).toString
+    graft.Memo.global(s"index.snapstore:$dir") {
+      val p = tmpStore("graft_snapstore_", dir).toString
       def idxUpTo(cutNs: Option[Long]): TagIndex = {
         val raw = graft.Tables.eventsRaw(spark, dir)
         val ev = raw.select(
@@ -465,7 +431,7 @@ object IndexQueries {
       IndexStore.materializeIncremental(idxUpTo(Some(ns("2024-01-20T00:00:00Z"))), p)
       IndexStore.materializeIncremental(idxUpTo(None), p)
       (p, ord1)
-    })
+    }
 
   /** A21 (oracle-gated): snapshot (time-travel) matcher resolution via
     * the `graft_match_at` SQL surface — matchers resolved against the

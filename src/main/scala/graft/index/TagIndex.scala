@@ -112,25 +112,40 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
     */
   private[graft] var memoTag: Option[String] = None
 
-  /** Samples with a tsid column. */
+  /** The registry-held cached catalog of a memoized index. */
+  private var pinned: Option[DataFrame] = None
+
+  /** Samples with a tsid column. A label a series does not carry
+    * hashes as a NUL placeholder, so it stays apart from a shifted
+    * value ({a="x", b=null} and {a=null, b="x"} are two series); a
+    * series carrying every label hashes exactly as the plain
+    * NUL-joined label values.
+    */
   val labeled: DataFrame = {
-    samples.withColumn("tsid",
-      xxhash64(concat_ws("\u0000", labelNames.map(col): _*)))
+    samples.withColumn("tsid", xxhash64(concat_ws("\u0000",
+      labelNames.map(n => coalesce(col(n).cast("string"), lit("\u0000"))): _*)))
   }
 
   /** One row per series: labels, tsid, time bounds, sample count. */
-  private lazy val catalogPlan: DataFrame =
+  private[graft] lazy val catalogPlan: DataFrame =
     preCatalog.getOrElse(
       labeled.groupBy(col("tsid") +: labelNames.map(col): _*)
         .agg(min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"),
           count(lit(1)).as("n_samples")))
 
-  /** [[catalogPlan]], persisted — the reference's full-cache mode
-    * (index_server.h:26): the index lives in memory, only sample scans
-    * hit storage. Size is ∝ #series, so this holds on a cluster
-    * (executors cache partitions).
+  /** The series catalog. Persisted for a memoized index — the
+    * reference's full-cache mode (index_server.h:26): the index lives
+    * in memory, only sample scans hit storage, and its size is
+    * ∝ #series, so this holds on a cluster. [[TagIndex.memo]] pins it
+    * through the [[graft.Memo]] registry, so a clear unpersists it. A
+    * per-call index resolves over the plan and pins nothing.
     */
-  lazy val seriesCatalog: DataFrame = catalogPlan.persist()
+  def seriesCatalog: DataFrame = pinned.getOrElse(catalogPlan)
+
+  private[graft] def pin(catalog: DataFrame, tag: String): Unit = {
+    pinned = Some(catalog)
+    memoTag = Some(tag)
+  }
 
   /** Inverted index: (label_name, label_value, tsid, min_ts, max_ts,
     * n_samples), one row per (series, label) — null values included
@@ -299,30 +314,27 @@ object TagIndex {
     }
   }
 
-  /** The events table as a TSDB: series = {usr, typ}, samples (ts, value).
-    * user_id is carried as a *string* label — tagtree labels are
-    * strings and its value ordering (LSS/GTR/…) is lexicographic.
-    */
-  // one index per (session, data dir, label set) — repeated queries
-  // reuse the persisted catalog instead of re-deriving it from
-  // raw samples (the reference keeps exactly one warm MemIndex per store)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), TagIndex]()
-
   private val memoTags = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Memoized index construction; `tag` distinguishes label models.
-    * Stamps [[TagIndex.memoTag]] so frames memoized over this index
-    * know it is session-pinned. The stamp is unique per instance: an
-    * index rebuilt after [[clearMemos]] (perhaps over rewritten data at
-    * the same dir) never reuses an evicted instance's memo keys.
+  private def catalogKey(dir: String, tag: String) = s"index.catalog:$dir#$tag"
+
+  /** One index per (session, data dir, label set) — repeated queries
+    * reuse the persisted catalog instead of re-deriving it from raw
+    * samples (the reference keeps exactly one warm MemIndex per store).
+    * `tag` distinguishes label models. The catalog is cached through
+    * the registry and [[TagIndex.memoTag]] is stamped, so frames
+    * memoized over this index know it is session-pinned. The stamp is
+    * unique per instance: an index rebuilt after a clear (perhaps over
+    * rewritten data at the same dir) never reuses an evicted
+    * instance's memo keys.
     */
   def memo(spark: SparkSession, dir: String, tag: String)(build: => TagIndex): TagIndex =
-    cache.computeIfAbsent((spark, dir, tag), _ => {
+    graft.Memo(spark, s"index.memo:$dir#$tag") {
       val i = build
-      i.memoTag = Some(s"$dir#$tag#${memoTags.incrementAndGet()}")
+      i.pin(graft.Memo.cached(spark, catalogKey(dir, tag))(i.catalogPlan),
+        s"$dir#$tag#${memoTags.incrementAndGet()}")
       i
-    })
+    }
 
   /** Disk-warm memoized construction: the first JVM to build this
     * index persists its series catalog as parquet under a
@@ -341,8 +353,7 @@ object TagIndex {
     memo(spark, dir, tag) {
       val fp = Tables.fingerprint(s"$dir/events.parquet")
       val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_warmidx_${fp}_$safe")
+      val base = graft.Memo.tmp(s"graft_warmidx_${fp}_$safe")
       val done = new java.io.File(base, "_done")
       val catP = new java.io.File(base, "catalog").toString
       if (done.exists())
@@ -353,8 +364,10 @@ object TagIndex {
           // single-file layout: the table is ∝ #series (MBs), and a
           // 32-file shuffle layout costs 32 footer reads + 32 reader
           // inits on every warm load — the exact latency this cache
-          // exists to remove (at huge #series, bump to a few files)
-          i.seriesCatalog.coalesce(1).write.mode("overwrite").parquet(catP)
+          // exists to remove (at huge #series, bump to a few files).
+          // The write fills the registry-held cache that memo pins.
+          graft.Memo.cached(spark, catalogKey(dir, tag))(i.catalogPlan)
+            .coalesce(1).write.mode("overwrite").parquet(catP)
           done.createNewFile()
         } catch {
           case e: Throwable =>
@@ -364,14 +377,10 @@ object TagIndex {
       }
     }
 
-  /** Evict all memoized indexes (unpersisting their cached catalogs) —
-    * for long-lived services; the memos otherwise live for the JVM.
+  /** The events table as a TSDB: series = {usr, typ}, samples (ts, value).
+    * user_id is carried as a *string* label — tagtree labels are
+    * strings and its value ordering (LSS/GTR/…) is lexicographic.
     */
-  def clearMemos(): Unit = {
-    cache.values().forEach(_.seriesCatalog.unpersist(false))
-    cache.clear()
-  }
-
   def forEvents(spark: SparkSession, dir: String): TagIndex =
     memoWarm(spark, dir, "usr,typ", Seq("usr", "typ")) {
       val raw = Tables.eventsRaw(spark, dir)

@@ -78,10 +78,6 @@ object Multimodal {
     }
   }
 
-  // one payload object store per (source dataset, payload format),
-  // written once per JVM
-  private val objStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize each payload as one object in a local object store
     * (file:// scheme standing in for s3://; same Hadoop FileSystem API
     * either way) and remember the store root. Idempotent per
@@ -89,10 +85,11 @@ object Multimodal {
     */
   private def objectStoreFor(spark: SparkSession, dir: String, tag: String,
       table: => Dataset[MediaItem]): String =
-    objStores.computeIfAbsent(s"$dir#$tag", _ => {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_objstore_" + tag + "_" +
-          graft.Tables.fingerprint(s"$dir/documents.parquet")).toString
+    // one payload object store per (source dataset, payload format),
+    // written once per JVM
+    graft.Memo.global(s"multimodal.objstore:$dir#$tag") {
+      val base = graft.Memo.tmp("graft_objstore_" + tag + "_" +
+        graft.Tables.fingerprint(s"$dir/documents.parquet")).toString
       val marker = new java.io.File(base, "_SUCCESS")
       if (!marker.exists()) {
         table.foreachPartition { (it: Iterator[MediaItem]) =>
@@ -108,7 +105,7 @@ object Multimodal {
         marker.createNewFile()
       }
       base
-    })
+    }
 
   /** The pointer-only media table — the >1 MB row shape at 100 TB: the
     * table row carries metadata plus a `uri` pointer; the payload bytes

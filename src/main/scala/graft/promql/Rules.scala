@@ -214,12 +214,6 @@ object Rules {
     v.join(broadcast(asOf), idLabels, "left")
   }
 
-  // one recorded-rule store per (dataset, rule); `_done` commits a
-  // completed build — a partial leftover from a crashed run is wiped
-  // and rebuilt, never resumed into (the streamedStoreFor discipline)
-  private val recordedStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Evaluate a recording rule on a range grid and MATERIALIZE the
     * result as series `ruleName` (one sample per grid step per series):
     * the evaluated frame lands as a parquet sample lake and its
@@ -281,14 +275,6 @@ object Rules {
       v.withColumn("__n", count(lit(1)).over(w))
         .filter(col("__n") <= limit).drop("__n")
     }
-
-  // memoized per (session, dataset, group DEFINITION): the key folds a
-  // fingerprint of the rules and grid parameters, so re-evaluating a
-  // same-named group with different rules/grid never returns the
-  // first call's frame (the round-10 ADVICE staleness)
-  private val groupRuns =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
 
   private def fp(parts: Seq[Any]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -386,10 +372,14 @@ object Rules {
     // query_offset: every rule evaluates (and stamps) Q seconds back
     val s0 = shiftTs(start, -group.queryOffsetSec)
     val e0 = shiftTs(end, -group.queryOffsetSec)
+    // memoized per (session, dataset, group DEFINITION): the key folds
+    // a fingerprint of the rules and grid parameters, so re-evaluating
+    // a same-named group with different rules/grid never returns the
+    // first call's frame (the round-10 ADVICE staleness)
     val key = group.name + ":" + fp(group.rules ++
       Seq(start, end, stepSec, lookbackSec, alertLookbackSec,
         group.queryOffsetSec, group.concurrentEvals))
-    groupRuns.computeIfAbsent((spark, dir, key), _ => {
+    graft.Memo(spark, s"rules.group:$dir:$key") {
       val base = TagIndex.forEvents(spark, dir)
       val cols = Seq("event_id", "ts_ns", "ts", "value") ++
         base.labelNames
@@ -436,7 +426,7 @@ object Rules {
       require(alertFrames.nonEmpty,
         s"rule group ${group.name} has no alert rule — nothing to return")
       alertFrames.reduce(_.unionByName(_))
-    })
+    }
   }
 
   def recordedIndex(spark: SparkSession, dir: String, ruleName: String,
@@ -457,18 +447,11 @@ object Rules {
       limit: Long = 0L): TagIndex = {
     val defKey = storeKey + "." +
       fp(Seq(expr, start, end, stepSec, limit))
-    val base = recordedStores.computeIfAbsent((dir, defKey), _ => {
-      val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_recrule_" + graft.Tables.fingerprint(s"$dir/events.parquet") +
-          "_" + defKey.replaceAll("[^A-Za-z0-9]", "_"))
-      val done = new java.io.File(d, "_done")
-      if (!done.exists()) {
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(d)
-        }
+    // one recorded-rule store per (dataset, rule), landed under `_done`
+    val base = graft.Memo.global(s"rules.recorded:$dir:$defKey") {
+      graft.Memo.landed("graft_recrule",
+          graft.Tables.fingerprint(s"$dir/events.parquet") + "_" +
+            defKey.replaceAll("[^A-Za-z0-9]", "_")) { d =>
         val v = capSeries(
           PromQl.evalRangeIndexed(evalIdx, expr, start, end, stepSec), limit)
         // Prometheus recording semantics: the result's metric name
@@ -487,10 +470,8 @@ object Rules {
           labels :+ "typ")
         IndexStore.flushBatch(recIdx,
           new java.io.File(d, "index").toString, 0L)
-        done.createNewFile()
-      }
-      d.toString
-    })
+      }.toString
+    }
     val samples = spark.read.parquet(new java.io.File(base, "samples").toString)
     val labels = samples.columns
       .filterNot(Set("event_id", "ts", "value", "typ")).toSeq

@@ -92,15 +92,13 @@ private[graft] object GraftTables {
   // re-broadcast the DV set on every read of a DV-carrying table and
   // the broadcasts accumulated unreleased. Versions are immutable, so
   // the cache never goes stale; entries are bounded by the session's
-  // distinct mutated (table, version) pairs and die with the session.
-  private val dvBcasts = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long),
-    org.apache.spark.broadcast.Broadcast[Map[String, PackedPositions]]]()
-
+  // distinct mutated (table, version) pairs, and a clear unpersists them.
   private[graft] def dvPositions(spark: SparkSession, path: String,
       version: Long, dvDirs: Seq[String])
       : org.apache.spark.broadcast.Broadcast[Map[String, PackedPositions]] =
-    dvBcasts.computeIfAbsent((spark, path, version), _ => {
+    graft.Memo(spark, s"sources.dv_positions:$path@$version",
+        (b: org.apache.spark.broadcast.Broadcast[Map[String, PackedPositions]]) =>
+          b.unpersist()) {
       val m: Map[String, PackedPositions] =
         spark.read.parquet(dvDirs: _*)
           .select(col("f"), col("p")).distinct().collect()
@@ -109,7 +107,7 @@ private[graft] object GraftTables {
             f -> PackedPositions(rs.map(_.getLong(1)).sorted)
           }
       spark.sparkContext.broadcast(m)
-    })
+    }
 
   /** Persist a DDL-declared schema for a not-yet-written table (the
     * catalog's CREATE TABLE): the commit log itself has no schema

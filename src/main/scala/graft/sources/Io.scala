@@ -193,12 +193,52 @@ object Io {
   def readJson(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
     spark.read.schema(schemaDdl).json(path)
 
+  /** The events as (event_id, [µs epoch `us`,] typ, integer cents) —
+    * the projection the commit-log fixtures land. */
+  private[graft] def centsOf(spark: SparkSession, dir: String,
+      withUs: Boolean = false): DataFrame = {
+    val raw = Tables.eventsRaw(spark, dir)
+    raw.select(Seq(col("event_id")) ++
+      (if (withUs) Seq(unix_micros(Tables.tsCol(raw)).as("us")) else Nil) ++
+      Seq(col("event_type").as("typ"),
+        floor(col("value") * 100 + 0.5).cast("long").as("cents")): _*)
+  }
+
+  /** Per-type count, cent sum and id bounds — the commit-log gates'
+    * read-back aggregate. */
+  private[graft] def typeSummary(df: DataFrame): DataFrame =
+    df.groupBy(col("typ"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
+        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+
+  /** One landed fixture per (session, dataset): `build` fills the
+    * emptied directory `<tmpdir>/<prefix>_<fp>` (fp: the events
+    * fingerprint), which the registry then holds; the gate reads the
+    * files back. */
+  private def fixture(spark: SparkSession, dir: String, prefix: String)(
+      build: String => Unit): String =
+    graft.Memo(spark, s"io.$prefix:$dir") {
+      val p = graft.Memo.tmp(
+        prefix + "_" + Tables.fingerprint(s"$dir/events.parquet"))
+      graft.Memo.wipe(p)
+      build(p.toString)
+      p.toString
+    }
+
+  /** A [[fixture]] that is the warehouse of the [[GraftCatalog]]
+    * registered as `catalog`. */
+  private def warehouse(spark: SparkSession, dir: String, prefix: String,
+      catalog: String)(build: String => Unit): String =
+    fixture(spark, dir, prefix) { w =>
+      spark.conf.set(s"spark.sql.catalog.$catalog",
+        "graft.sources.GraftCatalog")
+      spark.conf.set(s"spark.sql.catalog.$catalog.warehouse", w)
+      build(w)
+    }
+
   // ---- oracle-gated round-trip queries (round 8): the LANDED FILES
   // answer the gate, so the whole write→parse→read loop of each format
   // is what the DuckDB oracle checks — not the in-memory frame ----
-
-  private val rtRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** One materialization per (session, dataset): the events projection
     * in round-trip-exact column types (longs + strings — CSV/JSON have
@@ -207,10 +247,7 @@ object Io {
     * the day-partitioned parquet layout.
     */
   private def roundtripRoot(spark: SparkSession, dir: String): String =
-    rtRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_rt_" + fp).toString
+    fixture(spark, dir, "graft_io_rt") { base =>
       val raw = Tables.eventsRaw(spark, dir)
       val flat = raw.select(col("event_id"),
         unix_micros(Tables.tsCol(raw)).as("us"),
@@ -221,8 +258,7 @@ object Io {
       writeJson(flat, s"$base/json")
       writeOrc(flat, s"$base/orc")
       writePartitionedSamples(spark, dir, s"$base/daily")
-      base
-    })
+    }
 
   private val rtDdl =
     "event_id BIGINT, us BIGINT, usr STRING, typ STRING, cents BIGINT"
@@ -257,9 +293,6 @@ object Io {
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
 
-  private val maintRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** One maintenance materialization per (session, dataset): a
     * day-partitioned copy COMPACTED in place, a z-ordered copy, a
     * manifest over a value-clustered copy, and an UPSERTED copy (day
@@ -267,32 +300,20 @@ object Io {
     * synthetic new row) — each gated query reads the maintained FILES.
     */
   private def maintRoot(spark: SparkSession, dir: String): String =
-    maintRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_maint_" + fp).toString
-      // `_done`-marker discipline (round 15): the fixture is a pure
-      // function of the fingerprinted dataset, but this builder used
-      // to re-run all four rewrites on every fresh JVM OVER the
-      // previous JVM's completed output — wasted work charged to the
-      // first io_* query, and the rebuild-over-existing path proved
-      // fragile (a mid-round bench run lost io_compact run 1 to a
-      // FileNotFound inside the re-compaction's read of a day it had
-      // just rewritten). Like every other cross-JVM fixture
-      // (streamedStoreFor, recordedIndexOn, memoWarm): a committed
-      // build is REUSED; anything without the marker is wiped and
-      // rebuilt from scratch — never resumed into.
-      val doneMarker = new java.io.File(base, "_done")
-      if (!doneMarker.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(new java.io.File(base))
-        buildMaint(spark, dir, base)
-        doneMarker.createNewFile()
-      }
-      base
-    })
+    // `_done`-marker discipline (round 15): the fixture is a pure
+    // function of the fingerprinted dataset, but this builder used to
+    // re-run all four rewrites on every fresh JVM OVER the previous
+    // JVM's completed output — wasted work charged to the first io_*
+    // query, and the rebuild-over-existing path proved fragile (a
+    // mid-round bench run lost io_compact run 1 to a FileNotFound
+    // inside the re-compaction's read of a day it had just rewritten).
+    // Like every other cross-JVM fixture: a committed build is REUSED;
+    // anything without the marker is wiped and rebuilt from scratch.
+    graft.Memo(spark, s"io.graft_io_maint:$dir") {
+      graft.Memo.landed("graft_io_maint",
+        Tables.fingerprint(s"$dir/events.parquet"))(
+        b => buildMaint(spark, dir, b.toString)).toString
+    }
 
   private def buildMaint(spark: SparkSession, dir: String, base: String): Unit = {
       // compaction target: the day-partitioned layout, rewritten to
@@ -389,23 +410,16 @@ object Io {
     doomed.length.toLong
   }
 
-  private val retRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** I13, oracle-gated: land the day-partitioned layout, vacuum days
     * before 2024-01-15, read the surviving files back — the aggregate
     * must equal DuckDB's replay of the same cutoff over the source
     * table (write→vacuum→read ≡ filtered batch).
     */
   def retentionRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = retRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_ret_" + fp).toString
+    val root = fixture(spark, dir, "graft_io_ret") { base =>
       writePartitionedSamples(spark, dir, s"$base/t")
       vacuumPartitioned(spark, s"$base/t", "2024-01-15")
-      base
-    })
+    }
     spark.read.parquet(s"$root/t")
       .groupBy(col("event_type").as("typ"))
       .agg(count(lit(1)).as("n"),
@@ -414,9 +428,6 @@ object Io {
         countDistinct(col("day")).as("n_days"))
   }
 
-  private val bkRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** One bucketed-table pair per (session, dataset): the events
     * projection and the per-user purchase counts, both `bucketBy(8,
     * usr)` + sortBy external tables (the co-located layout a 100 TB
@@ -424,11 +435,9 @@ object Io {
     * shuffle). Returns the dataset fingerprint that scopes the catalog
     * table names.
     */
-  private def bucketedTables(spark: SparkSession, dir: String): String =
-    bkRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_bk_" + fp).toString
+  private def bucketedTables(spark: SparkSession, dir: String): String = {
+    val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
+    fixture(spark, dir, "graft_io_bk") { base =>
       val raw = Tables.eventsRaw(spark, dir)
       val ev = raw.select(col("event_id"),
         col("user_id").cast("string").as("usr"),
@@ -440,8 +449,9 @@ object Io {
         .agg(count(lit(1)).as("n_purch"))
         .write.mode("overwrite").bucketBy(8, "usr").sortBy("usr")
         .option("path", s"$base/purch_bk").saveAsTable(s"purch_bk_$fp")
-      fp
-    })
+    }
+    fp
+  }
 
   /** I5+I8, oracle-gated (round 9): the bucketed layout read BACK from
     * its landed files through the session catalog, driving the three
@@ -466,9 +476,6 @@ object Io {
       .select("usr", "n", "sum_cents", "last_cents", "n_purch")
   }
 
-  private val evoRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** I9, oracle-gated: two write ERAS of one table — era 1 without the
     * `quality` column (odd event_ids), era 2 with it (even event_ids,
     * quality = cents mod 7) — then ONE mergeSchema read; era-1 rows
@@ -476,21 +483,14 @@ object Io {
     * coalesce(quality, -1) sums the oracle replays per era.
     */
   def evolvedRead(spark: SparkSession, dir: String): DataFrame = {
-    val base = evoRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_evo_" + fp).toString
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val base = fixture(spark, dir, "graft_io_evo") { root =>
+      val flat = centsOf(spark, dir)
       flat.filter(pmod(col("event_id"), lit(2)) === 1)
         .write.mode("overwrite").parquet(s"$root/tbl/era=1")
       flat.filter(pmod(col("event_id"), lit(2)) === 0)
         .withColumn("quality", pmod(col("cents"), lit(7)))
         .write.mode("overwrite").parquet(s"$root/tbl/era=2")
-      root
-    })
+    }
     readMerged(spark, s"$base/tbl")
       .groupBy(col("typ")).agg(
         count(lit(1)).as("n"),
@@ -2213,9 +2213,6 @@ object Io {
     }
   }
 
-  private val ttRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** I14, oracle-gated: three commits — v0 creates (days 01-01..01-10),
     * v1 appends (01-11..01-20), v2 copy-on-write-deletes the purchase
     * rows — then BOTH v1 and v2 are read back through the commit log
@@ -2269,32 +2266,21 @@ object Io {
   }
 
   private def ttTable(spark: SparkSession, dir: String): String =
-    ttRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val t = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_tt_" + fp).toString
+    fixture(spark, dir, "graft_io_tt") { t =>
       buildEventsTable(spark, dir, t)
-      t
-    })
+    }
 
   // the shared 3-commit fixture: v0 creates (days ≤ 01-10), v1 appends
   // (01-11..20), v2 copy-on-write-deletes the purchase rows
   private def buildEventsTable(spark: SparkSession, dir: String,
       t: String): Unit = {
     fsFor(spark, t).delete(new org.apache.hadoop.fs.Path(t), true)
-    val raw = Tables.eventsRaw(spark, dir)
-    val flat = raw.select(col("event_id"),
-      unix_micros(Tables.tsCol(raw)).as("us"),
-      col("event_type").as("typ"),
-      floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val flat = centsOf(spark, dir, withUs = true)
     tableAppend(flat.filter(col("us") < 1704931200000000L), t)       // ≤ 01-10
     tableAppend(flat.filter(col("us") >= 1704931200000000L &&
       col("us") < 1705795200000000L), t)                             // 01-11..20
     tableDeleteWhere(spark, t, col("typ") === "purchase")
   }
-
-  private val evolveRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** I24, oracle-gated: append-time schema evolution on the commit
     * log — v0 creates with (event_id, us, cents), v1 APPENDS rows
@@ -2309,22 +2295,13 @@ object Io {
     * land→commit→evolve→read across the schema boundary.
     */
   def evolveLogRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = evolveRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_evl_" + fp).toString
-      fsFor(spark, p).delete(new org.apache.hadoop.fs.Path(p), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        unix_micros(Tables.tsCol(raw)).as("us"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_evl") { p =>
+      val flat = centsOf(spark, dir, withUs = true)
       tableAppend(flat.filter(col("us") < 1704931200000000L)
         .drop("typ"), p)                                        // v0: old schema
       tableAppend(flat.filter(col("us") >= 1704931200000000L &&
         col("us") < 1705795200000000L), p)                      // v1: + typ
-      p
-    })
+    }
     val v0 = readTableVersionEvolved(spark, t, 0L)
     require(!v0.columns.contains("typ"),
       "time travel to before the evolution must serve the OLD schema")
@@ -2338,10 +2315,6 @@ object Io {
       .unionByName(agg(readTableVersionEvolved(spark, t, 1L), 1L))
   }
 
-  private val cloneRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val vacRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** I17, oracle-gated: shallow clone + divergence — the clone of the
     * I14 table (at its COW-deleted v2) is read back at its own v0
@@ -2354,15 +2327,10 @@ object Io {
     */
   def cloneRead(spark: SparkSession, dir: String): DataFrame = {
     val src = ttTable(spark, dir)
-    val cl = cloneRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val t = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_clone_" + fp).toString
-      fsFor(spark, t).delete(new org.apache.hadoop.fs.Path(t), true)
+    val cl = fixture(spark, dir, "graft_io_clone") { t =>
       tableClone(spark, src, t)
       tableDeleteWhere(spark, t, col("typ") === "view")
-      t
-    })
+    }
     def agg(tag: String, df: DataFrame): DataFrame =
       df.groupBy(lit(tag).as("rel"), col("typ"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
@@ -2380,15 +2348,11 @@ object Io {
     * liveness comes from the log, and the GC removed only dead files.
     */
   def vacuumRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = vacRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_vac_" + fp).toString
+    val t = fixture(spark, dir, "graft_io_vac") { tt =>
       buildEventsTable(spark, dir, tt)
       val removed = vacuumTable(spark, tt, retainFrom = 2L)
       require(removed > 0, s"vacuum removed no orphans at $tt")
-      tt
-    })
+    }
     readTableVersion(spark, t, 2L)
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
@@ -2601,9 +2565,6 @@ object Io {
     nv
   }
 
-  private val optRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** I21, oracle-gated: optimize-then-read — the 3-commit fixture's
     * latest version is bin-packed to one file as commit v3; the
     * optimized read must ≡ the v2 cut exactly (layout changed, content
@@ -2612,25 +2573,15 @@ object Io {
     * vacuum afterwards removes the superseded small files.
     */
   def optimizeRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = optRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_opt_" + fp).toString
+    val t = fixture(spark, dir, "graft_io_opt") { tt =>
       buildEventsTable(spark, dir, tt)
       val before = readCommit(spark, tt, 2L).size
       val v = tableOptimize(spark, tt, 1)
       require(v == 3L && readCommit(spark, tt, 3L).size < before,
         s"optimize did not shrink the file list at $tt")
-      tt
-    })
-    readTableVersion(spark, t, 3L)
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    readTableVersion(spark, t, 3L).transform(typeSummary)
   }
-
-  private val zoptRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** How many of a version's files a stats band read on `colName`
     * would keep (the readTableVersionSkipping pruning rule). */
@@ -2655,14 +2606,8 @@ object Io {
     * the raw source (pruning is conservative, the residual predicate
     * exact). */
   def optimizeZorderRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = zoptRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_zopt_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val flat = Tables.eventsRaw(spark, dir)
-        .select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_zopt") { tt =>
+      val flat = centsOf(spark, dir)
         .repartition(8)
       tableAppendStats(flat, tt, "event_id", "cents")
       val (ilo, ihi, clo, chi) = zoptBands(spark, tt)
@@ -2676,8 +2621,7 @@ object Io {
         s"z-ordered layout at $tt must prune the event_id band")
       require(skipKeepCount(spark, tt, 1L, "cents", clo, chi) < nf,
         s"z-ordered layout at $tt must prune the cents band")
-      tt
-    })
+    }
     val (ilo, ihi, clo, chi) = zoptBands(spark, t)
     // global agg (not groupBy-on-literal): an empty band still yields
     // one row, matching the oracle's aggregate-without-GROUP-BY
@@ -2711,9 +2655,6 @@ object Io {
       mnc + (mxc - mnc) / 8, mnc + (mxc - mnc) / 4)
   }
 
-  private val rwRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** I48, oracle-gated: replaceWhere through the connector write
     * surface — v0 lands typ-hashed across 4 files, then a
     * `mode("overwrite").option("replaceWhere", "typ = 'purchase'")`
@@ -2724,14 +2665,8 @@ object Io {
     * granular COW, not a table rewrite). Final cut ≡ the oracle's
     * region replay. */
   def replaceWhereRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = rwRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_rw_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val flat = Tables.eventsRaw(spark, dir)
-        .select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_rw") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(flat.repartition(4, col("typ")), tt) // v0
       val newBatch = flat.filter(col("typ") === "purchase")
         .withColumn("cents", col("cents") + 100000L)
@@ -2752,16 +2687,9 @@ object Io {
       require(readCommit(spark, tt, 1L).toSet
           .intersect(readCommit(spark, tt, 0L).toSet).nonEmpty,
         s"replaceWhere at $tt must carry untouched files by reference")
-      tt
-    })
-    readTableVersion(spark, t, tableVersion(spark, t))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    readTableVersion(spark, t, tableVersion(spark, t)).transform(typeSummary)
   }
-
-  private val restRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** I20, oracle-gated: restore-then-read — a private 3-commit table
     * (create / append / COW-delete purchases) is RESTORED to v1,
@@ -2772,15 +2700,11 @@ object Io {
     * replayed by DuckDB from the source.
     */
   def restoreRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = restRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_restore_" + fp).toString
+    val t = fixture(spark, dir, "graft_io_restore") { tt =>
       buildEventsTable(spark, dir, tt)
       val v = tableRestore(spark, tt, 1L)
       require(v == 3L, s"expected restore to commit v3 at $tt, got $v")
-      tt
-    })
+    }
     def agg(tag: String, v: Long): DataFrame =
       readTableVersion(spark, t, v)
         .groupBy(lit(tag).as("rel"), col("typ"))
@@ -3396,20 +3320,9 @@ object Io {
     base.filter(col(statsCol) >= lo && col(statsCol) < hi)
   }
 
-  private val dvRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   private[graft] def dvTable(spark: SparkSession, dir: String): String =
-    dvRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val t = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_dv_" + fp).toString
-      fsFor(spark, t).delete(new org.apache.hadoop.fs.Path(t), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        unix_micros(Tables.tsCol(raw)).as("us"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    fixture(spark, dir, "graft_io_dv") { t =>
+      val flat = centsOf(spark, dir, withUs = true)
       // type-clustered layout so the two deletes exercise BOTH paths:
       // the point-ish delete (error ∧ id≡0 mod 7 ≈ 1/7 of one file)
       // rides the DV, the bulk delete (all purchases ≈ a whole file)
@@ -3418,8 +3331,7 @@ object Io {
       tableDeleteWhereDv(spark, t,
         col("typ") === "error" && pmod(col("event_id"), lit(7)) === 0)
       tableDeleteWhereDv(spark, t, col("typ") === "purchase")
-      t
-    })
+    }
 
   /** I26, oracle-gated: I14's time-travel reads THROUGH the DSv2
     * connector — `spark.read.format("graft").option("versionAsOf", v)`
@@ -3448,10 +3360,7 @@ object Io {
     spark.read.format("graft")
       .option("skipCol", "us").option("skipLo", lo).option("skipHi", hi)
       .load(t)
-      .filter(col("us") >= lo && col("us") < hi)
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .filter(col("us") >= lo && col("us") < hi).transform(typeSummary)
   }
 
   /** I25+I15, oracle-gated: the change feed of both DV-table
@@ -3502,9 +3411,6 @@ object Io {
     agg(0L).unionByName(agg(1L)).unionByName(agg(2L))
   }
 
-  private val mergeRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** MERGE gate (round 12), oracle-gated: v0 = the flat events table
     * (type-clustered layout so the merge touches SOME files, not all);
     * one MERGE whose source UPDATES every purchase (cents + 100000,
@@ -3514,15 +3420,8 @@ object Io {
     * so update-in-place, insert, untouched-type carry-over AND version
     * isolation are all content-checked. */
   def mergeRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = mergeRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_merge_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_merge") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(
         flat.repartitionByRange(4, col("typ"), col("event_id")), tt)
       val src = flat.filter(col("typ") === "purchase")
@@ -3531,8 +3430,7 @@ object Io {
           .withColumn("event_id", col("event_id") + 1000000000000L))
       val v = tableMerge(spark, tt, src, "event_id")
       require(v == 1L, s"expected merge commit v1 at $tt, got $v")
-      tt
-    })
+    }
     def agg(v: Long): DataFrame =
       readTableVersion(spark, t, v)
         .groupBy(lit(v).as("version"), col("typ"))
@@ -3540,9 +3438,6 @@ object Io {
           min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
     agg(0L).unionByName(agg(1L))
   }
-
-  private val mergeReRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** MERGE × positional-DV gate (round 13): v0 = the flat table
     * (type-clustered layout); v1 DV-deletes the error ∧ (id%7=0) class
@@ -3557,15 +3452,8 @@ object Io {
     * Both cuts read back and aggregated; the oracle replays them from
     * the raw source. */
   def mergeReinsertRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = mergeReRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_mergere_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_mergere") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(
         flat.repartitionByRange(4, col("typ"), col("event_id")), tt)
       val v1 = tableDeleteWhereDv(spark, tt,
@@ -3580,8 +3468,7 @@ object Io {
       require(v2 == 2L, s"expected merge commit v2 at $tt, got $v2")
       require(dvDirsOf(spark, tt, 2L).nonEmpty,
         s"merge at $tt must carry the DV sidecar for kept files")
-      tt
-    })
+    }
     def agg(v: Long): DataFrame =
       readTableVersion(spark, t, v)
         .groupBy(lit(v).as("version"), col("typ"))
@@ -3589,12 +3476,6 @@ object Io {
           min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
     agg(1L).unionByName(agg(2L))
   }
-
-  private val dsv2wRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private val catRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Catalog gate (round 12), oracle-gated: the whole table lifecycle
     * as `graft.<ns>.<table>` SQL identifiers — CREATE TABLE (schema
@@ -3604,18 +3485,8 @@ object Io {
     * delete from the raw source, so identifier-addressed DML is
     * content-checked end to end. */
   def catalogRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = catRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val wh = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_warehouse_" + fp).toString
-      fsFor(spark, wh).delete(new org.apache.hadoop.fs.Path(wh), true)
-      spark.conf.set("spark.sql.catalog.graftcat",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftcat.warehouse", wh)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = warehouse(spark, dir, "graft_warehouse", "graftcat") { wh =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_cat_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.g")
       spark.sql(
@@ -3624,8 +3495,7 @@ object Io {
       spark.sql("INSERT INTO graftcat.g.events_flat " +
         "SELECT * FROM __graft_cat_src")
       spark.sql("DELETE FROM graftcat.g.events_flat WHERE typ = 'view'")
-      wh
-    })
+    }
     // t keeps the memo non-trivial; the read itself is pure SQL
     require(t.nonEmpty)
     spark.sql(
@@ -3633,9 +3503,6 @@ object Io {
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM graftcat.g.events_flat GROUP BY typ""".stripMargin)
   }
-
-  private val updRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** SQL UPDATE gate (round 12), oracle-gated: the row-level-operation
     * framework end to end — CTAS lands the flat events table
@@ -3647,18 +3514,8 @@ object Io {
     * them from the raw source, so update-in-place, carry-over and
     * version isolation are all content-checked. */
   def updateRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = updRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_upd_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftdml",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftdml.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_upd_wh", "graftdml") { w =>
+      centsOf(spark, dir)
         .repartitionByRange(4, col("typ"), col("event_id"))
         .createOrReplaceTempView("__graft_upd_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftdml.g")
@@ -3672,8 +3529,7 @@ object Io {
       require(v0.intersect(v1).nonEmpty,
         s"UPDATE must carry untouched files by reference (v0=$v0 v1=$v1)")
       require(v1 != v0, "UPDATE must rewrite the touched files")
-      w
-    })
+    }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
       spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
@@ -3684,9 +3540,6 @@ object Io {
     agg(0L).unionByName(agg(1L))
   }
 
-  private val alterRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** ALTER TABLE ADD COLUMN gate (round 13), oracle-gated: a pure-SQL
     * catalog user evolves a table's schema — CTAS the even-id half
     * (3 columns), `ALTER TABLE ... ADD COLUMN band BIGINT`, INSERT the
@@ -3696,18 +3549,8 @@ object Io {
     * eras' data intact. The oracle replays the two eras from the raw
     * source with an explicit NULL band on era 1. */
   def alterAddRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = alterRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_alter_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftalt",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftalt.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_alter_wh", "graftalt") { w =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_alter_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftalt.g")
       spark.sql("CREATE TABLE graftalt.g.ev AS " +
@@ -3716,17 +3559,13 @@ object Io {
       spark.sql("INSERT INTO graftalt.g.ev " +
         "SELECT event_id, typ, cents, cents % 10 AS band " +
         "FROM __graft_alter_src WHERE event_id % 2 = 1")
-      w
-    })
+    }
     require(wh.nonEmpty)
     spark.sql("SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
       "count(band) AS n_band, sum(band) AS sum_band, " +
       "min(event_id) AS min_id, max(event_id) AS max_id " +
       "FROM graftalt.g.ev GROUP BY typ")
   }
-
-  private val alterDmlRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Cross-era DML gate (round 14, round-13 ADVICE high): DML AFTER a
     * schema evolution must not lose the added column — CTAS the
@@ -3740,18 +3579,8 @@ object Io {
     * nulled era-2 bands. The oracle replays insert-minus-delete from
     * the raw source with the era-aware band. */
   def alterDmlRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = alterDmlRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_alterdml_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftadml",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftadml.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_alterdml_wh", "graftadml") { w =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_adml_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftadml.g")
       spark.sql("CREATE TABLE graftadml.g.ev AS " +
@@ -3763,17 +3592,13 @@ object Io {
       // the cross-era COW delete: 'view' rows live in files of BOTH
       // eras, so the rewrite read must be era-correct
       spark.sql("DELETE FROM graftadml.g.ev WHERE typ = 'view'")
-      w
-    })
+    }
     require(wh.nonEmpty)
     spark.sql("SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
       "count(band) AS n_band, sum(band) AS sum_band, " +
       "min(event_id) AS min_id, max(event_id) AS max_id " +
       "FROM graftadml.g.ev GROUP BY typ")
   }
-
-  private val alterWidenRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** TYPE-WIDENING gate (round 14), oracle-gated: a CTAS table with an
     * INT cents column is widened to BIGINT (`ALTER COLUMN ... TYPE` —
@@ -3782,18 +3607,8 @@ object Io {
     * past the int range; the final cut sums exactly — pre-widening
     * files served through Spark's parquet upcast, unrewritten. */
   def alterWidenRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = alterWidenRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_alterw_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftaw",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftaw.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_alterw_wh", "graftaw") { w =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_aw_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftaw.g")
       spark.sql("CREATE TABLE graftaw.g.ev AS " +
@@ -3813,16 +3628,12 @@ object Io {
       spark.sql("INSERT INTO graftaw.g.ev " +
         "SELECT event_id, typ, cents + 3000000000 " +
         "FROM __graft_aw_src WHERE event_id % 2 = 1")
-      w
-    })
+    }
     require(wh.nonEmpty)
     spark.sql("SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
       "min(event_id) AS min_id, max(event_id) AS max_id " +
       "FROM graftaw.g.ev GROUP BY typ")
   }
-
-  private val constrRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** CHECK-constraint gate (round 14), oracle-gated: the full
     * constraint lifecycle — declare `cents >= 0` on an existing table
@@ -3834,15 +3645,8 @@ object Io {
     * batch ∪ post-drop batch — so enforcement, refusal atomicity and
     * drop semantics are all content-checked. */
   def constraintRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = constrRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_constr_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_constr") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(flat, tt) // v0
       // a constraint existing data violates refuses at declaration
       val badAdd = try { tableAddConstraint(spark, tt, "impossible",
@@ -3874,16 +3678,9 @@ object Io {
       tableAppend(flat.filter(col("typ") === "error")
         .withColumn("event_id", col("event_id") + 2000000000000L)
         .withColumn("cents", -col("cents")), tt) // v4
-      tt
-    })
-    readTableVersion(spark, t, tableVersion(spark, t))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    readTableVersion(spark, t, tableVersion(spark, t)).transform(typeSummary)
   }
-
-  private val convRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** CONVERT gate (round 14), oracle-gated: a plain parquet directory
     * becomes a commit-log table with ZERO data copied
@@ -3895,15 +3692,8 @@ object Io {
     * conversion losslessness AND post-conversion DML are
     * content-checked. */
   def convertRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = convRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_conv_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_conv") { tt =>
+      val flat = centsOf(spark, dir)
       // the pre-existing plain layout a user would convert
       flat.repartitionByRange(4, col("typ"), col("event_id"))
         .write.mode("overwrite").parquet(tt)
@@ -3918,8 +3708,7 @@ object Io {
       tableAppend(
         flat.filter(col("typ") === "click")
           .withColumn("event_id", col("event_id") + 1000000000000L), tt)
-      tt
-    })
+    }
     def agg(v: Long): DataFrame =
       readTableVersion(spark, t, v)
         .groupBy(lit(v).as("version"), col("typ"))
@@ -3927,9 +3716,6 @@ object Io {
           min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
     agg(0L).unionByName(agg(2L))
   }
-
-  private val morRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** MERGE-ON-READ DML gate (round 13, SupportsDelta over positional
     * DVs): with `graft.dml.mode=mor`, three SQL mutations land WITHOUT
@@ -3944,18 +3730,8 @@ object Io {
     * cut back through the catalog and the oracle replays it from the
     * raw source. */
   def updateMorRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = morRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_mor_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftmor",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftmor.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_mor_wh", "graftmor") { w =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_mor_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftmor.g")
       spark.sql("CREATE TABLE graftmor.g.ev AS " +
@@ -3987,16 +3763,12 @@ object Io {
         require(dvDirsOf(spark, t, v).nonEmpty,
           s"MOR v$v must carry a DV sidecar")
       }
-      w
-    })
+    }
     require(wh.nonEmpty)
     spark.sql("SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
       "min(event_id) AS min_id, max(event_id) AS max_id " +
       "FROM graftmor.g.ev GROUP BY typ")
   }
-
-  private val cdfMorRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** CDC pre/post-image pairing gate (round 14, round-13 VERDICT #3),
     * oracle-gated: a MOR UPDATE (`graft.dml.mode=mor`) surfaces
@@ -4010,18 +3782,8 @@ object Io {
     * oracle replays pre-images (original purchase rows), post-images
     * (updated values) and the appended batch from the raw source. */
   def cdfMorRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = cdfMorRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_cdfmor_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftcdfm",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftcdfm.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_cdfmor_wh", "graftcdfm") { w =>
+      val flat = centsOf(spark, dir)
       flat.filter(col("event_id") % 2 === 0)
         .createOrReplaceTempView("__graft_cdfm_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcdfm.g")
@@ -4039,8 +3801,7 @@ object Io {
       }
       // a plain append on top: its feed rows must stay `insert`
       tableAppend(flat.filter(col("event_id") % 2 === 1), s"$w/g/ev")
-      w
-    })
+    }
     require(wh.nonEmpty)
     val t = s"$wh/g/ev"
     def agg(fromV: Long): DataFrame =
@@ -4050,9 +3811,6 @@ object Io {
     agg(0L).unionByName(agg(1L))
   }
 
-  private val copyRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** COPY INTO gate (round 14), oracle-gated: idempotent landing-dir
     * ingest — two slices land as one file each and the first COPY INTO
     * ingests both in one commit; a RE-RUN over the same dir is a no-op
@@ -4060,15 +3818,13 @@ object Io {
     * slice lands and the next run ingests ONLY it. The final table cut
     * must equal the oracle's replay of the whole source. */
   def copyIntoRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = copyRuns.computeIfAbsent((spark, dir), _ => {
+    val t = graft.Memo(spark, s"io.graft_copyinto:$dir") {
       val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
       val base = java.nio.file.Files
         .createTempDirectory("graft_copyinto_" + fp).toString
       val table = s"$base/table"
       val landing = s"$base/landing"
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      val flat = centsOf(spark, dir)
       flat.filter(pmod(col("event_id"), lit(3)) === 0).coalesce(1)
         .write.mode("append").parquet(landing)
       flat.filter(pmod(col("event_id"), lit(3)) === 1).coalesce(1)
@@ -4087,15 +3843,9 @@ object Io {
       require(n2 == 1L,
         s"incremental COPY INTO must ingest only the new file, got $n2")
       table
-    })
-    readTableVersion(spark, t, tableVersion(spark, t))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    readTableVersion(spark, t, tableVersion(spark, t)).transform(typeSummary)
   }
-
-  private val genRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Generated-column gate (round 14), oracle-gated: the GENERATED
     * ALWAYS AS lifecycle — v0 lands WITH a conforming `band =
@@ -4106,14 +3856,8 @@ object Io {
     * explicit values passes. Final cut ≡ the oracle recomputing the
     * column for every row from source. */
   def generatedRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = genRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_gen_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val flat = Tables.eventsRaw(spark, dir)
-        .select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_gen") { tt =>
+      val flat = centsOf(spark, dir)
       val withBand = flat.withColumn("band", pmod(col("cents"), lit(97L)))
       tableAppend(withBand.filter(pmod(col("event_id"), lit(3)) === 0), tt) // v0
       // a nonconforming declaration refuses
@@ -4135,17 +3879,13 @@ object Io {
         "a mismatching generated value must refuse without committing")
       // matching explicit values pass
       tableAppend(withBand.filter(pmod(col("event_id"), lit(3)) === 2), tt) // v3
-      tt
-    })
+    }
     readTableVersion(spark, t, tableVersion(spark, t))
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         sum(col("band")).as("sum_band"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
   }
-
-  private val mevoRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** MERGE WITH SCHEMA EVOLUTION gate (round 14), oracle-gated: the
     * source carries a `score` column the target lacks plus brand-new
@@ -4155,14 +3895,8 @@ object Io {
     * score, pre-evolution rows read score NULL, new keys insert.
     * Final cut ≡ the oracle's era-aware replay. */
   def mergeEvolveRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = mevoRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_mevo_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val flat = Tables.eventsRaw(spark, dir)
-        .select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_mevo") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(flat.repartition(4, col("typ")), tt) // v0
       val upd = flat.filter(col("typ") === "purchase")
         .withColumn("cents", col("cents") + 50000L)
@@ -4182,17 +3916,13 @@ object Io {
         schemaEvolution = true)
       require(vEnd == 2L,
         s"evolving merge at $tt must land schema + merge commits, got $vEnd")
-      tt
-    })
+    }
     readTableVersion(spark, t, tableVersion(spark, t))
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         count(col("score")).as("n_score"), sum(col("score")).as("sum_score"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
   }
-
-  private val identRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** IDENTITY gate (round 14), oracle-gated on derived invariants:
     * v0 seeds `rid` with explicit unique values (the event ids), the
@@ -4202,14 +3932,8 @@ object Io {
     * global uniqueness the oracle replays as count-of-rows — and the
     * builder asserts every assigned id clears the seeded range. */
   def identityRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = identRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_ident_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val flat = Tables.eventsRaw(spark, dir)
-        .select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_ident") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(flat.filter(pmod(col("event_id"), lit(2)) === 0)
         .withColumn("rid", col("event_id")), tt) // v0: explicit seed
       val v1 = tableAddIdentityColumn(spark, tt, "rid")
@@ -4224,8 +3948,7 @@ object Io {
           s"($assignedMin !> $seedMax)")
       require(readIdentity(spark, tt).head._4 >= assignedMin,
         s"the high water at $tt must advance with the assignment")
-      tt
-    })
+    }
     readTableVersion(spark, t, tableVersion(spark, t))
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), countDistinct(col("rid")).as("n_ids"),
@@ -4233,27 +3956,14 @@ object Io {
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
   }
 
-  private val msqlRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** SQL MERGE INTO gate (round 12), oracle-gated: the io_merge
     * fixture driven by the MERGE STATEMENT through the catalog instead
     * of the API verb — same source (purchases updated by event_id,
     * clicks re-inserted displaced), same two-cut oracle. SQL MERGE ≡
     * API merge ≡ source replay. */
   def mergeSqlRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = msqlRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_msql_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftmsql",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftmsql.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_msql_wh", "graftmsql") { w =>
+      val flat = centsOf(spark, dir)
       flat.repartitionByRange(4, col("typ"), col("event_id"))
         .createOrReplaceTempView("__graft_msql_tgt")
       flat.filter(col("typ") === "purchase")
@@ -4273,8 +3983,7 @@ object Io {
       require(commitEntries(spark, t, 0L).toSet
           .intersect(commitEntries(spark, t, 1L).toSet).nonEmpty,
         "SQL MERGE must carry untouched files by reference")
-      w
-    })
+    }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
       spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
@@ -4285,9 +3994,6 @@ object Io {
     agg(0L).unionByName(agg(1L))
   }
 
-  private val owRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** INSERT OVERWRITE gate (round 12 s3), oracle-gated: CTAS lands the
     * full flat table as v0, `INSERT OVERWRITE ... SELECT` replaces the
     * content with the purchases-only cut as v1 (ONE replace commit —
@@ -4295,18 +4001,8 @@ object Io {
     * the oracle replays each from the raw source, so overwrite content
     * AND history intactness are content-checked. */
   def overwriteRead(spark: SparkSession, dir: String): DataFrame = {
-    val wh = owRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val w = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_ow_wh_" + fp).toString
-      fsFor(spark, w).delete(new org.apache.hadoop.fs.Path(w), true)
-      spark.conf.set("spark.sql.catalog.graftow",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftow.warehouse", w)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val wh = warehouse(spark, dir, "graft_ow_wh", "graftow") { w =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_ow_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftow.g")
       spark.sql("CREATE TABLE graftow.g.ev AS SELECT * FROM __graft_ow_src")
@@ -4314,8 +4010,7 @@ object Io {
         "SELECT * FROM __graft_ow_src WHERE typ = 'purchase'")
       require(tableVersion(spark, s"$w/g/ev") == 1L,
         "overwrite must land exactly one replace commit")
-      w
-    })
+    }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
       spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
@@ -4325,9 +4020,6 @@ object Io {
           col("sum_cents"), col("min_id"), col("max_id"))
     agg(0L).unionByName(agg(1L))
   }
-
-  private val ctasRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Atomic-CTAS + SQL-time-travel gate (round 12), oracle-gated:
     * `CREATE TABLE ... AS SELECT` lands the whole source as commit v0
@@ -4339,25 +4031,14 @@ object Io {
     * through the later delete: CTAS content + version isolation are
     * both content-checked. */
   def ctasRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = ctasRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val wh = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_ctas_wh_" + fp).toString
-      fsFor(spark, wh).delete(new org.apache.hadoop.fs.Path(wh), true)
-      spark.conf.set("spark.sql.catalog.graftctas",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftctas.warehouse", wh)
-      val raw = Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = warehouse(spark, dir, "graft_ctas_wh", "graftctas") { wh =>
+      centsOf(spark, dir)
         .createOrReplaceTempView("__graft_ctas_src")
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftctas.g")
       spark.sql("CREATE TABLE graftctas.g.events_flat AS " +
         "SELECT * FROM __graft_ctas_src")
       spark.sql("DELETE FROM graftctas.g.events_flat WHERE typ = 'view'")
-      wh
-    })
+    }
     require(t.nonEmpty)
     spark.sql(
       """SELECT typ, count(*) AS n, sum(cents) AS sum_cents,
@@ -4365,9 +4046,6 @@ object Io {
         |FROM graftctas.g.events_flat VERSION AS OF 0
         |GROUP BY typ""".stripMargin)
   }
-
-  private val txnRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Transactional DSv2 write gate (round 12), oracle-gated: the
     * foreachBatch sink pattern through the connector — batch 1
@@ -4377,15 +4055,8 @@ object Io {
     * source aggregation. Same oracle as `io_write_dsv2` — the content
     * contract is identical, the delivery discipline is what differs. */
   def dsv2WriteTxnRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = txnRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_dsv2txn_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_dsv2txn") { tt =>
+      val flat = centsOf(spark, dir)
       tableAppend(flat.filter(col("typ") === "view"), tt) // v0 (API)
       def deliver(b: Long, df: DataFrame): Unit =
         df.write.format("graft").option("txnVersion", b)
@@ -4397,12 +4068,8 @@ object Io {
         s"redelivered txn batch committed twice at $tt")
       deliver(2L,
         flat.filter(!col("typ").isInCollection(Seq("view", "purchase"))))
-      tt
-    })
-    spark.read.format("graft").load(t)
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    spark.read.format("graft").load(t).transform(typeSummary)
   }
 
   /** I26 write path (round 12), oracle-gated: two thirds of the events
@@ -4414,15 +4081,8 @@ object Io {
     * is the thing gated: a dropped/duplicated/mis-committed append
     * shifts n and sum_cents. */
   def dsv2WriteRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = dsv2wRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val tt = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_dsv2w_" + fp).toString
-      fsFor(spark, tt).delete(new org.apache.hadoop.fs.Path(tt), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val t = fixture(spark, dir, "graft_io_dsv2w") { tt =>
+      val flat = centsOf(spark, dir)
       // v0 creates the table via the API (the connector needs an
       // existing log to infer schema from); v1 and v2 land through
       // the DSv2 write path
@@ -4433,28 +4093,13 @@ object Io {
         .write.format("graft").mode("append").save(tt)
       require(tableVersion(spark, tt) == 2L,
         s"expected 3 commits at $tt, head is ${tableVersion(spark, tt)}")
-      tt
-    })
-    spark.read.format("graft").load(t)
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    spark.read.format("graft").load(t).transform(typeSummary)
   }
 
-  private val skipRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   private[graft] def skipTable(spark: SparkSession, dir: String): String =
-    skipRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val t = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_io_skip_" + fp).toString
-      fsFor(spark, t).delete(new org.apache.hadoop.fs.Path(t), true)
-      val raw = Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"),
-        unix_micros(Tables.tsCol(raw)).as("us"),
-        col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    fixture(spark, dir, "graft_io_skip") { t =>
+      val flat = centsOf(spark, dir, withUs = true)
       // three stats-carrying commits by day band, each range-laid-out
       // into 3 time-bounded files (the Z-order/I11 discipline in one
       // dimension) so the sidecar bounds are tight per file; stats
@@ -4469,8 +4114,7 @@ object Io {
       batch(0L, 1704931200000000L)                      // ≤ 01-10
       batch(1704931200000000L, 1705795200000000L)       // 01-11..20
       batch(1705795200000000L, Long.MaxValue)           // 01-21..
-      t
-    })
+    }
 
   /** I22, oracle-gated: the latest version read through commit stats
     * for the 2024-01-08..14 band — IoSpec separately pins that the
@@ -4482,9 +4126,6 @@ object Io {
     val t = skipTable(spark, dir)
     val lo = 1704672000000000L // 2024-01-08 00:00:00 UTC (µs)
     val hi = 1705190400000000L // 2024-01-14 00:00:00 UTC (µs)
-    readTableVersionSkipping(spark, t, tableVersion(spark, t), "us", lo, hi)
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    readTableVersionSkipping(spark, t, tableVersion(spark, t), "us", lo, hi).transform(typeSummary)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -103,15 +103,128 @@ case class GfOut(usr: String, h_sec: Long, observed: Option[Double],
 object StreamOps extends Serializable {
 
   /** The same series identity as batch ingest: xxhash64 (seed 42) of
-    * the NUL-joined labels — TagIndex uses xxhash64(concat_ws(NUL,
-    * labels)), so streaming and batch assign identical tsids and an
-    * entity can move between the paths without re-keying (NUL cannot
-    * occur inside a label value, so the encoding is unambiguous).
+    * the NUL-joined labels — TagIndex hashes the same encoding for a
+    * series carrying every label, so streaming and batch assign
+    * identical tsids and an entity can move between the paths without
+    * re-keying (NUL cannot occur inside a label value, so the encoding
+    * is unambiguous).
     */
   def tsidOf(usr: String, typ: String): Long = {
     val u = UTF8String.fromString(usr + "\u0000" + typ)
     XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L)
   }
+
+  // ---- the streaming-gate machinery: an oracle-gated stream lands its
+  // input files, replays them as micro-batches and drains the query
+  // once per (session, dataset), held in the graft.Memo registry ----
+
+  /** `df` landed as `parts` parquet files at `landing` (overwritten). */
+  private[graft] def landParts(df: DataFrame, landing: String,
+      parts: Int = 4): Unit =
+    df.repartition(parts).write.mode("overwrite").parquet(landing)
+
+  /** Replays the files at `landing`, `perTrigger` per micro-batch,
+    * through the query `start` returns, and drains it:
+    * processAllAvailable, then stop (also when the query fails). */
+  private[graft] def replayed(spark: SparkSession, landing: String,
+      perTrigger: Int = 1)(start: DataFrame => StreamingQuery): Unit =
+    drain(start(replay(spark, landing, perTrigger)))
+
+  /** The files at `landing` as a stream, `perTrigger` per micro-batch. */
+  private def replay(spark: SparkSession, landing: String,
+      perTrigger: Int = 1): DataFrame =
+    spark.readStream.schema(spark.read.parquet(landing).schema)
+      .option("maxFilesPerTrigger", perTrigger).parquet(landing)
+
+  private def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Drains `q`, runs `midStream`, drains again, then stops. */
+  private def drainAround(q: StreamingQuery)(midStream: => Unit): Unit =
+    try { q.processAllAvailable(); midStream; q.processAllAvailable() }
+    finally q.stop()
+
+  /** `df` started into the memory-sink table `name`. */
+  private def toMemory(df: DataFrame, mode: String, name: String,
+      checkpoint: Option[String] = None): StreamingQuery = {
+    val w = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
+  }
+
+  /** Appends each micro-batch as commit `batchId` of the table at `t`
+    * through [[graft.sources.Io.tableAppendIdempotent]], delivering it
+    * twice: the simulated redelivery must no-op. */
+  private def appendTwice(t: String)(batch: DataFrame, batchId: Long): Unit = {
+    val first = graft.sources.Io.tableAppendIdempotent(batch, t, batchId)
+    val retry = graft.sources.Io.tableAppendIdempotent(batch, t, batchId)
+    require(first && !retry,
+      s"batch $batchId: first=$first retry=$retry — idempotence broken")
+  }
+
+  /** Runs `apply` over each micro-batch of the replayed `landing`
+    * (checkpointed at `ckpt`), then re-applies the whole landing — a
+    * redelivery of every batch — and requires the table at `t` to
+    * keep its content (row count and cent sum). */
+  private def applyIdempotent(spark: SparkSession, landing: String,
+      ckpt: String, t: String)(apply: (SparkSession, DataFrame, Long) => Unit): Unit = {
+    replayed(spark, landing)(_.writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch((batch: DataFrame, id: Long) =>
+        apply(batch.sparkSession, batch, id))
+      .start())
+    def cut() = latest(spark, t).agg(count(lit(1)), sum(col("cents"))).collect()(0)
+    val before = cut()
+    apply(spark, spark.read.parquet(landing), 999L)
+    val after = cut()
+    require(before == after, s"re-apply at $t must be a content no-op: $before != $after")
+  }
+
+  /** The memory-sink table `graft_<gate>_<fp>` (fp: the fingerprint of
+    * `dir/source`) that `run` fills, once per (session, dataset); a
+    * registry clear drops the table, and the next call runs again. */
+  private def sinkTable(spark: SparkSession, dir: String, gate: String,
+      source: String = "events.parquet")(run: String => Unit): DataFrame = {
+    val name = s"graft_${gate}_" + graft.Tables.fingerprint(s"$dir/$source")
+    graft.Memo(spark, s"stream.$gate:$dir",
+      (n: String) => spark.catalog.dropTempView(n)) { run(name); name }
+    spark.table(name)
+  }
+
+  /** A memory-sink gate: `land` writes the input files to
+    * `<tmpdir>/<sink table>/landing`, which replay through `query` into
+    * the sink in output `mode`. */
+  private def sunk(spark: SparkSession, dir: String, gate: String,
+      mode: String, source: String = "events.parquet", perTrigger: Int = 1)(
+      land: String => Unit)(query: DataFrame => DataFrame): DataFrame =
+    sinkTable(spark, dir, gate, source) { name =>
+      val landing = graft.Memo.tmp(s"$name/landing").toString
+      land(landing)
+      replayed(spark, landing, perTrigger)(s => toMemory(query(s), mode, name))
+    }
+
+  /** A gate whose output persists across JVMs in the `_done`-landed
+    * fixture `<tmpdir>/graft_<gate>_<fp>` (see [[graft.Memo.landed]]),
+    * once per (session, dataset): a fresh landing would feed an old
+    * checkpoint new part-file names and double every count. */
+  private def landedGate(spark: SparkSession, dir: String, gate: String,
+      source: String = "events.parquet")(build: String => Unit): String =
+    graft.Memo(spark, s"stream.$gate:$dir") {
+      graft.Memo.landed(s"graft_$gate",
+        graft.Tables.fingerprint(s"$dir/$source"))(b => build(b.toString)).toString
+    }
+
+  /** The events as [[Sample]] columns. */
+  private def samplesOf(spark: SparkSession, dir: String): DataFrame = {
+    val raw = graft.Tables.eventsRaw(spark, dir)
+    raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
+      col("user_id").cast("string").as("usr"),
+      col("event_type").as("typ"), col("value"))
+  }
+
+  /** The latest version of the commit-log table at `t`. */
+  private def latest(spark: SparkSession, t: String): DataFrame =
+    graft.sources.Io.readTableVersion(spark, t,
+      graft.sources.Io.tableVersion(spark, t))
 
   /** Kafka ingest wiring — the production stream source ahead of the
     * H1-H5 operators. Config-only in this container (the
@@ -156,9 +269,6 @@ object StreamOps extends Serializable {
 
   // one completed streaming run per (session, dataset): the memory-sink
   // table name the H1 gate query reads
-  private val windowAggRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H1, oracle-gated: [[windowedAgg]]'s shape driven by an ACTUAL
     * Structured Streaming run — the events land as 4 parquet files,
     * stream back one file per micro-batch, and the hourly windowed
@@ -172,41 +282,26 @@ object StreamOps extends Serializable {
     * windowed-agg path.
     */
   def windowedAggStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = windowAggRuns.computeIfAbsent((spark, dir), _ => {
-      val name = "graft_h1_" + graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h1_" + graft.Tables.fingerprint(s"$dir/events.parquet"))
-      val landing = new java.io.File(base, "landing").toString
+    val table = sunk(spark, dir, "h1", "complete") { l =>
       val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(graft.Tables.tsCol(raw).as("ts"), col("event_type").as("typ"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
+      landParts(raw.select(graft.Tables.tsCol(raw).as("ts"),
+        col("event_type").as("typ")), l)
+    } {
       // NO watermark here: in Complete mode a watermark is inert (no
       // state eviction, no late-row dropping), and the landing files
       // replay in arbitrary order — carrying one would silently start
       // dropping "late" rows if the mode were ever switched to
       // append/update. Complete mode IS the gate's semantics: the
       // final table is the whole history ≡ the batch GROUP BY.
-      val q = stream
-        .groupBy(window(col("ts"), "1 hour"), col("typ"))
+      _.groupBy(window(col("ts"), "1 hour"), col("typ"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("win_start"), col("typ"), col("n"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).select(
+    }
+    table.select(
       (unix_micros(col("win_start")) / lit(1000000L)).cast("long")
         .as("win_start_sec"),
       col("typ"), col("n"))
   }
-
-  private val rollupRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H26, oracle-gated: LIVE maintenance of the B53 1h rollup tier —
     * the streaming half of the downsample story: the batch job
@@ -225,23 +320,14 @@ object StreamOps extends Serializable {
     * the loop.
     */
   def rollupStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = rollupRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h26_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h26_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+    val table = sunk(spark, dir, "h26", "complete") { l =>
       val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"),
-          unix_micros(graft.Tables.tsCol(raw)).as("us"),
-          col("event_id"), col("value"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = stream
-        .groupBy(col("usr"), col("typ"),
+      landParts(raw.select(col("user_id").cast("string").as("usr"),
+        col("event_type").as("typ"),
+        unix_micros(graft.Tables.tsCol(raw)).as("us"),
+        col("event_id"), col("value")), l)
+    } {
+      _.groupBy(col("usr"), col("typ"),
           (expr("us div 1000000") - pmod(expr("us div 1000000"),
             lit(3600L))).as("h_sec"))
         .agg(count(lit(1)).as("n"),
@@ -250,20 +336,11 @@ object StreamOps extends Serializable {
           max(col("value")).as("vmax"),
           max_by(col("value"), struct(col("us"), col("event_id")))
             .as("last_v"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
+    }
     val t0 = 1704067200L // 2024-01-01 00:00:00 UTC
     graft.tsdb.Rollup.dailyFromHours(
-      spark.table(table)
-        .filter(col("h_sec") >= t0 && col("h_sec") < t0 + 21L * 86400L))
+      table.filter(col("h_sec") >= t0 && col("h_sec") < t0 + 21L * 86400L))
   }
-
-  private val churnRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H28, oracle-gated: LIVE series-churn dashboard — A22's per-day
     * births/deaths/net-open served from a stream, the cardinality-
@@ -278,33 +355,14 @@ object StreamOps extends Serializable {
     * batch catalog and shares `index_churn`'s DuckDB oracle verbatim.
     */
   def churnStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = churnRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h28_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h28_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"),
-          unix_micros(graft.Tables.tsCol(raw)).as("us"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = stream
-        .groupBy(col("usr"), col("typ"))
+    val table = sunk(spark, dir, "h28", "complete")(landSeriesUs(spark, dir, _)) {
+      _.groupBy(col("usr"), col("typ"))
         .agg(min(col("us")).as("fd_us"), max(col("us")).as("ld_us"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
+    }
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    spark.table(table)
+    table
       .select(explode(array(
         struct(date_format(timestamp_micros(col("fd_us")), "yyyy-MM-dd")
           .as("day"), lit(1L).as("b"), lit(0L).as("d")),
@@ -316,8 +374,14 @@ object StreamOps extends Serializable {
         sum(col("born") - col("died")).over(w))
   }
 
-  private val guardRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** The events as (usr, typ, µs) samples, landed in 4 parts. */
+  private def landSeriesUs(spark: SparkSession, dir: String,
+      landing: String): Unit = {
+    val raw = graft.Tables.eventsRaw(spark, dir)
+    landParts(raw.select(col("user_id").cast("string").as("usr"),
+      col("event_type").as("typ"),
+      unix_micros(graft.Tables.tsCol(raw)).as("us")), landing)
+  }
 
   /** H32 (round 10, oracle-gated): LIVE series-cardinality admission —
     * A25's guard as the ingest-path gatekeeper it actually is in
@@ -332,32 +396,13 @@ object StreamOps extends Serializable {
     * raw-events oracle: stream ≡ batch catalog ≡ raw.
     */
   def cardinalityGuardStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = guardRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h32_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h32_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"),
-          unix_micros(graft.Tables.tsCol(raw)).as("us"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = stream
-        .groupBy(col("usr"), col("typ"))
+    val table = sunk(spark, dir, "h32", "complete")(landSeriesUs(spark, dir, _)) {
+      _.groupBy(col("usr"), col("typ"))
         .agg(min(col("us")).as("first_us"), count(lit(1)).as("n_samples"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
+    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("typ"))
       .orderBy(col("first_us"), col("usr"))
-    spark.table(table)
+    table
       .withColumn("__rk", row_number().over(w))
       .withColumn("__ok", col("__rk") <= 40L)
       .groupBy(col("typ"))
@@ -367,9 +412,6 @@ object StreamOps extends Serializable {
         sum(when(!col("__ok"), col("n_samples")).otherwise(0L))
           .as("samples_dropped"))
   }
-
-  private val wsampleRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H27, oracle-gated: STREAMING priority sampling — C27's weighted
     * sample maintained live over an unbounded corpus feed, the
@@ -387,35 +429,22 @@ object StreamOps extends Serializable {
     */
   def weightedSampleStreamed(spark: SparkSession, dir: String): DataFrame = {
     val n = 200
-    val table = wsampleRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val name = "graft_h27_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h27_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      graft.Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
+    val table = sunk(spark, dir, "h27", "complete", "documents.parquet")(
+      landParts(graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("n_chars")), _)) { stream =>
       val m = 1099511627776L // 2^40
       val u = (pmod(graft.functions.DualPolyHash.column(spark,
           col("doc_id").cast("string")), lit(m)) + 1L).cast("double") /
         lit(m.toDouble)
-      val q = stream
+      stream
         .select(col("doc_id"), col("n_chars"),
           (col("n_chars").cast("double") / u).as("priority"))
         .groupBy()
         .agg(graft.functions.TopKAgg.column(spark, col("priority"),
           col("doc_id").cast("string"), col("n_chars").cast("string"),
           n + 1).as("top"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    val top = spark.table(table)
+    }
+    val top = table
       .select(explode(col("top")).as("e"))
       .select(col("e.v").as("priority"),
         col("e.a").cast("long").as("doc_id"),
@@ -427,9 +456,6 @@ object StreamOps extends Serializable {
         greatest(col("n_chars").cast("double"), col("tau")).as("w_hat"))
   }
 
-  private val dedupRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H8, oracle-gated: streaming exact dedup proven against batch. The
     * events land TWICE (every record is a cross-micro-batch duplicate
     * by construction — the at-least-once transport scenario), stream
@@ -439,32 +465,15 @@ object StreamOps extends Serializable {
     * over the ORIGINAL events proves every duplicate was dropped and
     * nothing else was (counts are integers — no FP surface).
     */
-  def dedupStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = dedupRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h8_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h8_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val ev = raw.select(col("event_id"), col("event_type").as("typ"))
+  def dedupStreamed(spark: SparkSession, dir: String): DataFrame =
+    sunk(spark, dir, "h8", "append", perTrigger = 2) { l =>
+      val ev = graft.Tables.eventsRaw(spark, dir)
+        .select(col("event_id"), col("event_type").as("typ"))
         .repartition(4)
-      ev.write.mode("overwrite").parquet(landing)
-      ev.write.mode("append").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 2).parquet(landing)
-      val q = stream.dropDuplicates("event_id")
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).groupBy(col("typ")).agg(count(lit(1)).as("n"))
-  }
-
-  private val wmDedupRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      ev.write.mode("overwrite").parquet(l)
+      ev.write.mode("append").parquet(l)
+    }(_.dropDuplicates("event_id"))
+      .groupBy(col("typ")).agg(count(lit(1)).as("n"))
 
   /** H24, oracle-gated: watermark-BOUNDED streaming dedup
     * (`dropDuplicatesWithinWatermark`) — the production fix for H8's
@@ -481,35 +490,18 @@ object StreamOps extends Serializable {
     * StreamingSpec pins the eviction bound itself (final state rows
     * ≪ distinct keys) on a controlled fixture.
     */
-  def wmDedupStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = wmDedupRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h24_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), name)
-      val landing = new java.io.File(base, "landing").toString
+  def wmDedupStreamed(spark: SparkSession, dir: String): DataFrame =
+    sunk(spark, dir, "h24", "append") { l =>
       val raw = graft.Tables.eventsRaw(spark, dir)
       val ev = raw.select(col("event_id"),
         graft.Tables.tsCol(raw).as("ts"), col("event_type").as("typ"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      landOrdered(ev.unionAll(ev), Seq("ts"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = stream
-        .withWatermark("ts", "1 hour")
+      landOrdered(ev.unionAll(ev), Seq("ts"), l, 4)
+    } {
+      _.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).groupBy(col("typ"))
+    }.groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-  }
-
-  private val topkRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H12, oracle-gated: the shared bounded-heap TopKAgg as a STREAMING
     * aggregate — per-type top-3 samples accumulated across 4
@@ -519,31 +511,12 @@ object StreamOps extends Serializable {
     * the same parquet — and the heap's (v desc, usr, typ) tie order is
     * the oracle's ORDER BY, the batch B6 parity argument).
     */
-  def topkStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = topkRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h12_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h12_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+  def topkStreamed(spark: SparkSession, dir: String): DataFrame =
+    sunk(spark, dir, "h12", "complete") { l =>
       val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"), col("value"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingTopK(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
-  }
-
-  private val seriesRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      landParts(raw.select(col("user_id").cast("string").as("usr"),
+        col("event_type").as("typ"), col("value")), l)
+    }(streamingTopK(_))
 
   /** H2, oracle-gated: the mapGroupsWithState series tracker run over
     * 4 real micro-batches — every update lands in an Update-mode
@@ -555,32 +528,11 @@ object StreamOps extends Serializable {
     */
   def trackSeriesStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = seriesRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h2_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h2_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-          col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"), col("value"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = trackSeries(stream.as[Sample])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).groupBy(col("usr"), col("typ"))
+    sunk(spark, dir, "h2", "update")(landParts(samplesOf(spark, dir), _))(
+      s => trackSeries(s.as[Sample]).toDF())
+      .groupBy(col("usr"), col("typ"))
       .agg(max(col("nSamples")).as("n_samples"))
   }
-
-  private val histRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H14, oracle-gated: the exact O(#buckets)-state streaming
     * histogram quantiles over 4 real micro-batches. Each batch's
@@ -592,34 +544,13 @@ object StreamOps extends Serializable {
     */
   def histogramQuantileStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = histRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h14_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h14_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-          col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"), col("value"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingHistogramQuantile(stream.as[Sample])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).groupBy(col("typ")).agg(
-      max(col("total")).as("total"),
-      max_by(col("hq50"), col("total")).as("hq50"),
-      max_by(col("hq90"), col("total")).as("hq90"))
+    sunk(spark, dir, "h14", "update")(landParts(samplesOf(spark, dir), _))(
+      s => streamingHistogramQuantile(s.as[Sample]).toDF())
+      .groupBy(col("typ")).agg(
+        max(col("total")).as("total"),
+        max_by(col("hq50"), col("total")).as("hq50"),
+        max_by(col("hq90"), col("total")).as("hq90"))
   }
-
-  private val freqRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H10, oracle-gated: streaming Misra–Gries heavy hitters over 4
     * real micro-batches. On this corpus the distinct bucket count
@@ -633,27 +564,8 @@ object StreamOps extends Serializable {
     */
   def freqItemsStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = freqRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h10_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h10_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-          col("user_id").cast("string").as("usr"),
-          col("event_type").as("typ"), col("value"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingFreqItems(stream.as[Sample])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+    sunk(spark, dir, "h10", "update")(landParts(samplesOf(spark, dir), _))(
+      s => streamingFreqItems(s.as[Sample]).toDF())
       .withColumn("__tot", aggregate(col("counts"), lit(0L), (a, x) => a + x))
       .groupBy(col("typ"))
       .agg(max_by(struct(col("buckets"), col("counts")), col("__tot")).as("s"))
@@ -661,9 +573,6 @@ object StreamOps extends Serializable {
       .select(col("typ"), (col("pos") + 1).as("rk"),
         col("col.buckets").as("bucket"), col("col.counts").as("n"))
   }
-
-  private val mvRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H15, oracle-gated: the streaming MV maintenance loop end-to-end —
     * 4 micro-batches each overwrite their idempotent `seg=b<id>`
@@ -677,41 +586,12 @@ object StreamOps extends Serializable {
     */
   def mvStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val mvPath = mvRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h15_" + fp)
-      val mv = new java.io.File(base, "mv").toString
-      // the MV segments persist across JVMs while a fresh landing write
-      // would produce NEW part filenames the old checkpoint has not
-      // seen — the file source would ingest them as extra batches and
-      // double every count. `_done` marks a completed build (reuse it
-      // whole); anything half-built is wiped first — the
-      // streamedStoreFor discipline.
-      val done = new java.io.File(base, "_done")
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
-        }
-        val landing = new java.io.File(base, "landing").toString
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-            col("user_id").cast("string").as("usr"),
-            col("event_type").as("typ"), col("value"))
-          .repartition(4).write.mode("overwrite").parquet(landing)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = streamMvMaintain(stream.as[Sample], mv,
-          new java.io.File(base, "ckpt").toString)
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      mv
-    })
-    mvRead(spark, mvPath)
+    val base = landedGate(spark, dir, "h15") { b =>
+      landParts(samplesOf(spark, dir), s"$b/landing")
+      replayed(spark, s"$b/landing")(
+        s => streamMvMaintain(s.as[Sample], s"$b/mv", s"$b/ckpt"))
+    }
+    mvRead(spark, s"$base/mv")
   }
 
   /** Lands `df` as `parts` sequential single-file writes in ascending
@@ -781,9 +661,6 @@ object StreamOps extends Serializable {
     }
   }
 
-  private val ijRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H5, oracle-gated: the stream-stream interval join end-to-end.
     * Errors and purchases land as 4 time-quartile micro-batches EACH
     * (both sides advance together, so the global watermark trails the
@@ -799,45 +676,27 @@ object StreamOps extends Serializable {
     * watermark never passes them).
     */
   def intervalJoinStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = ijRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h5_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h5_" + fp)
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val ev = raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-        col("user_id").cast("string").as("usr"),
-        col("event_type").as("typ"), col("value"))
+    val pairs = sinkTable(spark, dir, "h5") { name =>
+      val base = graft.Memo.tmp(name)
+      val ev = samplesOf(spark, dir)
       val landE = new java.io.File(base, "errors").toString
       val landP = new java.io.File(base, "purchases").toString
       landOrdered(ev.filter(col("typ") === "error"),
         Seq("ts", "event_id"), landE, 4)
       landOrdered(ev.filter(col("typ") === "purchase"),
         Seq("ts", "event_id"), landP, 4)
-      val schema = spark.read.parquet(landE).schema
-      val es = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(landE)
-      val ps = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(landP)
-      val q = intervalJoin(es, ps)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
+      drain(toMemory(intervalJoin(replay(spark, landE), replay(spark, landP)),
+        "append", name))
+    }
     val raw = graft.Tables.eventsRaw(spark, dir)
     val errs = raw.filter(col("event_type") === "error")
       .select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
         col("user_id").cast("string").as("usr"))
-    val counts = spark.table(table)
-      .groupBy(col("err_id")).agg(count(lit(1)).as("__n"))
+    val counts = pairs.groupBy(col("err_id")).agg(count(lit(1)).as("__n"))
     errs.join(counts, errs("event_id") === counts("err_id"), "left_outer")
       .select(col("event_id"), col("usr"),
         coalesce(col("__n"), lit(0L)).as("n_nearby"))
   }
-
-  private val sessRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H11, oracle-gated: streaming session windows end-to-end. Events
     * replay in 4 time-quartile micro-batches through the REAL
@@ -850,45 +709,32 @@ object StreamOps extends Serializable {
     * equal the batch gap-sessionization (B18's oracle shape): session
     * identity, start, count and cent-sum all gate.
     */
-  def sessionAggStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = sessRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h11_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h11_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val ev = raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-        col("user_id").cast("string").as("usr"),
-        col("event_type").as("typ"), col("value"))
-      landOrdered(ev, Seq("ts", "event_id"), landing, 4)
+  def sessionAggStreamed(spark: SparkSession, dir: String): DataFrame =
+    sunk(spark, dir, "h11", "append") {
       // sentinel: one far-future row whose only job is to advance the
       // watermark past every real session (filtered out of the gate)
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      import spark.implicits._
-      Seq(Sample(-1L, new java.sql.Timestamp(maxTs.getTime + 2L * 86400000L),
-        "__flush", "__flush", 0.0)).toDF()
-        .coalesce(1).write.mode("append").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = stream
-        .withWatermark("ts", "10 minutes")
+      landWithSentinel(spark, samplesOf(spark, dir), _, 2L)
+    } {
+      _.withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), "30 minutes"), col("usr"), col("typ"))
         .agg(count(lit(1)).as("n"),
           sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
         .select(unix_timestamp(col("session_window.start")).as("sess_start_sec"),
           col("usr"), col("typ"), col("n"), col("sum_cents"))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).filter(col("usr") =!= "__flush")
-  }
+    }.filter(col("usr") =!= "__flush")
 
-  private val corpusDedupRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** `ev` (Sample columns) landed in 4 event-time-ordered parts, then
+    * one `__flush` sample `days` past its last event: a micro-batch
+    * whose only job is to push the watermark beyond every real row. */
+  private def landWithSentinel(spark: SparkSession, ev: DataFrame,
+      landing: String, days: Long): Unit = {
+    import spark.implicits._
+    landOrdered(ev, Seq("ts", "event_id"), landing, 4)
+    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+    Seq(Sample(-1L, new java.sql.Timestamp(maxTs.getTime + days * 86400000L),
+      "__flush", "__flush", 0.0)).toDF()
+      .coalesce(1).write.mode("append").parquet(landing)
+  }
 
   /** H13, oracle-gated: streaming incremental dedup end-to-end. The
     * SAME derived revision batch as D8 (doc_id ≡ 0 mod 5, i4-mapped
@@ -904,12 +750,8 @@ object StreamOps extends Serializable {
     */
   def corpusDedupStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = corpusDedupRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val name = "graft_h13_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h13_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    def docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    sunk(spark, dir, "h13", "append", "documents.parquet") { l =>
       val i4 = pmod((col("doc_id") / 5).cast("long"), lit(4))
       val src = when(i4 === 1, col("doc_id") + 1)
         .when(i4 === 3, col("doc_id") - 5)
@@ -921,24 +763,12 @@ object StreamOps extends Serializable {
         .select(col("doc_id"),
           timestamp_micros(lit(epochUs) + col("doc_id") * 1000000L).as("ts"),
           col("text"))
-      landOrdered(batch, Seq("doc_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
+      landOrdered(batch, Seq("doc_id"), l, 4)
+    } { s =>
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0).select(col("text"))
-      val q = streamingCorpusDedup(stream.as[DocIn], corpus)
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+      streamingCorpusDedup(s.as[DocIn], corpus).toDF()
+    }
   }
-
-  private val packRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H18, oracle-gated: streaming sequence packing end-to-end. The
     * tokenized corpus lands in 4 doc_id-quartile micro-batches
@@ -952,34 +782,16 @@ object StreamOps extends Serializable {
     */
   def seqPackStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = packRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val name = "graft_h18_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h18_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+    sunk(spark, dir, "h18", "append", "documents.parquet") { l =>
       val epochUs = 1704067200000000L
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"),
           timestamp_micros(lit(epochUs) + col("doc_id") * 1000000L).as("ts"),
           col("source"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
-      landOrdered(docs, Seq("doc_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingSeqPack(stream.as[PackIn])
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+      landOrdered(docs, Seq("doc_id"), l, 4)
+    }(s => streamingSeqPack(s.as[PackIn]).toDF())
   }
-
-  private val centRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H16, oracle-gated: streaming centroid maintenance end-to-end.
     * Labeled embeddings are unit-normalized and dyadic-quantized with
@@ -995,14 +807,10 @@ object StreamOps extends Serializable {
     */
   def centroidStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = centRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/embeddings.parquet")
-      val name = "graft_h16_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h16_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+    val table = sunk(spark, dir, "h16", "update", "embeddings.parquet") { l =>
       graft.functions.VecFunctions.register(spark)
       val epochUs = 1704067200000000L
-      graft.Tables.embeddings(spark, dir)
+      landParts(graft.Tables.embeddings(spark, dir)
         .filter(col("label").isNotNull)
         .select(col("vec_id"),
           timestamp_micros(lit(epochUs) + col("vec_id") * 1000000L).as("ts"),
@@ -1010,20 +818,9 @@ object StreamOps extends Serializable {
         .withColumn("norm", sqrt(call_function("vec_dot", col("v"), col("v"))))
         .withColumn("u", expr(
           "transform(v, x -> floor(cast(x as double) / norm * 1048576.0D + 0.5D) / 1048576.0D)"))
-        .select(col("vec_id"), col("ts"), col("label"), col("u"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingCentroid(stream.as[VecIn])
-        .toDF()
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+        .select(col("vec_id"), col("ts"), col("label"), col("u")), l)
+    }(s => streamingCentroid(s.as[VecIn]).toDF())
+    table
       .groupBy(col("label"))
       .agg(max(col("n")).as("n"), max_by(col("c"), col("n")).as("__c"))
       .select(col("label"), col("n"), posexplode(col("__c")))
@@ -1085,9 +882,6 @@ object StreamOps extends Serializable {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
-  private val rateRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H4, oracle-gated: the custom event-time bucket lifecycle
     * end-to-end. Events replay in 4 time-quartile micro-batches
     * through [[streamingRate]] (emit-on-next-bucket + event-time
@@ -1101,36 +895,11 @@ object StreamOps extends Serializable {
     */
   def rateStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = rateRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h4_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h4_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val ev = raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-        col("user_id").cast("string").as("usr"),
-        col("event_type").as("typ"), col("value"))
-      landOrdered(ev, Seq("ts", "event_id"), landing, 4)
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      Seq(Sample(-1L, new java.sql.Timestamp(maxTs.getTime + 30L * 86400000L),
-        "__flush", "__flush", 0.0)).toDF()
-        .coalesce(1).write.mode("append").parquet(landing)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingRate(stream.as[Sample])
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table).filter(col("usr") =!= "__flush")
+    sunk(spark, dir, "h4", "append")(
+      landWithSentinel(spark, samplesOf(spark, dir), _, 30L))(
+      s => streamingRate(s.as[Sample]).toDF())
+      .filter(col("usr") =!= "__flush")
   }
-
-  private val tsinkRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** I19, oracle-gated: the STREAMING SINK into the I14 commit-log
     * table — foreachBatch commits micro-batch k as table version k via
@@ -1146,53 +915,17 @@ object StreamOps extends Serializable {
     * all apply to a stream-built table unchanged.
     */
   def tableSinkStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val tdir = tsinkRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_i19_" + fp)
-      val table = new java.io.File(base, "table").toString
-      val done = new java.io.File(base, "_done")
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
-        }
-        val landing = new java.io.File(base, "landing").toString
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        raw.select(col("event_id"), col("event_type").as("typ"),
-            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-          .repartition(4).write.mode("overwrite").parquet(landing)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            val first = graft.sources.Io.tableAppendIdempotent(
-              batch.toDF(), table, batchId)
-            // simulated redelivery: the retry must be a no-op
-            val retry = graft.sources.Io.tableAppendIdempotent(
-              batch.toDF(), table, batchId)
-            require(first && !retry,
-              s"batch $batchId: first=$first retry=$retry — idempotence broken")
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      table
-    })
-    graft.sources.Io.readTableVersion(spark, tdir,
-        graft.sources.Io.tableVersion(spark, tdir))
+    val base = landedGate(spark, dir, "i19") { b =>
+      landParts(graft.sources.Io.centsOf(spark, dir), s"$b/landing")
+      replayed(spark, s"$b/landing")(_.writeStream
+        .option("checkpointLocation", s"$b/ckpt")
+        .foreachBatch(appendTwice(s"$b/table") _)
+        .start())
+    }
+    latest(spark, s"$base/table")
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
   }
-
-  private val dsinkRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Round 14 (round-13 VERDICT #1), oracle-gated: the DIRECT DSv2
     * STREAMING SINK — `writeStream.format("graft").start(table)`, no
@@ -1207,26 +940,19 @@ object StreamOps extends Serializable {
     * replay. Same oracle as `io_stream_sink` — direct sink ≡
     * foreachBatch sink ≡ source. */
   def tableSinkDsv2Streamed(spark: SparkSession, dir: String): DataFrame = {
-    val tdir = dsinkRuns.computeIfAbsent((spark, dir), _ => {
+    val table = graft.Memo(spark, s"stream.dsink:$dir") {
       val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
       val base = java.nio.file.Files
         .createTempDirectory("graft_dsink_" + fp).toString
       val table = s"$base/table"
       val landing = s"$base/landing"
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      raw.select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        .repartition(4).write.mode("overwrite").parquet(landing)
-      val schema = spark.read.parquet(landing).schema
-      graft.sources.Io.tableCreate(spark, table, schema)
-      def run(ckpt: String): Unit = {
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-          .writeStream.format("graft")
+      landParts(graft.sources.Io.centsOf(spark, dir), landing)
+      graft.sources.Io.tableCreate(spark, table,
+        spark.read.parquet(landing).schema)
+      def run(ckpt: String): Unit = replayed(spark, landing)(
+        _.writeStream.format("graft")
           .option("checkpointLocation", ckpt)
-          .start(table)
-        q.processAllAvailable(); q.stop()
-      }
+          .start(table))
       run(s"$base/ckpt1")
       val v1 = graft.sources.Io.tableVersion(spark, table)
       require(v1 >= 1,
@@ -1238,15 +964,11 @@ object StreamOps extends Serializable {
       require(v2 == v1,
         s"redelivered epochs must no-op: v$v1 -> v$v2")
       table
-    })
-    graft.sources.Io.readTableVersion(spark, tdir,
-        graft.sources.Io.tableVersion(spark, tdir))
+    }
+    latest(spark, table)
       .groupBy(col("typ"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
   }
-
-  private val smergeRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H34 (round 12), oracle-gated: STREAMING CDC UPSERT APPLY — the
     * canonical lakehouse change-data-capture pattern: a change stream
@@ -1263,84 +985,39 @@ object StreamOps extends Serializable {
     * final state is arrival-order-free and the gate needs no ordered
     * replay. */
   def mergeStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val tdir = smergeRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h34_" + fp)
-      val table = new java.io.File(base, "wh/g/t").toString
-      val done = new java.io.File(base, "_done")
+    val base = landedGate(spark, dir, "h34") { b =>
+      val table = s"$b/wh/g/t"
       spark.conf.set("spark.sql.catalog.graftsm",
         "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftsm.warehouse",
-        new java.io.File(base, "wh").toString)
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
-        }
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        graft.sources.Io.tableAppend(
-          flat.repartitionByRange(4, col("typ"), col("event_id")), table)
-        // two key-disjoint change batches: purchase row-image updates,
-        // displaced click inserts — landed as one file each so
-        // maxFilesPerTrigger=1 yields one MERGE per batch
-        val landing = new java.io.File(base, "landing").toString
-        flat.filter(col("typ") === "purchase")
-          .withColumn("cents", col("cents") + 100000L)
-          .coalesce(1).write.mode("append").parquet(landing)
-        flat.filter(col("typ") === "click")
-          .withColumn("event_id", col("event_id") + 1000000000000L)
-          .coalesce(1).write.mode("append").parquet(landing)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        def applyMerge(s: SparkSession, batch: DataFrame, id: Long): Unit = {
-          batch.createOrReplaceTempView(s"__h34_src_$id")
-          s.sql(
-            s"""MERGE INTO graftsm.g.t AS tg USING __h34_src_$id AS src
-               |ON tg.event_id = src.event_id
-               |WHEN MATCHED THEN UPDATE SET *
-               |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-          ()
-        }
-        val q = stream.writeStream
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                batchId: Long) =>
-              applyMerge(batch.sparkSession, batch.toDF(), batchId)
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        // redelivery: re-merge the whole change set — absolute row
-        // images make it a content no-op (one more version, same cut)
-        val before = graft.sources.Io.readTableVersion(spark, table,
-          graft.sources.Io.tableVersion(spark, table))
-          .agg(count(lit(1)), sum(col("cents"))).collect()(0)
-        applyMerge(spark, spark.read.parquet(landing), 999L)
-        val after = graft.sources.Io.readTableVersion(spark, table,
-          graft.sources.Io.tableVersion(spark, table))
-          .agg(count(lit(1)), sum(col("cents"))).collect()(0)
-        require(before == after,
-          s"CDC re-apply must be a content no-op: $before != $after")
-        done.createNewFile()
+      spark.conf.set("spark.sql.catalog.graftsm.warehouse", s"$b/wh")
+      val flat = graft.sources.Io.centsOf(spark, dir)
+      graft.sources.Io.tableAppend(
+        flat.repartitionByRange(4, col("typ"), col("event_id")), table)
+      // two key-disjoint change batches: purchase row-image updates,
+      // displaced click inserts — landed as one file each so one file
+      // per trigger yields one MERGE per batch
+      val landing = s"$b/landing"
+      flat.filter(col("typ") === "purchase")
+        .withColumn("cents", col("cents") + 100000L)
+        .coalesce(1).write.mode("append").parquet(landing)
+      flat.filter(col("typ") === "click")
+        .withColumn("event_id", col("event_id") + 1000000000000L)
+        .coalesce(1).write.mode("append").parquet(landing)
+      // redelivery: the whole change set is re-merged afterwards —
+      // absolute row images make it a content no-op (one more
+      // version, same cut)
+      applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, id) =>
+        batch.createOrReplaceTempView(s"__h34_src_$id")
+        s.sql(
+          s"""MERGE INTO graftsm.g.t AS tg USING __h34_src_$id AS src
+             |ON tg.event_id = src.event_id
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        ()
       }
-      table
-    })
-    graft.sources.Io.readTableVersion(spark, tdir,
-        graft.sources.Io.tableVersion(spark, tdir))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    graft.sources.Io.typeSummary(latest(spark, s"$base/wh/g/t"))
   }
-
-  private val tsrcRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Round 13, oracle-gated: the DSv2 STREAMING SOURCE over the commit
     * log — closing the loop the I19 sink writes into. The fixture
@@ -1354,15 +1031,11 @@ object StreamOps extends Serializable {
     * version's files (offset bookkeeping, no re-serve, no drop). The
     * final aggregate must equal the batch aggregation of the raw
     * source: exactly-once in BOTH directions. */
-  def tableSourceStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val sink = tsrcRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tsrc_" + fp).toString
+  def tableSourceStreamed(spark: SparkSession, dir: String): DataFrame =
+    sinkTable(spark, dir, "tsrc") { name =>
+      val base = java.nio.file.Files.createTempDirectory(name).toString
       val table = s"$base/table"
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      val flat = graft.sources.Io.centsOf(spark, dir)
       // 1) WRITE via the I19 exactly-once sink: slices 0/1 land as one
       // micro-batch commit each through tableAppendIdempotent
       val landing = s"$base/landing"
@@ -1370,50 +1043,22 @@ object StreamOps extends Serializable {
         .coalesce(1).write.mode("append").parquet(landing)
       flat.filter(pmod(col("event_id"), lit(3)) === 1)
         .coalesce(1).write.mode("append").parquet(landing)
-      val ingest = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val qi = ingest.writeStream
+      replayed(spark, landing)(_.writeStream
         .option("checkpointLocation", s"$base/ckpt_in")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            val first = graft.sources.Io.tableAppendIdempotent(
-              batch.toDF(), table, batchId)
-            val retry = graft.sources.Io.tableAppendIdempotent(
-              batch.toDF(), table, batchId)
-            require(first && !retry,
-              s"sink batch $batchId: idempotence broken")
-        }
-        .start()
-      qi.processAllAvailable(); qi.stop()
-      // 2) READ BACK via the streaming source into a Complete-mode agg
-      val name = "graft_tsrc_" + fp
-      val qo = spark.readStream.format("graft").load(table)
-        .groupBy(col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .writeStream
-        .queryName(name)
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", s"$base/ckpt_out")
-        .start()
-      qo.processAllAvailable() // batch 0: versions 0..1
-      // 3) MID-STREAM append (slice 2): the next pull must serve only
-      // the new version's files — the offset is the commit version
-      graft.sources.Io.tableAppend(
-        flat.filter(pmod(col("event_id"), lit(3)) === 2).coalesce(1),
-        table)
-      qo.processAllAvailable() // batch 1: exactly version 2
-      qo.stop()
-      name
-    })
-    spark.table(sink)
-  }
-
-  private val tsrcDvRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+        .foreachBatch(appendTwice(table) _)
+        .start())
+      // 2) READ BACK via the streaming source into a Complete-mode agg:
+      // batch 0 serves versions 0..1; 3) a MID-STREAM append (slice 2)
+      // lands, and the next pull must serve only the new version's
+      // files — the offset is the commit version
+      val read = spark.readStream.format("graft").load(table)
+      drainAround(toMemory(graft.sources.Io.typeSummary(read), "complete",
+          name, Some(s"$base/ckpt_out"))) {
+        graft.sources.Io.tableAppend(
+          flat.filter(pmod(col("event_id"), lit(3)) === 2).coalesce(1),
+          table)
+      }
+    }
 
   /** Round 14 (round-13 VERDICT #4), oracle-gated: the streaming
     * source's INITIAL SNAPSHOT over a DV-carrying table — the
@@ -1426,15 +1071,11 @@ object StreamOps extends Serializable {
     * aggregate must equal the oracle's replay of (snapshot minus
     * deletes) plus the appended slice. Post-start DV changes refusing
     * is spec-pinned (ExtensionsSpec). */
-  def tableSourceDvStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val sink = tsrcDvRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_tsrcdv_" + fp).toString
+  def tableSourceDvStreamed(spark: SparkSession, dir: String): DataFrame =
+    sinkTable(spark, dir, "tsrcdv") { name =>
+      val base = java.nio.file.Files.createTempDirectory(name).toString
       val table = s"$base/table"
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      val flat = graft.sources.Io.centsOf(spark, dir)
       // one file so the sparse delete stays under the COW threshold
       // and actually leaves DV entries
       graft.sources.Io.tableAppend(
@@ -1444,31 +1085,17 @@ object StreamOps extends Serializable {
         col("typ") === "error" && pmod(col("event_id"), lit(7)) === 0)
       require(graft.sources.Io.dvDirsOf(spark, table, 1L).nonEmpty,
         s"fixture at $table must carry DVs at v1")
-      val name = "graft_tsrcdv_" + fp
-      val q = spark.readStream.format("graft")
+      // batch 0: the MOR snapshot of v1; then v2 lands mid-stream and
+      // batch 1 serves exactly v2's files
+      val read = spark.readStream.format("graft")
         .option("withSnapshot", "true").load(table)
-        .groupBy(col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .writeStream
-        .queryName(name)
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      q.processAllAvailable() // batch 0: the MOR snapshot of v1
-      graft.sources.Io.tableAppend(
-        flat.filter(pmod(col("event_id"), lit(3)) === 1).coalesce(1),
-        table) // v2 mid-stream
-      q.processAllAvailable() // batch 1: exactly v2's files
-      q.stop()
-      name
-    })
-    spark.table(sink)
-  }
-
-  private val cdfSrcRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      drainAround(toMemory(graft.sources.Io.typeSummary(read), "complete",
+          name, Some(s"$base/ckpt"))) {
+        graft.sources.Io.tableAppend(
+          flat.filter(pmod(col("event_id"), lit(3)) === 1).coalesce(1),
+          table)
+      }
+    }
 
   /** Round 14, oracle-gated: the streaming CHANGE-DATA-FEED source —
     * `readStream.format("graft").option("readChangeFeed", "true")` —
@@ -1485,18 +1112,14 @@ object StreamOps extends Serializable {
     * across change types). The Complete-mode aggregate per
     * (change_type, typ) must equal the oracle's replay of every change
     * set from the raw source, versions included. */
-  def cdfSourceStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val sink = cdfSrcRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_cdfsrc_" + fp).toString
+  def cdfSourceStreamed(spark: SparkSession, dir: String): DataFrame =
+    sinkTable(spark, dir, "cdfsrc") { name =>
+      val base = java.nio.file.Files.createTempDirectory(name).toString
       val wh = s"$base/wh"
       spark.conf.set("spark.sql.catalog.graftcdfs",
         "graft.sources.GraftCatalog")
       spark.conf.set("spark.sql.catalog.graftcdfs.warehouse", wh)
-      val raw = graft.Tables.eventsRaw(spark, dir)
-      val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      val flat = graft.sources.Io.centsOf(spark, dir)
       val table = s"$wh/g/ev"
       // v0, v1: one file per slice keeps the MOR delete sparse (under
       // the COW-fallback fraction, so DV entries actually land)
@@ -1518,8 +1141,7 @@ object StreamOps extends Serializable {
         spark.conf.unset("graft.dml.mode")
         spark.conf.unset("graft.dml.mor.cowFraction")
       }
-      val name = "graft_cdfsrc_" + fp
-      val q = spark.readStream.format("graft")
+      val feed = spark.readStream.format("graft")
         .option("readChangeFeed", "true").load(table)
         .groupBy(col("_change_type").as("change_type"), col("typ"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
@@ -1527,25 +1149,13 @@ object StreamOps extends Serializable {
           max(col("event_id")).as("max_id"),
           min(col("_commit_version")).as("min_v"),
           max(col("_commit_version")).as("max_v"))
-        .writeStream
-        .queryName(name)
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      q.processAllAvailable() // batch 0: v0..v3, all four change types
-      // mid-stream append: the next pull serves exactly v4's rows
-      graft.sources.Io.tableAppend(
-        flat.filter(pmod(col("event_id"), lit(3)) === 2).coalesce(1), table)
-      q.processAllAvailable()
-      q.stop()
-      name
-    })
-    spark.table(sink)
-  }
-
-  private val sreplRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+      // batch 0: v0..v3, all four change types; then a mid-stream
+      // append, and the next pull serves exactly v4's rows
+      drainAround(toMemory(feed, "complete", name, Some(s"$base/ckpt"))) {
+        graft.sources.Io.tableAppend(
+          flat.filter(pmod(col("event_id"), lit(3)) === 2).coalesce(1), table)
+      }
+    }
 
   /** H36 (round 14) — streaming replaceWhere apply, the region-
     * backfill twin of H34/H35: each micro-batch is a REGION SNAPSHOT
@@ -1559,75 +1169,34 @@ object StreamOps extends Serializable {
     * cut unchanged — more versions, same content). The gate reads the
     * LANDED table; the oracle replays both region swaps from source. */
   def replaceStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val tdir = sreplRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h36_" + fp)
-      val table = new java.io.File(base, "table").toString
-      val done = new java.io.File(base, "_done")
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    val base = landedGate(spark, dir, "h36") { b =>
+      val table = s"$b/table"
+      val flat = graft.sources.Io.centsOf(spark, dir)
+      graft.sources.Io.tableAppend(
+        flat.repartition(4, col("typ")), table)
+      // region snapshots, one file each → one file per trigger applies
+      // one region per micro-batch
+      val landing = s"$b/landing"
+      flat.filter(col("typ") === "purchase")
+        .withColumn("cents", col("cents") + 100000L)
+        .coalesce(1).write.mode("append").parquet(landing)
+      flat.filter(col("typ") === "click")
+        .withColumn("cents", col("cents") + 5L)
+        .coalesce(1).write.mode("append").parquet(landing)
+      // redelivery: a region snapshot is absolute — re-applying the
+      // whole set must leave the content identical
+      applyIdempotent(spark, landing, s"$b/ckpt", table) { (_, batch, _) =>
+        // the distinct-typ envelope is tiny (one region per file);
+        // the region rows themselves never reach the driver
+        batch.select(col("typ")).distinct().collect()
+          .map(_.getString(0)).foreach { t =>
+            graft.sources.Io.tableReplaceWhere(
+              batch.filter(col("typ") === t), table, col("typ") === t)
           }
-          rm(base)
-        }
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        graft.sources.Io.tableAppend(
-          flat.repartition(4, col("typ")), table)
-        // region snapshots, one file each → maxFilesPerTrigger=1
-        // applies one region per micro-batch
-        val landing = new java.io.File(base, "landing").toString
-        flat.filter(col("typ") === "purchase")
-          .withColumn("cents", col("cents") + 100000L)
-          .coalesce(1).write.mode("append").parquet(landing)
-        flat.filter(col("typ") === "click")
-          .withColumn("cents", col("cents") + 5L)
-          .coalesce(1).write.mode("append").parquet(landing)
-        def applyRegions(batch: DataFrame): Unit =
-          // the distinct-typ envelope is tiny (one region per file);
-          // the region rows themselves never reach the driver
-          batch.select(col("typ")).distinct().collect()
-            .map(_.getString(0)).foreach { t =>
-              graft.sources.Io.tableReplaceWhere(
-                batch.filter(col("typ") === t), table, col("typ") === t)
-            }
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                _: Long) => applyRegions(batch.toDF())
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        // redelivery: a region snapshot is absolute — re-applying the
-        // whole set must leave the content identical
-        def cut() = graft.sources.Io.readTableVersion(spark, table,
-            graft.sources.Io.tableVersion(spark, table))
-          .agg(count(lit(1)), sum(col("cents"))).collect()(0)
-        val before = cut()
-        applyRegions(spark.read.parquet(landing))
-        require(before == cut(),
-          s"replaceWhere re-apply must be a content no-op at $table")
-        done.createNewFile()
       }
-      table
-    })
-    graft.sources.Io.readTableVersion(spark, tdir,
-        graft.sources.Io.tableVersion(spark, tdir))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    graft.sources.Io.typeSummary(latest(spark, s"$base/table"))
   }
-
-  private val supdateRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H35 (round 13), oracle-gated: STREAMING UPDATE APPLY — the
     * mutation-apply sibling of H34's CDC merge: a stream of UPDATE
@@ -1643,82 +1212,38 @@ object StreamOps extends Serializable {
     * idempotence). The LANDED TABLE is what the gate reads back; the
     * oracle replays the final cut from the raw source. */
   def updateStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val tdir = supdateRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h35_" + fp)
-      val table = new java.io.File(base, "wh/g/t").toString
-      val done = new java.io.File(base, "_done")
+    val base = landedGate(spark, dir, "h35") { b =>
+      val table = s"$b/wh/g/t"
       spark.conf.set("spark.sql.catalog.graftsu",
         "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftsu.warehouse",
-        new java.io.File(base, "wh").toString)
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
+      spark.conf.set("spark.sql.catalog.graftsu.warehouse", s"$b/wh")
+      graft.sources.Io.tableAppend(graft.sources.Io.centsOf(spark, dir)
+        .repartitionByRange(4, col("typ"), col("event_id")), table)
+      // the instruction stream: one file per instruction so one file
+      // per trigger yields one UPDATE per micro-batch
+      import spark.implicits._
+      val landing = s"$b/landing"
+      Seq(("purchase", 1000L, 1L)).toDF("typ", "mult", "add")
+        .coalesce(1).write.mode("append").parquet(landing)
+      Seq(("click", 777L, 2L)).toDF("typ", "mult", "add")
+        .coalesce(1).write.mode("append").parquet(landing)
+      // redelivery: re-apply the WHOLE instruction set — absolute SET
+      // expressions make it a content no-op (more versions, same cut)
+      applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, _) =>
+        // instruction batches are 1-row files — the collect is the
+        // CDC-instruction envelope, never data-scale. Values bind as
+        // NAMED PARAMETERS (round 14, round-13 nit): instruction
+        // payloads must never be string-interpolated into SQL
+        batch.collect().foreach { r =>
+          s.sql("UPDATE graftsu.g.t SET cents = " +
+            "event_id % :mult + :add WHERE typ = :typ",
+            Map("mult" -> r.getAs[Long]("mult"),
+              "add" -> r.getAs[Long]("add"),
+              "typ" -> r.getAs[String]("typ")))
         }
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        val flat = raw.select(col("event_id"), col("event_type").as("typ"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-        graft.sources.Io.tableAppend(
-          flat.repartitionByRange(4, col("typ"), col("event_id")), table)
-        // the instruction stream: one file per instruction so
-        // maxFilesPerTrigger=1 yields one UPDATE per micro-batch
-        import spark.implicits._
-        val landing = new java.io.File(base, "landing").toString
-        Seq(("purchase", 1000L, 1L)).toDF("typ", "mult", "add")
-          .coalesce(1).write.mode("append").parquet(landing)
-        Seq(("click", 777L, 2L)).toDF("typ", "mult", "add")
-          .coalesce(1).write.mode("append").parquet(landing)
-        def applyUpdates(s: SparkSession, batch: DataFrame): Unit =
-          // instruction batches are 1-row files — the collect is the
-          // CDC-instruction envelope, never data-scale. Values bind as
-          // NAMED PARAMETERS (round 14, round-13 nit): instruction
-          // payloads must never be string-interpolated into SQL
-          batch.collect().foreach { r =>
-            s.sql("UPDATE graftsu.g.t SET cents = " +
-              "event_id % :mult + :add WHERE typ = :typ",
-              Map("mult" -> r.getAs[Long]("mult"),
-                "add" -> r.getAs[Long]("add"),
-                "typ" -> r.getAs[String]("typ")))
-          }
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation",
-            new java.io.File(base, "ckpt").toString)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                _: Long) =>
-              applyUpdates(batch.sparkSession, batch.toDF())
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        // redelivery: re-apply the WHOLE instruction set — absolute
-        // SET expressions make it a content no-op (more versions,
-        // same cut)
-        val before = graft.sources.Io.readTableVersion(spark, table,
-          graft.sources.Io.tableVersion(spark, table))
-          .agg(count(lit(1)), sum(col("cents"))).collect()(0)
-        applyUpdates(spark, spark.read.parquet(landing))
-        val after = graft.sources.Io.readTableVersion(spark, table,
-          graft.sources.Io.tableVersion(spark, table))
-          .agg(count(lit(1)), sum(col("cents"))).collect()(0)
-        require(before == after,
-          s"UPDATE re-apply must be a content no-op: $before != $after")
-        done.createNewFile()
       }
-      table
-    })
-    graft.sources.Io.readTableVersion(spark, tdir,
-        graft.sources.Io.tableVersion(spark, tdir))
-      .groupBy(col("typ"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+    }
+    graft.sources.Io.typeSummary(latest(spark, s"$base/wh/g/t"))
   }
 
   /** H3: checkpointed ingest to the lakehouse layout — the WAL analog.
@@ -1736,9 +1261,6 @@ object StreamOps extends Serializable {
       }
       .start()
 
-  private val ingestRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H3, oracle-gated: the checkpointed WAL-analog ingest end-to-end —
     * 4 micro-batches append day-partitioned parquet through
     * [[streamToStore]]'s foreachBatch commit loop, and the LANDED
@@ -1751,35 +1273,11 @@ object StreamOps extends Serializable {
     * the old checkpoint new filenames and double every count).
     */
   def storeIngestStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val storePath = ingestRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h3_" + fp)
-      val store = new java.io.File(base, "store").toString
-      val done = new java.io.File(base, "_done")
-      if (!done.exists()) {
-        if (base.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(base)
-        }
-        val landing = new java.io.File(base, "landing").toString
-        val raw = graft.Tables.eventsRaw(spark, dir)
-        raw.select(col("event_id"), graft.Tables.tsCol(raw).as("ts"),
-            col("user_id").cast("string").as("usr"),
-            col("event_type").as("typ"), col("value"))
-          .repartition(4).write.mode("overwrite").parquet(landing)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = streamToStore(stream, store,
-          new java.io.File(base, "ckpt").toString)
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      store
-    })
-    spark.read.parquet(storePath)
+    val base = landedGate(spark, dir, "h3") { b =>
+      landParts(samplesOf(spark, dir), s"$b/landing")
+      replayed(spark, s"$b/landing")(streamToStore(_, s"$b/store", s"$b/ckpt"))
+    }
+    spark.read.parquet(s"$base/store")
       .groupBy(col("day"), col("typ"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
@@ -2051,9 +1549,6 @@ object StreamOps extends Serializable {
       }
   }
 
-  private val featRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H23, oracle-gated: events replay in 4 event-time quartile
     * micro-batches through [[streamingFeatures]]; the appended
     * examples must equal C26's batch window derivation verbatim
@@ -2062,27 +1557,11 @@ object StreamOps extends Serializable {
     */
   def featuresStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = featRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h23_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h23_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val ev = graft.Tables.events(spark, dir).select(
+    sunk(spark, dir, "h23", "append")(landOrdered(
+      graft.Tables.events(spark, dir).select(
         col("user_id"), col("event_id"), col("event_type").as("typ"),
-        unix_micros(col("ts")).as("us"), col("ts"))
-      landOrdered(ev, Seq("ts", "event_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingFeatures(stream.as[FeatIn])
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+        unix_micros(col("ts")).as("us"), col("ts")),
+      Seq("ts", "event_id"), _, 4))(s => streamingFeatures(s.as[FeatIn]).toDF())
   }
 
   /** H25: LIVE gap-filled downsampling — B52's dashboard grid
@@ -2158,9 +1637,6 @@ object StreamOps extends Serializable {
       }
   }
 
-  private val gfRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H25, oracle-gated: the B52 slice (purchase series of usr ≤ 3,
     * Jan 1-7) replays in 4 event-time quartile micro-batches + the
     * per-series grid-end sentinels through [[streamingGapfill]]; the
@@ -2171,12 +1647,7 @@ object StreamOps extends Serializable {
   def gapfillStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val t0 = 1704067200L
-    val table = gfRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h25_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h25_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+    sunk(spark, dir, "h25", "append") { l =>
       // range via Tables.tsBetween → file-native-column pushdown
       // (end-1µs keeps the half-open bound; CLAUDE.md invariant)
       val raw = graft.Tables.tsBetween(graft.Tables.eventsRaw(spark, dir),
@@ -2193,23 +1664,9 @@ object StreamOps extends Serializable {
         .select(col("usr"), lit(t0 + 168L * 3600L).as("h_sec"),
           lit(0.0).as("value"), lit(true).as("flush"),
           lit(t0 + 169L * 3600L).cast("timestamp").as("ts"))
-      landOrdered(ev.unionByName(sentinels), Seq("ts"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingGapfill(stream.as[GfIn], t0, 168)
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+      landOrdered(ev.unionByName(sentinels), Seq("ts"), l, 4)
+    }(s => streamingGapfill(s.as[GfIn], t0, 168).toDF())
   }
-
-  private val scd2Runs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H22, oracle-gated: the events stream replays in 4 event-time
     * quartile micro-batches through [[streamingScd2]]; the appended
@@ -2219,31 +1676,12 @@ object StreamOps extends Serializable {
     */
   def scd2Streamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = scd2Runs.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h22_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h22_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val ev = graft.Tables.events(spark, dir).select(
+    sunk(spark, dir, "h22", "append")(landOrdered(
+      graft.Tables.events(spark, dir).select(
         col("user_id"), col("event_id"), col("event_type").as("attr"),
-        unix_micros(col("ts")).as("us"), col("ts"))
-      landOrdered(ev, Seq("ts", "event_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingScd2(stream.as[Scd2In])
-        .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+        unix_micros(col("ts")).as("us"), col("ts")),
+      Seq("ts", "event_id"), _, 4))(s => streamingScd2(s.as[Scd2In]).toDF())
   }
-
-  private val alertRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H21, oracle-gated: B49's alerting rule driven as a STREAM. The
     * rule expression (the same one `promql_alerts` gates) is evaluated
@@ -2257,30 +1695,17 @@ object StreamOps extends Serializable {
     */
   def alertsStreamed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val table = alertRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h21_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h21_" + fp)
-      val landing = new java.io.File(base, "landing").toString
+    sunk(spark, dir, "h21", "append") { l =>
       val active = graft.promql.PromQl.evalRange(spark, dir,
           """sum by (usr) (count_over_time({typ="purchase"}[2d])) > 2""",
           "2024-01-03 00:00:00", "2024-01-31 00:00:00", 86400L)
         .select(col("usr"), col("t_sec"),
           timestamp_seconds(col("t_sec")).as("ts"))
-      landOrdered(active, Seq("t_sec"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      val q = streamingAlerts(stream.as[AlertIn], 86400L, 172800L,
-          "HighPurchaseVolume")
+      landOrdered(active, Seq("t_sec"), l, 4)
+    } { s =>
+      streamingAlerts(s.as[AlertIn], 86400L, 172800L, "HighPurchaseVolume")
         .toDF()
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    spark.table(table)
+    }
   }
 
   /** H16: streaming centroid maintenance — the streaming twin of the
@@ -2483,9 +1908,6 @@ object StreamOps extends Serializable {
       .mapGroupsWithState[SeriesState, SeriesUpdate](update _)
   }
 
-  private val embRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** H20 (round 9, oracle-gated): streaming VECTOR-STORE ingest — the
     * embeddings stream lands in 4 micro-batches through foreachBatch;
     * each batch SQ8-encodes its vectors (E8's symmetric per-vector
@@ -2498,44 +1920,24 @@ object StreamOps extends Serializable {
     * arrival, serve compressed (E9 scans such codes).
     */
   def embedIngestStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = embRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/embeddings.parquet")
-      val b = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h20_" + fp)
-      val done = new java.io.File(b, "_done")
-      if (!done.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    val base = landedGate(spark, dir, "h20", "embeddings.parquet") { b =>
+      landOrdered(graft.Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding").as("v")),
+        Seq("vec_id"), s"$b/landing", 4)
+      replayed(spark, s"$b/landing")(_.writeStream
+        .option("checkpointLocation", s"$b/ckpt")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          graft.similarity.Ann.sq8CodesOn(batch)
+            .write.mode("overwrite").parquet(s"$b/store/batch=$id")
         }
-        rm(b)
-        val vecs = graft.Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding").as("v"))
-        val landing = new java.io.File(b, "landing").toString
-        landOrdered(vecs, Seq("vec_id"), landing, 4)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation", new java.io.File(b, "ckpt").toString)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            graft.similarity.Ann.sq8CodesOn(batch)
-              .write.mode("overwrite").parquet(s"$b/store/batch=$id")
-            ()
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      b.toString
-    })
+        .start())
+    }
     val store = spark.read.option("basePath", s"$base/store")
       .parquet(s"$base/store").drop("batch")
     val src = graft.Tables.embeddings(spark, dir).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
     graft.similarity.Ann.sq8Report(store.join(src, Seq("vec_id")))
   }
-
-  private val routeRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H19 (round 9, oracle-gated): streaming QUALITY ROUTER — the
     * foreachBatch split-sink shape every streaming curation pipeline
@@ -2552,46 +1954,11 @@ object StreamOps extends Serializable {
     * 4-micro-batch checkpointed run.
     */
   def qualityRouteStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = routeRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val b = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h19_" + fp)
-      val done = new java.io.File(b, "_done")
-      if (!done.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(b)
-        val docs = graft.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("n_chars"), col("text"))
-        val landing = new java.io.File(b, "landing").toString
-        landOrdered(docs, Seq("doc_id"), landing, 4)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation", new java.io.File(b, "ckpt").toString)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val scored = graft.text.TextAnalysis.gopherScoreOn(batch)
-              .select(col("doc_id"), col("n_words"), col("n_stop"), col("keep"))
-              .persist()
-            try {
-              scored.filter(col("keep")).drop("keep").write
-                .mode("overwrite").parquet(s"$b/accept/batch=$id")
-              scored.filter(!col("keep")).drop("keep").write
-                .mode("overwrite").parquet(s"$b/reject/batch=$id")
-            } finally scored.unpersist()
-            ()
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      b.toString
-    })
-    def side(name: String): DataFrame =
-      spark.read.option("basePath", s"$base/$name").parquet(s"$base/$name")
-        .withColumn("verdict", lit(name)).drop("batch")
-    side("accept").unionByName(side("reject"))
+    val base = routeStreamed(spark, dir, "h19") {
+      graft.text.TextAnalysis.gopherScoreOn(_)
+        .select(col("doc_id"), col("n_words"), col("n_stop"), col("keep"))
+    }(_.filter(col("keep")).drop("keep"), _.filter(!col("keep")).drop("keep"))
+    routedSides(spark, base)
       .groupBy(col("verdict"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_words")).as("sum_words"),
@@ -2599,8 +1966,41 @@ object StreamOps extends Serializable {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
   }
 
-  private val bm25Runs =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** The split-sink shape of the streaming routers: the documents land
+    * in 4 doc_id-ordered parts and each micro-batch is scored (the
+    * scorer is built once, before the stream starts; the scored batch
+    * is persisted while it is written) and routed to
+    * `accept/batch=<id>` and `reject/batch=<id>` in OVERWRITE mode, so
+    * a foreachBatch retry replays into the same directories instead of
+    * double-appending. */
+  private def routeStreamed(spark: SparkSession, dir: String, gate: String,
+      cols: Seq[String] = Seq("doc_id", "n_chars", "text"))(
+      scorer: => DataFrame => DataFrame)(
+      accept: DataFrame => DataFrame, reject: DataFrame => DataFrame): String =
+    landedGate(spark, dir, gate, "documents.parquet") { b =>
+      val score = scorer
+      landOrdered(graft.Tables.documents(spark, dir).select(cols.map(col): _*),
+        Seq("doc_id"), s"$b/landing", 4)
+      replayed(spark, s"$b/landing")(_.writeStream
+        .option("checkpointLocation", s"$b/ckpt")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val scored = score(batch).persist()
+          try {
+            accept(scored).write.mode("overwrite").parquet(s"$b/accept/batch=$id")
+            reject(scored).write.mode("overwrite").parquet(s"$b/reject/batch=$id")
+          } finally scored.unpersist()
+          ()
+        }
+        .start())
+    }
+
+  /** Both routed sinks read back, tagged with their `verdict`. */
+  private def routedSides(spark: SparkSession, base: String): DataFrame = {
+    def side(name: String): DataFrame =
+      spark.read.option("basePath", s"$base/$name").parquet(s"$base/$name")
+        .withColumn("verdict", lit(name)).drop("batch")
+    side("accept").unionByName(side("reject"))
+  }
 
   /** H31 (round 10, oracle-gated): streaming TEXT-index maintenance —
     * the BM25 twin of H9's per-micro-batch tag-index loop: each
@@ -2614,46 +2014,24 @@ object StreamOps extends Serializable {
     * plain union — incremental cost per batch ∝ the batch's tokens.
     */
   def bm25Streamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = bm25Runs.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val b = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h31_" + fp)
-      val done = new java.io.File(b, "_done")
-      if (!done.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    val base = landedGate(spark, dir, "h31", "documents.parquet") { b =>
+      landOrdered(graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text")), Seq("doc_id"), s"$b/landing", 4)
+      replayed(spark, s"$b/landing")(_.writeStream
+        .option("checkpointLocation", s"$b/ckpt")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          graft.text.TermStore.flush(batch, s"$b/store", id)
         }
-        rm(b)
-        val docs = graft.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"))
-        val landing = new java.io.File(b, "landing").toString
-        landOrdered(docs, Seq("doc_id"), landing, 4)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val store = new java.io.File(b, "store").toString
-        val q = stream.writeStream
-          .option("checkpointLocation", new java.io.File(b, "ckpt").toString)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            graft.text.TermStore.flush(batch, store, id)
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        // fold the micro-batch segments (round 11): the gate now
-        // answers from the COMPACTED store — same oracle, proving the
-        // backup-rename fold changes nothing a reader can observe
-        graft.text.TermStore.compact(spark, store)
-        done.createNewFile()
-      }
-      b.toString
-    })
+        .start())
+      // fold the micro-batch segments (round 11): the gate now
+      // answers from the COMPACTED store — same oracle, proving the
+      // backup-rename fold changes nothing a reader can observe
+      graft.text.TermStore.compact(spark, s"$b/store")
+    }
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    graft.text.Bm25.rankStored(spark,
-      new java.io.File(base, "store").toString, docs, s"h31:$dir")
+    graft.text.Bm25.rankStored(spark, s"$base/store", docs, s"h31:$dir")
   }
-
-  private val nhRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H30 (round 10, oracle-gated): LIVE native-histogram maintenance —
     * the streaming half of B55. A native histogram is a bag of
@@ -2669,41 +2047,19 @@ object StreamOps extends Serializable {
     * stream ≡ batch model ≡ raw.
     */
   def nativeHistStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val table = nhRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h30_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h30_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val t0 = graft.promql.NativeHist.t0Sec
-      val endSec = t0 + graft.promql.NativeHist.hours * 3600L
-      val raw = graft.Tables.tsBetween(graft.Tables.eventsRaw(spark, dir),
-        timestamp_micros(lit(t0 * 1000000L)),
-        timestamp_micros(lit(endSec * 1000000L - 1L)))
-      val ev = raw.select(col("event_type").as("typ"), col("value"),
-        col("event_id"))
-      landOrdered(ev, Seq("event_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
+    val st = sunk(spark, dir, "h30", "complete")(landHistWindow(spark, dir, _)) { s =>
       val uppers = graft.promql.NativeHist.uppers
       val zt = graft.promql.NativeHist.zeroThreshold
-      val bucketed = stream.select(col("typ"),
-        when(col("value") <= zt, lit(null).cast("int"))
-          .otherwise(lit(graft.promql.NativeHist.minIdx) +
-            size(filter(typedlit(uppers), b => b < col("value")))).as("idx"),
-        (floor(col("value") * 1048576.0 + 0.5) / 1048576.0).as("qv"))
-      val q = bucketed.groupBy(col("typ"), col("idx"))
+      s.select(col("typ"),
+          when(col("value") <= zt, lit(null).cast("int"))
+            .otherwise(lit(graft.promql.NativeHist.minIdx) +
+              size(filter(typedlit(uppers), b => b < col("value")))).as("idx"),
+          (floor(col("value") * 1048576.0 + 0.5) / 1048576.0).as("qv"))
+        .groupBy(col("typ"), col("idx"))
         .agg(count(lit(1)).as("c"), sum(col("qv")).as("s"))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
+    }
     // assemble the final streamed state into the B55 sample shape and
-    // serve the p90 through the SAME interpolation path
-    val st = spark.table(table)
+    // serve the p90 through the SAME interpolation path.
     // ONE aggregation assembles the whole sample (collect_list skips
     // the null the zero-bucket row maps to — and a single-branch
     // lineage keeps quantileOf's self-join resolvable)
@@ -2721,8 +2077,18 @@ object StreamOps extends Serializable {
         (floor(col("value") * 1e4 + 0.5) / 1e4).as("hq90"))
   }
 
-  private val nhcbStreamRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** The native-histogram window's (typ, value, event_id) samples,
+    * landed in 4 event_id-ordered parts. */
+  private def landHistWindow(spark: SparkSession, dir: String,
+      landing: String): Unit = {
+    val t0 = graft.promql.NativeHist.t0Sec
+    val endSec = t0 + graft.promql.NativeHist.hours * 3600L
+    val raw = graft.Tables.tsBetween(graft.Tables.eventsRaw(spark, dir),
+      timestamp_micros(lit(t0 * 1000000L)),
+      timestamp_micros(lit(endSec * 1000000L - 1L)))
+    landOrdered(raw.select(col("event_type").as("typ"), col("value"),
+      col("event_id")), Seq("event_id"), landing, 4)
+  }
 
   /** H33 (round 11, oracle-gated): LIVE NHCB maintenance — the
     * streaming half of B59. A custom-bucket histogram is, like the
@@ -2738,35 +2104,13 @@ object StreamOps extends Serializable {
     */
   def nhcbStreamed(spark: SparkSession, dir: String): DataFrame = {
     val bounds = graft.promql.NativeHist.nhcbBounds
-    val table = nhcbStreamRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/events.parquet")
-      val name = "graft_h33_" + fp
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_h33_" + fp)
-      val landing = new java.io.File(base, "landing").toString
-      val t0 = graft.promql.NativeHist.t0Sec
-      val endSec = t0 + graft.promql.NativeHist.hours * 3600L
-      val raw = graft.Tables.tsBetween(graft.Tables.eventsRaw(spark, dir),
-        timestamp_micros(lit(t0 * 1000000L)),
-        timestamp_micros(lit(endSec * 1000000L - 1L)))
-      val ev = raw.select(col("event_type").as("typ"), col("value"),
-        col("event_id"))
-      landOrdered(ev, Seq("event_id"), landing, 4)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
+    val st = sunk(spark, dir, "h33", "complete")(landHistWindow(spark, dir, _)) { s =>
       val aggs = count(lit(1)).as("cnt") +:
         bounds.zipWithIndex.map { case (b, i) =>
           sum(when(col("value") <= b, 1L).otherwise(0L)).as(s"c$i")
         }
-      val q = stream.groupBy(col("typ")).agg(aggs.head, aggs.tail: _*)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable(); q.stop()
-      name
-    })
-    val st = spark.table(table)
+      s.groupBy(col("typ")).agg(aggs.head, aggs.tail: _*)
+    }
     val h = st.select(col("typ"), typedlit(bounds).as("bounds"),
       col("cnt").cast("double").as("cnt"),
       array(bounds.indices.map(i => col(s"c$i").cast("double")): _*)
@@ -2775,9 +2119,6 @@ object StreamOps extends Serializable {
       .select(col("typ"),
         (floor(col("value") * 1e4 + 0.5) / 1e4).as("hq90"))
   }
-
-  private val dsirRouteRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** H29 (round 10, oracle-gated): streaming DSIR router —
     * score-at-ingest curation. F34's λ table is STATIC (built once
@@ -2793,48 +2134,13 @@ object StreamOps extends Serializable {
     * batch derivation of the same routing from the source table.
     */
   def dsirRouteStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val base = dsirRouteRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = graft.Tables.fingerprint(s"$dir/documents.parquet")
-      val b = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_h29_" + fp)
-      val done = new java.io.File(b, "_done")
-      if (!done.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(b)
-        // the static table — built BEFORE the stream starts, like a
-        // production router loading its model at deploy
-        val lam = graft.text.TextAnalysis.dsirLambda(spark, dir)
-        val docs = graft.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"))
-        val landing = new java.io.File(b, "landing").toString
-        landOrdered(docs, Seq("doc_id"), landing, 4)
-        val stream = spark.readStream
-          .schema(spark.read.parquet(landing).schema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = stream.writeStream
-          .option("checkpointLocation", new java.io.File(b, "ckpt").toString)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val scored = graft.text.TextAnalysis
-              .dsirScoreOn(spark, batch, lam).persist()
-            try {
-              scored.filter(col("score") > 0).write
-                .mode("overwrite").parquet(s"$b/accept/batch=$id")
-              scored.filter(!(col("score") > 0)).write
-                .mode("overwrite").parquet(s"$b/reject/batch=$id")
-            } finally scored.unpersist()
-            ()
-          }
-          .start()
-        q.processAllAvailable(); q.stop()
-        done.createNewFile()
-      }
-      b.toString
-    })
-    def side(name: String): DataFrame =
-      spark.read.option("basePath", s"$base/$name").parquet(s"$base/$name")
-        .withColumn("verdict", lit(name)).drop("batch")
-    side("accept").unionByName(side("reject"))
+    val base = routeStreamed(spark, dir, "h29", Seq("doc_id", "text")) {
+      // the static table — built BEFORE the stream starts, like a
+      // production router loading its model at deploy
+      val lam = graft.text.TextAnalysis.dsirLambda(spark, dir)
+      graft.text.TextAnalysis.dsirScoreOn(spark, _, lam)
+    }(_.filter(col("score") > 0), _.filter(!(col("score") > 0)))
+    routedSides(spark, base)
       .groupBy(col("verdict"))
       .agg(count(lit(1)).as("n"),
         sum(col("n_feats")).as("sum_feats"),

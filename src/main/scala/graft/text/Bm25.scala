@@ -133,9 +133,6 @@ object Bm25 {
         (floor(col("col.v") * 10000 + 0.5) / 10000).as("score"))
   }
 
-  // one materialized term store per source dataset (written once/JVM)
-  private val stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** F14b (oracle-gated): BM25 resolved from the MATERIALIZED term
     * store instead of in-query postings — the text-index twin of C9's
     * `match_conj_stored`: the corpus is flushed in two batches,
@@ -148,14 +145,15 @@ object Bm25 {
     */
   def storedTopk(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val path = stores.computeIfAbsent(dir, _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_termstore_" + graft.Tables.fingerprint(s"$dir/documents.parquet")).toString
+    // one materialized term store per source dataset (written once/JVM)
+    val path = graft.Memo.global(s"text.termstore:$dir") {
+      val p = graft.Memo.tmp("graft_termstore_" +
+        graft.Tables.fingerprint(s"$dir/documents.parquet")).toString
       TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 0), p, 0L)
       TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 1), p, 1L)
       TermStore.compact(docs.sparkSession, p)
       p
-    })
+    }
     rankPostings(spark,
       cachedPostings(spark, s"store:$path", TermStore.load(spark, path)),
       docs, Some(s"store:$path"))

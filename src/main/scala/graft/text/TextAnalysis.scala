@@ -1181,22 +1181,16 @@ object TextAnalysis {
     * it is here. Returns merges in rank order with the pair count at
     * selection time.
     */
-  private[graft] val bpeModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, String, Long)]]()
-
-  /** Drop the driver-side BPE merge tables ([[graft.Caches.clear]]). */
-  def clearMemos(): Unit = bpeModelMemo.clear()
-
   private[graft] def bpeTrain(spark: SparkSession, dir: String,
       rounds: Int = 8, minCount: Long = 2L): Seq[(String, String, Long)] =
     // round 15 (optimization, guide §1.2): the learned merge table is
     // the tokenizer ARTIFACT — an index-shaped model like the IVF
-    // centroids (ivfModelMemo) and the BM25 sidecars, ∝ rounds, never
+    // centroids and the BM25 sidecars, ∝ rounds, never
     // corpus-sized. Both gated consumers (bpe_merges, bpe_encode)
     // re-ran the word-frequency aggregate + collect + driver rounds
     // per invocation; one train per (session, dataset, rounds,
     // minCount) serves both. The encode/aggregation work stays live.
-    graft.Memo.getOrBuild(bpeModelMemo, (spark, s"$dir:r=$rounds:mc=$minCount"))(
+    graft.Memo(spark, s"text.bpe_model:$dir:r=$rounds:mc=$minCount")(
       bpeTrainNow(spark, dir, rounds, minCount))
 
   private def bpeTrainNow(spark: SparkSession, dir: String,

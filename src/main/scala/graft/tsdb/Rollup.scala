@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Rollup {
 
-  private val tierRuns =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** One landed tier pair per (session, dataset) — the landed-files
     * discipline: the gate reads these files back, so build→write→read
     * is what the oracle checks. Round 12: tiers land as COMMIT-LOG
@@ -38,10 +35,9 @@ object Rollup {
     * linked. The serving reads below go through the connector.
     */
   def tierRoot(spark: SparkSession, dir: String): String =
-    tierRuns.computeIfAbsent((spark, dir), _ => {
-      val fp = Tables.fingerprint(s"$dir/events.parquet")
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_rollup_" + fp).toString
+    graft.Memo(spark, s"rollup.tiers:$dir") {
+      val base = graft.Memo.tmp(
+        "graft_rollup_" + Tables.fingerprint(s"$dir/events.parquet")).toString
       graft.sources.Io.fsFor(spark, base)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       graft.sources.Io.tableAppendStats(
@@ -55,7 +51,7 @@ object Rollup {
         dailyFromHours(readTier(spark, s"$base/1h"))
           .repartitionByRange(2, col("day_sec")), s"$base/1d", "day_sec")
       base
-    })
+    }
 
   /** A tier read THROUGH the DSv2 connector — the proof any vanilla
     * Spark job can consume the tier store. */

@@ -148,6 +148,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(hits >= 45, s"planted-neighbor top-1 IVF recall $hits/50")
   }
 
+  private def jobsOf(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("keyless IVF search trains its centroids once per call") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(987654321L)
+    val df = similarity.Ann.withNorm(spark, (0 until 120).map(i =>
+      (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat))).toDF("vec_id", "v"))
+    val isQuery = col("vec_id") < 3
+    def search(iters: Int) = jobsOf(
+      similarity.Ann.ivfTopkOn(df, isQuery, iters = iters).collect())
+    def train(iters: Int) = jobsOf(similarity.Ann.trainIvfCentroidsNow(
+      similarity.Ann.unitize(df), 16, iters, 64))
+    val perRound = train(2) - train(1)
+    assert(perRound >= 1)
+    // one more Lloyd round costs one round of training jobs: training
+    // running twice per call (search + cell assignment) cost two
+    assert(search(4) - search(3) == perRound)
+  }
+
   test("PQ ANN finds planted near-duplicate neighbors (recall >= 0.9)") {
     // same planted-cluster contract as the LSH/IVF specs: a near-copy's
     // reconstruction must score its source into the candN candidates
@@ -241,10 +271,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("Caches.clear drops the driver-side BPE merge tables") {
+    def bpeModels = Memo.keys(spark).filter(_.startsWith("text.bpe_model:"))
     text.TextAnalysis.bpeTrain(spark, dir)
-    assert(!text.TextAnalysis.bpeModelMemo.isEmpty)
+    assert(bpeModels.nonEmpty)
     Caches.clear()
-    assert(text.TextAnalysis.bpeModelMemo.isEmpty)
+    assert(bpeModels.isEmpty)
   }
 
   test("pipelineWith accepts a custom decoder behind the MediaDecoder trait") {

@@ -206,6 +206,9 @@ class RulesSpec extends AnyFunSuite {
 
   test("alert grid: untagged indexes over different data each get their own " +
       "rows, and nothing is memoized on them") {
+    // recordedIndex evaluates over the memoized events index: pin it first
+    index.TagIndex.forEvents(spark, dir).seriesCatalog.count()
+    val untouched = spark.sparkContext.getPersistentRDDs.keySet
     val raw = Tables.eventsRaw(spark, dir)
     val ev = raw.select(col("event_id"), col("ts_ns"), Tables.tsCol(raw).as("ts"),
       col("value"), col("user_id").cast("string").as("usr"), col("event_type").as("typ"))
@@ -213,7 +216,7 @@ class RulesSpec extends AnyFunSuite {
       val i = new index.TagIndex(ev.filter(pmod(col("usr").cast("long"), lit(2)) === parity),
         Seq("usr", "typ"))
       assert(i.memoTag.isEmpty)
-      i.seriesCatalog.count() // the index's own cached catalog is not the memo under test
+      i.seriesCatalog.count()
       i
     }
     def alertUsers(i: index.TagIndex): Set[String] =
@@ -226,6 +229,16 @@ class RulesSpec extends AnyFunSuite {
     assert(odd.nonEmpty && odd.forall(_.toLong % 2 == 1), s"odd index served $odd")
     assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
       "an alert grid was pinned for an untagged index")
+    // per-call indexes resolve over the unpersisted catalog plan: a
+    // fresh TagIndex and a recorded-rule StoreTagIndex pin nothing
+    val recorded = promql.Rules.recordedIndex(spark, dir, "spec_unpinned",
+      """sum by (usr) (count_over_time({typ="purchase"}[1d]))""",
+      start, end, step)
+    for (i <- Seq(evenIdx, oddIdx, recorded))
+      assert(i.resolveMatchers(Seq(index.LabelMatcher("usr", index.MatchOp.Gte, "1")))
+        .count() > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == untouched,
+      "a per-call index pinned its series catalog")
   }
 
   test("Group.intervalSec IS the evaluation grid step") {

@@ -35,6 +35,30 @@ class TagIndexSpec extends AnyFunSuite {
     index.resolveMatchers(ms).select("usr", "typ").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
 
+  test("tsid: a missing label stays apart from a shifted value") {
+    import spark.implicits._
+    // {a="x", b=null} and {a=null, b="x"}: concat_ws alone skips the
+    // null and hashes both as "x"
+    val df = Seq((0L, 100L, 1.0, Some("x"), Option.empty[String]),
+        (1L, 200L, 2.0, Option.empty[String], Some("x")))
+      .toDF("event_id", "ts_sec", "value", "a", "b")
+      .withColumn("ts", timestamp_seconds(col("ts_sec")))
+    val sparse = new TagIndex(df, Seq("a", "b"))
+    assert(sparse.labeled.select("tsid").distinct().count() == 2)
+    assert(sparse.seriesCatalog.count() == 2)
+    assert(sparse.resolveMatchers(Seq(LabelMatcher("a", Eql, "x")))
+      .select("b").collect().map(_.getString(0)).toSeq == Seq(null))
+  }
+
+  test("tsid: a fully-labelled series keeps its NUL-joined hash") {
+    // xxhash64("1\u0000click", seed 42) — the tsid persisted warm
+    // catalogs and IndexStore segments already carry
+    val t = index.labeled.filter(col("usr") === "1" && col("typ") === "click")
+      .select("tsid").head().getLong(0)
+    assert(t == 8468917265113425992L)
+    assert(t == streaming.StreamOps.tsidOf("1", "click"))
+  }
+
   test("series catalog has one row per label set with bounds") {
     val cat = index.seriesCatalog.collect()
     assert(cat.length == 4)
@@ -117,7 +141,7 @@ class TagIndexSpec extends AnyFunSuite {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
     rm(warm)
-    TagIndex.clearMemos()
+    Caches.clear()
     val cold = TagIndex.forEvents(spark, dir)
     val coldCat = rows(cold.seriesCatalog)
     val coldInv = rows(cold.invertedIndex)
@@ -125,7 +149,7 @@ class TagIndexSpec extends AnyFunSuite {
       "cold build must persist the warm store")
     // a 'fresh session' load: clear the memo so forEvents re-enters
     // memoWarm and takes the _done load path
-    TagIndex.clearMemos()
+    Caches.clear()
     val loaded = TagIndex.forEvents(spark, dir)
     assert(rows(loaded.seriesCatalog) == coldCat && coldCat.nonEmpty)
     assert(rows(loaded.invertedIndex) == coldInv && coldInv.nonEmpty)
@@ -133,6 +157,6 @@ class TagIndexSpec extends AnyFunSuite {
       LabelMatcher("usr", Gte, "10"))
     assert(rows(loaded.resolveMatchers(ms).select("usr", "typ"))
       == rows(cold.resolveMatchers(ms).select("usr", "typ")))
-    TagIndex.clearMemos() // leave no cross-suite state
+    Caches.clear() // leave no cross-suite state
   }
 }
