@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark. Emits ONE JSON line (and /tmp/bench.json).
   *
@@ -26,7 +25,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // PRE-FLIGHT LOAD GATE (round 10, VERDICT #8 — round 9's bench ran
     // into a 95 s load_wait window and every median inflated): two
     // tiers of patience, and the decision is PRINTED so the artifact's
@@ -61,13 +59,7 @@ object Bench {
     System.err.println(f"[bench] load gate: start loadavg=$loadStart%.2f " +
       f"after ${waitedSec}%.0f s wait — " +
       (if (loadStart >= 2.0) "CONTENDED start" else "clean start"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // JVM/codegen/scheduler warmup so the first measured query isn't
     // charged for session startup (no data caching — different table)
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -127,6 +127,22 @@ object Memo {
   def tmp(name: String): File =
     new File(System.getProperty("java.io.tmpdir"), name)
 
+  /** This JVM's own directory under the temp directory, removed when
+    * the JVM exits. */
+  private lazy val jvmDir: File = {
+    val d = java.nio.file.Files.createTempDirectory("graft_jvm_").toFile
+    sys.addShutdownHook(wipe(d))
+    d
+  }
+
+  private val freshSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A not-yet-existing directory `<name>_<n>` that no other build in
+    * any JVM uses: one build's files, which no other session's build
+    * can overwrite while they are served. */
+  def fresh(name: String): File =
+    new File(jvmDir, s"${name}_${freshSeq.incrementAndGet()}")
+
   /** Delete `f` and everything under it. */
   def wipe(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(wipe))

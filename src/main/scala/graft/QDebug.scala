@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Standalone per-query timing: each named query runs COLD once, then
   * SPARK_GRAFT_QDEBUG_WARM more times (default 2), all printed — the
@@ -12,11 +11,7 @@ object QDebug {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warm = sys.env.getOrElse("SPARK_GRAFT_QDEBUG_WARM", "2").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
     for (name <- args) {
       val times = (0 to warm).map { _ =>

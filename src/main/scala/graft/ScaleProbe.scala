@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe: replicates the sf0.1 events table Nx (shifted ids so
@@ -35,14 +35,11 @@ object ScaleProbe {
     val only: Set[String] =
       if (onlyIdx >= 0) args.drop(onlyIdx + 1).filter(_.nonEmpty).toSet
       else Set.empty
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    // The k-way union inherits k×32 tiny cache partitions; above 10×
+    // The k-way union inherits k×n tiny cache partitions (n = the
+    // session's cores: 32 on the host SCALE.md was measured on); above 10×
     // that layout is pure task-scheduling overhead (3 200 partitions of
     // 3 k rows at 100×) that no real table would have — compact to a
     // production-shaped 320 partitions there, and leave factors ≤ 10

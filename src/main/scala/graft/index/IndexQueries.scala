@@ -140,12 +140,19 @@ object IndexQueries {
     series(idx(spark, dir).resolveMatchers(Seq(
       LabelMatcher("usr", Eql, "3"), LabelMatcher("typ", NeqRegex, "(error|signup)"))))
 
+  private val conj = Seq(
+    LabelMatcher("typ", Eql, "purchase"),
+    LabelMatcher("usr", Gte, "10"),
+    LabelMatcher("usr", Neq, "12"))
+
   /** A7: conjunction mixing =, range and != */
   def matchConj(spark: SparkSession, dir: String): DataFrame =
-    series(idx(spark, dir).resolveMatchers(Seq(
-      LabelMatcher("typ", Eql, "purchase"),
-      LabelMatcher("usr", Gte, "10"),
-      LabelMatcher("usr", Neq, "12"))))
+    series(idx(spark, dir).resolveMatchers(conj))
+
+  /** The series `matchers` select from the store at `store`. */
+  private def storedSeries(spark: SparkSession, store: String,
+      matchers: Seq[LabelMatcher]): DataFrame =
+    series(IndexStore.resolvePostings(spark, store, matchers))
 
   /** A8 */
   def labelValues(spark: SparkSession, dir: String): DataFrame =
@@ -253,21 +260,14 @@ object IndexQueries {
 
   /** C9 (oracle-gated): the A7 conjunction resolved from the
     * MATERIALIZED store instead of the in-memory index — the two paths
-    * share the resolution algebra, so the same oracle gates both; what
-    * this query proves is that the flushed parquet segments resolve
-    * identically (the reference's claim that MemIndex and the on-disk
-    * tree answer the same queries, index_server.cpp try_compact).
+    * share the one resolution filter, so the same oracle gates both;
+    * what this query proves is that the flushed parquet segments
+    * resolve identically (the reference's claim that MemIndex and the
+    * on-disk tree answer the same queries, index_server.cpp
+    * try_compact).
     */
-  def matchConjStored(spark: SparkSession, dir: String): DataFrame = {
-    val store = storeFor(spark, dir)
-    val tsids = IndexStore.resolvePostings(spark, store, Seq(
-      LabelMatcher("typ", Eql, "purchase"),
-      LabelMatcher("usr", Gte, "10"),
-      LabelMatcher("usr", Neq, "12")))
-    idx(spark, dir).seriesCatalog
-      .join(tsids, Seq("tsid"), "left_semi")
-      .select("usr", "typ")
-  }
+  def matchConjStored(spark: SparkSession, dir: String): DataFrame =
+    storedSeries(spark, storeFor(spark, dir), conj)
 
   // a PRIVATE store compacted down to one segment (separate from
   // storeFor so compaction can't mask a merge-on-read bug there)
@@ -289,16 +289,8 @@ object IndexQueries {
     * single-segment layout serves the same algebra the multi-segment
     * merge-on-read view did.
     */
-  def matchCompacted(spark: SparkSession, dir: String): DataFrame = {
-    val store = compactStoreFor(spark, dir)
-    val tsids = IndexStore.resolvePostings(spark, store, Seq(
-      LabelMatcher("typ", Eql, "purchase"),
-      LabelMatcher("usr", Gte, "10"),
-      LabelMatcher("usr", Neq, "12")))
-    idx(spark, dir).seriesCatalog
-      .join(tsids, Seq("tsid"), "left_semi")
-      .select("usr", "typ")
-  }
+  def matchCompacted(spark: SparkSession, dir: String): DataFrame =
+    storedSeries(spark, compactStoreFor(spark, dir), conj)
 
   // a PRIVATE store with a delete_series tombstone applied (separate
   // from storeFor — deletes must not contaminate the other gates);
@@ -325,22 +317,17 @@ object IndexQueries {
     * matcher algebra over the source MINUS the deleted class, so the
     * hide semantics (not merely "fewer rows") are what hash-gates.
     */
-  def matchTombstoned(spark: SparkSession, dir: String): DataFrame = {
-    val store = tombStoreFor(spark, dir)
-    val tsids = IndexStore.resolvePostings(spark, store, Seq(
-      LabelMatcher("usr", Gte, "10")))
-    idx(spark, dir).seriesCatalog
-      .join(tsids, Seq("tsid"), "left_semi")
-      .select("usr", "typ")
-  }
+  def matchTombstoned(spark: SparkSession, dir: String): DataFrame =
+    storedSeries(spark, tombStoreFor(spark, dir), Seq(LabelMatcher("usr", Gte, "10")))
 
   // a store populated ONLY through the H9 streaming foreachBatch loop
-  // (one per dataset; `_done` marks a completed build — a partial
-  // leftover from a crashed run is wiped and rebuilt, never resumed
-  // into, so replayed landings can't double-flush under fresh batch ids)
+  // (one per dataset and segment format; `_done` marks a completed
+  // build — a partial leftover from a crashed run is wiped and rebuilt,
+  // never resumed into, so replayed landings can't double-flush under
+  // fresh batch ids)
   private def streamedStoreFor(spark: SparkSession, dir: String): String =
     graft.Memo.global(s"index.streamstore:$dir") {
-      val base = graft.Memo.landed("graft_streamstore",
+      val base = graft.Memo.landed(s"graft_streamstore_${IndexStore.Layout}",
           graft.Tables.fingerprint(s"$dir/events.parquet")) { b =>
         val raw = graft.Tables.eventsRaw(spark, dir)
         val ev = raw.select(
@@ -365,16 +352,8 @@ object IndexQueries {
     * paths. Resolution cost is ∝ index entries, independent of how
     * many micro-batches fed the store.
     */
-  def matchConjStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val store = streamedStoreFor(spark, dir)
-    val tsids = IndexStore.resolvePostings(spark, store, Seq(
-      LabelMatcher("typ", Eql, "purchase"),
-      LabelMatcher("usr", Gte, "10"),
-      LabelMatcher("usr", Neq, "12")))
-    idx(spark, dir).seriesCatalog
-      .join(tsids, Seq("tsid"), "left_semi")
-      .select("usr", "typ")
-  }
+  def matchConjStreamed(spark: SparkSession, dir: String): DataFrame =
+    storedSeries(spark, streamedStoreFor(spark, dir), conj)
 
   /** H17: a full PromQL query answered from the STREAM-MAINTAINED
     * index: matcher resolution reads the store that only the
@@ -439,7 +418,7 @@ object IndexQueries {
     * the store as it stood before the Jan-10+ flushes. The reference's
     * equivalent is serving queries from an old COW-tree root
     * (include/tagtree/tree/cow_tree.h); here immutable `seg=` dirs make
-    * the historical read a partition-pruned scan. The DuckDB oracle
+    * the historical read a segment-pruned scan. The DuckDB oracle
     * replays the same resolution over the SOURCE table filtered to the
     * snapshot's time cut — series first sighted after it must not
     * appear, which the derived `day` label makes a real difference.

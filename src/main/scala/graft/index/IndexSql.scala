@@ -119,11 +119,8 @@ object IndexSql {
     */
   def matchStoredAt(spark: SparkSession, storePath: String, ord: Long,
       selector: String): DataFrame = {
-    val snap = IndexStore.loadAt(spark, storePath, ord)
-    val tsids = TagIndex.resolvePostings(snap, parseSelector(selector))
-    snap.join(tsids, Seq("tsid"), "left_semi")
-      .select(col("tsid"), col("label_name"), col("label_value"))
-      .distinct()
+    val matched = IndexStore.resolvePostingsAt(spark, storePath, ord, parseSelector(selector))
+    matched.select(col("tsid"), TagIndex.labelPairs(TagIndex.catalogLabels(matched)))
   }
 
   // ---- TVF plan builders (argument literals → the builder's plan) ----

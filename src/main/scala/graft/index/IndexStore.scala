@@ -3,18 +3,22 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Materialized inverted index — the Spark analog of the reference's
+/** Materialized tag index — the Spark analog of the reference's
   * compaction: MemIndex snapshots are flushed into the on-disk
   * COW B+-tree (/root/reference/src/index/index_server.cpp
-  * try_compact/compact, index_tree.cpp write paths).
+  * try_compact/compact, index_tree.cpp write paths). A segment holds
+  * what the in-memory index holds: series-catalog rows (tsid, <label
+  * columns>, min_ts, max_ts, n_samples), so the in-memory and the
+  * on-disk index answer matchers through the one filter
+  * [[TagIndex.resolve]].
   *
   * The store is LSM-shaped, like the reference's flush-then-compact
   * cycle (index_server.h:50-66 keeps a compaction watermark and
   * flushes only entries past it):
   *
   *  - each flush writes a *segment* directory `seg=<wm_ns>` of
-  *    inverted-index rows (partitioned by label_name inside), where
-  *    `wm_ns` is the segment's EXCLUSIVE ingest-time high watermark in
+  *    catalog rows (plain parquet files, no label_name partitioning),
+  *    where `wm_ns` is the segment's EXCLUSIVE ingest-time high watermark in
   *    raw nanoseconds: every sample with ts_ns < wm_ns is covered by
   *    this or an earlier segment, every sample with ts_ns >= wm_ns by a
   *    later one. Half-open nanosecond intervals mean no boundary sample
@@ -27,23 +31,26 @@ import org.apache.spark.sql.functions._
   *    history. A retry after a crash between commit and anything else
   *    recomputes the same fresh set, lands on the same `seg=` name and
   *    overwrites it: flush is idempotent;
-  *  - [[load]] is the merge-on-read view: per (label_name,
-  *    label_value, tsid) the segment rows fold with min/max/sum, all
-  *    decomposable, so the view equals a full rebuild exactly;
+  *  - [[load]] is the merge-on-read view: per (tsid, labels) the
+  *    segment rows fold with min/max/sum, all decomposable, so the
+  *    view equals a full rebuild exactly;
   *  - [[compact]] (manual_compact) folds the segments into one (built
   *    write-aside, swapped via backup-rename — a crash at any point
   *    leaves a complete store at either the path or the backup).
   *
-  * A matcher on `name op value` prunes to the label_name partition
-  * directories (the analog of the per-label tree descent) and pushes
-  * the value predicate into row-group stats. The index is ∝ #series,
-  * so at 100 TB of samples it stays a few GB.
+  * An inclusive matcher on `name op value` reaches the segment scan as
+  * a pushed filter on the label column (row-group stats — the analog
+  * of the per-label tree descent). The index is ∝ #series, so at
+  * 100 TB of samples it stays a few GB.
   */
 object IndexStore {
 
-  private def write(ix: DataFrame, segDir: String): Unit =
-    ix.repartition(col("label_name"))
-      .write.mode("overwrite").partitionBy("label_name").parquet(segDir)
+  /** The segment format, part of the prefix of stores landed across
+    * JVMs, so a store written in an older format is rebuilt, not read. */
+  private[graft] val Layout = "cat"
+
+  private def write(catalog: DataFrame, segDir: String): Unit =
+    catalog.write.mode("overwrite").parquet(segDir)
 
   private def fs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
@@ -65,20 +72,21 @@ object IndexStore {
     Option(samples.agg(max(nsCol(samples))).head().get(0))
       .map(_.asInstanceOf[Long] + 1L)
 
-  /** Segment directory names that finished their write — a crash
-    * mid-flush leaves a seg dir WITHOUT Spark's _SUCCESS commit marker,
-    * and such a segment must count for nothing: not for the watermark
-    * (its name alone would make the retry skip the lost rows) and not
-    * for reads (partial files). Every store operation goes through this
-    * filter; uncommitted leftovers are overwritten by the retry.
+  /** Directory names under `path` starting with `prefix` (`seg=`,
+    * `del=`) that finished their write — a crash mid-flush leaves a
+    * dir WITHOUT Spark's _SUCCESS commit marker, and such a dir must
+    * count for nothing: not for the watermark (a segment's name alone
+    * would make the retry skip the lost rows) and not for reads
+    * (partial files). Every store operation goes through this filter;
+    * uncommitted leftovers are overwritten by the retry.
     */
-  private def committedSegs(spark: SparkSession, path: String): Seq[String] =
+  private def committed(spark: SparkSession, path: String, prefix: String): Seq[String] =
     if (!exists(spark, path)) Seq.empty
     else {
       val f = fs(spark, path)
       f.listStatus(new org.apache.hadoop.fs.Path(path))
         .filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.startsWith("seg=") &&
+        .filter(p => p.getName.startsWith(prefix) &&
           f.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
         .map(_.getName).toSeq
     }
@@ -88,7 +96,7 @@ object IndexStore {
     * store) — exactly what has been durably flushed, nothing else.
     */
   def storedWatermarkNs(spark: SparkSession, path: String): Option[Long] =
-    committedSegs(spark, path)
+    committed(spark, path, "seg=")
       .filter(isNumericSeg) // skip seg=b<id> batch segments
       .map(_.stripPrefix("seg=").toLong).maxOption
 
@@ -125,7 +133,7 @@ object IndexStore {
     val bak = path + ".bak"
     f.delete(p(tmp), true)
     wm match {
-      case Some(w) => write(idx.invertedIndex, s"$tmp/seg=$w")
+      case Some(w) => write(idx.seriesCatalog, s"$tmp/seg=$w")
       case None    => f.mkdirs(p(tmp)) // empty batch → empty store
     }
     f.delete(p(bak), true)
@@ -152,14 +160,14 @@ object IndexStore {
     val spark = idx.samples.sparkSession
     storedWatermarkNs(spark, path) match {
       case None =>
-        require(committedSegs(spark, path).isEmpty,
+        require(committed(spark, path, "seg=").isEmpty,
           s"store at $path holds batch-id segments (streaming flushBatch); " +
             "time-watermark incremental flush does not apply — keep using flushBatch")
         materialize(idx, path)
       case Some(wm) =>
         val fresh = idx.samples.filter(nsCol(idx.samples) >= wm)
         batchWmNs(fresh).foreach { newWm =>
-          write(new TagIndex(fresh, idx.labelNames).invertedIndex,
+          write(new TagIndex(fresh, idx.labelNames).seriesCatalog,
             s"$path/seg=$newWm")
         }
     }
@@ -183,7 +191,7 @@ object IndexStore {
     val spark = idx.samples.sparkSession
     // one listing serves both the family guard and the idempotence
     // check — per-micro-batch metadata RPCs stay O(#segments), not 2×
-    val segs = committedSegs(spark, path)
+    val segs = committed(spark, path, "seg=")
     require(!segs.exists(s => isNumericSeg(s)),
       s"store at $path holds time-watermark segments; streaming flushBatch " +
         "into it would double-count samples past the watermark in the " +
@@ -201,7 +209,7 @@ object IndexStore {
         s"batch ${maxCommitted.getOrElse(-1L)}: checkpoint reset into an " +
         "existing store is unsupported — use a fresh store path")
     if (!segs.contains(s"seg=b$batchId") && !idx.samples.isEmpty)
-      write(idx.invertedIndex, s"$path/seg=b$batchId")
+      write(idx.seriesCatalog, s"$path/seg=b$batchId")
   }
 
   private def isNumericSeg(name: String): Boolean = {
@@ -217,18 +225,6 @@ object IndexStore {
     */
   private def segOrd(name: String): Long =
     name.stripPrefix("seg=").stripPrefix("b").toLong
-
-  /** Committed tombstone directories (`del=<k>` + _SUCCESS). */
-  private def committedDels(spark: SparkSession, path: String): Seq[String] =
-    if (!exists(spark, path)) Seq.empty
-    else {
-      val f = fs(spark, path)
-      f.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.startsWith("del=") &&
-          f.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-        .map(_.getName).toSeq
-    }
 
   /** delete_series — the admin surface every TSDB needs (Prometheus's
     * delete_series; tombstones over the reference's COW index): resolve
@@ -246,58 +242,40 @@ object IndexStore {
     */
   def deleteSeries(spark: SparkSession, path: String,
       matchers: Seq[LabelMatcher]): Long = {
-    import spark.implicits._
-    val segs = committedSegs(spark, path)
+    val segs = committed(spark, path, "seg=")
     if (segs.isEmpty) return 0L
-    val resolved = TagIndex.resolvePostings(load(spark, path), matchers)
-      .select(col("tsid")).distinct()
-    val upto = segs.map(segOrd).max
-    def nextDel: Long = committedDels(spark, path)
+    val resolved = resolvePostings(spark, path, matchers)
+    if (resolved.isEmpty) return 0L
+    val nextDel = committed(spark, path, "del=")
       .map(_.stripPrefix("del=").toLong).maxOption.getOrElse(-1L) + 1L
-    // Config-thresholded route (the Dedup.clusters discipline): below
-    // the limit, collect-sort-write keeps the count trivially ≡ the
-    // tombstone contents in one tiny file; ABOVE it (a matcher hitting
-    // tens of millions of series would strain the driver), the set is
-    // written distributed and the count is taken from reading the
-    // COMMITTED tombstone back — count ≡ contents holds on both paths.
-    val collectLimit = spark.conf
-      .getOption("graft.index.deleteCollectLimit").map(_.toLong)
-      .getOrElse(1000000L)
-    val n = resolved.count()
-    if (n == 0L) 0L
-    else if (n < collectLimit) {
-      val tsids = resolved.as[Long].collect().sorted
-      tsids.toSeq.toDF("tsid").withColumn("upto", lit(upto))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/del=$nextDel")
-      tsids.length.toLong
-    } else {
-      val del = s"$path/del=$nextDel"
-      resolved.withColumn("upto", lit(upto))
-        .sortWithinPartitions(col("tsid"))
-        .write.mode("overwrite").parquet(del)
-      spark.read.parquet(del).count()
-    }
+    // the count is read back from the COMMITTED tombstone, so it is
+    // its contents by construction; the set is never collected
+    val del = s"$path/del=$nextDel"
+    resolved.select(col("tsid"), lit(segs.map(segOrd).max).as("upto"))
+      .sortWithinPartitions(col("tsid"))
+      .write.mode("overwrite").parquet(del)
+    spark.read.parquet(del).count()
   }
 
   /** Merge-on-read view of the store: COMMITTED segments folded per
-    * entry (an uncommitted crash leftover contributes nothing). With
-    * one segment (post-[[compact]]) the fold is the identity.
+    * series into catalog rows (an uncommitted crash leftover
+    * contributes nothing). With one segment (post-[[compact]]) the
+    * fold is the identity.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
-    val segs = committedSegs(spark, path)
+    val segs = committed(spark, path, "seg=")
     if (segs.isEmpty) emptyView(spark)
-    else loadSegs(spark, path, segs, committedDels(spark, path))
+    else loadSegs(spark, path, segs, committed(spark, path, "del="))
   }
 
   /** A store that exists but holds no committed segments yet (e.g. a
     * just-started streaming pipeline whose first batches were empty)
-    * is an EMPTY index, not an error.
+    * is an EMPTY index, not an error: a catalog without label columns.
     */
   private def emptyView(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(
-        StructField("label_name", StringType), StructField("label_value", StringType),
         StructField("tsid", LongType), StructField("min_ts", TimestampType),
         StructField("max_ts", TimestampType), StructField("n_samples", LongType))))
   }
@@ -314,9 +292,9 @@ object IndexStore {
     * index.
     */
   def loadAt(spark: SparkSession, path: String, maxOrd: Long): DataFrame = {
-    val segs = committedSegs(spark, path).filter(segOrd(_) <= maxOrd)
+    val segs = committed(spark, path, "seg=").filter(segOrd(_) <= maxOrd)
     if (segs.isEmpty) return emptyView(spark)
-    val dels = committedDels(spark, path).filter { d =>
+    val dels = committed(spark, path, "del=").filter { d =>
       spark.read.parquet(s"$path/$d")
         .agg(max(col("upto"))).head().getLong(0) <= maxOrd
     }
@@ -348,7 +326,8 @@ object IndexStore {
           .filter(col("__upto").isNull || col("__ord") > col("__upto"))
           .drop("__ord", "__upto")
       }
-    live.groupBy(col("label_name"), col("label_value"), col("tsid"))
+    // per series: tsid and the label columns of the segment schema
+    live.groupBy(col("tsid") +: TagIndex.catalogLabels(live.drop("seg")).map(col): _*)
       .agg(min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"),
         sum(col("n_samples")).as("n_samples"))
   }
@@ -383,7 +362,7 @@ object IndexStore {
     // ONE listing drives the family guard, the merged name AND the
     // snapshot — a second listing could disagree under a racing flush
     // and hand the merged segment a stale identity
-    val snapshot = committedSegs(spark, path)
+    val snapshot = committed(spark, path, "seg=")
     val numeric = snapshot.filter(isNumericSeg)
     val batchSegs = snapshot.filter(s => !isNumericSeg(s))
     require(numeric.isEmpty || batchSegs.isEmpty,
@@ -412,7 +391,7 @@ object IndexStore {
       // tombstones from the same snapshot instant: the merged segment
       // is physically purged, and the del= dirs retire with the swap
       // (they move to the backup with the old store and are deleted)
-      write(loadSegs(spark, path, snapshot, committedDels(spark, path)), s"$tmp/$sn")
+      write(loadSegs(spark, path, snapshot, committed(spark, path, "del=")), s"$tmp/$sn")
       f.delete(p(bak), true)
       // freeze the store; from here no flush can commit into it
       require(f.rename(p(path), p(bak)) && !f.exists(p(path)),
@@ -421,7 +400,7 @@ object IndexStore {
         throw new IllegalStateException(
           s"$reason; pre-compact store preserved at $bak, merged copy at $tmp " +
             "— quiesce ingest, reconcile, then re-run compact")
-      if (committedSegs(spark, bak).toSet != snapshot.toSet) {
+      if (committed(spark, bak, "seg=").toSet != snapshot.toSet) {
         // something committed between the snapshot and the freeze and
         // is NOT in the merged copy — put the store back untouched
         if (f.exists(p(path)))
@@ -453,24 +432,29 @@ object IndexStore {
     }
   }
 
-  /** Resolve matchers against the materialized index — same algebra as
-    * the in-memory path (TagIndex.resolvePostings), but the per-matcher
-    * label_name filter becomes a partition filter on the store (the
-    * predicate on the grouping key pushes below the merge fold).
+  /** Resolve matchers against the merge-on-read catalog
+    * ([[TagIndex.resolve]], the in-memory index's filter): the matched
+    * series' catalog rows, tsid first. Label names come from the
+    * segment schema; predicates on them push below the merge fold
+    * into the segment scan.
     */
   def resolvePostings(spark: SparkSession, path: String,
       matchers: Seq[LabelMatcher],
       startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame =
-    TagIndex.resolvePostings(load(spark, path), matchers, startTs, endTs)
+    resolveOn(load(spark, path), matchers, startTs, endTs)
 
   /** Matcher resolution against a HISTORICAL snapshot: the index view
     * as of segment ordinal `maxOrd` ([[loadAt]] — immutable segments
-    * make time travel a partition-pruned read, and tombstones written
+    * make time travel a segment-pruned read, and tombstones written
     * after the snapshot don't rewrite history). The reference's
     * equivalent is querying an old COW-tree root (cow_tree.h).
     */
   def resolvePostingsAt(spark: SparkSession, path: String, maxOrd: Long,
       matchers: Seq[LabelMatcher],
       startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame =
-    TagIndex.resolvePostings(loadAt(spark, path, maxOrd), matchers, startTs, endTs)
+    resolveOn(loadAt(spark, path, maxOrd), matchers, startTs, endTs)
+
+  private def resolveOn(view: DataFrame, matchers: Seq[LabelMatcher],
+      startTs: Option[Column], endTs: Option[Column]): DataFrame =
+    TagIndex.resolve(view, TagIndex.catalogLabels(view), matchers, startTs, endTs)
 }

@@ -34,15 +34,9 @@ final case class LabelMatcher(name: String, op: MatchOp, value: String) {
     case Neq | NeqRegex => false
     case _ => true
   }
-  /** Predicate over inverted-index rows (label_name, label_value).
-    * For exclusive ops this is the predicate of the *positive* form;
-    * the caller subtracts.
-    */
-  def indexPredicate: Column =
-    col("label_name") === name && valuePredicate(col("label_value"))
 
   /** The positive form of this matcher over a string label value `v`
-    * (null when `v` is null, so callers coalesce an absent label).
+    * (null when `v` is null: a label the series does not carry).
     */
   def valuePredicate(v: Column): Column = op match {
     case Eql | Neq => v === value
@@ -53,7 +47,7 @@ final case class LabelMatcher(name: String, op: MatchOp, value: String) {
     case EqlRegex | NeqRegex =>
       // rlike cannot reach a parquet scan, but a derived literal
       // prefix can (StringStartsWith pushes into row-group stats on
-      // the IndexStore path — the Spark analog of the reference's
+      // the IndexStore scan — the Spark analog of the reference's
       // tree descent by value prefix). Conjoining it is semantics-
       // preserving: every match of ^(?:prefix...)$ starts with the
       // prefix, and LabelMatcher.literalPrefix is conservative
@@ -91,9 +85,11 @@ object LabelMatcher {
   * and [min_ts, max_ts] — persisted in memory: at 100 TB it is
   * ∝ #series (millions of rows, not trillions of samples), the Spark
   * analog of the reference's full-cache mode (index_server.h:26).
-  * Matcher resolution is one filter over it; the posting-list view
-  * (label_name, label_value, tsid, …) is derived from it on demand
-  * for the index surfaces and for flushes into an [[IndexStore]].
+  * Matcher resolution is one filter over it ([[TagIndex.resolve]],
+  * which also serves the on-disk [[IndexStore]], whose segments hold
+  * these same catalog rows); the posting-list view (label_name,
+  * label_value, tsid, …) is derived from it on demand for the index
+  * surfaces.
   *
   * Series identity: xxhash64 over the canonical label encoding —
   * the Spark analog of add_series' TSID assignment
@@ -155,45 +151,18 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
     * index (a flush into an [[IndexStore]]) derives it once and pins
     * nothing.
     */
-  lazy val invertedIndex: DataFrame = {
-    val kvs = labelNames.flatMap(n => Seq(lit(n), col(n).cast("string")))
+  lazy val invertedIndex: DataFrame =
     catalogPlan
       .select(col("tsid"), col("min_ts"), col("max_ts"), col("n_samples"),
-        explode(map(kvs: _*)).as(Seq("label_name", "label_value")))
+        TagIndex.labelPairs(labelNames))
       .select("label_name", "label_value", "tsid", "min_ts", "max_ts", "n_samples")
-  }
 
-  /** resolve_label_matchers(matchers, start, end) → series.
-    *
-    * One filter over the persisted catalog — no union, shuffle or join.
-    * An inclusive matcher keeps the series whose label value satisfies
-    * it (a null value, i.e. a label the series does not carry, does
-    * not); an exclusive matcher keeps the rest — the reference's
-    * posting intersection and bitmap and-not (index_server.cpp:94-140)
-    * as a conjunction of per-row predicates. A label the index does
-    * not carry at all matches no series inclusively and every series
-    * exclusively. Time pruning uses the per-series [min_ts, max_ts]
-    * exactly like index_tree.cpp:92-110. Same semantics as
-    * [[TagIndex.resolvePostings]] over [[invertedIndex]].
-    *
-    * Returns the series catalog rows that match.
+  /** resolve_label_matchers(matchers, start, end) → the matching
+    * series catalog rows: [[TagIndex.resolve]] over [[seriesCatalog]].
     */
   def resolveMatchers(matchers: Seq[LabelMatcher],
-      startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame = {
-    require(matchers.nonEmpty, "need at least one matcher")
-    val byMatcher = matchers.map { m =>
-      val hit =
-        if (labelNames.contains(m.name))
-          coalesce(m.valuePredicate(col(m.name).cast("string")), lit(false))
-        else lit(false)
-      if (m.inclusive) hit else !hit
-    }
-    val inWindow = (startTs, endTs) match {
-      case (Some(s), Some(e)) => Seq(col("max_ts") >= s && col("min_ts") <= e)
-      case _ => Nil
-    }
-    seriesCatalog.filter((byMatcher ++ inWindow).reduce(_ && _))
-  }
+      startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame =
+    TagIndex.resolve(seriesCatalog, labelNames, matchers, startTs, endTs)
 
   /** label_values(name) → distinct values (index_server.h:44). */
   def labelValues(name: String): DataFrame =
@@ -246,73 +215,66 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
   }
 }
 
-/** A [[TagIndex]] whose matcher resolution consults a MATERIALIZED
-  * inverted index at `storePath` (an [[IndexStore]] — batch-flushed or
-  * maintained by the streaming ingest loop, H9) instead of the
-  * in-memory derived one. Samples and the series catalog still come
-  * from the live table; only posting resolution reads the store — the
+/** A [[TagIndex]] whose matcher resolution reads the series catalog
+  * materialized in the [[IndexStore]] at `storePath` (batch-flushed or
+  * maintained by the streaming ingest loop, H9) instead of deriving it
+  * from the live samples, which still serve every sample fetch — the
   * reference's split between its on-disk index tree and the storage it
   * points into (include/tagtree/index/index_server.h:26-66).
   */
 class StoreTagIndex(samples: DataFrame, labelNames: Seq[String],
     storePath: String) extends TagIndex(samples, labelNames) {
   override def resolveMatchers(matchers: Seq[LabelMatcher],
-      startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame = {
-    val resolved = TagIndex.resolvePostings(
-      IndexStore.load(samples.sparkSession, storePath), matchers, startTs, endTs)
-    seriesCatalog.join(resolved, Seq("tsid"), "left_semi")
-  }
+      startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame =
+    IndexStore.resolvePostings(samples.sparkSession, storePath, matchers, startTs, endTs)
 }
 
 object TagIndex {
 
-  /** Matcher resolution against any inverted-index DataFrame
-    * (label_name, label_value, tsid, min_ts, max_ts) — materialized
-    * (IndexStore) or derived — returning matching tsids. The path for
-    * callers that hold postings and no catalog ([[IndexStore]],
-    * [[StoreTagIndex]]); an in-memory [[TagIndex]] resolves as one
-    * catalog filter instead, with the same semantics.
+  /** resolve_label_matchers over a series catalog — rows (tsid,
+    * <label columns>, min_ts, max_ts, n_samples), in memory
+    * ([[TagIndex.seriesCatalog]]) or merged on read from an
+    * [[IndexStore]]. The one place matcher predicates are built.
     *
-    * Inclusive matchers each select a posting set; the conjunction is
-    * a single shuffle (union tagged by matcher id + groupBy tsid
-    * HAVING countDistinct = k) rather than k-1 joins, and is correct
-    * when several matchers hit the same label (usr >= "2" AND
-    * usr <= "5"). Exclusive matchers are applied as left_anti — the
-    * reference's bitmap and-not (index_server.cpp:94-140). Time
-    * pruning uses per-entry [min_ts, max_ts] like index_tree.cpp:92-110.
+    * One filter — no union, shuffle or join. An inclusive matcher keeps
+    * the series whose label value satisfies it (a null value, i.e. a
+    * label the series does not carry, does not); an exclusive matcher
+    * keeps the rest — the reference's posting intersection and bitmap
+    * and-not (index_server.cpp:94-140) as a conjunction of per-row
+    * predicates. Inclusive predicates stay plain conjuncts (a null
+    * conjunct never passes a filter), so a parquet scan sees them as
+    * pushed filters; only exclusive ones wrap in `coalesce`. A label
+    * the catalog does not carry at all matches no series inclusively
+    * and every series exclusively. Time pruning uses the per-series
+    * [min_ts, max_ts] exactly like index_tree.cpp:92-110.
     */
-  def resolvePostings(index: DataFrame, matchers: Seq[LabelMatcher],
+  def resolve(catalog: DataFrame, labelNames: Seq[String],
+      matchers: Seq[LabelMatcher],
       startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame = {
     require(matchers.nonEmpty, "need at least one matcher")
-    val (inc, exc) = matchers.partition(_.inclusive)
-
-    val timePruned = (startTs, endTs) match {
-      case (Some(s), Some(e)) =>
-        index.filter(col("max_ts") >= s && col("min_ts") <= e)
-      case _ => index
+    val byMatcher = matchers.map { m =>
+      lazy val hit = m.valuePredicate(col(m.name).cast("string"))
+      if (!labelNames.contains(m.name)) lit(!m.inclusive)
+      else if (m.inclusive) hit
+      else !coalesce(hit, lit(false))
     }
-
-    val base: DataFrame =
-      if (inc.nonEmpty) {
-        val tagged = inc.zipWithIndex.map { case (m, i) =>
-          timePruned.filter(m.indexPredicate)
-            .select(col("tsid"), lit(i).as("__mid"))
-        }.reduce(_ unionAll _)
-        tagged.groupBy(col("tsid"))
-          .agg(countDistinct(col("__mid")).as("__k"))
-          .filter(col("__k") === inc.size)
-          .select("tsid")
-      } else {
-        // no inclusive matcher: start from the full posting universe
-        // (the reference does the same fallback).
-        timePruned.select("tsid").distinct()
-      }
-
-    exc.foldLeft(base) { (acc, m) =>
-      acc.join(index.filter(m.indexPredicate).select("tsid"),
-        Seq("tsid"), "left_anti")
+    val inWindow = (startTs, endTs) match {
+      case (Some(s), Some(e)) => Seq(col("max_ts") >= s && col("min_ts") <= e)
+      case _ => Nil
     }
+    catalog.filter((byMatcher ++ inWindow).reduce(_ && _))
   }
+
+  /** The label columns of a catalog frame. */
+  private[graft] def catalogLabels(catalog: DataFrame): Seq[String] =
+    catalog.columns.toSeq.filterNot(Set("tsid", "min_ts", "max_ts", "n_samples"))
+
+  /** One (label_name, label_value) row per (series, label) of a catalog
+    * row — null values included for labels the series does not carry.
+    */
+  private[graft] def labelPairs(labelNames: Seq[String]): Column =
+    explode(map(labelNames.flatMap(n => Seq(lit(n), col(n).cast("string"))): _*))
+      .as(Seq("label_name", "label_value"))
 
   private val memoTags = new java.util.concurrent.atomic.AtomicLong()
 

@@ -86,8 +86,8 @@ import org.apache.spark.sql.functions._
   *  - `topk`/`bottomk` break value ties by label order, so results are
   *    stable across partitionings.
   *
-  * Evaluation builds ONE DataFrame plan: matcher resolution rides the
-  * inverted index (broadcast semi-join), the time window lands on the
+  * Evaluation builds ONE DataFrame plan: matcher resolution filters
+  * the series catalog (broadcast semi-join), the time window lands on the
   * file-native ts column via [[Tables.tsBetween]] (row-group pruning),
   * per-series folds are window functions over (tsid), and aggregations
   * are partial-agg groupBys — the same shapes as the hand-built B-ops,
@@ -609,7 +609,7 @@ object PromQl {
 
   /** Evaluate an instant query against an explicit [[TagIndex]] — the
     * hook for alternative matcher-resolution backends: a
-    * [[graft.index.StoreTagIndex]] resolves postings from a
+    * [[graft.index.StoreTagIndex]] resolves matchers from a
     * materialized (possibly stream-maintained) IndexStore, the exact
     * client shape of the reference's index_server loop
     * (include/tagtree/index/index_server.h:48-66) where queries read

@@ -217,7 +217,7 @@ object Rules {
   /** Evaluate a recording rule on a range grid and MATERIALIZE the
     * result as series `ruleName` (one sample per grid step per series):
     * the evaluated frame lands as a parquet sample lake and its
-    * inverted index flushes into an [[IndexStore]] segment, then a
+    * series catalog flushes into an [[IndexStore]] segment, then a
     * [[StoreTagIndex]] over the landed samples is returned — queries
     * against it resolve matchers from the materialized store and read
     * the landed (not in-memory) samples, so what the gate checks is the
@@ -449,7 +449,7 @@ object Rules {
       fp(Seq(expr, start, end, stepSec, limit))
     // one recorded-rule store per (dataset, rule), landed under `_done`
     val base = graft.Memo.global(s"rules.recorded:$dir:$defKey") {
-      graft.Memo.landed("graft_recrule",
+      graft.Memo.landed(s"graft_recrule_${IndexStore.Layout}",
           graft.Tables.fingerprint(s"$dir/events.parquet") + "_" +
             defKey.replaceAll("[^A-Za-z0-9]", "_")) { d =>
         val v = capSeries(

@@ -211,18 +211,19 @@ object Io {
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
 
-  /** One landed fixture per (session, dataset): `build` fills the
-    * emptied directory `<tmpdir>/<prefix>_<fp>` (fp: the events
-    * fingerprint), which the registry then holds; the gate reads the
-    * files back. */
+  /** One landed fixture per (session, dataset): `build` fills a fresh
+    * directory `<prefix>_<fp>_<n>` (fp: the events fingerprint; see
+    * [[graft.Memo.fresh]]), which the registry then holds and a clear
+    * deletes; the gate reads the files back. Another session's build
+    * of the same gate lands in a directory of its own. */
   private def fixture(spark: SparkSession, dir: String, prefix: String)(
       build: String => Unit): String =
-    graft.Memo(spark, s"io.$prefix:$dir") {
-      val p = graft.Memo.tmp(
-        prefix + "_" + Tables.fingerprint(s"$dir/events.parquet"))
-      graft.Memo.wipe(p)
-      build(p.toString)
-      p.toString
+    graft.Memo(spark, s"io.$prefix:$dir",
+        (p: String) => graft.Memo.wipe(new java.io.File(p))) {
+      val p = graft.Memo.fresh(
+        prefix + "_" + Tables.fingerprint(s"$dir/events.parquet")).toString
+      build(p)
+      p
     }
 
   /** A [[fixture]] that is the warehouse of the [[GraftCatalog]]

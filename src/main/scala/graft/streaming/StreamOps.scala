@@ -190,16 +190,19 @@ object StreamOps extends Serializable {
     spark.table(name)
   }
 
-  /** A memory-sink gate: `land` writes the input files to
-    * `<tmpdir>/<sink table>/landing`, which replay through `query` into
-    * the sink in output `mode`. */
+  /** A memory-sink gate: `land` writes the input files to a landing
+    * directory of this build's own ([[graft.Memo.fresh]]), which replay
+    * through `query` into the sink in output `mode` and are deleted once
+    * drained. */
   private def sunk(spark: SparkSession, dir: String, gate: String,
       mode: String, source: String = "events.parquet", perTrigger: Int = 1)(
       land: String => Unit)(query: DataFrame => DataFrame): DataFrame =
     sinkTable(spark, dir, gate, source) { name =>
-      val landing = graft.Memo.tmp(s"$name/landing").toString
-      land(landing)
-      replayed(spark, landing, perTrigger)(s => toMemory(query(s), mode, name))
+      val landing = graft.Memo.fresh(s"${name}_landing")
+      try {
+        land(landing.toString)
+        replayed(spark, landing.toString, perTrigger)(s => toMemory(query(s), mode, name))
+      } finally graft.Memo.wipe(landing)
     }
 
   /** A gate whose output persists across JVMs in the `_done`-landed
@@ -677,16 +680,18 @@ object StreamOps extends Serializable {
     */
   def intervalJoinStreamed(spark: SparkSession, dir: String): DataFrame = {
     val pairs = sinkTable(spark, dir, "h5") { name =>
-      val base = graft.Memo.tmp(name)
+      val base = graft.Memo.fresh(name)
       val ev = samplesOf(spark, dir)
       val landE = new java.io.File(base, "errors").toString
       val landP = new java.io.File(base, "purchases").toString
-      landOrdered(ev.filter(col("typ") === "error"),
-        Seq("ts", "event_id"), landE, 4)
-      landOrdered(ev.filter(col("typ") === "purchase"),
-        Seq("ts", "event_id"), landP, 4)
-      drain(toMemory(intervalJoin(replay(spark, landE), replay(spark, landP)),
-        "append", name))
+      try {
+        landOrdered(ev.filter(col("typ") === "error"),
+          Seq("ts", "event_id"), landE, 4)
+        landOrdered(ev.filter(col("typ") === "purchase"),
+          Seq("ts", "event_id"), landP, 4)
+        drain(toMemory(intervalJoin(replay(spark, landE), replay(spark, landP)),
+          "append", name))
+      } finally graft.Memo.wipe(base)
     }
     val raw = graft.Tables.eventsRaw(spark, dir)
     val errs = raw.filter(col("event_type") === "error")
@@ -1287,7 +1292,7 @@ object StreamOps extends Serializable {
     * full WAL → MemIndex → try_compact loop (index_server.h:48-66) run
     * end-to-end on the stream: every micro-batch (1) writes its samples
     * into the lakehouse under a batch-keyed directory (the commit) and
-    * (2) flushes its inverted-index rows into the LSM IndexStore as a
+    * (2) flushes its series-catalog rows into the LSM IndexStore as a
     * batch-id-keyed segment, so the materialized index trails the
     * stream by at most one micro-batch and `resolvePostings` answers
     * from the store while ingest keeps running. BOTH halves are

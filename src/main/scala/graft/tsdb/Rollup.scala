@@ -35,11 +35,10 @@ object Rollup {
     * linked. The serving reads below go through the connector.
     */
   def tierRoot(spark: SparkSession, dir: String): String =
-    graft.Memo(spark, s"rollup.tiers:$dir") {
-      val base = graft.Memo.tmp(
+    graft.Memo(spark, s"rollup.tiers:$dir",
+        (b: String) => graft.Memo.wipe(new java.io.File(b))) {
+      val base = graft.Memo.fresh(
         "graft_rollup_" + Tables.fingerprint(s"$dir/events.parquet")).toString
-      graft.sources.Io.fsFor(spark, base)
-        .delete(new org.apache.hadoop.fs.Path(base), true)
       graft.sources.Io.tableAppendStats(
         buildHourTier(spark, dir)
           .repartitionByRange(3, col("h_sec")), s"$base/1h", "h_sec")

@@ -33,16 +33,19 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(stored == mem && mem.nonEmpty)
   }
 
-  test("store layout is segmented, partitioned by label_name (per-label pruning)") {
+  test("a segment holds catalog rows; an equality matcher is a pushed filter") {
     val segs = new java.io.File(store).listFiles().map(_.getName)
       .filter(_.startsWith("seg="))
     assert(segs.length == 1, s"expected one segment after full materialize: ${segs.toSeq}")
-    val dirs = new java.io.File(store, segs.head).listFiles().map(_.getName)
-    assert(dirs.contains("label_name=usr") && dirs.contains("label_name=typ"))
-    val one = IndexStore.load(spark, store)
-      .filter(org.apache.spark.sql.functions.col("label_name") === "typ")
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("label_name"), plan)
+    val seg = new java.io.File(store, segs.head)
+    assert(!seg.listFiles().exists(_.isDirectory), s"segment is partitioned: ${seg.list().toSeq}")
+    val catalog = TagIndex.forEvents(spark, dir).seriesCatalog
+    val rows = spark.read.parquet(seg.toString)
+    assert(rows.columns.toSeq == catalog.columns.toSeq)
+    assert(rows.collect().map(_.toSeq).toSet == catalog.collect().map(_.toSeq).toSet)
+    val plan = IndexStore.resolvePostings(spark, store, Seq(LabelMatcher("typ", Eql, "click")))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("EqualTo(typ,click)"), plan)
   }
 
   /** Incremental flush ≡ full rebuild (judge round-2 item 4): the
@@ -92,9 +95,8 @@ class IndexStoreSpec extends AnyFunSuite {
     val segDirs = new java.io.File(pIncr).listFiles()
       .filter(_.getName.startsWith("seg="))
     assert(segDirs.length == 1, s"compact left ${segDirs.length} segments")
-    val files = new java.io.File(segDirs.head, "label_name=typ")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == 1, s"compact left $files files in one partition")
+    val files = segDirs.head.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files == 1, s"compact left $files files in the merged segment")
   }
 
   /** delete_series lifecycle: tombstones hide matched series from the
@@ -127,6 +129,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // delete hides every matched series (ALL its label rows, not just typ)
     val n = IndexStore.deleteSeries(spark, p, click)
     assert(n == before.size, s"deleted $n of ${before.size}")
+    assert(n == spark.read.parquet(s"$p/del=0").count(), "count is not the tombstone's rows")
     assert(clickSet(p).isEmpty, "tombstoned series still resolvable")
     val viewAfter = IndexStore.load(spark, p)
     assert(viewAfter.filter(col("tsid").isin(before.toSeq: _*)).count() == 0,
@@ -145,9 +148,9 @@ class IndexStoreSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(clickSet(p) == want && want.nonEmpty, "resurrection mismatch")
     def clickSamples(df: org.apache.spark.sql.DataFrame) =
-      df.filter(col("label_name") === "typ" && col("label_value") === "click")
+      df.filter(col("typ") === "click")
         .agg(sum(col("n_samples"))).head().getLong(0)
-    assert(clickSamples(IndexStore.load(spark, p)) == clickSamples(mem2.invertedIndex),
+    assert(clickSamples(IndexStore.load(spark, p)) == clickSamples(mem2.seriesCatalog),
       "resurrected counts must restart from post-delete data")
 
     // compact purges rows and retires tombstones without changing the view
@@ -156,40 +159,6 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.load(spark, p).collect().map(_.toSeq).toSet == preCompact)
     assert(!new java.io.File(p).listFiles().exists(_.getName.startsWith("del=")),
       "compact left tombstone directories behind")
-  }
-
-  test("deleteSeries: collect and distributed tombstone paths are identical") {
-    import org.apache.spark.sql.functions._
-    val samples = graft.Tables.eventsRaw(spark, dir).select(
-      col("event_id"), col("ts_ns"),
-      timestamp_micros(expr("ts_ns div 1000")).as("ts"), col("value"),
-      col("user_id").cast("string").as("usr"),
-      col("event_type").as("typ"))
-    val base = java.nio.file.Files.createTempDirectory("graft_delpath").toString
-    val click = Seq(LabelMatcher("typ", Eql, "click"))
-    def run(path: String, limit: String): (Long, Set[(Long, Long)], Set[Seq[Any]]) = {
-      IndexStore.materialize(new TagIndex(samples, Seq("usr", "typ")), path)
-      val old = spark.conf.getOption("graft.index.deleteCollectLimit")
-      spark.conf.set("graft.index.deleteCollectLimit", limit)
-      try {
-        val n = IndexStore.deleteSeries(spark, path, click)
-        val tomb = spark.read.parquet(s"$path/del=0")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val view = IndexStore.load(spark, path)
-          .collect().map(_.toSeq).toSet
-        (n, tomb, view)
-      } finally old match {
-        case Some(v) => spark.conf.set("graft.index.deleteCollectLimit", v)
-        case None => spark.conf.unset("graft.index.deleteCollectLimit")
-      }
-    }
-    // huge limit → collect path; limit 1 → every non-empty set routes
-    // to the distributed write
-    val (nC, tombC, viewC) = run(s"$base/collect", "1000000000")
-    val (nD, tombD, viewD) = run(s"$base/distributed", "1")
-    assert(nC == nD && nC > 0)
-    assert(tombC == tombD, "tombstone contents diverge between paths")
-    assert(viewC == viewD, "post-delete views diverge between paths")
   }
 
   /** A crash mid-flush leaves a segment directory without Spark's
@@ -232,7 +201,7 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.materialize(mk(b1), tmp)
     IndexStore.materializeIncremental(mk(b1 ++ b2extra), tmp)
     val n = IndexStore.load(spark, tmp)
-      .filter(col("label_name") === "usr" && col("label_value") === "1")
+      .filter(col("usr") === "1")
       .select("n_samples").head().getLong(0)
     assert(n == 3L, s"boundary-µs sample lost or double-counted: n_samples=$n")
   }
@@ -258,7 +227,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val resolved = IndexStore.resolvePostings(spark, p, re)
     // the derived StartsWith reaches the parquet scan of the store
     val plan = resolved.queryExecution.executedPlan.toString
-    assert(plan.contains("StringStartsWith(label_value,cli)"),
+    assert(plan.contains("StringStartsWith(typ,cli)"),
       s"no pushed prefix filter in store scan:\n$plan")
     // and semantics are unchanged vs the equality matcher
     val eq = IndexStore.resolvePostings(spark, p, Seq(LabelMatcher("typ", Eql, "click")))
@@ -267,7 +236,6 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("loadAt reads the historical view a past segment ordinal saw") {
-    import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft_tt").toString + "/idx"
     val b1 = Seq((1L, t0, "1", "click", 1.0), (2L, t0 + 1000000L, "2", "view", 1.0))
     val b2 = Seq((3L, t0 + 2000000L, "3", "click", 1.0))
@@ -278,20 +246,16 @@ class IndexStoreSpec extends AnyFunSuite {
     val segs = new java.io.File(tmp).listFiles().map(_.getName)
       .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong).sorted
     assert(segs.length == 2)
-    val now = IndexStore.load(spark, tmp)
-      .filter(col("label_name") === "usr").count()
-    val then_ = IndexStore.loadAt(spark, tmp, segs.head)
-      .filter(col("label_name") === "usr").count()
+    val now = IndexStore.load(spark, tmp).count()
+    val then_ = IndexStore.loadAt(spark, tmp, segs.head).count()
     assert(now == 3 && then_ == 2 && ord1 > 0,
       s"time travel broken: now=$now then=$then_")
     // tombstones written AFTER the snapshot point don't rewrite history
     val n = IndexStore.deleteSeries(spark, tmp,
       Seq(LabelMatcher("usr", MatchOp.Eql, "1")))
     assert(n == 1)
-    assert(IndexStore.load(spark, tmp)
-      .filter(col("label_name") === "usr").count() == 2)
-    assert(IndexStore.loadAt(spark, tmp, segs.head)
-      .filter(col("label_name") === "usr").count() == 2,
+    assert(IndexStore.load(spark, tmp).count() == 2)
+    assert(IndexStore.loadAt(spark, tmp, segs.head).count() == 2,
       "snapshot at ord1 must still see the later-deleted series")
   }
 
@@ -317,9 +281,8 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.materialize(mkIdx(Seq((1L, t0, "1", "click", 1.0))), tmp)
     IndexStore.materialize(mkIdx(Seq(
       (2L, t0 + 1000L, "2", "view", 1.0), (3L, t0 + 2000L, "2", "view", 1.0))), tmp)
-    val vals = IndexStore.load(spark, tmp)
-      .filter(org.apache.spark.sql.functions.col("label_name") === "usr")
-      .collect().map(r => (r.getString(1), r.getLong(5))).toSet
+    def vals = IndexStore.load(spark, tmp)
+      .collect().map(r => (r.getAs[String]("usr"), r.getAs[Long]("n_samples"))).toSet
     assert(vals == Set(("2", 2L)), s"swap left stale or mixed content: $vals")
     assert(!new java.io.File(tmp + ".compacting").exists(), "tmp residue")
     assert(!new java.io.File(tmp + ".bak").exists(), "bak residue")
@@ -328,9 +291,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val f = new java.io.File(tmp)
     assert(f.renameTo(new java.io.File(tmp + ".bak")))
     IndexStore.recover(spark, tmp)
-    assert(IndexStore.load(spark, tmp)
-      .filter(org.apache.spark.sql.functions.col("label_name") === "usr")
-      .collect().map(r => (r.getString(1), r.getLong(5))).toSet == Set(("2", 2L)))
+    assert(vals == Set(("2", 2L)))
   }
 
   /** ADVICE (round 3): a RESET streaming checkpoint restarts batch ids

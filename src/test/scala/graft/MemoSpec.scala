@@ -159,6 +159,20 @@ class MemoSpec extends AnyFunSuite {
     assert(streaming.StreamOps.topkStreamed(spark, dir).collect().toSet == first)
   }
 
+  test("io fixture: a second session's build leaves the first's table whole") {
+    // the gate's frame in session A lists the fixture's files when it
+    // is built; session B's build of the same gate must not replace them
+    val inA = SparkEntry.queries("io_orc")(spark, dir)
+    val b = spark.newSession()
+    try {
+      val inB = SparkEntry.queries("io_orc")(b, dir).collect().map(_.toSeq).toSet
+      assert(inB.nonEmpty)
+      assert(inA.collect().map(_.toSeq).toSet == inB)
+    } finally Memo.clear(b)
+    // releasing B's entries leaves A's fixture in place
+    assert(inA.collect().map(_.toSeq).toSet.nonEmpty)
+  }
+
   test("no hand-rolled memo maps under src/main outside graft/Memo.scala") {
     def scala(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scala)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{LabelMatcher, MatchOp, TagIndex}
+import graft.index.{IndexStore, LabelMatcher, MatchOp, TagIndex}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,24 +19,25 @@ class PropertySpec extends AnyFunSuite {
 
   import MatchOp._
 
+  /** The positive form of `m` on the label value `v`. */
+  private def positive(v: String, m: LabelMatcher): Boolean = m.op match {
+    case Eql | Neq => v == m.value
+    case Lss => v < m.value
+    case Gtr => v > m.value
+    case Lte => v <= m.value
+    case Gte => v >= m.value
+    case EqlRegex | NeqRegex => v.matches(m.value)
+  }
+
   private def bruteForce(series: Set[(String, String)],
       ms: Seq[LabelMatcher]): Set[(String, String)] = {
     def valueOf(s: (String, String), name: String): String =
       if (name == "usr") s._1 else s._2
-    def positive(s: (String, String), m: LabelMatcher): Boolean = {
-      val v = valueOf(s, m.name)
-      m.op match {
-        case Eql | Neq => v == m.value
-        case Lss => v < m.value
-        case Gtr => v > m.value
-        case Lte => v <= m.value
-        case Gte => v >= m.value
-        case EqlRegex | NeqRegex => v.matches(m.value)
-      }
-    }
+    def holds(s: (String, String), m: LabelMatcher): Boolean =
+      positive(valueOf(s, m.name), m)
     val (inc, exc) = ms.partition(_.inclusive)
-    val base = if (inc.isEmpty) series else series.filter(s => inc.forall(positive(s, _)))
-    base.filterNot(s => exc.exists(positive(s, _)))
+    val base = if (inc.isEmpty) series else series.filter(s => inc.forall(holds(s, _)))
+    base.filterNot(s => exc.exists(holds(s, _)))
   }
 
   test("matcher algebra equals brute force over random datasets") {
@@ -111,15 +112,18 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("catalog resolution equals posting resolution over the inverted index") {
+  test("catalog and store resolution equal a plain-Scala matcher evaluator") {
     // a sparse label (`ab`, null on some series), matchers on a label
-    // the index does not carry (`zz`), random time windows: the one
-    // catalog filter must select exactly the tsids the posting algebra
-    // (union + conjunction aggregate + and-not) selects
+    // the index does not carry (`zz`), random time windows: the catalog
+    // filter and the resolution over a two-segment store must select
+    // exactly the series a direct evaluation of the matcher semantics
+    // over the generated rows selects
     val rnd = new Random(4242L)
     import spark.implicits._
+    val labels = Seq("usr", "typ", "ab")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_prop_store").toString
     var nonEmpty = 0
-    for (_ <- 1 to 3) {
+    for (round <- 1 to 3) {
       val users = (0 until rnd.between(3, 9)).map(_.toString)
       val types = Seq("click", "view", "purchase", "error")
       val bands = Seq("0", "1", "2")
@@ -130,7 +134,30 @@ class PropertySpec extends AnyFunSuite {
       }
       val df = rows.toDF("event_id", "ts_sec", "value", "usr", "typ", "ab")
         .withColumn("ts", timestamp_seconds(col("ts_sec")))
-      val idx = new TagIndex(df, Seq("usr", "typ", "ab"))
+        .withColumn("ts_ns", col("ts_sec") * 1000000000L)
+      val idx = new TagIndex(df, labels)
+      // the store folds two segments: a full flush of the first half of
+      // the time range, then an incremental flush of the rest
+      val store = s"$tmp/store$round"
+      IndexStore.materialize(new TagIndex(df.filter(col("ts_sec") < 500), labels), store)
+      IndexStore.materializeIncremental(idx, store)
+      assert(new java.io.File(store).list().count(_.startsWith("seg=")) == 2)
+
+      // the reference: each series' labels and [first, last] second
+      type Series = (String, String, Option[String])
+      val series: Map[Series, (Long, Long)] = rows.groupBy(r => (r._4, r._5, r._6))
+        .map { case (k, rs) => k -> (rs.map(_._2).min, rs.map(_._2).max) }
+      def valueOf(s: Series, name: String): Option[String] = name match {
+        case "usr" => Some(s._1)
+        case "typ" => Some(s._2)
+        case "ab" => s._3
+        case _ => None
+      }
+      def matches(s: Series, m: LabelMatcher): Boolean = {
+        val hit = valueOf(s, m.name).exists(positive(_, m))
+        if (m.inclusive) hit else !hit
+      }
+
       val pools = Map("usr" -> users, "typ" -> types, "ab" -> bands, "zz" -> Seq("0", "x"))
       def randMatcher(): LabelMatcher = {
         val name = Seq("usr", "typ", "ab", "zz")(rnd.nextInt(4))
@@ -154,15 +181,21 @@ class PropertySpec extends AnyFunSuite {
           if (rnd.nextBoolean()) None
           else {
             val a = rnd.between(0L, 1000L); val b = rnd.between(0L, 1000L)
-            Some((timestamp_seconds(lit(math.min(a, b))), timestamp_seconds(lit(math.max(a, b)))))
+            Some((math.min(a, b), math.max(a, b)))
           }
-        val (s, e) = (window.map(_._1), window.map(_._2))
-        def tsids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-          df.select("tsid").collect().map(_.getLong(0)).toSet
-        val got = tsids(idx.resolveMatchers(ms, s, e))
-        val want = tsids(TagIndex.resolvePostings(idx.invertedIndex, ms, s, e))
-        assert(got == want, s"matchers $ms window $window: got $got want $want")
-        if (got.nonEmpty) nonEmpty += 1
+        val s = window.map(w => timestamp_seconds(lit(w._1)))
+        val e = window.map(w => timestamp_seconds(lit(w._2)))
+        val want = series.filter { case (k, (first, last)) =>
+          ms.forall(matches(k, _)) && window.forall(w => last >= w._1 && first <= w._2)
+        }.keySet
+        def got(df: org.apache.spark.sql.DataFrame): Set[Series] =
+          df.select(labels.map(col): _*).collect()
+            .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSet
+        assert(got(idx.resolveMatchers(ms, s, e)) == want,
+          s"catalog: matchers $ms window $window")
+        assert(got(IndexStore.resolvePostings(spark, store, ms, s, e)) == want,
+          s"store: matchers $ms window $window")
+        if (want.nonEmpty) nonEmpty += 1
       }
     }
     assert(nonEmpty > 0, "every random matcher set resolved to nothing")

@@ -119,27 +119,20 @@ class StreamingSpec extends AnyFunSuite {
 
     // merge-on-read view after 3 micro-batches == one-shot batch rebuild
     val batchIdx = new index.TagIndex(all.toDF(), Seq("usr", "typ"))
-    val want = batchIdx.invertedIndex
-      .select("label_name", "label_value", "tsid", "min_ts", "max_ts", "n_samples")
-      .collect().map(_.toSeq).toSet
-    val got = index.IndexStore.load(spark, idxPath)
-      .select("label_name", "label_value", "tsid", "min_ts", "max_ts", "n_samples")
-      .collect().map(_.toSeq).toSet
+    val want = batchIdx.seriesCatalog.collect().map(_.toSeq).toSet
+    val got = index.IndexStore.load(spark, idxPath).collect().map(_.toSeq).toSet
     assert(got == want && want.nonEmpty, s"store=$got batch=$want")
 
     // matcher resolution from the live store == in-memory path
     val m = Seq(index.LabelMatcher("typ", index.MatchOp.Eql, "click"))
     val storeT = index.IndexStore.resolvePostings(spark, idxPath, m)
-      .collect().map(_.getLong(0)).toSet
-    val memT = index.TagIndex.resolvePostings(batchIdx.invertedIndex, m)
-      .collect().map(_.getLong(0)).toSet
+      .collect().map(_.toSeq).toSet
+    val memT = batchIdx.resolveMatchers(m).collect().map(_.toSeq).toSet
     assert(storeT == memT && memT.nonEmpty)
 
     // manual_compact folds the batch segments without changing the view
     index.IndexStore.compact(spark, idxPath)
-    val gotC = index.IndexStore.load(spark, idxPath)
-      .select("label_name", "label_value", "tsid", "min_ts", "max_ts", "n_samples")
-      .collect().map(_.toSeq).toSet
+    val gotC = index.IndexStore.load(spark, idxPath).collect().map(_.toSeq).toSet
     assert(gotC == want)
   }
 
