@@ -5,13 +5,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: registers graft's native
+/** SparkSessionExtensions entry point: parameterises plan literals
+  * ([[graft.plans.ParamPlans]]) and registers graft's native
   * expressions so `spark.sql("... vec_dot(a, b) ...")` works in any
   * session built with `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    // the same planner strategy graft's entry points install on plain
+    // sessions (ParamPlans.install)
+    e.injectPlannerStrategy(_ => graft.plans.ParamPlans.Strategy)
     e.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

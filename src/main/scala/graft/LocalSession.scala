@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The local session the mains (Verify, Bench, QDebug, ScaleProbe)
   * run on: `local[n]` with n shuffle partitions, n from
   * SPARK_GRAFT_CPUS (default: the host's cores), UTC, no UI, WARN
-  * logging.
+  * logging, with parameterised plan literals
+  * ([[graft.plans.ParamPlans]]).
   */
 object LocalSession {
   def apply(): SparkSession = {
@@ -18,6 +19,7 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.ParamPlans.install(spark)
     spark
   }
 }

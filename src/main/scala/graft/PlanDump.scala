@@ -1,19 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.debug._
-
 /** Writes PLANS.md: the formatted physical plans of headline queries,
-  * regenerated per round (`sbt "runMain graft.PlanDump"`). The point is
+  * regenerated per round (`SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanDump"`,
+  * on the mains' [[LocalSession]]). The point is
   * reviewability of the scale-relevant plan properties: pushed filters,
   * pruned schemas, broadcast joins, partial aggregation, codegen spans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val names = Seq("q1_agg", "q5_multijoin", "select_range", "topk",

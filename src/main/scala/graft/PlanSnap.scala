@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round evidence: dumps `.explain("formatted")` for the
   * named queries into $SPARK_GRAFT_PLANS_DIR/<query>_<tag>.txt (tag =
   * args(0), e.g. "before"/"after"; dir defaults to plans/r15). Runs
-  * under the same session shape as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=$CPUS, sf0.1 default) so
-  * the captured plans are the ones the bench actually executes. The
+  * on Bench's session ([[LocalSession]], sf0.1 default) so the
+  * captured plans are the ones the bench actually executes. The
   * query is collected first so AQE finalizes and the formatted output
   * reflects real join/codegen choices.
   */
@@ -17,11 +15,7 @@ object PlanSnap {
     val tag = args.head
     val names = args.tail
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r15"))

@@ -263,6 +263,7 @@ object IndexStore {
     * fold is the identity.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
+    graft.plans.ParamPlans.install(spark)
     val segs = committed(spark, path, "seg=")
     if (segs.isEmpty) emptyView(spark)
     else loadSegs(spark, path, segs, committed(spark, path, "del="))
@@ -292,14 +293,34 @@ object IndexStore {
     * index.
     */
   def loadAt(spark: SparkSession, path: String, maxOrd: Long): DataFrame = {
+    graft.plans.ParamPlans.install(spark)
     val segs = committed(spark, path, "seg=").filter(segOrd(_) <= maxOrd)
     if (segs.isEmpty) return emptyView(spark)
-    val dels = committed(spark, path, "del=").filter { d =>
-      spark.read.parquet(s"$path/$d")
-        .agg(max(col("upto"))).head().getLong(0) <= maxOrd
-    }
-    loadSegs(spark, path, segs, dels)
+    val dels = committed(spark, path, "del=")
+    val upto = tombstoneUpto(spark, path, dels)
+    loadSegs(spark, path, segs, dels.filter(d => upto.get(d).forall(_ <= maxOrd)))
   }
+
+  /** Each tombstone's `upto` ordinal, by tombstone dir — one aggregate
+    * in one task (no exchange, so one job however many tombstones),
+    * collected: one row per tombstone. An empty tombstone hides
+    * nothing and has no row.
+    */
+  private def tombstoneUpto(spark: SparkSession, path: String,
+      dels: Seq[String]): Map[String, Long] =
+    if (dels.isEmpty) Map.empty
+    else tombstones(spark, path, dels)
+      .select(col("del"), col("upto")).coalesce(1)
+      .groupBy(col("del")).agg(max(col("upto")))
+      .collect().map(r => s"del=${r.get(0)}" -> r.getLong(1)).toMap
+
+  /** Tombstone rows (tsid, upto, del): [[deleteSeries]] writes the
+    * first two, the dir name gives the third. The schema is declared,
+    * so opening them reads no footer (no schema-inference job).
+    */
+  private def tombstones(spark: SparkSession, path: String, dels: Seq[String]): DataFrame =
+    spark.read.schema("tsid BIGINT, upto BIGINT").option("basePath", path)
+      .parquet(dels.map(d => s"$path/$d"): _*)
 
   /** The merge-on-read fold over an EXPLICIT segment + tombstone list —
     * lets compact build its merged copy from exactly the snapshot it is
@@ -316,7 +337,7 @@ object IndexStore {
     val live =
       if (dels.isEmpty) raw
       else {
-        val tomb = spark.read.parquet(dels.map(d => s"$path/$d"): _*)
+        val tomb = tombstones(spark, path, dels)
           .groupBy(col("tsid")).agg(max(col("upto")).as("__upto"))
         // `seg` is the partition column of the segment layout; its
         // ordinal comparison works for both families (b-prefix stripped)

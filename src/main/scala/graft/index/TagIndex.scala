@@ -164,10 +164,11 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
       startTs: Option[Column] = None, endTs: Option[Column] = None): DataFrame =
     TagIndex.resolve(seriesCatalog, labelNames, matchers, startTs, endTs)
 
-  /** label_values(name) → distinct values (index_server.h:44). */
-  def labelValues(name: String): DataFrame =
-    invertedIndex.filter(col("label_name") === name)
-      .select(col("label_value").as("value")).distinct()
+  /** label_values(name) → distinct values (index_server.h:44): one
+    * column of the series catalog, null included where a series does
+    * not carry the label; empty for a name the index does not carry.
+    */
+  def labelValues(name: String): DataFrame = valuesOf(seriesCatalog, name)
 
   /** label_values(name, matchers...) — the constrained Prometheus-API
     * form (adapters/prom exposes it via the querier: resolve the
@@ -175,8 +176,12 @@ class TagIndex(val samples: DataFrame, val labelNames: Seq[String],
     * series only). Cost ∝ matched series, never samples.
     */
   def labelValues(name: String, matchers: Seq[LabelMatcher]): DataFrame =
-    resolveMatchers(matchers)
-      .select(col(name).cast("string").as("value")).distinct()
+    valuesOf(resolveMatchers(matchers), name)
+
+  private def valuesOf(catalog: DataFrame, name: String): DataFrame =
+    (if (labelNames.contains(name)) catalog.select(col(name).cast("string").as("value"))
+     else catalog.select(lit(null).cast("string").as("value")).filter(lit(false)))
+      .distinct()
 
   /** label_names(matchers...) — the constrained /api/v1/labels form:
     * the names carrying a non-null value on at least one MATCHED
@@ -288,15 +293,18 @@ object TagIndex {
     * memoized over this index know it is session-pinned. The stamp is
     * unique per instance: an index rebuilt after a clear (perhaps over
     * rewritten data at the same dir) never reuses an evicted
-    * instance's memo keys.
+    * instance's memo keys. Every index query starts here, so this is
+    * where the session gets [[graft.plans.ParamPlans]].
     */
-  def memo(spark: SparkSession, dir: String, tag: String)(build: => TagIndex): TagIndex =
+  def memo(spark: SparkSession, dir: String, tag: String)(build: => TagIndex): TagIndex = {
+    graft.plans.ParamPlans.install(spark)
     graft.Memo(spark, s"index.memo:$dir#$tag") {
       val i = build
       i.pin(graft.Memo.cached(spark, catalogKey(dir, tag))(i.catalogPlan),
         s"$dir#$tag#${memoTags.incrementAndGet()}")
       i
     }
+  }
 
   /** Disk-warm memoized construction: the first JVM to build this
     * index persists its series catalog as parquet under a

@@ -1447,4 +1447,71 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(err.getMessage != null)
   }
+
+  private val events = "/root/testdata/sf0.001"
+
+  /** How often the parameterised-literal strategy sits in a session's
+    * planner. */
+  private def paramStrategies(s: SparkSession): Int =
+    s.sessionState.planner.strategies.count(_ == graft.plans.ParamPlans.Strategy)
+
+  /** Whether a filter's literal reaches the executed plan parameterised. */
+  private def parameterises(s: SparkSession): Boolean = {
+    import org.apache.spark.sql.functions.col
+    val df = s.range(10).filter(col("id") > 3)
+    assert(df.count() == 6L)
+    df.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FilterExec => f.condition
+    }.exists(_.exists(_.isInstanceOf[graft.plans.ParamLiteral]))
+  }
+
+  test("a GraftExtensions session plans with parameterised literals") {
+    val base = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      assert(paramStrategies(s) == 1)
+      assert(parameterises(s))
+      // an entry point's install sees the injected strategy
+      graft.plans.ParamPlans.install(s)
+      assert(paramStrategies(s) == 1)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("a plain session gets parameterised literals on its first TagIndex.forEvents") {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate().newSession()
+    assert(paramStrategies(s) == 0)
+    assert(!parameterises(s))
+    graft.index.TagIndex.forEvents(s, events)
+    assert(paramStrategies(s) == 1)
+    assert(parameterises(s))
+  }
+
+  test("ParamPlans.install is idempotent; a new session installs on first use") {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate().newSession()
+    (1 to 3).foreach(_ => graft.plans.ParamPlans.install(s))
+    graft.index.TagIndex.forEvents(s, events)
+    assert(paramStrategies(s) == 1)
+    val fresh = s.newSession()
+    assert(paramStrategies(fresh) == 0)
+    val store = java.nio.file.Files.createTempDirectory("graft_param").toString + "/idx"
+    graft.index.IndexStore.load(fresh, store)
+    assert(paramStrategies(fresh) == 1)
+  }
 }

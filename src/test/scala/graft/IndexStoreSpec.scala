@@ -259,6 +259,53 @@ class IndexStoreSpec extends AnyFunSuite {
       "snapshot at ord1 must still see the later-deleted series")
   }
 
+  test("loadAt reads every tombstone's upto in one job and equals the fold") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tomb").toString + "/idx"
+    def del(usr: String) = IndexStore.deleteSeries(spark, tmp,
+      Seq(LabelMatcher("usr", MatchOp.Eql, usr)))
+    val b1 = Seq((1L, t0, "1", "click", 1.0), (2L, t0 + 1000000L, "2", "view", 1.0))
+    val b2 = Seq((3L, t0 + 2000000L, "3", "click", 1.0))
+    val b3 = Seq((4L, t0 + 3000000L, "4", "view", 1.0), (5L, t0 + 4000000L, "1", "click", 1.0))
+    IndexStore.materialize(mkIdx(b1), tmp)
+    assert(del("1") == 1)
+    IndexStore.materializeIncremental(mkIdx(b1 ++ b2), tmp)
+    assert(del("2") == 1)
+    IndexStore.materializeIncremental(mkIdx(b1 ++ b2 ++ b3), tmp)
+    assert(del("3") == 1)
+    val segs = new java.io.File(tmp).listFiles().map(_.getName)
+      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toLong).sorted
+    assert(segs.length == 3)
+    assert(new java.io.File(tmp).listFiles().count(_.getName.startsWith("del=")) == 3)
+
+    def jobs(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get()
+    }
+    def usrs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[String]("usr"), r.getAs[Long]("n_samples"))).toSet
+    // the fold by hand: a tombstone hides its series in the segments
+    // at or below its upto, only once the snapshot reaches that upto
+    val want = Seq(Set(("2", 1L)), Set(("3", 1L)), Set(("4", 1L), ("1", 1L)))
+    // two jobs however many tombstones: the segments' schema inference
+    // and the one aggregate over every tombstone's upto
+    for ((ord, w) <- segs.zip(want)) {
+      var view: org.apache.spark.sql.DataFrame = null
+      assert(jobs { view = IndexStore.loadAt(spark, tmp, ord) } == 2,
+        s"loadAt($ord) read its tombstones in more than one job")
+      assert(usrs(view) == w, s"loadAt($ord)")
+    }
+    assert(IndexStore.loadAt(spark, tmp, segs.last).collect().toSet ==
+      IndexStore.load(spark, tmp).collect().toSet)
+  }
+
   private def mkIdx(rows: Seq[(Long, Long, String, String, Double)]): TagIndex = {
     import org.apache.spark.sql.functions._
     import spark.implicits._

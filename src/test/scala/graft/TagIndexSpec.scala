@@ -104,6 +104,29 @@ class TagIndexSpec extends AnyFunSuite {
     assert(vs == Set("click", "view", "error"))
   }
 
+  test("label_values reads the catalog column: equals the inverted-index form") {
+    import spark.implicits._
+    def exploded(i: TagIndex, name: String) =
+      i.invertedIndex.filter(col("label_name") === name)
+        .select(col("label_value").as("value")).distinct()
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.getString(0))).toSeq.sortBy(_.toString)
+    val events = TagIndex.forEvents(spark, "/root/testdata/sf0.001")
+    val sparse = new TagIndex(Seq((0L, 100L, 1.0, Some("x"), Option.empty[String]),
+        (1L, 200L, 2.0, Option.empty[String], Some("y")),
+        (2L, 300L, 3.0, Some("x"), Some("z")))
+      .toDF("event_id", "ts_sec", "value", "a", "b")
+      .withColumn("ts", timestamp_seconds(col("ts_sec"))), Seq("a", "b"))
+    for ((i, name) <- Seq(events -> "usr", events -> "typ", events -> "nope",
+        sparse -> "a", sparse -> "b", sparse -> "nope")) {
+      val got = i.labelValues(name)
+      assert(got.schema == exploded(i, name).schema, name)
+      assert(values(got) == values(exploded(i, name)), name)
+    }
+    assert(values(sparse.labelValues("b")) == Seq(None, Some("y"), Some("z")))
+    assert(events.labelValues("nope").isEmpty)
+  }
+
   test("select applies index time pruning and exact sample range") {
     val out = index.select(Seq(LabelMatcher("typ", Eql, "error")),
       timestamp_seconds(lit(350)), timestamp_seconds(lit(500)))
