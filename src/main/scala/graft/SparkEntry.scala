@@ -204,10 +204,10 @@ object SparkEntry {
     "io_merge_evolve" -> (sources.Io.mergeEvolveRead _),
     "io_alter_widen" -> (sources.Io.alterWidenRead _),
     "io_identity" -> (sources.Io.identityRead _),
-    "io_timetravel_dsv2" -> (sources.Io.dsv2TimetravelRead _),
-    "io_skipping_dsv2" -> (sources.Io.dsv2SkippingRead _),
+    "io_timetravel_dsv2" -> (sources.Io.timetravelRead _),
+    "io_skipping_dsv2" -> (sources.Io.skippingRead _),
     "io_dv" -> (sources.Io.dvRead _),
-    "io_dv_dsv2" -> (sources.Io.dvDsv2Read _),
+    "io_dv_dsv2" -> (sources.Io.dvRead _),
     "io_write_dsv2" -> (sources.Io.dsv2WriteRead _),
     "io_write_txn" -> (sources.Io.dsv2WriteTxnRead _),
     "io_catalog" -> (sources.Io.catalogRead _),
@@ -2394,110 +2394,21 @@ object SparkEntry {
     // I14: commit-log time travel — v1 (days 1-20, all types, read
     // back AFTER the v2 delete: history immutable) and v2 (purchases
     // copy-on-write-deleted), each ≡ the source cut
-    "io_timetravel" ->
-      """WITH src AS (
-        |  SELECT event_type AS typ, event_id,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM events WHERE epoch_us(ts) < 1705795200000000),
-        |v1 AS (
-        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src GROUP BY 2),
-        |v2 AS (
-        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE typ <> 'purchase' GROUP BY 2)
-        |SELECT * FROM v1 UNION ALL SELECT * FROM v2""".stripMargin,
-    // I26: the same two cuts served THROUGH the DSv2 connector
-    // (format("graft") + versionAsOf) — identical oracle as
-    // io_timetravel proves connector ≡ API
-    "io_timetravel_dsv2" ->
-      """WITH src AS (
-        |  SELECT event_type AS typ, event_id,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM events WHERE epoch_us(ts) < 1705795200000000),
-        |v1 AS (
-        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src GROUP BY 2),
-        |v2 AS (
-        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE typ <> 'purchase' GROUP BY 2)
-        |SELECT * FROM v1 UNION ALL SELECT * FROM v2""".stripMargin,
-    // I26: the stats-skipping band THROUGH the connector — identical
-    // oracle as io_skipping
-    "io_skipping_dsv2" ->
-      """SELECT event_type AS typ, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events
-        |WHERE epoch_us(ts) >= 1704672000000000
-        |  AND epoch_us(ts) < 1705190400000000
-        |GROUP BY 1""".stripMargin,
+    "io_timetravel" -> ioTimetravelSql,
+    // I26: the twin key of io_timetravel — one reader (the
+    // format("graft") connector), one builder, one oracle
+    "io_timetravel_dsv2" -> ioTimetravelSql,
+    // I26: the twin key of io_skipping (same builder and oracle)
+    "io_skipping_dsv2" -> ioSkippingSql,
     // I25: deletion vectors — v0 everything, v1 after the DV-path
     // point delete (error ∧ id≡0 mod 7), v2 after the bulk purchase
     // delete (per-file COW fallback); each version's merge-on-read
     // read ≡ the source cut, and v1 read back AFTER v2 committed
     // proves DV version isolation
-    "io_dv" ->
-      """WITH src AS (
-        |  SELECT event_type AS typ, event_id,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM events),
-        |v0 AS (
-        |  SELECT CAST(0 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src GROUP BY 2),
-        |v1 AS (
-        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
-        |  GROUP BY 2),
-        |v2 AS (
-        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
-        |    AND typ <> 'purchase'
-        |  GROUP BY 2)
-        |SELECT * FROM v0 UNION ALL SELECT * FROM v1
-        |UNION ALL SELECT * FROM v2""".stripMargin,
-    // I26 (round 12): the SAME three DV cuts served through the DSv2
-    // connector's merge-on-read scan (DvScanBuilder key-set filter) --
-    // identical oracle as io_dv proves connector == API == source
-    "io_dv_dsv2" ->
-      """WITH src AS (
-        |  SELECT event_type AS typ, event_id,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM events),
-        |v0 AS (
-        |  SELECT CAST(0 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src GROUP BY 2),
-        |v1 AS (
-        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
-        |  GROUP BY 2),
-        |v2 AS (
-        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
-        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |    min(event_id) AS min_id, max(event_id) AS max_id
-        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
-        |    AND typ <> 'purchase'
-        |  GROUP BY 2)
-        |SELECT * FROM v0 UNION ALL SELECT * FROM v1
-        |UNION ALL SELECT * FROM v2""".stripMargin,
+    "io_dv" -> ioDvSql,
+    // I26 (round 12): the twin key of io_dv (same builder and oracle:
+    // the connector's positional DV scan filter)
+    "io_dv_dsv2" -> ioDvSql,
     // I26 write path (round 12): two connector appends (V1Write ->
     // tableAppendOcc) onto an API-created v0 must reproduce the full
     // events aggregation -- write->commit->read is what's gated
@@ -3074,15 +2985,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin,
     // I22: commit-stats data skipping — the pruned band read must
     // reproduce the raw source cut (IoSpec pins the actual skipping)
-    "io_skipping" ->
-      """SELECT event_type AS typ, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events
-        |WHERE epoch_us(ts) >= 1704672000000000
-        |  AND epoch_us(ts) < 1705190400000000
-        |GROUP BY 1""".stripMargin,
+    "io_skipping" -> ioSkippingSql,
     // I15: change feed — v0→v1 is a pure insert of the appended days,
     // v1→v2 a pure delete of the purchases (COW survivors cancel)
     "io_cdf" ->
@@ -6589,6 +6492,62 @@ object SparkEntry {
         |    AND ts <= TIMESTAMP '2024-01-31 00:00:00')
         |WHERE rn = 1""".stripMargin,
   )
+
+  // io_timetravel and io_timetravel_dsv2: the two commit-log cuts
+  private val ioTimetravelSql: String =
+    """WITH src AS (
+        |  SELECT event_type AS typ, event_id,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+        |  FROM events WHERE epoch_us(ts) < 1705795200000000),
+        |v1 AS (
+        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
+        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |    min(event_id) AS min_id, max(event_id) AS max_id
+        |  FROM src GROUP BY 2),
+        |v2 AS (
+        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
+        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |    min(event_id) AS min_id, max(event_id) AS max_id
+        |  FROM src WHERE typ <> 'purchase' GROUP BY 2)
+        |SELECT * FROM v1 UNION ALL SELECT * FROM v2""".stripMargin
+
+  // io_skipping and io_skipping_dsv2: the stats-skipping band
+  private val ioSkippingSql: String =
+    """SELECT event_type AS typ, count(*) AS n,
+        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+        |    AS sum_cents,
+        |  min(event_id) AS min_id, max(event_id) AS max_id
+        |FROM events
+        |WHERE epoch_us(ts) >= 1704672000000000
+        |  AND epoch_us(ts) < 1705190400000000
+        |GROUP BY 1""".stripMargin
+
+  // io_dv and io_dv_dsv2: the three deletion-vector cuts
+  private val ioDvSql: String =
+    """WITH src AS (
+        |  SELECT event_type AS typ, event_id,
+        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+        |  FROM events),
+        |v0 AS (
+        |  SELECT CAST(0 AS BIGINT) AS version, typ, count(*) AS n,
+        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |    min(event_id) AS min_id, max(event_id) AS max_id
+        |  FROM src GROUP BY 2),
+        |v1 AS (
+        |  SELECT CAST(1 AS BIGINT) AS version, typ, count(*) AS n,
+        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |    min(event_id) AS min_id, max(event_id) AS max_id
+        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
+        |  GROUP BY 2),
+        |v2 AS (
+        |  SELECT CAST(2 AS BIGINT) AS version, typ, count(*) AS n,
+        |    CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |    min(event_id) AS min_id, max(event_id) AS max_id
+        |  FROM src WHERE NOT (typ = 'error' AND event_id % 7 = 0)
+        |    AND typ <> 'purchase'
+        |  GROUP BY 2)
+        |SELECT * FROM v0 UNION ALL SELECT * FROM v1
+        |UNION ALL SELECT * FROM v2""".stripMargin
 
   /** Exact word-3-gram Jaccard pairs ≥ 0.8 — the oracle for both the
     * exact candidate-join implementation (D4) and the MinHash+LSH path

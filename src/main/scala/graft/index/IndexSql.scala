@@ -240,10 +240,9 @@ object IndexSql {
         a(0), phi, a(2)))
     },
 
-    // I25/I14 from SQL: the MERGE-ON-READ table read — the TVF is the
-    // SQL surface for DV-carrying versions the DSv2 connector refuses
-    // (a TVF returns a full logical plan, so the DV anti-join rides
-    // inside it); version -1 = HEAD. e.g.
+    // I25/I14 from SQL: a commit-log version read by path — the
+    // `format("graft")` connector's scan, deletion vectors applied in
+    // it; version -1 = HEAD. e.g.
     // graft_table('/tbl', '-1'), graft_table('/tbl', '2')
     "graft_table" -> { exprs: Seq[Expression] =>
       require(exprs.length == 2,
@@ -255,7 +254,7 @@ object IndexSql {
         catch { case _: NumberFormatException =>
           sys.error("graft_table: version must be a number (-1 = HEAD)") }
       val v = if (v0 < 0) graft.sources.Io.tableVersion(spark, a(0)) else v0
-      plan(graft.sources.Io.readTableVersionMor(spark, a(0), v))
+      plan(graft.sources.Io.readTableVersion(spark, a(0), v))
     },
 
     // B53 from SQL: the daily dashboard served from the landed 1h

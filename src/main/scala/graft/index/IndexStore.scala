@@ -332,7 +332,8 @@ object IndexStore {
     */
   private def loadSegs(spark: SparkSession, path: String, segs: Seq[String],
       dels: Seq[String]): DataFrame = {
-    val raw = spark.read.option("basePath", path)
+    val reader = spark.read.option("basePath", path)
+    val raw = segSchema(spark, s"$path/${segs.head}").fold(reader)(reader.schema)
       .parquet(segs.map(s => s"$path/$s"): _*)
     val live =
       if (dels.isEmpty) raw
@@ -351,6 +352,27 @@ object IndexStore {
     live.groupBy(col("tsid") +: TagIndex.catalogLabels(live.drop("seg")).map(col): _*)
       .agg(min(col("min_ts")).as("min_ts"), max(col("max_ts")).as("max_ts"),
         sum(col("n_samples")).as("n_samples"))
+  }
+
+  /** The segments' data schema, read on the driver from the footer of
+    * one part file of `segDir`: Spark writes its row schema into the
+    * footer metadata, the fact parquet schema inference reads in a
+    * Spark job of its own (inference, too, reads a single footer).
+    * None when there is no Spark-written part file; the read then
+    * infers. */
+  private def segSchema(spark: SparkSession, segDir: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val part = fs(spark, segDir).listStatus(new org.apache.hadoop.fs.Path(segDir))
+      .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName).headOption
+    part.flatMap { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+          spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
   /** manual_compact: fold all segments into one merged segment carrying

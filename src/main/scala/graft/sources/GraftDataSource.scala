@@ -63,6 +63,12 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = false
 
+  // Spark makes one provider per load and calls inferSchema, then
+  // getTable with the same options: the table inferSchema resolved is
+  // handed to getTable, so a load reads the commit and infers the
+  // parquet schema once, and both calls see the same snapshot.
+  @volatile private var resolved: Option[(java.util.Map[String, String], Table)] = None
+
   private def resolveTable(options: CaseInsensitiveStringMap): Table = {
     val spark = SparkSession.active
     val path = Option(options.get("path")).getOrElse(
@@ -71,12 +77,18 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
     GraftTables.forPath(spark, path, options)
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    resolveTable(options).schema
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val t = resolveTable(options)
+    resolved = Some((options.asCaseSensitiveMap(), t))
+    t.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    resolveTable(new CaseInsensitiveStringMap(properties))
+      properties: java.util.Map[String, String]): Table = {
+    val hit = resolved.collect { case (opts, t) if opts == properties => t }
+    resolved = None
+    hit.getOrElse(resolveTable(new CaseInsensitiveStringMap(properties)))
+  }
 }
 
 /** The shared table factory: the `format("graft")` provider and the
@@ -179,27 +191,11 @@ private[graft] object GraftTables {
     val pruned = Option(options.get("skipCol")) match {
       case None => files
       case Some(skipCol) =>
-        val stats = Io.readStatsFile(spark, path, version)
-        // the COLUMN must be covered by the sidecar (a typo'd skipCol
-        // should refuse loudly, not scan everything), but coverage is
-        // per-FILE lenient (round-12 ADVICE): a connector append
-        // (V1Write→tableAppendOcc writes no stats) leaves later files
-        // without entries — those stay UN-PRUNABLE rather than
-        // crashing the read with a bare NoSuchElementException
-        require(files.isEmpty || stats.keys.exists(_._2 == skipCol),
-          s"no commit stats for column $skipCol at $path v$version — " +
-            "skipCol needs a version written via tableAppendStats " +
-            "covering that column")
         val lo = Option(options.get("skipLo")).map(_.toLong)
           .getOrElse(Long.MinValue)
         val hi = Option(options.get("skipHi")).map(_.toLong)
           .getOrElse(Long.MaxValue)
-        val kept = files.filter { f =>
-          stats.get((Io.trailOf(f), skipCol)) match {
-            case Some((mn, mx)) => mx >= lo && mn < hi
-            case None => true // no entry: un-prunable, keep the file
-          }
-        }
+        val kept = Io.statsBand(spark, path, version, files, skipCol, lo, hi)
         // schema inference needs ≥1 file; an all-pruned read keeps one
         // carrier file — pruning is conservative, the caller's own
         // predicate (which skipping never replaces) yields the empty set

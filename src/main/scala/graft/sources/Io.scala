@@ -206,8 +206,20 @@ object Io {
 
   /** Per-type count, cent sum and id bounds — the commit-log gates'
     * read-back aggregate. */
-  private[graft] def typeSummary(df: DataFrame): DataFrame =
-    df.groupBy(col("typ"))
+  private[graft] def typeSummary(df: DataFrame): DataFrame = summaryBy(df)
+
+  /** [[typeSummary]] of version `v`'s read, keyed `version` ahead of
+    * the type. */
+  private def versionSummary(v: Long)(df: DataFrame): DataFrame =
+    summaryBy(df, lit(v).as("version"))
+
+  /** [[typeSummary]] of raw events rows (cents rounded from `value`). */
+  private def eventsSummary(df: DataFrame): DataFrame =
+    typeSummary(df.select(col("event_type").as("typ"), col("event_id"),
+      floor(col("value") * 100 + 0.5).cast("long").as("cents")))
+
+  private def summaryBy(df: DataFrame, keys: Column*): DataFrame =
+    df.groupBy(keys :+ col("typ"): _*)
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
 
@@ -289,10 +301,7 @@ object Io {
     */
   def dailyPartitionRead(spark: SparkSession, dir: String): DataFrame =
     readDay(spark, s"${roundtripRoot(spark, dir)}/daily", "2024-01-05")
-      .groupBy(col("event_type").as("typ"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .transform(eventsSummary)
 
   /** One maintenance materialization per (session, dataset): a
     * day-partitioned copy COMPACTED in place, a z-ordered copy, a
@@ -354,17 +363,12 @@ object Io {
   /** I6, oracle-gated: content preserved bit-for-bit by the rewrite. */
   def compactedRead(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${maintRoot(spark, dir)}/compacted")
-      .groupBy(col("event_type").as("typ")).agg(
-        count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .transform(eventsSummary)
 
   /** I11, oracle-gated: clustering reorders files, never content. */
   def zorderRead(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${maintRoot(spark, dir)}/zorder")
-      .groupBy(col("typ")).agg(
-        count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .transform(typeSummary)
 
   /** I12, oracle-gated: the manifest-pruned band is EXACT (conservative
     * file skipping + residual predicate).
@@ -372,19 +376,14 @@ object Io {
   def prunedRead(spark: SparkSession, dir: String): DataFrame =
     readPruned(spark, s"${maintRoot(spark, dir)}/clustered", "cents",
       lit(2000L), lit(6000L))
-      .groupBy(col("typ")).agg(
-        count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .transform(typeSummary)
 
   /** I10, oracle-gated: the post-MERGE table ≡ the oracle's replay of
     * the same deterministic update batch (anti-join + union per day).
     */
   def upsertedRead(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${maintRoot(spark, dir)}/upserted")
-      .groupBy(col("event_type").as("typ")).agg(
-        count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      .transform(eventsSummary)
 
   /** I13: retention vacuum — the standing lakehouse expiry job: drop
     * whole `day=` partition directories strictly OLDER than the cutoff
@@ -1936,43 +1935,14 @@ object Io {
     hits.map(_._1).max
   }
 
-  /** Read the table AS OF `version` — one commit fetch + exactly that
-    * version's file list, ALWAYS honoring the version's deletion
-    * vectors (round 11: one read path, one semantics — a version read
-    * can never resurrect DV-deleted rows; the anti-join costs nothing
-    * on DV-free versions). */
+  /** Read the table AS OF `version` through the `format("graft")`
+    * connector — the one reader of a commit-log version: that version's
+    * file list, its deletion vectors applied in the scan, HEAD served
+    * with the declared `_schema` when one exists (pinned versions keep
+    * their own era). */
   def readTableVersion(spark: SparkSession, table: String,
       version: Long): DataFrame =
-    dvFilter(spark, table, version, readTableVersionRaw(spark, table, version))
-
-  /** The raw file union of a version — the internal reader the DV
-    * machinery itself builds on (matched-scan, rewrite, OPTIMIZE).
-    * HEAD reads apply the DECLARED `_schema` when present (the
-    * connector's I34 semantics: post-ALTER, pre-evolution files
-    * null-backfill the added column instead of a single-footer
-    * inference randomly dropping or keeping it); pinned versions keep
-    * their own era, exactly like `format("graft")`. */
-  private def readTableVersionRaw(spark: SparkSession, table: String,
-      version: Long): DataFrame = {
-    val files = readCommit(spark, table, version)
-    if (files.isEmpty) spark.emptyDataFrame
-    else if (version == tableVersion(spark, table))
-      readFilesDeclared(spark, table, files.map(resolve(table, _)))
-    else spark.read.parquet(files.map(resolve(table, _)): _*)
-  }
-
-  /** Apply a version's positional DV anti-join to a RAW file-scan
-    * frame over (a subset of) its files. `base` must be a direct
-    * parquet scan — see [[withFilePos]]. */
-  private def dvFilter(spark: SparkSession, table: String, version: Long,
-      base: DataFrame): DataFrame = {
-    val dvDirs = dvDirsOf(spark, table, version)
-    if (dvDirs.isEmpty) base
-    else withFilePos(base)
-      .join(broadcast(dvEntries(spark, table, dvDirs)),
-        Seq("__f", "__p"), "left_anti")
-      .drop("__f", "__p")
-  }
+    spark.read.format("graft").option("versionAsOf", version).load(table)
 
   /** I24 (round 10): version read with SCHEMA EVOLUTION — Delta's
     * append-time evolution (`mergeSchema`) on the commit log: a later
@@ -1984,13 +1954,9 @@ object Io {
     * footer union over the version's file list — metadata-scale.
     */
   def readTableVersionEvolved(spark: SparkSession, table: String,
-      version: Long): DataFrame = {
-    val files = readCommit(spark, table, version)
-    if (files.isEmpty) spark.emptyDataFrame
-    else dvFilter(spark, table, version,
-      spark.read.option("mergeSchema", "true")
-        .parquet(files.map(resolve(table, _)): _*))
-  }
+      version: Long): DataFrame =
+    spark.read.format("graft").option("versionAsOf", version)
+      .option("mergeSchema", "true").load(table)
 
   /** I17: SHALLOW CLONE — a new table whose first commit references the
     * source table's CURRENT files by absolute path: zero data copied,
@@ -2203,7 +2169,7 @@ object Io {
       .reduceOption((a, b) => a.unionByName(b.select(a.columns.map(col): _*)))
     (fileFeed, dvFeed) match {
       case (None, None) =>
-        readTableVersionMor(spark, table, toV).filter(lit(false))
+        readTableVersion(spark, table, toV).filter(lit(false))
           .withColumn("change_type", lit(""))
       case (Some(a), None) => a
       case (None, Some(b)) => b
@@ -2227,10 +2193,7 @@ object Io {
   def timetravelRead(spark: SparkSession, dir: String): DataFrame = {
     val table = ttTable(spark, dir)
     def agg(v: Long): DataFrame =
-      readTableVersion(spark, table, v)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, table, v).transform(versionSummary(v))
     agg(1L).unionByName(agg(2L))
   }
 
@@ -2428,20 +2391,15 @@ object Io {
     }
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val files = readCommit(spark, table, v)
     val nv = v + 1
-    // the rewrite input is the MOR view, not the raw files: OPTIMIZE
-    // on a DV-carrying table materializes the deletes into the packed
-    // files (≡ optimizeTableDv + bin-packing) and commits DV-free —
-    // a raw-file rewrite would permanently resurrect DV-deleted rows
-    // (round-11 ADVICE high). Read with the DECLARED schema (I42):
-    // after ALTER ADD COLUMN a single-footer inference over mixed-era
-    // files could silently drop the evolved column from the packed
-    // rewrite.
+    // the rewrite input is HEAD's version read, not the raw files:
+    // OPTIMIZE on a DV-carrying table materializes the deletes into
+    // the packed files (≡ optimizeTableDv + bin-packing) and commits
+    // DV-free — a raw-file rewrite would permanently resurrect
+    // DV-deleted rows (round-11 ADVICE high) — and HEAD serves the
+    // DECLARED schema (I42), so mixed-era files keep the evolved column
     val packed0 = landData(
-      dvFilter(spark, table, v,
-        readFilesDeclared(spark, table, files.map(resolve(table, _))))
-        .coalesce(targetFiles), table, s"c$nv")
+      readTableVersion(spark, table, v).coalesce(targetFiles), table, s"c$nv")
     val (packed, st) = carryStats(spark, table, v, nv, Seq.empty, packed0)
     writeCommit(spark, table, nv, packed, stats = st)
     nv
@@ -2465,10 +2423,8 @@ object Io {
       xCol: String, yCol: String, targetFiles: Int): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val files = readCommit(spark, table, v)
     val nv = v + 1
-    val input = dvFilter(spark, table, v,
-      readFilesDeclared(spark, table, files.map(resolve(table, _))))
+    val input = readTableVersion(spark, table, v)
     // RANGE-ID normalization (what Delta's ZORDER actually interleaves
     // — range_partition_id, not raw values): each dimension maps to
     // its ~equi-depth QUANTILE bucket (0..255) before the bit
@@ -2584,18 +2540,6 @@ object Io {
     readTableVersion(spark, t, 3L).transform(typeSummary)
   }
 
-  /** How many of a version's files a stats band read on `colName`
-    * would keep (the readTableVersionSkipping pruning rule). */
-  private def skipKeepCount(spark: SparkSession, table: String,
-      version: Long, colName: String, lo: Long, hi: Long): Int = {
-    val files = readCommit(spark, table, version)
-    val stats = readStatsFile(spark, table, version)
-    files.count(f => stats.get((trail(f), colName)) match {
-      case Some((mn, mx)) => mx >= lo && mn < hi
-      case None => true
-    })
-  }
-
   /** I47, oracle-gated: OPTIMIZE ZORDER BY — a deliberately scrambled
     * 8-file stats table (round-robin repartition: every file spans
     * both dimensions, so band reads on either keep ALL files) is
@@ -2612,15 +2556,17 @@ object Io {
         .repartition(8)
       tableAppendStats(flat, tt, "event_id", "cents")
       val (ilo, ihi, clo, chi) = zoptBands(spark, tt)
-      require(skipKeepCount(spark, tt, 0L, "event_id", ilo, ihi) == 8 &&
-        skipKeepCount(spark, tt, 0L, "cents", clo, chi) == 8,
+      def keep(v: Long, c: String, lo: Long, hi: Long): Int =
+        statsBand(spark, tt, v, readCommit(spark, tt, v), c, lo, hi).size
+      require(keep(0L, "event_id", ilo, ihi) == 8 &&
+        keep(0L, "cents", clo, chi) == 8,
         s"scrambled pre-state at $tt must keep all 8 files on both bands")
       val v = tableOptimizeZorder(spark, tt, "event_id", "cents", 16)
       require(v == 1L, s"expected zorder commit v1 at $tt, got $v")
       val nf = readCommit(spark, tt, 1L).size
-      require(skipKeepCount(spark, tt, 1L, "event_id", ilo, ihi) < nf,
+      require(keep(1L, "event_id", ilo, ihi) < nf,
         s"z-ordered layout at $tt must prune the event_id band")
-      require(skipKeepCount(spark, tt, 1L, "cents", clo, chi) < nf,
+      require(keep(1L, "cents", clo, chi) < nf,
         s"z-ordered layout at $tt must prune the cents band")
     }
     val (ilo, ihi, clo, chi) = zoptBands(spark, t)
@@ -2707,10 +2653,7 @@ object Io {
       require(v == 3L, s"expected restore to commit v3 at $tt, got $v")
     }
     def agg(tag: String, v: Long): DataFrame =
-      readTableVersion(spark, t, v)
-        .groupBy(lit(tag).as("rel"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, t, v).transform(summaryBy(_, lit(tag).as("rel")))
     agg("restored", 3L).unionByName(agg("pre_restore", 2L))
   }
 
@@ -2989,8 +2932,8 @@ object Io {
   // of their files, DELETE writes a tiny sidecar table of deleted
   // (file, rowPos) POSITIONS instead of rewriting whole data files
   // (COW turns a 1-row delete into a multi-GB rewrite at 100 TB);
-  // readers anti-join the version's DV entries, and OPTIMIZE
-  // materializes them back into clean files. DV state is VERSIONED
+  // the connector's scan filters the version's DV positions out, and
+  // OPTIMIZE materializes them back into clean files. DV state is VERSIONED
   // exactly like the file list: a `.dv` sidecar per commit names the
   // dv/ parquet dirs that apply to THAT version (carried forward by
   // appends, dropped by OPTIMIZE), so time travel composes — an old
@@ -3069,18 +3012,11 @@ object Io {
       regexp_extract(input_file_name(), "data/[^/]+/[^/]+$", 0).as("__f"),
       col("_metadata.row_index").as("__p"))
 
-  /** Merge-on-read version read — since round 11 this IS
-    * [[readTableVersion]] (one read path, always DV-correct); the
-    * alias stays for callers naming the semantics explicitly. */
-  def readTableVersionMor(spark: SparkSession, table: String,
-      version: Long): DataFrame =
-    readTableVersion(spark, table, version)
-
   /** Merge-on-read DELETE: rows matching `pred` disappear from the new
     * version WITHOUT rewriting their files — unless a file's matched
     * fraction exceeds `cowFraction`, in which case that file falls
     * back to copy-on-write (a mostly-deleted file is cheaper to
-    * rewrite than to carry + anti-join forever — the Delta DV
+    * rewrite than to carry + filter forever — the Delta DV
     * heuristic). The delete's identity is the row's (file, position) —
     * round 13, Delta's actual DV shape — so ANY predicate over ANY
     * schema works (no row-unique key column needed) and later
@@ -3288,38 +3224,40 @@ object Io {
     nv
   }
 
-  /** Data-skipping time-travel read: version `version`'s file list
-    * pruned by the commit-embedded stats to those overlapping
-    * [lo, hi) on `statsCol`, with the residual predicate making the
-    * result exact (stat pruning is file-conservative). */
-  def readTableVersionSkipping(spark: SparkSession, table: String,
-      version: Long, statsCol: String, lo: Long, hi: Long): DataFrame = {
-    val files = readCommit(spark, table, version)
+  /** The `files` of `version` whose commit stats on `statsCol` overlap
+    * [lo, hi) — the stats pruning of the connector's `skipCol` read.
+    * The COLUMN must be covered by the sidecar (a typo'd column refuses
+    * loudly instead of scanning everything), but coverage is per-FILE
+    * lenient (round-12 ADVICE): an append that writes no stats (a
+    * connector V1Write → tableAppendOcc) leaves its files without
+    * entries, and those stay un-prunable. */
+  private[graft] def statsBand(spark: SparkSession, table: String,
+      version: Long, files: Seq[String], statsCol: String, lo: Long,
+      hi: Long): Seq[String] = {
     val stats = readStatsFile(spark, table, version)
-    // column coverage is loud, per-file coverage is lenient (round-12
-    // ADVICE): a plain/OCC append onto a stats table leaves its files
-    // without entries — those stay un-prunable instead of crashing
     require(files.isEmpty || stats.keys.exists(_._2 == statsCol),
-      s"no commit stats for column $statsCol at $table v$version")
-    val keep = files.filter { f =>
+      s"no commit stats for column $statsCol at $table v$version — " +
+        "skipCol needs a version written via tableAppendStats " +
+        "covering that column")
+    files.filter { f =>
       stats.get((trail(f), statsCol)) match {
         case Some((mn, mx)) => mx >= lo && mn < hi
         case None => true
       }
     }
-    val base =
-      if (keep.isEmpty) readTableVersion(spark, table, version)
-        .filter(lit(false))
-      else if (version == tableVersion(spark, table))
-        // HEAD skipping reads honor the declared `_schema` (I34/I42):
-        // a mixed-era file subset must not lose the evolved column to
-        // single-footer inference
-        dvFilter(spark, table, version,
-          readFilesDeclared(spark, table, keep.map(resolve(table, _))))
-      else dvFilter(spark, table, version,
-        spark.read.parquet(keep.map(resolve(table, _)): _*))
-    base.filter(col(statsCol) >= lo && col(statsCol) < hi)
   }
+
+  /** Data-skipping time-travel read: version `version`'s file list
+    * pruned by the commit-embedded stats to those overlapping
+    * [lo, hi) on `statsCol` (the connector's `skipCol` band), with the
+    * residual predicate making the result exact (stat pruning is
+    * file-conservative). */
+  def readTableVersionSkipping(spark: SparkSession, table: String,
+      version: Long, statsCol: String, lo: Long, hi: Long): DataFrame =
+    spark.read.format("graft").option("versionAsOf", version)
+      .option("skipCol", statsCol).option("skipLo", lo).option("skipHi", hi)
+      .load(table)
+      .filter(col(statsCol) >= lo && col(statsCol) < hi)
 
   private[graft] def dvTable(spark: SparkSession, dir: String): String =
     fixture(spark, dir, "graft_io_dv") { t =>
@@ -3333,36 +3271,6 @@ object Io {
         col("typ") === "error" && pmod(col("event_id"), lit(7)) === 0)
       tableDeleteWhereDv(spark, t, col("typ") === "purchase")
     }
-
-  /** I26, oracle-gated: I14's time-travel reads THROUGH the DSv2
-    * connector — `spark.read.format("graft").option("versionAsOf", v)`
-    * resolves the version from the commit list and hands the exact
-    * file set to Spark's parquet scan; same oracle as `io_timetravel`,
-    * so connector reads ≡ API reads ≡ source cuts. */
-  def dsv2TimetravelRead(spark: SparkSession, dir: String): DataFrame = {
-    val table = ttTable(spark, dir)
-    def agg(v: Long): DataFrame =
-      spark.read.format("graft").option("versionAsOf", v).load(table)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-    agg(1L).unionByName(agg(2L))
-  }
-
-  /** I26, oracle-gated: I22's stats-skipping read THROUGH the DSv2
-    * connector — file-level pruning from the commit-embedded stats
-    * (`skipCol`/`skipLo`/`skipHi`), residual predicate applied as
-    * usual; same oracle as `io_skipping`. ExtensionsSpec separately
-    * pins that the connector scan touches strictly fewer files. */
-  def dsv2SkippingRead(spark: SparkSession, dir: String): DataFrame = {
-    val t = skipTable(spark, dir)
-    val lo = 1704672000000000L // 2024-01-08 00:00:00 UTC (µs)
-    val hi = 1705190400000000L // 2024-01-14 00:00:00 UTC (µs)
-    spark.read.format("graft")
-      .option("skipCol", "us").option("skipLo", lo).option("skipHi", hi)
-      .load(t)
-      .filter(col("us") >= lo && col("us") < hi).transform(typeSummary)
-  }
 
   /** I25+I15, oracle-gated: the change feed of both DV-table
     * transitions — v0→v1 is a DV-ONLY delete (no file changes: the
@@ -3384,31 +3292,12 @@ object Io {
     * MERGE-ON-READ and aggregated — v0 (everything), v1 (after the
     * DV-path point delete), v2 (after the bulk delete's COW fallback).
     * The oracle replays each cut from the raw source, so the gate
-    * proves write→DV-sidecar→anti-join-read content AND version
-    * isolation (v1 still serves rows v2 deleted). */
+    * proves write→DV-sidecar→positional-scan-filter content AND
+    * version isolation (v1 still serves rows v2 deleted). */
   def dvRead(spark: SparkSession, dir: String): DataFrame = {
     val t = dvTable(spark, dir)
     def agg(v: Long): DataFrame =
-      readTableVersionMor(spark, t, v)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-    agg(0L).unionByName(agg(1L)).unionByName(agg(2L))
-  }
-
-  /** I25+I26 (round 12), oracle-gated: the SAME three DV-table cuts as
-    * [[dvRead]] served THROUGH the DSv2 connector — `format("graft")`
-    * plans the merge-on-read key-set filter itself (DvScanBuilder)
-    * instead of refusing DV versions; identical oracle as `io_dv`
-    * proves connector ≡ API ≡ source cut on every transition (DV-only
-    * delete at v1, COW-fallback mix at v2, version isolation). */
-  def dvDsv2Read(spark: SparkSession, dir: String): DataFrame = {
-    val t = dvTable(spark, dir)
-    def agg(v: Long): DataFrame =
-      spark.read.format("graft").option("versionAsOf", v).load(t)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, t, v).transform(versionSummary(v))
     agg(0L).unionByName(agg(1L)).unionByName(agg(2L))
   }
 
@@ -3433,10 +3322,7 @@ object Io {
       require(v == 1L, s"expected merge commit v1 at $tt, got $v")
     }
     def agg(v: Long): DataFrame =
-      readTableVersion(spark, t, v)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, t, v).transform(versionSummary(v))
     agg(0L).unionByName(agg(1L))
   }
 
@@ -3471,10 +3357,7 @@ object Io {
         s"merge at $tt must carry the DV sidecar for kept files")
     }
     def agg(v: Long): DataFrame =
-      readTableVersion(spark, t, v)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, t, v).transform(versionSummary(v))
     agg(1L).unionByName(agg(2L))
   }
 
@@ -3533,11 +3416,8 @@ object Io {
     }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
-      spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
-        "min(event_id) AS min_id, max(event_id) AS max_id " +
-        s"FROM graftdml.g.ev VERSION AS OF $v GROUP BY typ")
-        .select(lit(v).as("version"), col("typ"), col("n"),
-          col("sum_cents"), col("min_id"), col("max_id"))
+      spark.sql(s"SELECT * FROM graftdml.g.ev VERSION AS OF $v")
+        .transform(versionSummary(v))
     agg(0L).unionByName(agg(1L))
   }
 
@@ -3711,10 +3591,7 @@ object Io {
           .withColumn("event_id", col("event_id") + 1000000000000L), tt)
     }
     def agg(v: Long): DataFrame =
-      readTableVersion(spark, t, v)
-        .groupBy(lit(v).as("version"), col("typ"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
+      readTableVersion(spark, t, v).transform(versionSummary(v))
     agg(0L).unionByName(agg(2L))
   }
 
@@ -3987,11 +3864,8 @@ object Io {
     }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
-      spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
-        "min(event_id) AS min_id, max(event_id) AS max_id " +
-        s"FROM graftmsql.g.ms VERSION AS OF $v GROUP BY typ")
-        .select(lit(v).as("version"), col("typ"), col("n"),
-          col("sum_cents"), col("min_id"), col("max_id"))
+      spark.sql(s"SELECT * FROM graftmsql.g.ms VERSION AS OF $v")
+        .transform(versionSummary(v))
     agg(0L).unionByName(agg(1L))
   }
 
@@ -4014,11 +3888,8 @@ object Io {
     }
     require(wh.nonEmpty)
     def agg(v: Long): DataFrame =
-      spark.sql(s"SELECT typ, count(*) AS n, sum(cents) AS sum_cents, " +
-        "min(event_id) AS min_id, max(event_id) AS max_id " +
-        s"FROM graftow.g.ev VERSION AS OF $v GROUP BY typ")
-        .select(lit(v).as("version"), col("typ"), col("n"),
-          col("sum_cents"), col("min_id"), col("max_id"))
+      spark.sql(s"SELECT * FROM graftow.g.ev VERSION AS OF $v")
+        .transform(versionSummary(v))
     agg(0L).unionByName(agg(1L))
   }
 

@@ -586,11 +586,11 @@ class IoSpec extends AnyFunSuite {
     val commit1 = Io.versionFiles(spark, t, 1L).toSet
     assert(commit1 == commit0, "DV delete must not rewrite data files")
     assert(new java.io.File(s"$t/_commits/00000001.dv").exists())
-    assert(Io.readTableVersionMor(spark, t, 1L).count() == 19)
-    assert(!Io.readTableVersionMor(spark, t, 1L)
+    assert(Io.readTableVersion(spark, t, 1L).count() == 19)
+    assert(!Io.readTableVersion(spark, t, 1L)
       .filter(col("k") === 3).collect().nonEmpty)
     // v0 unchanged (version isolation)
-    assert(Io.readTableVersionMor(spark, t, 0L).count() == 20)
+    assert(Io.readTableVersion(spark, t, 0L).count() == 20)
     // 6 of the first file's 9 LIVE rows (> 20%) → that file COWs;
     // the second file is untouched and carried by reference
     assert(Io.tableDeleteWhereDv(spark, t, col("k") <= 7) == 2L)
@@ -598,18 +598,18 @@ class IoSpec extends AnyFunSuite {
     assert(commit2 != commit1, "over-threshold delete must rewrite")
     assert((commit2 & commit1).nonEmpty,
       "the untouched file must carry by reference")
-    assert(Io.readTableVersionMor(spark, t, 2L).count() == 13)
-    assert(Io.readTableVersionMor(spark, t, 2L)
+    assert(Io.readTableVersion(spark, t, 2L).count() == 13)
+    assert(Io.readTableVersion(spark, t, 2L)
       .agg(min(col("k"))).collect()(0).getLong(0) == 8L)
     // v1 still serves 19 AFTER v2 (isolation through both paths)
-    assert(Io.readTableVersionMor(spark, t, 1L).count() == 19)
+    assert(Io.readTableVersion(spark, t, 1L).count() == 19)
     // plain COW delete on a DV table is refused loudly
     intercept[IllegalArgumentException] {
       Io.tableDeleteWhere(spark, t, col("k") === 99)
     }
     // appends carry the DV sidecar: new rows land, old deletes hold
     Io.tableAppend(Seq(100L).toDF("k"), t) // v3
-    val m3 = Io.readTableVersionMor(spark, t, 3L)
+    val m3 = Io.readTableVersion(spark, t, 3L)
     assert(m3.count() == 14 && m3.filter(col("k") === 3).count() == 0)
   }
 
@@ -710,7 +710,7 @@ class IoSpec extends AnyFunSuite {
     val t = s"$tmp/dvopt"
     Io.tableAppend((1L to 20L).toDF("k").repartitionByRange(2, col("k")), t)
     Io.tableDeleteWhereDv(spark, t, col("k") === 15) // v1, DV path
-    assert(Io.readTableVersionMor(spark, t, 1L).count() == 19)
+    assert(Io.readTableVersion(spark, t, 1L).count() == 19)
     val v2 = Io.optimizeTableDv(spark, t)
     assert(v2 == 2L)
     assert(!new java.io.File(s"$t/_commits/00000002.dv").exists(),
@@ -723,7 +723,7 @@ class IoSpec extends AnyFunSuite {
     // must NOT collect it, vacuum from v2 must
     assert(new java.io.File(s"$t/dv").listFiles().nonEmpty)
     Io.vacuumTable(spark, t, retainFrom = 1L)
-    assert(Io.readTableVersionMor(spark, t, 1L).count() == 19,
+    assert(Io.readTableVersion(spark, t, 1L).count() == 19,
       "retained DV version must survive vacuum intact")
     val removed = Io.vacuumTable(spark, t, retainFrom = 2L)
     assert(removed > 0, "vacuum must account the dv files it collects")
@@ -861,6 +861,55 @@ class IoSpec extends AnyFunSuite {
     // and the pruned plan really reads fewer files
     val scanned = pruned.select(input_file_name()).distinct().count()
     assert(scanned == kept, s"pruned read scanned $scanned files, stats kept $kept")
+  }
+
+  test("one reader: a versioned format(\"graft\") load resolves its " +
+      "table once; a version with no data files serves the declared " +
+      "schema") {
+    import spark.implicits._
+    val t = s"$tmp/oneread"
+    Io.tableAppend((1L to 10L).toDF("k"), t)
+    Io.tableAppend((11L to 20L).toDF("k"), t)
+    def jobs(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get()
+    }
+    // Spark's inferSchema + getTable pair: one resolution, so one
+    // parquet schema-inference job at most
+    var v1: org.apache.spark.sql.DataFrame = null
+    val loadJobs = jobs {
+      v1 = spark.read.format("graft").option("versionAsOf", 1L).load(t)
+    }
+    assert(loadJobs <= 1, s"a versioned load ran $loadJobs jobs")
+    assert(v1.count() == 20)
+    // getTable serves the snapshot inferSchema resolved, even when a
+    // commit lands between the two calls
+    val provider = new graft.sources.GraftTableProvider
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", t))
+    provider.inferSchema(opts)
+    Io.tableAppend(Seq(21L).toDF("k"), t) // v2
+    assert(provider.getTable(null, Array.empty, opts.asCaseSensitiveMap())
+      .properties().get("graft.version") == "1")
+    // a schema change on a created-but-never-written table commits v0
+    // with zero data files: the version read serves the declared
+    // columns, zero rows
+    val e = s"$tmp/oneread_empty"
+    val declared = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v BIGINT")
+    Io.tableCreate(spark, e, declared)
+    assert(Io.commitSchemaChange(spark, e, -1L, declared) == 0L)
+    assert(Io.versionFiles(spark, e, 0L).isEmpty)
+    val empty = Io.readTableVersion(spark, e, 0L)
+    assert(empty.columns.toSeq == Seq("k", "v"))
+    assert(empty.count() == 0)
   }
 
   test("I22 multi-column stats: each column prunes independently; a " +
@@ -1010,15 +1059,14 @@ class IoSpec extends AnyFunSuite {
       "DV delete must carry the stats sidecar")
     val skip1 = Io.readTableVersionSkipping(spark, t, 1L, "k", 1L, 11L)
     assert(skip1.count() == 9 && skip1.filter(col("k") === 3).count() == 0)
-    // the frame is now a DV anti-join (two parquet sources), so count
-    // the DATA files the plan reads instead of input_file_name()
+    // count the DATA files the connector's scan plans (its pruned
+    // file list) instead of input_file_name(), which only sees files
+    // that still hold a row after the residual filter
     def scanned(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation
-            .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.inputFiles.toSeq
-      }.flatten.count(_.contains("/data/"))
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.relation.table.properties().get("graft.numFiles").toInt
+      }.sum
     assert(scanned(skip1) == 1, "stats pruning must still skip file 2")
     // COW-fallback delete (6 of 9 live rows in file 1): the rewritten
     // file gets FRESH stats, the carried file keeps its entry
@@ -1033,7 +1081,7 @@ class IoSpec extends AnyFunSuite {
     Io.tableAppendStats(Seq(100L).toDF("k"), t, "k") // v3
     assert(new java.io.File(s"$t/_commits/00000003.dv").exists(),
       "stats append must carry the DV sidecar (round-11 ADVICE)")
-    assert(Io.readTableVersionMor(spark, t, 3L).count() == 14)
+    assert(Io.readTableVersion(spark, t, 3L).count() == 14)
     val skip3 = Io.readTableVersionSkipping(spark, t, 3L, "k", 90L, 200L)
     assert(skip3.count() == 1 && scanned(skip3) == 1)
     // OPTIMIZE rebuilds stats for the packed file, commits DV-free
@@ -1043,7 +1091,7 @@ class IoSpec extends AnyFunSuite {
     // RESTORE to v2 reproduces both sidecars
     assert(Io.tableRestore(spark, t, 2L) == 5L)
     assert(Io.readStatsFile(spark, t, 5L) == st2)
-    assert(Io.readTableVersionMor(spark, t, 5L).count() == 13)
+    assert(Io.readTableVersion(spark, t, 5L).count() == 13)
   }
 
   test("round-14 MOR DV payload bound: a bulk MOR UPDATE (WriteDelta) " +
