@@ -332,8 +332,8 @@ object IndexStore {
     */
   private def loadSegs(spark: SparkSession, path: String, segs: Seq[String],
       dels: Seq[String]): DataFrame = {
-    val reader = spark.read.option("basePath", path)
-    val raw = segSchema(spark, s"$path/${segs.head}").fold(reader)(reader.schema)
+    val raw = spark.read.option("basePath", path)
+      .schema(segSchema(spark, s"$path/${segs.head}"))
       .parquet(segs.map(s => s"$path/$s"): _*)
     val live =
       if (dels.isEmpty) raw
@@ -358,21 +358,24 @@ object IndexStore {
     * one part file of `segDir`: Spark writes its row schema into the
     * footer metadata, the fact parquet schema inference reads in a
     * Spark job of its own (inference, too, reads a single footer).
-    * None when there is no Spark-written part file; the read then
-    * infers. */
+    * Every committed segment is a [[write]] of a catalog frame, and
+    * Spark writes a part file carrying that key even for an empty
+    * frame, so a segment without one is refused, never inferred.
+    */
   private def segSchema(spark: SparkSession, segDir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : org.apache.spark.sql.types.StructType = {
     val part = fs(spark, segDir).listStatus(new org.apache.hadoop.fs.Path(segDir))
       .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName).headOption
-    part.flatMap { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
-          spark.sparkContext.hadoopConfiguration))
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      finally r.close()
-    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+    require(part.nonEmpty, s"index segment $segDir has no part file")
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part.get,
+        spark.sparkContext.hadoopConfiguration))
+    val json = try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally r.close()
+    require(json != null, s"index segment $segDir: ${part.get.getName} carries no Spark row schema")
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
   /** manual_compact: fold all segments into one merged segment carrying

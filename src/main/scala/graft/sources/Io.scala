@@ -1293,9 +1293,10 @@ object Io {
     })
   }
 
-  /** Declare an identity column (round 14): on a table with rows the
-    * column must already EXIST, non-null and with the high water
-    * seeded from its max (Delta's SYNC IDENTITY shape); the sidecar
+  /** Declare an identity column (round 14): the column must already
+    * EXIST (on a version with no data files: in the declared
+    * `_schema`), non-null, with the high water seeded from its max
+    * (Delta's SYNC IDENTITY shape; `start - step` with no rows); the sidecar
     * lands claim-serialized. Subsequent appends without the column
     * get system-assigned values, explicit values pass through. */
   def tableAddIdentityColumn(spark: SparkSession, table: String,
@@ -1307,18 +1308,14 @@ object Io {
     require(!cur.exists(_._1 == name),
       s"identity column $name already declared")
     val head = readTableVersion(spark, table, v)
-    val hw =
-      if (head.columns.isEmpty) start - step
-      else {
-        require(head.columns.contains(name),
-          s"cannot declare identity column $name: it does not exist at " +
-            s"$table (seed it with explicit unique values first)")
-        val r = head.agg(max(col(name).cast("long")), count(lit(1)),
-          count(col(name))).head()
-        require(r.getLong(1) == r.getLong(2),
-          s"identity column $name must be non-null")
-        if (r.getLong(1) == 0L) start - step else r.getLong(0)
-      }
+    require(head.columns.contains(name),
+      s"cannot declare identity column $name: it does not exist at " +
+        s"$table (seed it with explicit unique values first)")
+    val r = head.agg(max(col(name).cast("long")), count(lit(1)),
+      count(col(name))).head()
+    require(r.getLong(1) == r.getLong(2),
+      s"identity column $name must be non-null")
+    val hw = if (r.getLong(1) == 0L) start - step else r.getLong(0)
     val nv = v + 1
     val files = readCommit(spark, table, v)
     val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
@@ -1414,7 +1411,8 @@ object Io {
   }
 
   /** Declare a generated column (round 14): the column must already
-    * exist CONFORMING in the table (or the table be empty) — one
+    * exist CONFORMING in the table (on a version with no data files:
+    * exist in the declared `_schema`) — one
     * distributed scan, the ADD CONSTRAINT discipline — and the
     * sidecar lands as a claim-serialized commit. Every subsequent
     * DataFrame write computes it when absent and validates it when
@@ -1429,14 +1427,12 @@ object Io {
     require(!cur.exists(_._1 == name),
       s"generated column $name already declared")
     val head = readTableVersion(spark, table, v)
-    if (head.columns.nonEmpty) {
-      require(head.columns.contains(name),
-        s"cannot declare generated column $name: it does not exist at " +
-          s"$table (add the column with conforming values first)")
-      val bad = head.filter(!(col(name) <=> expr(exprSql))).limit(1).count()
-      require(bad == 0L, s"cannot declare generated column $name " +
-        s"($exprSql): existing rows at $table v$v do not conform")
-    }
+    require(head.columns.contains(name),
+      s"cannot declare generated column $name: it does not exist at " +
+        s"$table (add the column with conforming values first)")
+    val bad = head.filter(!(col(name) <=> expr(exprSql))).limit(1).count()
+    require(bad == 0L, s"cannot declare generated column $name " +
+      s"($exprSql): existing rows at $table v$v do not conform")
     val nv = v + 1
     val files = readCommit(spark, table, v)
     val st = carryStats(spark, table, v, nv, files, Seq.empty)._2

@@ -910,6 +910,18 @@ class IoSpec extends AnyFunSuite {
     val empty = Io.readTableVersion(spark, e, 0L)
     assert(empty.columns.toSeq == Seq("k", "v"))
     assert(empty.count() == 0)
+    // identity and generated declarations check those columns: a
+    // declared one passes (zero rows seed the high water at
+    // start - step and have nothing to conform), another is refused
+    assert(Io.tableAddIdentityColumn(spark, e, "k", start = 10L, step = 5L) == 1L)
+    assert(Io.readIdentity(spark, e) == Seq(("k", 10L, 5L, 5L)))
+    assert(Io.tableAddGeneratedColumn(spark, e, "v", "k * 2") == 2L)
+    val noId = intercept[IllegalArgumentException](
+      Io.tableAddIdentityColumn(spark, e, "z"))
+    assert(noId.getMessage.contains("does not exist"))
+    val noGen = intercept[IllegalArgumentException](
+      Io.tableAddGeneratedColumn(spark, e, "z", "k + 1"))
+    assert(noGen.getMessage.contains("does not exist"))
   }
 
   test("I22 multi-column stats: each column prunes independently; a " +
