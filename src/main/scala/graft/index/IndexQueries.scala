@@ -247,13 +247,19 @@ object IndexQueries {
       """sum by (kb, typ) (count_over_time({typ=~"(view|click)", usr<="5"}[30d]))""",
       "2024-01-31 00:00:00")
 
-  private def tmpStore(prefix: String, dir: String): java.io.File =
-    graft.Memo.tmp(prefix + graft.Tables.fingerprint(s"$dir/events.parquet"))
+  // a store path per dataset under tmpdir, emptied: every JVM writes
+  // its store from scratch (materialize is a first flush only, and a
+  // crashed earlier build must not leave rows or tombstones behind)
+  private def tmpStore(prefix: String, dir: String): String = {
+    val base = graft.Memo.tmp(prefix + graft.Tables.fingerprint(s"$dir/events.parquet"))
+    graft.Memo.wipe(base)
+    base.toString
+  }
 
   // one materialized store per source dataset (written once per JVM)
   private def storeFor(spark: SparkSession, dir: String): String =
     graft.Memo.global(s"index.store:$dir") {
-      val p = tmpStore("graft_idxstore_", dir).toString
+      val p = tmpStore("graft_idxstore_", dir)
       IndexStore.materialize(idx(spark, dir), p)
       p
     }
@@ -269,14 +275,15 @@ object IndexQueries {
   def matchConjStored(spark: SparkSession, dir: String): DataFrame =
     storedSeries(spark, storeFor(spark, dir), conj)
 
-  // a PRIVATE store compacted down to one segment (separate from
-  // storeFor so compaction can't mask a merge-on-read bug there)
+  // a PRIVATE store of two batch flushes merged into one segment
+  // (separate from storeFor so compaction can't mask a merge-on-read
+  // bug there)
   private def compactStoreFor(spark: SparkSession, dir: String): String =
     graft.Memo.global(s"index.compactstore:$dir") {
-      val base = tmpStore("graft_compactstore_", dir)
-      graft.Memo.wipe(base)
-      val p = base.toString
-      IndexStore.materialize(idx(spark, dir), p)
+      val p = tmpStore("graft_compactstore_", dir)
+      val i = idx(spark, dir)
+      for (b <- 0L to 1L) IndexStore.flushBatch(new TagIndex(
+        i.samples.filter(pmod(col("event_id"), lit(2)) === b), i.labelNames), p, b)
       IndexStore.compact(spark, p)
       p
     }
@@ -293,14 +300,10 @@ object IndexQueries {
     storedSeries(spark, compactStoreFor(spark, dir), conj)
 
   // a PRIVATE store with a delete_series tombstone applied (separate
-  // from storeFor — deletes must not contaminate the other gates);
-  // rebuilt from scratch per JVM so a crashed prior build can't leave
-  // a partial store or stacked tombstones behind
+  // from storeFor — deletes must not contaminate the other gates)
   private def tombStoreFor(spark: SparkSession, dir: String): String =
     graft.Memo.global(s"index.tombstore:$dir") {
-      val base = tmpStore("graft_tombstore_", dir)
-      graft.Memo.wipe(base)
-      val p = base.toString
+      val p = tmpStore("graft_tombstore_", dir)
       IndexStore.materialize(idx(spark, dir), p)
       val n = IndexStore.deleteSeries(spark, p,
         Seq(LabelMatcher("typ", Eql, "error")))
@@ -389,7 +392,7 @@ object IndexQueries {
   // remembers the FIRST segment's ordinal as the snapshot point.
   private def snapStoreFor(spark: SparkSession, dir: String): (String, Long) =
     graft.Memo.global(s"index.snapstore:$dir") {
-      val p = tmpStore("graft_snapstore_", dir).toString
+      val p = tmpStore("graft_snapstore_", dir)
       def idxUpTo(cutNs: Option[Long]): TagIndex = {
         val raw = graft.Tables.eventsRaw(spark, dir)
         val ev = raw.select(

@@ -313,37 +313,36 @@ object TagIndex {
     * samples — the reference's warm full-cache serving mode
     * (index_server.h:26) surviving process restarts, so a fresh
     * session's first matcher query skips the 3-4 s catalog groupBy.
-    * `_done` commits the write: a crash mid-write
-    * leaves no marker and the next session rebuilds; a stale dataset
-    * changes the fingerprint and falls out naturally. Failures to
-    * persist degrade to the in-memory path, never to an error.
+    * The directory is a [[graft.Memo.landed]] fixture under a prefix
+    * carrying [[IndexStore.Layout]]: `_done` commits the write, so a
+    * crash mid-write leaves no marker and the next session rebuilds; a
+    * stale dataset changes the fingerprint and a catalog format change
+    * the prefix, so both fall out naturally. Failures to persist
+    * degrade to the in-memory path, never to an error.
     */
   def memoWarm(spark: SparkSession, dir: String, tag: String,
       labels: Seq[String])(samplesBuild: => DataFrame): TagIndex =
     memo(spark, dir, tag) {
-      val fp = Tables.fingerprint(s"$dir/events.parquet")
-      val safe = tag.replaceAll("[^A-Za-z0-9]", "_")
-      val base = graft.Memo.tmp(s"graft_warmidx_${fp}_$safe")
-      val done = new java.io.File(base, "_done")
-      val catP = new java.io.File(base, "catalog").toString
-      if (done.exists())
-        new TagIndex(samplesBuild, labels, Some(spark.read.parquet(catP)))
-      else {
-        val i = new TagIndex(samplesBuild, labels)
-        try {
+      val fp = Tables.fingerprint(s"$dir/events.parquet") + "_" +
+        tag.replaceAll("[^A-Za-z0-9]", "_")
+      var built: TagIndex = null
+      try {
+        val base = graft.Memo.landed(s"graft_warmidx_${IndexStore.Layout}", fp) { b =>
+          built = new TagIndex(samplesBuild, labels)
           // single-file layout: the table is ∝ #series (MBs), and a
           // 32-file shuffle layout costs 32 footer reads + 32 reader
           // inits on every warm load — the exact latency this cache
           // exists to remove (at huge #series, bump to a few files).
           // The write fills the registry-held cache that memo pins.
-          graft.Memo.cached(spark, catalogKey(dir, tag))(i.catalogPlan)
-            .coalesce(1).write.mode("overwrite").parquet(catP)
-          done.createNewFile()
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[graft] warm-index persist failed ($base): $e")
+          graft.Memo.cached(spark, catalogKey(dir, tag))(built.catalogPlan)
+            .coalesce(1).write.mode("overwrite").parquet(s"$b/catalog")
         }
-        i
+        if (built != null) built
+        else new TagIndex(samplesBuild, labels, Some(spark.read.parquet(s"$base/catalog")))
+      } catch {
+        case e: Throwable if built != null =>
+          System.err.println(s"[graft] warm-index persist failed: $e")
+          built
       }
     }
 

@@ -1858,9 +1858,7 @@ object Io {
     // and the rewrite both honor prior deletes (a DV-deleted row can
     // neither match nor resurrect)
     val live =
-      if (priorDv.isEmpty) raw
-      else raw.join(broadcast(dvEntries(spark, table, priorDv)),
-        Seq("__f", "__p"), "left_anti")
+      if (priorDv.isEmpty) raw else dvJoin(raw, dvEntries(spark, table, priorDv))
     val dataCols = raw.columns.filterNot(Set("__f", "__p")).toIndexedSeq
     require(dataCols.toSet == source.columns.toSet,
       s"merge source columns ${source.columns.mkString(",")} must match " +
@@ -2109,9 +2107,7 @@ object Io {
         val base = readFilesDeclared(spark, table,
           fs.toSeq.sorted.map(f => resolve(table, f)))
         entries(dv) match {
-          case Some(e) => Some(withFilePos(base)
-            .join(broadcast(e), Seq("__f", "__p"), "left_anti")
-            .drop("__f", "__p"))
+          case Some(e) => Some(dvJoin(withFilePos(base), e).drop("__f", "__p"))
           case None => Some(base)
         }
       }
@@ -2155,8 +2151,7 @@ object Io {
           }
           val shared = withFilePos(readFilesDeclared(spark, table,
             sharedFiles.toSeq.sorted.map(f => resolve(table, f))))
-          Some(shared.join(broadcast(fresh), Seq("__f", "__p"), "left_semi")
-            .drop("__f", "__p")
+          Some(dvJoin(shared, fresh, "left_semi").drop("__f", "__p")
             .withColumn("change_type", lit(changeType)))
         case _ => None
       }
@@ -3008,6 +3003,12 @@ object Io {
       regexp_extract(input_file_name(), "data/[^/]+/[^/]+$", 0).as("__f"),
       col("_metadata.row_index").as("__p"))
 
+  /** The rows of a [[withFilePos]] view `pos` outside the broadcast
+    * (`__f`, `__p`) entries `dv` — or, with `how = "left_semi"`, only
+    * the rows at them. */
+  private def dvJoin(pos: DataFrame, dv: DataFrame, how: String = "left_anti"): DataFrame =
+    pos.join(broadcast(dv), Seq("__f", "__p"), how)
+
   /** Merge-on-read DELETE: rows matching `pred` disappear from the new
     * version WITHOUT rewriting their files — unless a file's matched
     * fraction exceeds `cowFraction`, in which case that file falls
@@ -3033,9 +3034,7 @@ object Io {
     val raw = withFilePos(
       readFilesDeclared(spark, table, files.map(resolve(table, _))))
     val live =
-      if (priorDv.isEmpty) raw
-      else raw.join(broadcast(dvEntries(spark, table, priorDv)),
-        Seq("__f", "__p"), "left_anti")
+      if (priorDv.isEmpty) raw else dvJoin(raw, dvEntries(spark, table, priorDv))
     val perFile = live.withColumn("__m", when(pred, 1L).otherwise(0L))
       .groupBy(col("__f"))
       .agg(count(lit(1)).as("__rows"), sum(col("__m")).as("__nm"))
@@ -3099,11 +3098,9 @@ object Io {
     val nv = v + 1
     val rewritten0 =
       if (touchedFull.isEmpty) Seq.empty[String]
-      else landData(
-        withFilePos(
-          readFilesDeclared(spark, table, touchedFull.map(resolve(table, _))))
-          .join(broadcast(dv), Seq("__f", "__p"), "left_anti")
-          .drop("__f", "__p"), table, s"c$nv")
+      else landData(dvJoin(withFilePos(
+        readFilesDeclared(spark, table, touchedFull.map(resolve(table, _)))), dv)
+        .drop("__f", "__p"), table, s"c$nv")
     val keptFiles = files.filterNot(f => touched(trail(f)))
     val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)
     // no .dv sidecar at nv: absence = no deletion vectors
@@ -3198,11 +3195,9 @@ object Io {
     if (touchedFull.isEmpty) return v
     val dv = dvEntries(spark, table, dvDirs)
     val nv = v + 1
-    val rewritten0 = landData(
-      withFilePos(
-        readFilesDeclared(spark, table, touchedFull.map(resolve(table, _))))
-        .join(broadcast(dv), Seq("__f", "__p"), "left_anti")
-        .drop("__f", "__p"), table, s"c$nv")
+    val rewritten0 = landData(dvJoin(withFilePos(
+      readFilesDeclared(spark, table, touchedFull.map(resolve(table, _)))), dv)
+      .drop("__f", "__p"), table, s"c$nv")
     val keptFiles = files.filterNot(f => onlyTrails(trail(f)))
     val keptTrails = keptFiles.map(trail).toSet
     val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.index.SegmentLog
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -1301,11 +1302,11 @@ object StreamOps extends Serializable {
     * same directory instead of appending duplicates — the flaw of a
     * plain append sink), and the index flush skips its committed
     * segment. Readers see `batch` as one more partition column; day
-    * pruning is unaffected. Periodic
-    * [[graft.index.IndexStore.compact]] during ingest pauses bounds
-    * read amplification, exactly manual_compact (which serializes on
-    * the reference's compaction_mutex; compact itself aborts safely if
-    * a racing flush commits mid-merge).
+    * pruning is unaffected. Read amplification stays bounded with no
+    * ingest pause: a flush that leaves more than
+    * [[graft.index.SegmentLog.MaxLive]] segments live merges them, and
+    * [[graft.index.IndexStore.compact]] (manual_compact) may run at
+    * any time alongside the stream.
     */
   def streamToStoreIndexed(samples: DataFrame, outPath: String,
       checkpoint: String, indexPath: String,
@@ -1860,32 +1861,39 @@ object StreamOps extends Serializable {
   /** H15: streaming materialized-view maintenance — the C21 merge run
     * as the ingest loop: every micro-batch aggregates to the mergeable
     * (n, sum, sum-of-squares) state and commits it as its OWN
-    * `seg=b<batchId>` parquet directory (mode-overwrite, so a
-    * foreachBatch replay rewrites the same segment instead of
-    * double-counting — the H3b idempotence rule). The view is
-    * merge-on-read: union the committed segments, one sum-merge
-    * groupBy. Refresh cost ∝ |batch|; periodic segment compaction
-    * (rewrite the union as one segment) bounds read amplification,
-    * same as IndexStore/TermStore. [[mvRead]] must equal the batch
-    * recompute — StreamingSpec asserts it against C21's contract.
+    * `seg=b<batchId>` segment of a [[graft.index.SegmentLog]]
+    * (mode-overwrite, so a foreachBatch replay rewrites the same
+    * segment instead of double-counting — the H3b idempotence rule).
+    * The view is merge-on-read over the live segments, one sum-merge
+    * groupBy. Refresh cost ∝ |batch|; a flush that leaves more than
+    * [[graft.index.SegmentLog.MaxLive]] segments live merges them into
+    * one, which bounds read amplification, as in IndexStore/TermStore.
+    * [[mvRead]] must equal the batch recompute — StreamingSpec asserts
+    * it against C21's contract.
     */
   def streamMvMaintain(samples: Dataset[Sample], path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     samples.toDF().writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch
+        val spark = batch.sparkSession
+        val state = batch
           .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
           .groupBy(col("usr"), col("typ"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"),
             sum(col("cents") * col("cents")).as("sq"))
-          .write.mode("overwrite").parquet(s"$path/seg=b$batchId")
+        SegmentLog.append(spark, path, SegmentLog.list(spark, path),
+          SegmentLog.batchSeg(batchId), state)(mvFold(spark, path))
       }
       .start()
 
-  /** Merge-on-read over the committed MV segments. */
+  /** Merge-on-read over the live MV segments. */
   def mvRead(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    mvFold(spark, path)(SegmentLog.list(spark, path))
+
+  private def mvFold(spark: SparkSession, path: String)(
+      l: SegmentLog.Listing): DataFrame =
+    SegmentLog.read(spark, path, l.live)
       .groupBy(col("usr"), col("typ"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
         sum(col("sq")).as("sq"))
@@ -2028,9 +2036,9 @@ object StreamOps extends Serializable {
           graft.text.TermStore.flush(batch, s"$b/store", id)
         }
         .start())
-      // fold the micro-batch segments (round 11): the gate now
-      // answers from the COMPACTED store — same oracle, proving the
-      // backup-rename fold changes nothing a reader can observe
+      // merge the micro-batch segments: the gate answers from the
+      // COMPACTED store — same oracle, proving the merge segment
+      // changes nothing a reader can observe
       graft.text.TermStore.compact(spark, s"$b/store")
     }
     val docs = graft.Tables.documents(spark, dir)

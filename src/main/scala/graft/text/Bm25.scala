@@ -140,8 +140,9 @@ object Bm25 {
     * (and oracle) over them proves flushed postings answer exactly
     * like freshly-derived ones. Documents are immutable, so segments
     * are append-only; the ranking here is served from the COMPACTED
-    * store (round 11) — the same oracle staying green proves the
-    * [[TermStore.compact]] fold changes nothing a reader can observe.
+    * store, one merge segment — the same oracle staying green proves
+    * the [[TermStore.compact]] merge changes nothing a reader can
+    * observe.
     */
   def storedTopk(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -169,115 +170,49 @@ object Bm25 {
       queryDocs, Some(s"store:$memoKey"))
 }
 
-/** LSM-lite store for the BM25 postings: one `seg=b<batchId>` parquet
-  * directory per flushed document batch, `_SUCCESS`-gated and
-  * idempotent (a committed batch id is never rewritten — safe under
-  * foreachBatch replay). Append-only because documents are immutable;
-  * merge-on-read is the union of committed segments.
+/** LSM-lite store for the BM25 postings, a [[graft.index.SegmentLog]]:
+  * one `seg=b<batchId>` parquet segment per flushed document batch,
+  * `_SUCCESS`-gated and idempotent (a batch id at or below the store's
+  * max ordinal is never rewritten — safe under foreachBatch replay).
+  * Append-only because documents are immutable; merge-on-read is the
+  * union of the live segments.
   *
-  * Round 11 adds [[compact]]: a year of micro-batches would otherwise
-  * make every read a million-segment union — the planning cost (file
-  * listing + footer fetches) grows ∝ #segments even though the data
-  * volume doesn't. Compaction folds all committed segments into ONE
-  * under the HIGHEST batch ordinal, via the IndexStore backup-rename
-  * swap (the reference's try_compact shape, cow_tree.h discipline):
-  * write the merged copy aside, freeze the store by renaming it to
-  * `.bak`, verify nothing committed in between, swap the merged copy
-  * in, drop the backup. A crash at any point leaves either the old
-  * store, or the backup that [[recover]] restores — never a nested,
-  * doubled, or lost store. Replayed flushes of compacted-away batch
-  * ids stay no-ops (the max-ordinal guard below), which is what makes
-  * compaction safe under a live foreachBatch ingest loop.
+  * [[compact]] bounds read amplification: a year of micro-batches
+  * would otherwise make every read a million-segment union — the
+  * planning cost (file listing + footer fetches) grows ∝ #segments
+  * even though the data volume doesn't. A merge commits the union of
+  * the live segments as one more segment under their highest batch
+  * ordinal and deletes the segments it covers (the reference's
+  * try_compact shape); a flush merges on its own once more than
+  * [[graft.index.SegmentLog.MaxLive]] segments are live. Replayed
+  * flushes of merged batch ids stay no-ops, which is what makes a
+  * merge safe under a live foreachBatch ingest loop.
   */
 object TermStore {
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedSegs(spark: SparkSession, path: String): Seq[String] = {
-    val f = fs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg=b"))
-      .filter(s => f.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName).toIndexedSeq.sorted
-  }
-
-  private def segId(name: String): Long =
-    name.stripPrefix("seg=b").toLong
-
-  private def maxCommittedId(spark: SparkSession, path: String): Long =
-    committedSegs(spark, path).map(segId).foldLeft(-1L)(math.max)
+  import graft.index.SegmentLog
 
   def flush(docsBatch: DataFrame, path: String, batchId: Long): Unit = {
     val spark = docsBatch.sparkSession
-    val seg = new org.apache.hadoop.fs.Path(s"$path/seg=b$batchId")
-    val f = fs(spark, path)
-    if (f.exists(new org.apache.hadoop.fs.Path(seg, "_SUCCESS"))) return
+    val l = SegmentLog.list(spark, path)
     // a batch id at or below the store's max ordinal was already
-    // committed — its segment may have been folded away by [[compact]],
-    // and re-flushing it would double-count the batch's tokens
-    if (batchId <= maxCommittedId(spark, path)) return
-    Bm25.postings(docsBatch)
-      .write.mode("overwrite").parquet(seg.toString)
+    // committed — perhaps into a merge — and re-flushing it would
+    // double-count the batch's tokens
+    if (l.maxOrdinal.forall(batchId > _))
+      SegmentLog.append(spark, path, l, SegmentLog.batchSeg(batchId),
+        Bm25.postings(docsBatch))(fold(spark, path))
   }
 
   def load(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
-    val segs = committedSegs(spark, path).map(n => s"$path/$n")
-    require(segs.nonEmpty, s"no committed term-store segments at $path")
-    spark.read.option("basePath", path).parquet(segs: _*)
-      .select("doc_id", "w", "tf")
+    val l = SegmentLog.list(spark, path)
+    require(l.live.nonEmpty, s"no committed term-store segments at $path")
+    fold(spark, path)(l)
   }
 
-  /** Fold every committed segment into one under the max batch
-    * ordinal. Safe against a racing flush: the store is frozen
-    * (renamed aside) before the swap, and if the frozen snapshot
-    * differs from what was merged the compact ABORTS restoring the
-    * original — both copies preserved, nothing double-counted.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    recover(spark, path)
-    val snapshot = committedSegs(spark, path)
-    if (snapshot.size <= 1) return // already compact (or empty)
-    val sn = s"seg=b${snapshot.map(segId).max}"
-    val tmp = path + ".compacting"
-    val bak = path + ".bak"
-    val f = fs(spark, path)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // Hadoop rename onto an EXISTING directory nests the source inside
-    // the destination — every rename checks destination absence first
-    // (the IndexStore.compact lesson)
-    f.delete(p(tmp), true)
-    spark.read.option("basePath", path)
-      .parquet(snapshot.map(n => s"$path/$n"): _*)
-      .select("doc_id", "w", "tf")
-      .write.mode("overwrite").parquet(s"$tmp/$sn")
-    f.delete(p(bak), true)
-    require(f.rename(p(path), p(bak)) && !f.exists(p(path)),
-      s"rename $path -> $bak failed")
-    if (committedSegs(spark, bak).toSet != snapshot.toSet) {
-      require(!f.exists(p(path)) && f.rename(p(bak), p(path)),
-        s"restore $bak -> $path failed; pre-compact store at $bak")
-      f.delete(p(tmp), true)
-      throw new IllegalStateException(
-        s"term store at $path changed during compact; aborted without " +
-          "touching the store — retry during an ingest pause")
-    }
-    require(!f.exists(p(path)) && f.rename(p(tmp), p(path)),
-      s"rename $tmp -> $path failed; pre-compact store preserved at $bak")
-    f.delete(p(bak), true)
-  }
+  /** Fold the live segments into one merge segment under their max
+    * batch ordinal; flushes may run alongside. */
+  def compact(spark: SparkSession, path: String): Unit =
+    SegmentLog.merge(spark, path)(fold(spark, path))
 
-  /** Heal the compact crash window: store path gone + complete backup
-    * present → restore the backup. Invoked by [[load]] and
-    * [[compact]]. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-    if (!f.exists(new org.apache.hadoop.fs.Path(path)) && f.exists(bak))
-      require(f.rename(bak, new org.apache.hadoop.fs.Path(path)),
-        s"recover: rename $bak -> $path failed")
-  }
+  private def fold(spark: SparkSession, path: String)(l: SegmentLog.Listing): DataFrame =
+    SegmentLog.read(spark, path, l.live).select("doc_id", "w", "tf")
 }

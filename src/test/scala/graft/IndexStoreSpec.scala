@@ -317,29 +317,128 @@ class IndexStoreSpec extends AnyFunSuite {
   }
   private val t0 = 1700000000000000000L
 
-  /** ADVICE (round 3, medium): materialize used to delete the live
-    * store BEFORE writing the rebuild — a crash in between rendered a
-    * silently-empty index. Now it is write-aside + swap: re-materialize
-    * over an existing store must leave exactly the new content, no
-    * residue, and a store frozen at the backup (the crash window
-    * between the two swap renames) must heal.
+  /** materialize is the first flush only: a rebuild over a live store
+    * would have to delete it first, and a crash in between would render
+    * a silently-empty index. Over a store holding committed segments it
+    * refuses and leaves the store exactly as it was.
     */
-  test("materialize over an existing store swaps atomically and heals the backup window") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_swap").toString + "/idx"
+  test("materialize over a committed store is refused and leaves it intact") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_first").toString + "/idx"
     IndexStore.materialize(mkIdx(Seq((1L, t0, "1", "click", 1.0))), tmp)
-    IndexStore.materialize(mkIdx(Seq(
-      (2L, t0 + 1000L, "2", "view", 1.0), (3L, t0 + 2000L, "2", "view", 1.0))), tmp)
     def vals = IndexStore.load(spark, tmp)
       .collect().map(r => (r.getAs[String]("usr"), r.getAs[Long]("n_samples"))).toSet
-    assert(vals == Set(("2", 2L)), s"swap left stale or mixed content: $vals")
-    assert(!new java.io.File(tmp + ".compacting").exists(), "tmp residue")
-    assert(!new java.io.File(tmp + ".bak").exists(), "bak residue")
+    val segs = segNames(tmp)
+    val ex = intercept[IllegalArgumentException] {
+      IndexStore.materialize(mkIdx(Seq(
+        (2L, t0 + 1000L, "2", "view", 1.0), (3L, t0 + 2000L, "2", "view", 1.0))), tmp)
+    }
+    assert(ex.getMessage.contains("first flush"), ex.getMessage)
+    assert(vals == Set(("1", 1L)) && segNames(tmp) == segs)
+  }
 
-    // crash window: store renamed away, swap-in never happened
-    val f = new java.io.File(tmp)
-    assert(f.renameTo(new java.io.File(tmp + ".bak")))
-    IndexStore.recover(spark, tmp)
-    assert(vals == Set(("2", 2L)))
+  private def segNames(path: String): Seq[String] =
+    Option(new java.io.File(path).list()).toSeq.flatten.filter(_.startsWith("seg=")).sorted
+
+  /** A catalog frame as comparable rows, whatever its column order. */
+  private def catalogRows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.select("tsid", "usr", "typ", "min_ts", "max_ts", "n_samples")
+      .collect().map(_.toSeq).toSet
+
+  /** Batch b: one series shared across batches, one of its own. */
+  private def batchRows(b: Int): Seq[(Long, Long, String, String, Double)] =
+    Seq((2L * b, t0 + b * 1000000L, (b % 3).toString, "click", 1.0),
+      (2L * b + 1, t0 + b * 1000000L + 1L, s"n$b", "view", 1.0))
+
+  test("flushes racing repeated compacts lose nothing") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_race").toString + "/bidx"
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val merges = new java.util.concurrent.atomic.AtomicInteger()
+    var failure: Option[Throwable] = None
+    val compacter = new Thread(() =>
+      try while (!stop.get()) { IndexStore.compact(spark, tmp); merges.incrementAndGet() }
+      catch { case e: Throwable => failure = Some(e) })
+    compacter.start()
+    try (0 until 12).foreach(b => IndexStore.flushBatch(mkIdx(batchRows(b)), tmp, b.toLong))
+    finally { stop.set(true); compacter.join() }
+    failure.foreach(throw _)
+    assert(merges.get() > 0)
+    IndexStore.compact(spark, tmp)
+    assert(segNames(tmp).size == 1, segNames(tmp))
+    assert(catalogRows(IndexStore.load(spark, tmp)) ==
+      catalogRows(mkIdx((0 until 12).flatMap(batchRows)).seriesCatalog))
+  }
+
+  test("flushes with no compact keep at most SegmentLog.MaxLive segments live") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bound").toString + "/bidx"
+    val n = index.SegmentLog.MaxLive + 3
+    for (b <- 0 until n) {
+      IndexStore.flushBatch(mkIdx(batchRows(b)), tmp, b.toLong)
+      val live = index.SegmentLog.list(spark, tmp).live
+      assert(live.size <= index.SegmentLog.MaxLive, s"after batch $b: $live")
+      assert(segNames(tmp).size == live.size, "a merge left covered segments behind")
+    }
+    assert(segNames(tmp).exists(_.contains("m")), s"no merge ran: ${segNames(tmp)}")
+    val want = catalogRows(mkIdx((0 until n).flatMap(batchRows)).seriesCatalog)
+    assert(catalogRows(IndexStore.load(spark, tmp)) == want)
+    assert(catalogRows(IndexStore.loadAt(spark, tmp, n - 1L)) == want)
+  }
+
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    if (from.isDirectory) {
+      to.mkdirs(); from.listFiles().foreach(f => copyTree(f, new java.io.File(to, f.getName)))
+    } else java.nio.file.Files.copy(from.toPath, to.toPath)
+
+  /** The two shapes a crashed merge leaves: its own directory without
+    * `_SUCCESS` (the next merge overwrites it), or a committed merge
+    * whose covered segments and tombstones were never deleted (readers
+    * skip them, the next merge deletes them). */
+  test("crash shapes: an uncommitted merge is ignored and overwritten; " +
+      "a committed merge's covered leftovers read as deleted") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_crash").toString + "/bidx"
+    (0 until 3).foreach(b => IndexStore.flushBatch(mkIdx(batchRows(b)), tmp, b.toLong))
+    assert(IndexStore.deleteSeries(spark, tmp, Seq(LabelMatcher("usr", MatchOp.Eql, "n1"))) == 1)
+    val want = catalogRows(IndexStore.load(spark, tmp))
+    // a merge that died mid-write: the next merge's name, foreign rows,
+    // no _SUCCESS; a stale one of an older k beside it
+    for (m <- Seq("seg=b2m1", "seg=b1m1")) {
+      mkIdx(batchRows(7)).seriesCatalog.write.parquet(s"$tmp/$m")
+      assert(new java.io.File(s"$tmp/$m/_SUCCESS").delete())
+    }
+    assert(catalogRows(IndexStore.load(spark, tmp)) == want)
+    val before = new java.io.File(tmp + "_before")
+    copyTree(new java.io.File(tmp), before)
+    IndexStore.compact(spark, tmp)
+    assert(segNames(tmp) == Seq("seg=b2m1") && new java.io.File(s"$tmp/seg=b2m1/_SUCCESS").exists())
+    assert(!new java.io.File(tmp, "del=0").exists())
+    assert(catalogRows(IndexStore.load(spark, tmp)) == want)
+
+    // a merge that committed and died before its deletes
+    for (d <- Seq("seg=b0", "seg=b1", "seg=b2", "del=0"))
+      copyTree(new java.io.File(before, d), new java.io.File(tmp, d))
+    assert(catalogRows(IndexStore.load(spark, tmp)) == want)
+    assert(catalogRows(IndexStore.loadAt(spark, tmp, 2L)) == want)
+    assert(IndexStore.resolvePostings(spark, tmp, Seq(LabelMatcher("usr", MatchOp.Eql, "n1"))).isEmpty)
+    IndexStore.compact(spark, tmp)
+    assert(segNames(tmp).size == 1 && !new java.io.File(tmp, "del=0").exists(), segNames(tmp))
+    assert(catalogRows(IndexStore.load(spark, tmp)) == want)
+  }
+
+  /** The segment protocol is written once: the stores name no `seg=`
+    * directory, list no `_SUCCESS` marker and rename or back up no
+    * store directory outside [[index.SegmentLog]]. */
+  test("no store module outside SegmentLog spells the segment protocol") {
+    val root = new java.io.File("src/main/scala/graft")
+    val files = Seq("index", "text", "streaming")
+      .flatMap(d => Option(new java.io.File(root, d).listFiles()).toSeq.flatten)
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "SegmentLog.scala")
+    assert(files.exists(_.getName == "IndexStore.scala"), s"no sources under ${root.getAbsolutePath}")
+    val offenders = for {
+      f <- files
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      pat <- Seq("\"seg=", "\"_SUCCESS\"", "\".bak\"", ".rename(") if src.contains(pat)
+    } yield s"${f.getPath}: $pat"
+    assert(offenders.isEmpty,
+      "the segment protocol belongs in graft.index.SegmentLog:\n" + offenders.mkString("\n"))
   }
 
   /** ADVICE (round 3): a RESET streaming checkpoint restarts batch ids

@@ -171,6 +171,23 @@ class StreamingSpec extends AnyFunSuite {
       s"merge-on-read view diverged from recompute: $merged vs $batch")
   }
 
+  test("H15: the MV view ignores a segment a crash left without _SUCCESS") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_mv_crash").toString
+    val in = MemoryStream[Sample]
+    val q = StreamOps.streamMvMaintain(in.toDS(), s"$tmp/mv", s"$tmp/ck")
+    try { in.addData(Seq(Sample(0, ts(0), "1", "click", 2.5))); q.processAllAvailable() }
+    finally q.stop()
+    val committed = StreamOps.mvRead(spark, s"$tmp/mv").collect().map(_.toSeq).toSet
+    // the next batch's segment, written but never committed
+    Seq(("1", "click", 5L, 100L, 1000L)).toDF("usr", "typ", "n", "s", "sq")
+      .write.parquet(s"$tmp/mv/seg=b1")
+    assert(new java.io.File(s"$tmp/mv/seg=b1/_SUCCESS").delete())
+    assert(StreamOps.mvRead(spark, s"$tmp/mv").collect().map(_.toSeq).toSet == committed,
+      "a partial segment was summed into the view")
+  }
+
   test("H4: streaming rate closes buckets on next-bucket arrival and on timeout") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

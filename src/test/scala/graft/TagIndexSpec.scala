@@ -159,7 +159,7 @@ class TagIndexSpec extends AnyFunSuite {
     // force a cold build (wipes this dataset's warm dir and the memo)
     val fp = Tables.fingerprint(s"$dir/events.parquet")
     val warm = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_warmidx_${fp}_usr_typ")
+      s"graft_warmidx_${graft.index.IndexStore.Layout}_${fp}_usr_typ")
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** TermStore segment compaction (round 11): the backup-rename fold of
-  * committed `seg=b*` postings segments. The DuckDB gates
-  * (`bm25_stored`, `stream_bm25`) prove the compacted store RANKS
+/** TermStore segment compaction: a merge commits the union of the
+  * live `seg=b*` postings segments as one more segment. The DuckDB
+  * gates (`bm25_stored`, `stream_bm25`) prove the compacted store RANKS
   * identically; this spec pins the store mechanics the oracle can't
   * see — merged-view equivalence at the postings level, idempotent
   * re-compaction, the replayed-flush no-op that makes compaction safe
-  * under a live ingest loop, and crash-window recovery.
+  * under a live ingest loop, and the shapes a crashed merge leaves.
   */
 class TermStoreSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -46,14 +46,11 @@ class TermStoreSpec extends AnyFunSuite {
     val before = postingsSet(p)
     assert(segNames(p) == Seq("seg=b0", "seg=b1", "seg=b2"))
     text.TermStore.compact(spark, p)
-    assert(segNames(p) == Seq("seg=b2"), "one segment, max ordinal")
+    assert(segNames(p) == Seq("seg=b2m1"), "one segment, max ordinal")
     assert(postingsSet(p) == before, "merged view must be unchanged")
     // idempotent: a second compact leaves the store as-is
     text.TermStore.compact(spark, p)
-    assert(segNames(p) == Seq("seg=b2") && postingsSet(p) == before)
-    // no backup or working copy left behind
-    assert(!new java.io.File(p + ".bak").exists())
-    assert(!new java.io.File(p + ".compacting").exists())
+    assert(segNames(p) == Seq("seg=b2m1") && postingsSet(p) == before)
   }
 
   test("a replayed flush of a compacted-away batch id is a NO-OP — " +
@@ -61,27 +58,46 @@ class TermStoreSpec extends AnyFunSuite {
     val p = s"$tmp/replay"
     text.TermStore.flush(docs(1L -> "x y"), p, 0L)
     text.TermStore.flush(docs(2L -> "y z"), p, 1L)
-    text.TermStore.compact(spark, p) // seg=b0 folded into seg=b1
+    text.TermStore.compact(spark, p) // seg=b0 and seg=b1 merged into seg=b1m1
     val after = postingsSet(p)
     // the checkpoint replays batch 0: its segment is gone, but its
-    // tokens are in the fold — re-flushing would double-count
+    // tokens are in the merge — re-flushing would double-count
     text.TermStore.flush(docs(1L -> "x y"), p, 0L)
-    assert(segNames(p) == Seq("seg=b1"))
+    assert(segNames(p) == Seq("seg=b1m1"))
     assert(postingsSet(p) == after)
     // a genuinely NEW batch id still lands
     text.TermStore.flush(docs(3L -> "w"), p, 2L)
-    assert(segNames(p) == Seq("seg=b1", "seg=b2"))
+    assert(segNames(p) == Seq("seg=b1m1", "seg=b2"))
     assert(postingsSet(p) == after + ((3L, "w", 1L)))
   }
 
-  test("crash window: store renamed aside but swap unfinished → " +
-      "recover (via load) restores the backup") {
+  private def copyTree(from: java.io.File, to: java.io.File): Unit =
+    if (from.isDirectory) {
+      to.mkdirs(); from.listFiles().foreach(f => copyTree(f, new java.io.File(to, f.getName)))
+    } else java.nio.file.Files.copy(from.toPath, to.toPath)
+
+  test("crash shapes: an uncommitted merge is ignored and overwritten; " +
+      "a committed merge's covered leftovers read as deleted") {
     val p = s"$tmp/crash"
     text.TermStore.flush(docs(1L -> "q r"), p, 0L)
+    text.TermStore.flush(docs(2L -> "r s"), p, 1L)
     val before = postingsSet(p)
-    // simulate the crash between `path -> bak` and `tmp -> path`
-    assert(new java.io.File(p).renameTo(new java.io.File(p + ".bak")))
-    assert(postingsSet(p) == before, "load must self-heal from the backup")
-    assert(!new java.io.File(p + ".bak").exists())
+    // a merge that died mid-write: the next merge's name, foreign
+    // postings, no _SUCCESS
+    docs(9L -> "zz").write.parquet(s"$p/seg=b1m1")
+    assert(new java.io.File(s"$p/seg=b1m1/_SUCCESS").delete())
+    assert(postingsSet(p) == before)
+    val flushed = new java.io.File(s"$tmp/crash_flushed")
+    copyTree(new java.io.File(p), flushed)
+    text.TermStore.compact(spark, p)
+    assert(segNames(p) == Seq("seg=b1m1") && new java.io.File(s"$p/seg=b1m1/_SUCCESS").exists())
+    assert(postingsSet(p) == before)
+    // a merge that committed and died before deleting what it covers
+    for (s <- Seq("seg=b0", "seg=b1"))
+      copyTree(new java.io.File(flushed, s), new java.io.File(p, s))
+    assert(postingsSet(p) == before)
+    text.TermStore.compact(spark, p)
+    assert(segNames(p) == Seq("seg=b1m1"), "the next compact deletes the covered leftovers")
+    assert(postingsSet(p) == before)
   }
 }
