@@ -130,7 +130,8 @@ object ScaleProbe {
     // round-9 headline: the composed IVF-PQ serving path (coarse
     // quantizer + residual product codes). Growth drivers: train ∝
     // N·(k + m·ks)·iters dots, probe ∝ N·nprobe/k ADC byte-lookups.
-    t("ivfpq_train_probe")(similarity.Ann.ivfPqTopkOn(edecor, col("vec_id") < 10))
+    t("ivfpq_train_probe")(similarity.Ann.ivfPqTopkOn(edecor, col("vec_id") < 10,
+      nprobe = 4, candN = 64))
     // round-8 quantized-serving ladder over the factor× decorrelated
     // corpus, fixed 10-query set: the MRL prefix scan reads d0/dim of
     // the vector bytes per candidate dot; the BQ Hamming scan is two
@@ -139,7 +140,7 @@ object ScaleProbe {
     t("mrl_scan")(similarity.Ann.mrlTopkOn(
       edecor.withColumn("u", expr("transform(v, x -> cast(x as double) / norm)")),
       col("vec_id") < 10, d0 = 16, candN = 50))
-    t("bq_scan")(similarity.Ann.bqTopkOn(edecor, col("vec_id") < 10))
+    t("bq_scan")(similarity.Ann.bqTopkOn(edecor, col("vec_id") < 10, candN = 50))
     t("lsh_pair_scan") {
       // same candidate + verify pipeline as the gated dedup_embedding_lsh
       dedup.Dedup.cosineVerify(

@@ -19,9 +19,10 @@ object Ann {
     * double inside its codegen loop, so no per-row array<double> copy.
     *
     * Memoized per (session, dir) via [[graft.Memo]]: the normalized +
-    * unit-vector corpus prep is shared across the six ANN queries
-    * (bruteforce / mips / filtered / ivf / ivf_full / pq / pq_full) and
-    * across every Lloyd/probe/re-rank pass inside one query — without
+    * unit-vector corpus prep is shared across the ANN queries
+    * (bruteforce, mips, filtered, ivf, pq, ivfpq, sq8, mrl, bq and their
+    * exhaustive twins) and across every Lloyd/probe/re-rank pass inside
+    * one query — without
     * it, ann_ivf alone re-reads parquet and re-normalizes 6–7 times per
     * invocation (the round-5 regression). At 100 TB the same line is a
     * materialized unit-vector table written once and scanned per pass.
@@ -41,6 +42,77 @@ object Ann {
 
   private def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
     call_function("vec_dot", a, b) / (na * nb)
+
+  // The ANN skeleton. Every approximate path is encode → candidates →
+  // exact re-rank: a quantized rung (PQ, IVF-PQ, SQ8, MRL, BQ) supplies
+  // its encoder and approximate score, a partitioning path (IVF,
+  // filtered IVF, LSH) its candidate ids, and the rest is shared.
+
+  /** Encode: the coded corpus (the index a serving tier stores), pinned
+    * per (session, `memoKey`, `tag`) for the gated queries — `tag`
+    * names the code and its parameters; keyless (probe) callers derive
+    * it live.
+    */
+  private def coded(spark: SparkSession, memoKey: Option[String], tag: String)(
+      build: => DataFrame): DataFrame =
+    memoKey.fold(build)(mk => graft.Memo.cached(spark, s"$mk:$tag")(build))
+
+  /** A driver-side model (centroids, codebooks), memoized like [[coded]]. */
+  private def model[V](spark: SparkSession, memoKey: Option[String], tag: String)(
+      build: => V): V =
+    memoKey.fold(build)(mk => graft.Memo(spark, s"$mk:$tag")(build))
+
+  /** Every row of `corpus` against each broadcast query row of it
+    * (itself excluded); `qCols` renames the query side's code columns.
+    */
+  private def againstQueries(corpus: DataFrame, isQuery: Column,
+      qCols: (String, String)*): DataFrame = {
+    val q = corpus.filter(isQuery).select(col("vec_id").as("query_id") +:
+      qCols.map { case (c, a) => col(c).as(a) }: _*)
+    corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
+  }
+
+  /** Candidates: the `candN` best rows per query of `scored` (query_id,
+    * vec_id, …) by `score` — descending, or ascending with `asc` — then
+    * vec_id, through the bounded-heap [[graft.functions.TopKAgg]] (its
+    * zero-padded vec_id tie key orders like vec_id for ids in
+    * [0, 10¹²)). `candN <= 0` keeps every row: no pruning. Returns
+    * (query_id, vec_id).
+    */
+  private def candidates(scored: DataFrame, score: Column, asc: Boolean,
+      candN: Int): DataFrame =
+    if (candN <= 0) scored.select(col("query_id"), col("vec_id"))
+    else scored
+      .groupBy(col("query_id"))
+      .agg(graft.functions.TopKAgg.column(scored.sparkSession,
+        score.cast("double"), lpad(col("vec_id").cast("string"), 12, "0"),
+        col("query_id").cast("string"), candN, asc).as("top"))
+      .select(col("query_id"), explode(col("top")).as("t"))
+      .select(col("query_id"), col("t.a").cast("long").as("vec_id"))
+
+  /** Exact re-rank of (query_id, vec_id, …) candidates against the
+    * float vectors of `all` (vec_id, v, norm); `keep` carries query-side
+    * columns of `cands` into the output.
+    */
+  private def exactTop5(cands: DataFrame, all: DataFrame, isQuery: Column,
+      keep: Column*): DataFrame = {
+    val qVecs = all.filter(isQuery)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
+    top5(cands.join(broadcast(qVecs), Seq("query_id")).join(all, Seq("vec_id")),
+      keep: _*)
+  }
+
+  /** Rounded cosine of (qv, qn) × (v, norm) pairs, ranked per query by
+    * (cs desc, vec_id): (query_id, keep…, rk, neighbor_id, cs), top 5.
+    */
+  private def top5(pairs: DataFrame, keep: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cs").desc, col("vec_id"))
+    pairs.withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
+      .select((col("query_id") +: keep) ++ Seq(col("rk"),
+        col("vec_id").as("neighbor_id"), col("cs")): _*)
+  }
 
   /** E1: exact top-5 cosine neighbors for query vectors (vec_id < 10).
     * Ordering key is the rounded cosine + neighbor id, so ranking is
@@ -64,27 +136,13 @@ object Ann {
     val q = all.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qn"), col("label").as("qlabel"))
-    val joined = all.join(broadcast(q),
-      col("vec_id") =!= col("query_id") && col("label") === col("qlabel"))
-      .withColumn("cs",
-        round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("qlabel").as("label"), col("rk"),
-        col("vec_id").as("neighbor_id"), col("cs"))
+    top5(all.join(broadcast(q),
+      col("vec_id") =!= col("query_id") && col("label") === col("qlabel")),
+      col("qlabel").as("label"))
   }
 
-  def bruteforceTopkOn(all: DataFrame, isQuery: Column): DataFrame = {
-    val q = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    val joined = all.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
-  }
+  def bruteforceTopkOn(all: DataFrame, isQuery: Column): DataFrame =
+    top5(againstQueries(all, isQuery, "v" -> "qv", "norm" -> "qn"))
 
   private val Tables_ = 4 // LSH tables
   private val Bits = 6 // hyperplanes per table
@@ -203,11 +261,6 @@ object Ann {
   private def withCell(unit: DataFrame, cents: Array[Array[Double]]): DataFrame =
     unit.withColumn("cell", array_max(cellScores(cents)).getField("cid"))
 
-  /** Spherical k-means over the `u` column: `iters` Lloyd rounds, each
-    * ONE scan + partial agg (the driver holds only k×dim centroid sums
-    * — broadcast-sized state at any corpus size). Empty cells keep
-    * their centroid; seeding is fixed, so training is deterministic.
-    */
   /** Cluster assignment for SemDeDup-style cluster-scoped dedup (D13):
     * the corpus with its spherical-k-means `cell` id attached (same
     * trainer + deterministic tie-break as the IVF index). Input needs
@@ -222,19 +275,12 @@ object Ann {
   }
 
   /** [[assignCells]] with the centroids its caller already trained, so
-    * a search trains them once per call. */
+    * a search trains them once per call. The cell-assigned corpus is the
+    * IVF index (a cell id per vector), coded once per model. */
   private def assignCellsWith(unit: DataFrame, cents: Array[Array[Double]],
-      k: Int, iters: Int, dim: Int, memoKey: Option[String]): DataFrame = {
-    // round 15 (optimization, guide §1.2): the cell-assigned corpus is
-    // the IVF index payload (cell id per vector) — k dot products per
-    // row re-ran per invocation even with the centroids memoized. Pin
-    // it per (session, dataset, model params) for keyed callers (the
-    // coded-corpus discipline); keyless/probe paths derive live.
-    def assignedBuild = withCell(unit, cents)
-    memoKey.map(mk => graft.Memo.cached(unit.sparkSession,
-        s"$mk:assigned:k=$k:it=$iters:d=$dim")(assignedBuild))
-      .getOrElse(assignedBuild)
-  }
+      k: Int, iters: Int, dim: Int, memoKey: Option[String]): DataFrame =
+    coded(unit.sparkSession, memoKey, s"assigned:k=$k:it=$iters:d=$dim")(
+      withCell(unit, cents))
 
   // trained quantizer models are tiny driver-side arrays derived
   // deterministically (fixed seeds) from a fixed corpus — one copy per
@@ -242,13 +288,14 @@ object Ann {
   // each query 3×, and ann_ivfpq needs BOTH models)
   private def trainIvfCentroids(unit: DataFrame, k: Int, iters: Int,
       dim: Int, memoKey: Option[String] = None): Array[Array[Double]] =
-    memoKey match {
-      case Some(key) => graft.Memo(unit.sparkSession,
-          s"$key:ivf_model:k=$k:it=$iters:d=$dim")(
-        trainIvfCentroidsNow(unit, k, iters, dim))
-      case None => trainIvfCentroidsNow(unit, k, iters, dim)
-    }
+    model(unit.sparkSession, memoKey, s"ivf_model:k=$k:it=$iters:d=$dim")(
+      trainIvfCentroidsNow(unit, k, iters, dim))
 
+  /** Spherical k-means over the `u` column: `iters` Lloyd rounds, each
+    * ONE scan + partial agg (the driver holds only k×dim centroid sums
+    * — broadcast-sized state at any corpus size). Empty cells keep
+    * their centroid; seeding is fixed, so training is deterministic.
+    */
   private[graft] def trainIvfCentroidsNow(unit: DataFrame, k: Int, iters: Int,
       dim: Int): Array[Array[Double]] = {
     def normalize(v: Array[Double]): Array[Double] = {
@@ -273,37 +320,26 @@ object Ann {
     cents
   }
 
+  /** Each query's `nprobe` best cells: (query_id, keep…, cell) rows. */
+  private def probes(unit: DataFrame, cents: Array[Array[Double]],
+      isQuery: Column, nprobe: Int, keep: Column*): DataFrame =
+    unit.filter(isQuery)
+      .withColumn("pc", slice(reverse(array_sort(cellScores(cents))), 1, nprobe))
+      .select((col("vec_id").as("query_id") +: keep) :+
+        explode(expr("transform(pc, x -> x.cid)")).as("cell"): _*)
+
   def ivfTopkOn(all: DataFrame, isQuery: Column, k: Int = 16, nprobe: Int = 4,
       iters: Int = 3, dim: Int = 64, memoKey: Option[String] = None): DataFrame = {
-    val spark = all.sparkSession
-    graft.functions.VecFunctions.register(spark)
+    graft.functions.VecFunctions.register(all.sparkSession)
     // spherical k-means works on unit vectors: assignment = max dot
     val unit = unitize(all)
-    def scored(cents: Array[Array[Double]]): Column = cellScores(cents)
     val cents = trainIvfCentroids(unit, k, iters, dim, memoKey)
-    // rides the memoized cell-assignment (assignCells) for keyed
-    // callers — round 15, see assignCells
-    val assigned = assignCellsWith(unit, cents, k, iters, dim, memoKey)
-    // each query probes its nprobe best cells
-    val probes = unit.filter(isQuery)
-      .withColumn("pc", slice(reverse(array_sort(scored(cents))), 1, nprobe))
-      .select(col("vec_id").as("query_id"),
-        explode(expr("transform(pc, x -> x.cid)")).as("cell"))
-    val candIds = assigned.select(col("vec_id"), col("cell"))
-      .join(broadcast(probes), Seq("cell"))
+    val candIds = assignCellsWith(unit, cents, k, iters, dim, memoKey)
+      .select(col("vec_id"), col("cell"))
+      .join(broadcast(probes(unit, cents, isQuery, nprobe)), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
-
-    val qVecs = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    val cand = candIds
-      .join(broadcast(qVecs), Seq("query_id"))
-      .join(all, Seq("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cand.withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    exactTop5(candIds, all, isQuery)
   }
 
   /** E5: centroid coherence scoring — each labeled vector's cosine to
@@ -395,14 +431,12 @@ object Ann {
     // Round frames are session-transient and all released before
     // return — no per-invocation cache leak (the returned frame is a
     // local k-row toDF).
-    // round 15 (optimization, guide §1.2 driver round-trips): ONE
-    // action per round instead of two. Each round's argmax collect is
-    // the FIRST action on the current dist frame, so it materializes
-    // the one new least()/dot column against the still-cached parent
-    // as a side effect of the scan — the separate `next.count()`
-    // materialization barrier is redundant work. The parent is
-    // released AFTER the collect that materialized its child
-    // (unpersist-lag-1), preserving the ancestor-closure guarantee:
+    // ONE action per round: each round's argmax collect is the FIRST
+    // action on the current dist frame, so it materializes the one new
+    // least()/dot column against the still-cached parent as a side
+    // effect of the scan. The parent is released AFTER the collect
+    // that materialized its child (unpersist-lag-1), preserving the
+    // ancestor-closure guarantee:
     // at no point does an unmaterialized frame lose its cached parent,
     // so every round still computes exactly ONE new dot column and
     // picks are bit-identical (AnnMipsSpec pins them).
@@ -614,7 +648,6 @@ object Ann {
       bits: Int = Bits, tables: Int = Tables_): DataFrame = {
     val bucketed = lshBucketed(all.select(col("vec_id"), col("v")),
       bits, tables, 64, 424242L)
-
     // candidate ids first (cheap distinct on a pair of longs); vectors
     // joined back only for the exact-cosine re-rank
     val qBuckets = all.filter(isQuery).select(col("vec_id"), col("v"))
@@ -624,18 +657,7 @@ object Ann {
       .join(broadcast(qBuckets), Seq("t", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
-
-    val qVecs = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    val cand = candIds
-      .join(broadcast(qVecs), Seq("query_id"))
-      .join(all, Seq("vec_id"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cand.withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    exactTop5(candIds, all, isQuery)
   }
 
   /** E2b: the exact-oracle gate for the LSH ANN path. Queries are the
@@ -691,36 +713,17 @@ object Ann {
   def ivfFilteredTopkOn(all: DataFrame, isQuery: Column, k: Int = 16,
       nprobe: Int = 4, iters: Int = 3, dim: Int = 64,
       memoKey: Option[String] = None): DataFrame = {
-    val spark = all.sparkSession
-    graft.functions.VecFunctions.register(spark)
+    graft.functions.VecFunctions.register(all.sparkSession)
     val unit = unitize(all)
     val cents = trainIvfCentroids(unit, k, iters, dim, memoKey)
-    // rides the memoized cell-assignment (assignCells) for keyed
-    // callers — round 15, see assignCells
-    val assigned = assignCellsWith(unit, cents, k, iters, dim, memoKey)
-    val probes = unit.filter(isQuery)
-      .withColumn("pc",
-        slice(reverse(array_sort(cellScores(cents))), 1, nprobe))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        explode(expr("transform(pc, x -> x.cid)")).as("cell"))
-    val candIds = assigned.select(col("vec_id"), col("label"), col("cell"))
-      .join(broadcast(probes), Seq("cell"))
+    val candIds = assignCellsWith(unit, cents, k, iters, dim, memoKey)
+      .select(col("vec_id"), col("label"), col("cell"))
+      .join(broadcast(probes(unit, cents, isQuery, nprobe,
+        col("label").as("qlabel"))), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id") &&
         col("label") === col("qlabel"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val qVecs = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("norm").as("qn"), col("label").as("qlabel"))
-    val cand = candIds
-      .join(broadcast(qVecs), Seq("query_id"))
-      .join(all, Seq("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cand.withColumn("cs",
-        round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("qlabel").as("label"), col("rk"),
-        col("vec_id").as("neighbor_id"), col("cs"))
+      .select(col("query_id"), col("qlabel"), col("vec_id")).distinct()
+    exactTop5(candIds, all, isQuery, col("qlabel").as("label"))
   }
 
   def ivfFilteredFull(spark: SparkSession, dir: String): DataFrame =
@@ -802,51 +805,24 @@ object Ann {
     val cb = trainPqCodebooks(
       resid.select(col("vec_id"), col("u")), m, ks, iters, dim,
       memoKey.map(_ + ":res"))
-    // round 15 (optimization, guide §1.2): the residual-coded corpus
-    // is the IVF-PQ index payload (cell + codes + recon per vector) —
-    // memoized per (session, dataset, coding params) like the plain-PQ
-    // coded frame below; coding is independent of nprobe/candN so
-    // ann_ivfpq and ann_ivfpq_full share one frame.
-    def codedBuild = resid
-      .withColumn("codes", pqCodes(cb, m, sub))
-      .withColumn("__recon0", pqRecon(cb, m))
-      .withColumn("recon", expr("zip_with(__recon0, __cent, (a, b) -> a + b)"))
-      .withColumn("u", col("__fullu"))
-    val coded = memoKey.map(mk => graft.Memo.cached(spark,
-        s"$mk:ivfpqcoded:k=$k:m=$m:ks=$ks:it=$iters:d=$dim")(codedBuild))
-      .getOrElse(codedBuild)
-    val probes = unit.filter(isQuery)
-      .withColumn("pc", slice(reverse(array_sort(cellScores(cents))), 1, nprobe))
-      .select(col("vec_id").as("query_id"),
-        explode(expr("transform(pc, x -> x.cid)")).as("cell"))
-    val qUnit = coded.filter(isQuery)
+    // cell + codes + recon per vector; coding is independent of
+    // nprobe/candN, so ann_ivfpq and ann_ivfpq_full share one frame
+    val ivfpq = coded(spark, memoKey, s"ivfpqcoded:k=$k:m=$m:ks=$ks:it=$iters:d=$dim")(
+      resid
+        .withColumn("codes", pqCodes(cb, m, sub))
+        .withColumn("__recon0", pqRecon(cb, m))
+        .withColumn("recon", expr("zip_with(__recon0, __cent, (a, b) -> a + b)"))
+        .withColumn("u", col("__fullu")))
+    val qUnit = ivfpq.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("u").as("qu"))
     // ADC scan over the PROBED cells only (cells are disjoint per
     // vector, so no candidate appears twice)
-    val adc = coded.select(col("vec_id"), col("cell"), col("recon"))
-      .join(broadcast(probes), Seq("cell"))
+    val adc = ivfpq.select(col("vec_id"), col("cell"), col("recon"))
+      .join(broadcast(probes(unit, cents, isQuery, nprobe)), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qUnit), Seq("query_id"))
-      .withColumn("approx", call_function("vec_dot", col("qu"), col("recon")))
-    val candIds =
-      if (candN <= 0) adc.select(col("query_id"), col("vec_id"))
-      else adc
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAgg.column(spark, col("approx"),
-          lpad(col("vec_id").cast("string"), 12, "0"),
-          col("query_id").cast("string"), candN).as("top"))
-        .select(col("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t.a").cast("long").as("vec_id"))
-    val qVecs = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    candIds
-      .join(broadcast(qVecs), Seq("query_id"))
-      .join(all, Seq("vec_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    exactTop5(candidates(adc, call_function("vec_dot", col("qu"), col("recon")),
+      asc = false, candN), all, isQuery)
   }
 
   def ivfPqTopk(spark: SparkSession, dir: String): DataFrame =
@@ -887,12 +863,8 @@ object Ann {
     */
   private def trainPqCodebooks(unit: DataFrame, m: Int, ks: Int, iters: Int,
       dim: Int, memoKey: Option[String] = None): Array[Array[Array[Double]]] =
-    memoKey match {
-      case Some(key) => graft.Memo(unit.sparkSession,
-          s"$key:pq_model:m=$m:ks=$ks:it=$iters:d=$dim")(
-        trainPqCodebooksNow(unit, m, ks, iters, dim))
-      case None => trainPqCodebooksNow(unit, m, ks, iters, dim)
-    }
+    model(unit.sparkSession, memoKey, s"pq_model:m=$m:ks=$ks:it=$iters:d=$dim")(
+      trainPqCodebooksNow(unit, m, ks, iters, dim))
 
   private def trainPqCodebooksNow(unit: DataFrame, m: Int, ks: Int, iters: Int,
       dim: Int): Array[Array[Array[Double]]] = {
@@ -927,47 +899,15 @@ object Ann {
     val sub = dim / m
     val unit = unitize(all)
     val cb = trainPqCodebooks(unit, m, ks, iters, dim, memoKey)
-
-    // encode + reconstruct (the Σ_s codebook_s[code_s] concatenation).
-    // round 15 (optimization, guide §1.2): the coded corpus IS the PQ
-    // index a serving tier persists (FAISS stores exactly these codes)
-    // — m·ks subspace dots + the recon concat per vector re-ran on
-    // every invocation even though the codebooks were already
-    // memoized. Pin it per (session, dataset, coding params) — the
-    // MinHash-signature precedent; ann_pq and ann_pq_full share one
-    // coded frame (coding is independent of candN). Keyless/probe
-    // callers still derive live.
-    def codedBuild = unit.withColumn("codes", pqCodes(cb, m, sub))
-      .withColumn("recon", pqRecon(cb, m))
-    val coded = memoKey.map(mk => graft.Memo.cached(spark,
-        s"$mk:pqcoded:m=$m:ks=$ks:it=$iters:d=$dim")(codedBuild))
-      .getOrElse(codedBuild)
-
-    val qUnit = coded.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("u").as("qu"))
-    val corpus = coded.select(col("vec_id"), col("recon"))
-    val adc = corpus.join(broadcast(qUnit), col("vec_id") =!= col("query_id"))
-      .withColumn("approx", call_function("vec_dot", col("qu"), col("recon")))
-    val candIds =
-      if (candN <= 0) adc.select(col("query_id"), col("vec_id"))
-      else adc
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAgg.column(spark, col("approx"),
-          lpad(col("vec_id").cast("string"), 12, "0"),
-          col("query_id").cast("string"), candN).as("top"))
-        .select(col("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t.a").cast("long").as("vec_id"))
-
-    val qVecs = all.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    candIds
-      .join(broadcast(qVecs), Seq("query_id"))
-      .join(all, Seq("vec_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    // encode + reconstruct (the Σ_s codebook_s[code_s] concatenation):
+    // the PQ index a serving tier persists (FAISS stores exactly these
+    // codes); ann_pq and ann_pq_full share it (coding is independent
+    // of candN)
+    val pq = coded(spark, memoKey, s"pqcoded:m=$m:ks=$ks:it=$iters:d=$dim")(
+      unit.withColumn("codes", pqCodes(cb, m, sub)).withColumn("recon", pqRecon(cb, m)))
+    exactTop5(candidates(againstQueries(pq, isQuery, "u" -> "qu"),
+      call_function("vec_dot", col("qu"), col("recon")), asc = false, candN),
+      all, isQuery)
   }
 
   /** E9: int8 (SQ8) quantized ANN — E8's storage codes as the SEARCH
@@ -982,41 +922,27 @@ object Ann {
     * quantized scan is observationally exact at this corpus, the same
     * invariant-gate discipline as ann_ivf_full/ann_pq_full.
     */
-  def sq8Topk(spark: SparkSession, dir: String): DataFrame = {
-    val candN = 50
-    val all = vecs(spark, dir)
-    // round 15 (optimization, guide §1.2): the int8 codes + scales are
-    // the SQ8 serving index (what the compressed tier stores) — pin
-    // one coding per (session, dataset) instead of re-quantizing the
-    // corpus per invocation. Selection/re-rank stay live.
-    val coded = graft.Memo.cached(spark, s"ann.sq8coded:$dir") {
-      all
-        .withColumn("amax", array_max(transform(col("v"), x => abs(x.cast("double")))))
-        .filter(col("amax") > 0)
-        .withColumn("scale", col("amax") / lit(127.0))
-        .withColumn("qs", transform(col("v"), x =>
-          least(greatest(floor(x.cast("double") / col("scale") + lit(0.5)),
-            lit(-127.0)), lit(127.0))))
-    }
-    val q = coded.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qs").as("qqs"),
-        col("scale").as("qscale"), col("v").as("qv"), col("norm").as("qn"))
-    val approx = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("ip", aggregate(zip_with(col("qqs"), col("qs"), (a, b) => a * b),
-        lit(0.0), (acc, x) => acc + x))
-      .withColumn("ascore", col("ip") * col("qscale") * col("scale"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("ascore").desc, col("vec_id"))
-    val cands = approx.withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= candN).select("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cands.join(all, Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))),
-        Seq("query_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+  def sq8Topk(spark: SparkSession, dir: String): DataFrame =
+    sq8TopkOn(vecs(spark, dir), col("vec_id") < 10, candN = 50,
+      memoKey = Some(s"ann.model:$dir"))
+
+  /** DataFrame-generic SQ8 search; input needs (vec_id, v, norm). The
+    * int8 codes + scales are the SQ8 serving index (what the
+    * compressed tier stores).
+    */
+  private[graft] def sq8TopkOn(all: DataFrame, isQuery: Column, candN: Int,
+      memoKey: Option[String] = None): DataFrame = {
+    val sq8 = coded(all.sparkSession, memoKey, "sq8coded")(all
+      .withColumn("amax", array_max(transform(col("v"), x => abs(x.cast("double")))))
+      .filter(col("amax") > 0)
+      .withColumn("scale", col("amax") / lit(127.0))
+      .withColumn("qs", transform(col("v"), x =>
+        least(greatest(floor(x.cast("double") / col("scale") + lit(0.5)),
+          lit(-127.0)), lit(127.0)))))
+    val ip = aggregate(zip_with(col("qqs"), col("qs"), (a, b) => a * b),
+      lit(0.0), (acc, x) => acc + x)
+    exactTop5(candidates(againstQueries(sq8, isQuery, "qs" -> "qqs", "scale" -> "qscale"),
+      ip * col("qscale") * col("scale"), asc = false, candN), all, isQuery)
   }
 
   /** E11: truncated-dimension ANN (the Matryoshka/MRL serving trick):
@@ -1032,14 +958,14 @@ object Ann {
     * the candidate ORDER is bit-identical in any summation order on
     * any engine — the DuckDB oracle replays selection AND re-rank —
     * observational exactness, the E9 gate discipline. `ann_mrl_full`
-    * pins the invariant candN = ∞ ⇒ output ≡ brute force (the E7b
-    * exhaustive-gate form).
+    * pins the invariant candN <= 0 (no pruning) ⇒ output ≡ brute force
+    * (the E7b exhaustive-gate form).
     */
   def mrlTopkAt(spark: SparkSession, dir: String, d0: Int, candN: Int,
       quantize: Boolean = true): DataFrame =
     mrlTopkOn(vecs(spark, dir).filter(col("norm") > 0),
       col("vec_id") < 10, d0, candN, quantize,
-      memoKey = Some(s"ann.mrlpfx:$dir"))
+      memoKey = Some(s"ann.model:$dir"))
 
   /** DataFrame-generic MRL search; input needs (vec_id, v, u, norm).
     * Exposed so the scale probe can drive the same plan over
@@ -1048,36 +974,17 @@ object Ann {
   private[graft] def mrlTopkOn(all: DataFrame, queryPred: Column,
       d0: Int, candN: Int, quantize: Boolean = true,
       memoKey: Option[String] = None): DataFrame = {
-    // round 15 (optimization, guide §1.2): the quantized prefix column
-    // is the MRL serving representation (what a truncated-dimension
-    // tier stores) — memoized per (session, dataset, d0, quantize) for
-    // the gated queries; prefix derivation is independent of candN so
-    // ann_mrl and ann_mrl_full share one frame. Probe callers derive
-    // live.
-    def pfxBuild = all.withColumn("pu",
-      if (quantize) expr(
-        s"transform(slice(u, 1, $d0), x -> floor(x * 1048576.0D + 0.5D) / 1048576.0D)")
-      else expr(s"slice(u, 1, $d0)"))
-    val pfx = memoKey.map(mk => graft.Memo.cached(all.sparkSession,
-        s"$mk:d0=$d0:q=$quantize")(pfxBuild))
-      .getOrElse(pfxBuild)
-    val q = pfx.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("pu").as("qpu"),
-        col("v").as("qv"), col("norm").as("qn"))
-    val approx = pfx.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("ascore", call_function("vec_dot", col("qpu"), col("pu")))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("ascore").desc, col("vec_id"))
-    val cands = approx.withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= candN).select("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cands.join(all, Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))),
-        Seq("query_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    // the quantized prefix is the MRL serving representation (what a
+    // truncated-dimension tier stores); it is independent of candN, so
+    // ann_mrl and ann_mrl_full share one frame
+    val pfx = coded(all.sparkSession, memoKey, s"mrlpfx:d0=$d0:q=$quantize")(
+      all.withColumn("pu",
+        if (quantize) expr(
+          s"transform(slice(u, 1, $d0), x -> floor(x * 1048576.0D + 0.5D) / 1048576.0D)")
+        else expr(s"slice(u, 1, $d0)")))
+    exactTop5(candidates(againstQueries(pfx, queryPred, "pu" -> "qpu"),
+      call_function("vec_dot", col("qpu"), col("pu")), asc = false, candN),
+      all, queryPred)
   }
 
   def mrlTopk(spark: SparkSession, dir: String): DataFrame =
@@ -1091,7 +998,7 @@ object Ann {
     * bit-replay oracle).
     */
   def mrlFull(spark: SparkSession, dir: String): DataFrame =
-    mrlTopkAt(spark, dir, 16, Int.MaxValue)
+    mrlTopkAt(spark, dir, 16, 0)
 
   /** E12: 1-bit (binary/sign) quantized ANN — the extreme end of the
     * E8→E9→E11 compression ladder: each 64-dim vector packs to 64
@@ -1107,7 +1014,7 @@ object Ann {
     */
   def bqTopk(spark: SparkSession, dir: String): DataFrame =
     bqTopkOn(vecs(spark, dir).filter(col("norm") > 0), col("vec_id") < 10,
-      memoKey = Some(s"ann.bqcoded:$dir"))
+      memoKey = Some(s"ann.model:$dir"))
 
   /** DataFrame-generic binary-quantized search; input needs
     * (vec_id, v, norm). Exposed for the scale probe.
@@ -1118,33 +1025,12 @@ object Ann {
       s"""aggregate(sequence(0, 31), 0L,
          |  (acc, i) -> acc | IF(element_at(v, i + $off + 1) > 0,
          |                       shiftleft(1L, i), 0L))""".stripMargin)
-    // round 15 (optimization, guide §1.2): the sign-bit packing is the
-    // binary index (64 bits/vector) — memoized per (session, dataset)
-    // for the gated query; probe callers derive live.
-    def codedBuild = all
-      .withColumn("c1", half(0))
-      .withColumn("c2", half(32))
-    val coded = memoKey.map(mk =>
-        graft.Memo.cached(all.sparkSession, mk)(codedBuild))
-      .getOrElse(codedBuild)
-    val q = coded.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("c1").as("qc1"),
-        col("c2").as("qc2"), col("v").as("qv"), col("norm").as("qn"))
-    val approx = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("hd",
-        expr("bit_count(c1 ^ qc1) + bit_count(c2 ^ qc2)"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("hd").asc, col("vec_id"))
-    val cands = approx.withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= candN).select("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("vec_id"))
-    cands.join(all, Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))),
-        Seq("query_id"))
-      .withColumn("cs", round(cosine(col("qv"), col("v"), col("qn"), col("norm")), 4))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cs"))
+    // the sign-bit packing is the binary index (64 bits/vector)
+    val bq = coded(all.sparkSession, memoKey, "bqcoded")(
+      all.withColumn("c1", half(0)).withColumn("c2", half(32)))
+    exactTop5(candidates(againstQueries(bq, queryPred, "c1" -> "qc1", "c2" -> "qc2"),
+      expr("bit_count(c1 ^ qc1) + bit_count(c2 ^ qc2)"), asc = true, candN),
+      all, queryPred)
   }
 
   /** E8: symmetric int8 embedding quantization — the storage path that

@@ -146,14 +146,16 @@ object Bm25 {
     */
   def storedTopk(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    // one materialized term store per source dataset (written once/JVM)
+    // one materialized term store per source dataset, landed across
+    // JVMs: reused only whole and in the current segment format
     val path = graft.Memo.global(s"text.termstore:$dir") {
-      val p = graft.Memo.tmp("graft_termstore_" +
-        graft.Tables.fingerprint(s"$dir/documents.parquet")).toString
-      TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 0), p, 0L)
-      TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 1), p, 1L)
-      TermStore.compact(docs.sparkSession, p)
-      p
+      graft.Memo.landed(s"graft_termstore_${TermStore.Layout}",
+          Tables.fingerprint(s"$dir/documents.parquet")) { b =>
+        val p = b.toString
+        TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 0), p, 0L)
+        TermStore.flush(docs.filter(pmod(col("doc_id"), lit(2)) === 1), p, 1L)
+        TermStore.compact(docs.sparkSession, p)
+      }.toString
     }
     rankPostings(spark,
       cachedPostings(spark, s"store:$path", TermStore.load(spark, path)),
@@ -190,6 +192,11 @@ object Bm25 {
   */
 object TermStore {
   import graft.index.SegmentLog
+
+  /** The segment format — (doc_id, w, tf) postings — part of the prefix
+    * of stores landed across JVMs, so a store written in an older
+    * format is rebuilt, not read. */
+  private[graft] val Layout = "dwt"
 
   def flush(docsBatch: DataFrame, path: String, batchId: Long): Unit = {
     val spark = docsBatch.sparkSession

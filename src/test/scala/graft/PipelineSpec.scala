@@ -218,6 +218,47 @@ class PipelineSpec extends AnyFunSuite {
     assert(hits >= 45, s"planted-neighbor top-1 IVF-PQ recall $hits/50")
   }
 
+  test("quantized-ANN ladder: at candN <= 0 every rung is brute force; " +
+      "a positive candN cuts candidates best-first") {
+    // the synthetic planted corpus of the recall specs above
+    import spark.implicits._
+    val rnd = new scala.util.Random(123456789L)
+    val base = (0 until 200).map(i =>
+      (i.toLong, Array.fill(64)((rnd.nextGaussian()).toFloat)))
+    val planted = (0 until 50).map { i =>
+      val src = base(i)._2
+      ((1000 + i).toLong, src.map(x => x + (rnd.nextGaussian() * 0.05).toFloat))
+    }
+    val df = similarity.Ann.unitize(similarity.Ann.withNorm(spark,
+      (base ++ planted).toDF("vec_id", "v"))).cache()
+    try {
+      val isQuery = col("vec_id") >= 1000
+      def rungs(candN: Int) = Seq(
+        "sq8" -> similarity.Ann.sq8TopkOn(df, isQuery, candN),
+        "mrl" -> similarity.Ann.mrlTopkOn(df, isQuery, d0 = 16, candN = candN),
+        "bq" -> similarity.Ann.bqTopkOn(df, isQuery, candN = candN),
+        "pq" -> similarity.Ann.pqTopkOn(df, isQuery, candN = candN),
+        "ivfpq" -> similarity.Ann.ivfPqTopkOn(df, isQuery, nprobe = 16,
+          candN = candN))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      val bf = rows(similarity.Ann.bruteforceTopkOn(df, isQuery))
+      assert(bf.size == 50 * 5)
+      for ((name, d) <- rungs(0))
+        assert(rows(d) == bf, s"$name at candN = 0 differs from brute force")
+      for ((name, d) <- rungs(2)) {
+        val got = rows(d)
+        assert(got.groupBy(_._1).values.forall(_.size <= 2),
+          s"$name at candN = 2 kept more than 2 candidates for a query")
+        // best-first: the planted twin survives the cut and ranks first
+        val hits = (0 until 50).count(i =>
+          got.contains(((1000 + i).toLong, 1, i.toLong, bf.collectFirst {
+            case (q, 1, n, cs) if q == 1000 + i => cs }.getOrElse(-1.0))))
+        assert(hits >= 45, s"$name at candN = 2: planted top-1 $hits/50")
+      }
+    } finally df.unpersist()
+  }
+
   test("frame sampling takes every 4th frame") {
     val rows = multimodal.Multimodal.frameSample(spark, dir).collect()
     assert(rows.nonEmpty)

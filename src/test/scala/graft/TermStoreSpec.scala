@@ -100,4 +100,23 @@ class TermStoreSpec extends AnyFunSuite {
     assert(segNames(p) == Seq("seg=b1m1"), "the next compact deletes the covered leftovers")
     assert(postingsSet(p) == before)
   }
+
+  test("the stored BM25 path rebuilds a landed term store left without " +
+      "its _done marker") {
+    // a dataset of its own: no other run's store or memo entry is shared
+    val dir = s"$tmp/landed_src"
+    docs((0L until 12L).map(i => i -> s"w${i % 3} w${i % 5} x"): _*)
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val base = graft.Memo.tmp(s"graft_termstore_${text.TermStore.Layout}_" +
+      Tables.fingerprint(s"$dir/documents.parquet"))
+    try {
+      // a half-built store: one committed segment under the last batch
+      // id the build flushes, foreign postings, no _done marker
+      text.TermStore.flush(docs(0L -> "zz zz zz"), base.toString, 1L)
+      assert(!new java.io.File(base, "_done").exists())
+      val stored = text.Bm25.storedTopk(spark, dir).collect().toSet
+      assert(stored.nonEmpty && stored == text.Bm25.topk(spark, dir).collect().toSet)
+      assert(new java.io.File(base, "_done").exists())
+    } finally graft.Memo.wipe(base)
+  }
 }
