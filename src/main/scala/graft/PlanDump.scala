@@ -116,7 +116,7 @@ object PlanDump {
       // strip ANSI escapes and control bytes (plan trees can carry
       // them via codegen'd literals) so the artifact stays plain text
       // that grep/diff treat as such
-      val plan = df.queryExecution.executedPlan.toString.take(8000)
+      val plan = normalize(df.queryExecution.executedPlan.toString).take(8000)
         .replaceAll("\u001b\\[[0-9;]*m", "")
         .filter(c => c == '\n' || c == '\t' || c >= ' ')
       sb.append(plan)
@@ -126,4 +126,28 @@ object PlanDump {
     println("wrote PLANS.md")
     spark.stop()
   }
+
+  /** Replace what changes from run to run with fixed tokens, so two
+    * runs on one commit write the same file and a diff shows only plan
+    * changes: expression and plan ids, AQE stage and codegen stage
+    * numbers, JVM identity hashes and lambda class names, the per-JVM
+    * temp directories (with their fixture counters and random
+    * suffixes), and the file lists of scans under the temp directory
+    * (writer-unique part names, cut at a length that moves with the
+    * temp path's). */
+  private[graft] def normalize(plan: String): String =
+    Seq(
+      "#\\d+" -> "#N",
+      "plan_id=\\d+" -> "plan_id=N",
+      "(QueryStage) \\d+" -> "$1 N",
+      "\\*\\(\\d+\\)" -> "*(N)",
+      "\\$Lambda\\$?\\d*/0x[0-9a-f]+" -> "\\$Lambda",
+      "((?:\\[+L?)?[A-Za-z_$][\\w$]*(?:\\.[\\w$]+)+;?|\\[+[A-Z])@[0-9a-f]+" -> "$1@H",
+      "(graft_jvm_)\\d+" -> "$1N",
+      "(graft_jvm_N/\\w+_)\\d+\\b" -> "$1N",
+      "(graft_[a-z_]+_[0-9a-f]{8})\\d+" -> "$1N",
+      ("(InMemoryFileIndex\\(\\d+ paths?\\))\\[file:" +
+        java.util.regex.Pattern.quote(System.getProperty("java.io.tmpdir")) +
+        "[^\\]]*?(?:\\.\\.\\.|\\])") -> "$1[tmp]"
+    ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 }

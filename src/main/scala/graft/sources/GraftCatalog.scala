@@ -28,8 +28,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * merge-on-read scans, the DELETE translation and the V1Write→OCC
   * append all behave identically across `format("graft")`, the
   * `graft_table` TVF and the catalog), CREATE persists the declared
-  * schema in a `_schema` sidecar that bridges the create→first-insert
-  * window (the commit log itself has no schema until v0 lands), and
+  * schema in a `_schema` declaration that bridges the
+  * create→first-insert window (v0's commit record takes it over), and
   * DROP/RENAME are filesystem-atomic at metadata scale. `alterTable`
   * refuses — schema evolution is an append-time property of the log
   * (I24 mergeSchema), not an in-place mutation.
@@ -115,7 +115,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException((ident.namespace.toSeq :+ ident.name))
     fs.mkdirs(new org.apache.hadoop.fs.Path(p))
-    GraftTables.writeSchemaSidecar(spark, p, schema)
+    Io.declare(spark, p, schema)
     new GraftEmptyTable(spark, p, schema)
   }
 
@@ -160,22 +160,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** ALTER TABLE ADD COLUMN (round 13): the one schema mutation the
-    * append-only log supports losslessly — the `_schema` sidecar gains
+    * append-only log supports losslessly — the declared schema gains
     * the (nullable, top-level) column, HEAD reads serve it with
     * pre-evolution rows null-backfilled (the I24 mergeSchema semantics
     * through the catalog), and later INSERTs carry it physically.
     * Pinned `VERSION AS OF` reads keep their own era's schema (the
-    * sidecar applies to HEAD only — see [[GraftTables.forPath]]).
+    * declared schema applies to HEAD only — see [[GraftTables.forPath]]).
     * Everything else (drop/rename/type change) keeps refusing: those
     * would rewrite history.
     *
     * Round 14 (round-13 VERDICT #5): the evolution lands as a
     * CLAIM-SERIALIZED COMMIT ([[Io.commitSchemaChange]] — one more
-    * version with the same file list, sidecar written inside the
-    * claimed-lock window), so two racing ALTERs — or an ALTER racing a
+    * version with the same file list and the evolved schema in its
+    * record), so two racing ALTERs — or an ALTER racing a
     * REPLACE/INSERT — serialize at the version claim: one wins, the
     * loser gets a catchable CommitConflictException against its stale
-    * base, never an interleaved sidecar. */
+    * base, never an interleaved schema. */
   override def alterTable(ident: Identifier,
       changes: TableChange*): Table = {
     val p = tablePath(ident)
@@ -183,7 +183,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
     // round 14: SET/UNSET TBLPROPERTIES land as claim-serialized
-    // commits on the `_props` sidecar (Delta's table properties)
+    // commits of the record's properties (Delta's table properties)
     val (propCh, rest) = changes.partition(c =>
       c.isInstanceOf[TableChange.SetProperty] ||
         c.isInstanceOf[TableChange.RemoveProperty])
@@ -201,7 +201,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (unsets.nonEmpty) Io.tableUnsetProperties(spark, p, unsets)
     if (rest.nonEmpty) {
       val basedOn = Io.tableVersion(spark, p)
-      val cur = GraftTables.readSchemaSidecar(spark, p).getOrElse(
+      val cur = Io.baseOf(spark, p, basedOn + 1).schema.getOrElse(
         GraftTables.forPath(spark, p, CaseInsensitiveStringMap.empty())
           .schema())
       val next = rest.foldLeft(cur) {

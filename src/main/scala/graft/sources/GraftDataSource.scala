@@ -95,9 +95,6 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
   * [[GraftCatalog]] both resolve a commit-log path into the same
   * [[GraftTable]] (round 12). */
 private[graft] object GraftTables {
-  private def schemaSidecar(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_schema")
-
   // The positional-DV broadcast, memoized per (session, table,
   // version) — round 14, round-13 ADVICE low: every query resolves a
   // FRESH table handle, so a handle-scoped lazy val re-collected and
@@ -121,29 +118,6 @@ private[graft] object GraftTables {
       spark.sparkContext.broadcast(m)
     }
 
-  /** Persist a DDL-declared schema for a not-yet-written table (the
-    * catalog's CREATE TABLE): the commit log itself has no schema
-    * until v0 lands, so the sidecar bridges CREATE → first INSERT. */
-  private[graft] def writeSchemaSidecar(spark: SparkSession, path: String,
-      schema: StructType): Unit = {
-    val fs = Io.fsFor(spark, path)
-    val out = fs.create(schemaSidecar(path), true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readSchemaSidecar(spark: SparkSession,
-      path: String): Option[StructType] = {
-    val fs = Io.fsFor(spark, path)
-    if (!fs.exists(schemaSidecar(path))) None
-    else {
-      val in = fs.open(schemaSidecar(path))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(txt)
-        .asInstanceOf[StructType])
-    }
-  }
-
   def forPath(spark: SparkSession, path: String,
       options: CaseInsensitiveStringMap): Table = {
     val cdf = Option(options.get("readChangeFeed")).exists(_.toBoolean)
@@ -158,7 +132,7 @@ private[graft] object GraftTables {
     if (head < 0) {
       // a created-but-never-written table serves its declared schema,
       // empty scans, and first-write (v0) appends
-      val declared = readSchemaSidecar(spark, path)
+      val declared = Io.baseOf(spark, path, 0L).schema
       require(declared.isDefined, s"no commit-log table at $path")
       return new GraftEmptyTable(spark, path, declared.get)
     }
@@ -179,14 +153,14 @@ private[graft] object GraftTables {
       .getOrElse(head)
     require(version >= 0 && version <= head,
       s"version $version out of range [0, $head] at $path")
-    val dvDirs = Io.dvDirsResolved(spark, path, version)
-    val files = Io.versionFiles(spark, path, version)
+    val rec = Io.record(spark, path, version)
+    val dvDirs = rec.dv.map(Io.resolve(path, _))
+    val files = rec.files.map(Io.resolve(path, _))
     if (files.isEmpty) {
       // an empty-SELECT atomic CTAS commits v0 with zero data files —
-      // the declared schema serves from the sidecar, appends go OCC
-      val declared = readSchemaSidecar(spark, path)
-      require(declared.isDefined, s"version $version at $path is empty")
-      return new GraftEmptyTable(spark, path, declared.get)
+      // its record's declared schema serves, appends go OCC
+      require(rec.schema.isDefined, s"version $version at $path is empty")
+      return new GraftEmptyTable(spark, path, rec.schema.get)
     }
     val pruned = Option(options.get("skipCol")) match {
       case None => files
@@ -195,20 +169,18 @@ private[graft] object GraftTables {
           .getOrElse(Long.MinValue)
         val hi = Option(options.get("skipHi")).map(_.toLong)
           .getOrElse(Long.MaxValue)
-        val kept = Io.statsBand(spark, path, version, files, skipCol, lo, hi)
+        val kept = Io.statsBand(path, version, rec, files, skipCol, lo, hi)
         // schema inference needs ≥1 file; an all-pruned read keeps one
         // carrier file — pruning is conservative, the caller's own
         // predicate (which skipping never replaces) yields the empty set
         if (kept.nonEmpty) kept else files.take(1)
     }
-    // HEAD reads serve the DECLARED schema when a `_schema` sidecar
-    // exists (the catalog's CREATE/CTAS/ALTER ADD COLUMN surface):
-    // an ALTER-added column reads as null from pre-evolution files.
-    // Pinned version reads keep their own era's schema — the sidecar
-    // describes HEAD, so time travel to before an evolution must not
-    // grow phantom columns.
-    val declared =
-      if (version == head) readSchemaSidecar(spark, path) else None
+    // HEAD reads serve the DECLARED schema when the record carries
+    // one (the catalog's CREATE/CTAS/ALTER ADD COLUMN surface): an
+    // ALTER-added column reads as null from pre-evolution files.
+    // Pinned version reads keep their own era's file schema — time
+    // travel to before an evolution must not grow phantom columns.
+    val declared = if (version == head) rec.schema else None
     val basePt = ParquetTable(s"graft:$path@$version", spark, options,
       pruned.toIndexedSeq, declared, classOf[ParquetFileFormat])
     // EVERY GraftTable's ParquetTable carries the row-index temp
@@ -225,7 +197,8 @@ private[graft] object GraftTables {
           PosDv.rowIndexField)),
       classOf[ParquetFileFormat])
     new GraftTable(pt, spark, path, version, head,
-      Option(options.get("deleteKey")), dvDirs, pruned.size, cdf)
+      Option(options.get("deleteKey")), dvDirs, pruned.size, cdf,
+      () => if (version == head) rec.props else Io.readTableProps(spark, path))
   }
 }
 
@@ -336,7 +309,8 @@ private[graft] object PackedPositions {
   * HEAD only (a pinned versionAsOf/timestampAsOf view refuses). */
 private[graft] class GraftTable(pt: ParquetTable, spark: SparkSession,
     path: String, version: Long, head: Long, deleteKey: Option[String],
-    dvDirs: Seq[String], numFiles: Int, cdf: Boolean = false)
+    dvDirs: Seq[String], numFiles: Int, cdf: Boolean,
+    headProps: () => Seq[(String, String)])
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with connector.catalog.SupportsMetadataColumns
   with connector.catalog.SupportsRowLevelOperations {
@@ -358,7 +332,7 @@ private[graft] class GraftTable(pt: ParquetTable, spark: SparkSession,
     val m = new java.util.HashMap[String, String]()
     // user TBLPROPERTIES first (round 14) — the graft.* facts below
     // stay authoritative even against a shadowing user key
-    Io.readTableProps(spark, path).foreach { case (k, v) => m.put(k, v) }
+    headProps().foreach { case (k, v) => m.put(k, v) }
     m.put("graft.version", version.toString)
     m.put("graft.head", head.toString)
     m.put("graft.numFiles", numFiles.toString)
@@ -404,7 +378,7 @@ private[graft] class GraftTable(pt: ParquetTable, spark: SparkSession,
     * other mutation. DV-carrying tables COMPOSE with every verb
     * (round 13, positional DVs): the rewrite scan is DV-filtered via
     * [[PosDvScanBuilder]] — a touched file's rewrite materializes its
-    * deletes — and the commit carries the sidecar for kept files,
+    * deletes — and the commit carries the DV dirs for kept files,
     * whose (file, rowPos) entries can never collide with rewritten or
     * re-inserted rows. */
   override def newRowLevelOperationBuilder(
@@ -1052,7 +1026,7 @@ private[graft] class GraftMicroBatchStream(spark: SparkSession,
   private val snapDv: Seq[String] =
     if (!snapshotDv) Seq.empty else Io.dvDirsOf(spark, path, snapBaseV)
   private lazy val snapBcast = GraftTables.dvPositions(spark, path,
-    snapBaseV, Io.dvDirsResolved(spark, path, snapBaseV))
+    snapBaseV, snapDv.map(Io.resolve(path, _)))
 
   // the MOR-filtered scan of the snapshot path: every batch reads
   // through the positional filter (fresh files have no entries and
@@ -1292,7 +1266,7 @@ private[graft] class GraftCdfMicroBatchStream(spark: SparkSession,
       val curDvSet = curDv.toSet
       require(prevDv.forall(curDvSet),
         s"change feed at $path: commit v$v replaced deletion-vector " +
-          "sidecars (compaction) — restart the stream past it with " +
+          "dirs (compaction) — restart the stream past it with " +
           s"startingVersion=${v + 1}, or read Io.changeFeed as a batch")
       val prevSet = prevFiles.toSet
       val added = cur.filterNot(prevSet)
@@ -1497,10 +1471,6 @@ private[graft] class GraftStreamingWrite(spark: SparkSession, path: String,
     val files = messages.collect {
       case GraftWrittenFile(rel) => s"data/$t/$rel"
     }.sorted.toIndexedSeq
-    // CHECK constraints (round 14): the epoch's landed batch validates
-    // before its commit — a violating micro-batch fails the query
-    // instead of poisoning the table
-    Io.checkConstraintsFiles(spark, path, files)
     // an EMPTY epoch still commits (prior files only): the version ≡
     // epoch mapping must stay aligned for redelivery detection
     Io.commitStreamEpoch(spark, path, epochId, files)
@@ -1596,7 +1566,7 @@ private[graft] class GraftEmptyTable(spark: SparkSession, path: String,
   * serialize at the v0 claim: exactly one wins, the loser's abort
   * removes only its own staging dir (never the winner's files). An
   * empty-SELECT CTAS commits v0 with zero data files and serves its
-  * declared schema from the sidecar.
+  * declared schema from the record.
   */
 private[graft] class GraftStagedTable(spark: SparkSession, path: String,
     declared: StructType, replaceOf: Option[Long] = None)
@@ -1638,22 +1608,21 @@ private[graft] class GraftStagedTable(spark: SparkSession, path: String,
 
   override def commitStagedChanges(): Unit = {
     require(wrote, s"atomic CTAS at $path committed before its write ran")
-    // the version claim is the arbitration point (OCC); the schema
-    // sidecar lands INSIDE the claimed-lock window (round 14 — so a
-    // lost race can never clobber the winner's declared schema, and
-    // CTAS/REPLACE serialize against concurrent ALTERs too). The
-    // sidecar also serves the empty-SELECT read. A REPLACE commit
-    // lists ONLY the fresh files (prior versions keep serving their
-    // own lists — time travel across a replace just works) and
-    // discards any DV sidecar with the replaced content.
-    replaceOf match {
-      case None => Io.commitStaged(spark, path, landed, Some(declared))
-      case Some(prev) =>
-        require(Io.tableVersion(spark, path) == prev,
-          s"REPLACE TABLE at $path lost to a concurrent commit " +
-            s"(staged against v$prev) — re-run against fresh state")
-        Io.commitReplaceAll(spark, path, prev + 1, landed, Some(declared))
+    // the version claim is the arbitration point (OCC); the declared
+    // schema lands in the claimed commit's record (so a lost race can
+    // never clobber the winner's schema, and CTAS/REPLACE serialize
+    // against concurrent ALTERs too) and also serves the empty-SELECT
+    // read. A REPLACE commit lists ONLY the fresh files (prior versions
+    // keep serving their own lists — time travel across a replace just
+    // works) and discards DVs and stats with the replaced content.
+    replaceOf.foreach { prev =>
+      require(Io.tableVersion(spark, path) == prev,
+        s"REPLACE TABLE at $path lost to a concurrent commit " +
+          s"(staged against v$prev) — re-run against fresh state")
     }
+    val base = Io.baseOf(spark, path, v0)
+    Io.writeCommit(spark, path, v0, base, base.copy(files = landed,
+      dv = Seq.empty, stats = None, schema = Some(declared)))
   }
 
   override def abortStagedChanges(): Unit = {

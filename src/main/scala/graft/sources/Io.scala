@@ -579,101 +579,197 @@ object Io {
     * must then treat the lock as someone else's). */
   private def lockOwner(fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (s.nonEmpty) Some(s) else None
-    } catch { case _: Throwable => None }
+    try Some(readText(fs, lock).trim).filter(_.nonEmpty)
+    catch { case _: Throwable => None }
 
   private def occLockTtlMs(spark: SparkSession): Long =
     spark.conf.getOption("graft.occ.lockTtlMs").map(_.toLong)
       .getOrElse(600000L)
 
-  // ---- commit ENCODING (round 11): full list vs delta-vs-previous.
-  // A commit that stores the full file list costs ∝ #files — on a
-  // million-file table every append rewrites ~50 MB of metadata and
-  // the log grows QUADRATICALLY in appends (Delta's pre-checkpoint
-  // problem). So a commit is written as a DELTA against its
-  // predecessor (`@delta <v-1>` header + `+path`/`-path` lines — cost
-  // ∝ the commit's own changes) except every
-  // `graft.log.checkpointInterval`-th version (default 10), which is
-  // a FULL list (the checkpoint) bounding resolution to < interval
-  // hops. Plain full-list files with no header remain valid (every
-  // pre-round-11 table reads unchanged), and resolution order is
-  // deterministic: carried files keep base order, adds append.
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  // ---- the commit RECORD (one file per version): a version's file
+  // list, deletion-vector dirs, per-file stats and the table metadata
+  // in force at it (declared schema, CHECK constraints, generated and
+  // identity columns, properties, the COPY INTO ledger) are ONE
+  // record, written as one tmp file and renamed onto
+  // `_commits/<v>.commit` after the version claim — so a commit whose
+  // rename fails leaves nothing of itself in force, and every write
+  // verb carries what it does not change simply by building on its
+  // base record. Each fact is one line `<kind>\t<fields>`. A record
+  // that stored every line would cost ∝ #files per commit and grow the
+  // log quadratically in appends (Delta's pre-checkpoint problem), so
+  // it is written as a DELTA against its predecessor (`@delta <v-1>`,
+  // then `-line`/`+line` — cost ∝ the commit's own changes) except
+  // every `graft.log.checkpointInterval`-th version (default 10),
+  // which is the full record and bounds resolution to < interval hops.
+
+  /** The commit-log layout. Every record's first line is
+    * `@graft <LogLayout>`; a commit without it predates the one-record
+    * layout — its deletion vectors sat in a `.dv` file this reader
+    * never opens, so serving it would bring deleted rows back — and is
+    * refused. Fixtures that keep commit-log tables across JVMs carry it
+    * in their names, so a layout change rebuilds them. */
+  private[graft] val LogLayout = "rec1"
+  private val LogToken = s"@graft $LogLayout"
+
+  /** One version of a commit-log table. `stats` maps (file entry,
+    * column) to the file's [min, max]; `None` = a version written
+    * without stats. `schema` is the declared schema (HEAD reads serve
+    * it); `identity` rows are (column, start, step, high water). */
+  private[graft] final case class CommitRecord(
+      files: Seq[String] = Seq.empty,
+      dv: Seq[String] = Seq.empty,
+      stats: Option[Map[(String, String), (Long, Long)]] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      constraints: Seq[(String, String)] = Seq.empty,
+      generated: Seq[(String, String)] = Seq.empty,
+      props: Seq[(String, String)] = Seq.empty,
+      identity: Seq[(String, Long, Long, Long)] = Seq.empty,
+      copied: Set[String] = Set.empty) {
+    private[Io] def lines: Seq[String] =
+      files.map("f\t" + _) ++ dv.map("dv\t" + _) ++
+        stats.toSeq.flatMap(st => "stats" +: st.toSeq.sorted.map {
+          case ((f, c), (mn, mx)) => s"st\t$f\t$c\t$mn\t$mx"
+        }) ++
+        schema.map("schema\t" + _.json) ++
+        constraints.map { case (n, e) => s"check\t$n\t$e" } ++
+        generated.map { case (n, e) => s"gen\t$n\t$e" } ++
+        props.map { case (k, v) => s"prop\t$k\t$v" } ++
+        identity.map { case (c, st, sp, hw) => s"id\t$c\t$st\t$sp\t$hw" } ++
+        copied.toSeq.sorted.map("copied\t" + _)
+  }
+
+  private def parseRecord(lines: Seq[String]): CommitRecord = {
+    val byKind = lines.groupBy(_.takeWhile(_ != '\t'))
+    def rows(kind: String, n: Int): Seq[Array[String]] =
+      byKind.getOrElse(kind, Seq.empty).map(_.split("\t", n + 1).drop(1))
+    def pairs(kind: String) = rows(kind, 2).map(a => (a(0), a(1)))
+    CommitRecord(
+      files = rows("f", 1).map(_(0)),
+      dv = rows("dv", 1).map(_(0)),
+      stats = byKind.get("stats").map(_ => rows("st", 4).map(a =>
+        (a(0), a(1)) -> ((a(2).toLong, a(3).toLong))).toMap),
+      schema = rows("schema", 1).headOption.map(a =>
+        org.apache.spark.sql.types.DataType.fromJson(a(0))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]),
+      constraints = pairs("check"),
+      generated = pairs("gen"),
+      props = pairs("prop"),
+      identity = rows("id", 4).map(a =>
+        (a(0), a(1).toLong, a(2).toLong, a(3).toLong)),
+      copied = rows("copied", 1).map(_(0)).toSet)
+  }
 
   private def checkpointInterval(spark: SparkSession): Long =
     spark.conf.getOption("graft.log.checkpointInterval").map(_.toLong)
       .getOrElse(10L)
       .max(1L)
 
-  private def encodeCommit(spark: SparkSession, table: String,
-      version: Long, files: Seq[String]): String =
-    if (version == 0L || version % checkpointInterval(spark) == 0L ||
-        !fs0Exists(spark, table, version - 1)) files.mkString("\n")
-    else {
-      val prior = readCommit(spark, table, version - 1)
-      val priorSet = prior.toSet
-      val fileSet = files.toSet
-      val removed = prior.filterNot(fileSet)
-      val added = files.filterNot(priorSet)
-      (s"@delta ${version - 1}" +:
-        (removed.map("-" + _) ++ added.map("+" + _))).mkString("\n")
+  private def commitPath(table: String, version: Long) =
+    new org.apache.hadoop.fs.Path(table, f"_commits/$version%08d.commit")
+
+  // Resolution keeps the base's line order and appends the adds, so a
+  // change that reorders a kind (a RESTORE's file list) is written in
+  // full rather than as a delta that would resolve differently.
+  private def commitText(spark: SparkSession, version: Long,
+      base: CommitRecord, rec: CommitRecord): String = {
+    val lines = rec.lines
+    val delta =
+      if (version == 0L || version % checkpointInterval(spark) == 0L) None
+      else {
+        val prior = base.lines
+        val (had, has) = (prior.toSet, lines.toSet)
+        val added = lines.filterNot(had)
+        if (parseRecord(prior.filter(has) ++ added) != rec) None
+        else Some(s"@delta ${version - 1}" +:
+          (prior.filterNot(has).map("-" + _) ++ added.map("+" + _)))
+      }
+    (LogToken +: delta.getOrElse(lines)).mkString("\n")
+  }
+
+  /** A commit's resolved record lines (a `.ckpt` left by vacuum wins
+    * over the delta it materializes). */
+  private def recordLines(spark: SparkSession, table: String,
+      version: Long): Seq[String] = {
+    val fs = fsFor(spark, table)
+    val fin = commitPath(table, version)
+    require(fs.exists(fin), s"no version $version at $table")
+    val src = { val c = ckptPath(table, version)
+      if (fs.exists(c)) c else fin }
+    val lines = readText(fs, src).split("\n").toIndexedSeq.filter(_.nonEmpty)
+    require(lines.headOption.contains(LogToken),
+      s"commit $version at $table predates the one-record log layout " +
+        s"(no '$LogToken' line): its deletion vectors and table metadata " +
+        "sat in sidecar files this reader does not open, so serving it " +
+        "could bring deleted rows back — rebuild the table")
+    lines.tail match {
+      case h +: body if h.startsWith("@delta ") =>
+        val removed = body.collect {
+          case l if l.startsWith("-") => l.substring(1) }.toSet
+        recordLines(spark, table, h.stripPrefix("@delta ").toLong)
+          .filterNot(removed) ++
+          body.collect { case l if l.startsWith("+") => l.substring(1) }
+      case body => body
     }
+  }
 
-  private def fs0Exists(spark: SparkSession, table: String,
-      version: Long): Boolean =
-    fsFor(spark, table).exists(new org.apache.hadoop.fs.Path(table,
-      f"_commits/$version%08d.commit"))
+  /** The record of committed `version`. */
+  private[graft] def record(spark: SparkSession, table: String,
+      version: Long): CommitRecord =
+    parseRecord(recordLines(spark, table, version))
 
-  // `dv` is the version's deletion-vector sidecar content (the dv/
-  // dirs holding (file, rowPos) entries — POSITIONAL since round 13),
-  // written INSIDE the claimed-lock window below — after the version
-  // claim is won and re-verified, immediately before the commit
-  // rename — so two writers racing the same version can never pair the
-  // committed version with the losing writer's sidecar (round-11 ADVICE:
-  // the pre-claim overwrite-semantics write was only benign for
-  // identical append-vs-append content). An EMPTY list DELETES any
-  // stale orphan sidecar at this version (a crashed DV-delete attempt
-  // must not haunt a later plain commit of the same number with
-  // phantom deletes).
-  // `stats` is the version's commit-embedded file-statistics sidecar
-  // content, landed INSIDE the claimed-lock window exactly like the DV
-  // sidecar (round-13, round-12 ADVICE: two racing COW writers produce
-  // NON-identical stats — a pre-claim write could pair the committed
-  // version with the LOSER's sidecar, leaving the winner's fresh files
-  // without entries). `None` scrubs any stale orphan sidecar at this
-  // version (stats-free commits like tableOverwrite/commitReplaceAll
-  // must not inherit a crashed attempt's stats).
-  // `schema` (round 14, round-13 VERDICT #5): a declared-schema change
-  // (ALTER ADD COLUMN, staged CTAS/REPLACE) lands its `_schema` sidecar
-  // INSIDE the claimed-lock window too — schema evolution serializes
-  // through version claims like every other mutation, so two racing
-  // ALTERs (or ALTER vs REPLACE) conflict loudly instead of
-  // last-writer-winning the sidecar. Unlike dv/stats, None leaves any
-  // existing sidecar alone: the sidecar is table-level state, not
-  // per-version.
-  // `constraints` (round 14): like `schema`, a CHECK-constraint set
-  // change lands its `_constraints` sidecar inside the claimed-lock
-  // window — add/drop serialize through version claims; None leaves
-  // the existing sidecar alone.
-  // `copiedAdd` (round 14, COPY INTO): source files this commit
-  // ingested — appended to the table-level `_copyinto` ledger inside
-  // the claim window, with a CONFLICT if any was ingested concurrently
-  // (exactly-once per source file under racing COPY INTO); rolled back
-  // if the commit rename fails, so an uncommitted ingest can re-run.
-  private def writeCommit(spark: SparkSession, table: String,
-      version: Long, files: Seq[String],
-      dv: Seq[String] = Seq.empty,
-      stats: Option[Seq[(String, String, Long, Long)]] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      constraints: Option[Seq[(String, String)]] = None,
-      copiedAdd: Option[Seq[String]] = None,
-      generated: Option[Seq[(String, String)]] = None,
-      props: Option[Seq[(String, String)]] = None,
-      identitySet: Option[Seq[(String, Long, Long, Long)]] = None,
-      identityAdv: Option[Seq[(String, Long, Long)]] = None): Unit = {
+  /** The record a commit of `version` builds on: `version - 1`'s, or
+    * for version 0 the `_schema` declaration of a created table. */
+  private[graft] def baseOf(spark: SparkSession, table: String,
+      version: Long): CommitRecord =
+    if (version <= 0L) CommitRecord(schema = declaration(spark, table))
+    else record(spark, table, version - 1)
+
+  /** HEAD's record — before the first version, the declaration alone. */
+  private def headRecord(spark: SparkSession, table: String): CommitRecord =
+    baseOf(spark, table, tableVersion(spark, table) + 1)
+
+  // The `_schema` file: the DDL-declared schema of a created table
+  // that has no version yet (the catalog's CREATE TABLE,
+  // [[tableCreate]]). v0's record takes it over; it is read only while
+  // the table has no version.
+  private def declarationPath(table: String) =
+    new org.apache.hadoop.fs.Path(table, "_schema")
+
+  private[graft] def declare(spark: SparkSession, table: String,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    val out = fsFor(spark, table).create(declarationPath(table), true)
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def declaration(spark: SparkSession,
+      table: String): Option[org.apache.spark.sql.types.StructType] = {
+    val fs = fsFor(spark, table)
+    if (!fs.exists(declarationPath(table))) None
+    else Some(org.apache.spark.sql.types.DataType
+      .fromJson(readText(fs, declarationPath(table)))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
+
+  /** The declared schema in force at HEAD, if any. */
+  private[graft] def declaredSchema(spark: SparkSession,
+      table: String): Option[org.apache.spark.sql.types.StructType] =
+    headRecord(spark, table).schema
+
+  /** Commit `rec` as `version`, built on `base` (the record of
+    * `version - 1`, or [[baseOf]] 0). The version is claimed first; the
+    * record lands by one rename after the claim is re-verified ours, so
+    * a lost race or a failed rename leaves nothing of this commit in
+    * force. Since `base` is exactly the previous version, winning the
+    * claim also proves nothing committed in between — identity high
+    * waters and the COPY INTO ledger need no further check. */
+  private[graft] def writeCommit(spark: SparkSession, table: String,
+      version: Long, base: CommitRecord, rec: CommitRecord): Unit = {
     val fs = fsFor(spark, table)
     val dir = new org.apache.hadoop.fs.Path(table, "_commits")
     fs.mkdirs(dir)
@@ -684,7 +780,7 @@ object Io {
     // race of the unsuffixed design).
     val token = java.util.UUID.randomUUID().toString
     val tmp = new org.apache.hadoop.fs.Path(dir, f"$version%08d.tmp-$token")
-    val fin = new org.apache.hadoop.fs.Path(dir, f"$version%08d.commit")
+    val fin = commitPath(table, version)
     if (fs.exists(fin)) throw new CommitConflictException(
       s"version $version already committed at $table (log is append-only)")
     // Optimistic concurrency: the version number is CLAIMED atomically
@@ -727,77 +823,19 @@ object Io {
     def releaseIfOwned(): Unit =
       try { if (lockOwner(fs, lock).contains(token)) fs.delete(lock, false) }
       catch { case _: Throwable => () }
-    var copiedPrev: Option[Seq[String]] = None
     try {
-      val payload = encodeCommit(spark, table, version, files)
       val out = fs.create(tmp, true)
-      try out.write(payload.getBytes("UTF-8")) finally out.close()
+      try out.write(commitText(spark, version, base, rec).getBytes("UTF-8"))
+      finally out.close()
       // Re-verify ownership + fin-absence immediately before the
       // rename: if a janitor reclaimed our claim past the TTL (we are
       // the presumed-dead writer, merely slow), our token is gone and
       // renaming now could replace the reclaimer's acknowledged commit
       // — surface a conflict instead and let the caller retry.
-      if (!lockOwner(fs, lock).contains(token) || fs.exists(fin)) {
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+      if (!lockOwner(fs, lock).contains(token) || fs.exists(fin))
         throw new CommitConflictException(
           s"version $version claim lost at $table (reclaimed past TTL " +
             "or committed by a concurrent writer)")
-      }
-      // DV sidecar lands only once the claim is verified ours: the
-      // claim loser threw above and never touches the sidecar. The
-      // residual TTL hazard (janitor reclaim in the sidecar→rename
-      // window) is the same one the rename itself already carries.
-      if (dv.nonEmpty) writeDvFile(spark, table, version, dv)
-      else {
-        try fs.delete(dvFin(table, version), false)
-        catch { case _: Throwable => () }
-      }
-      // stats sidecar: same claimed-lock discipline as the DV sidecar
-      stats match {
-        case Some(entries) => writeStatsFile(spark, table, version, entries)
-        case None =>
-          try fs.delete(statsFin(table, version), false)
-          catch { case _: Throwable => () }
-      }
-      // declared-schema sidecar: claim-serialized like dv/stats (the
-      // residual claim-to-rename window is the same one they carry)
-      schema.foreach(s => GraftTables.writeSchemaSidecar(spark, table, s))
-      constraints.foreach(cs => writeConstraintsSidecar(spark, table, cs))
-      generated.foreach(gs => writeGeneratedSidecar(spark, table, gs))
-      props.foreach(ps => writePropsSidecar(spark, table, ps))
-      identitySet.foreach(ids => writeIdentitySidecar(spark, table, ids))
-      // identity high-water CAS (round 14): the claim serializes
-      // writers, so comparing the sidecar's high water against the
-      // value the batch assigned FROM is race-free — a concurrent
-      // advance surfaces as a conflict and the OCC loop re-lands
-      identityAdv.foreach { advs =>
-        val cur = readIdentity(spark, table)
-        advs.foreach { case (c, exp, _) =>
-          val curHw = cur.find(_._1 == c).map(_._4)
-          if (!curHw.contains(exp)) throw new CommitConflictException(
-            s"identity column $c at $table advanced concurrently " +
-              s"(expected hw $exp, found ${curHw.orNull})")
-        }
-        writeIdentitySidecar(spark, table, cur.map { case (c, st, sp, hw) =>
-          advs.find(_._1 == c) match {
-            case Some((_, _, nw)) => (c, st, sp, math.max(hw, nw))
-            case None => (c, st, sp, hw)
-          }
-        })
-      }
-      // COPY INTO ledger: the claim serializes racing ingests, so the
-      // read-check-union here is race-free; a concurrently-ingested
-      // source file surfaces as a conflict (the caller recomputes its
-      // fresh set and retries)
-      copiedAdd.foreach { freshSrc =>
-        val cur = readCopiedFiles(spark, table)
-        val dup = freshSrc.filter(cur)
-        if (dup.nonEmpty) throw new CommitConflictException(
-          s"COPY INTO at $table: ${dup.size} source files were " +
-            "ingested by a concurrent writer")
-        copiedPrev = Some(cur.toSeq.sorted)
-        writeCopiedSidecar(spark, table, (cur.toSeq ++ freshSrc).sorted)
-      }
       if (!fs.rename(tmp, fin)) {
         // rename-onto-existing returns false: if fin appeared in the
         // verify→rename window that is the same lost race; anything
@@ -809,10 +847,6 @@ object Io {
     } catch {
       case t: Throwable =>
         try fs.delete(tmp, false) catch { case _: Throwable => () }
-        // an uncommitted ingest must stay re-runnable: restore the
-        // COPY INTO ledger to its pre-attempt content
-        try copiedPrev.foreach(writeCopiedSidecar(spark, table, _))
-        catch { case _: Throwable => () }
         releaseIfOwned()
         throw t
     }
@@ -833,14 +867,10 @@ object Io {
     var attempt = 0
     while (true) {
       val v = tableVersion(spark, table) + 1
-      val prior = if (v == 0) Seq.empty else readCommit(spark, table, v - 1)
-      val (df2, idAssigned) = assignIdentity(spark, table, df)
-      val fresh = landData(df2, table, s"c$v-$writer")
+      val base = baseOf(spark, table, v)
       try {
-        writeCommit(spark, table, v, prior ++ fresh,
-          carriedDv(spark, table, v),
-          identityAdv = identityAdvOf(spark, table, s"c$v-$writer",
-            idAssigned))
+        writeCommit(spark, table, v, base,
+          appended(df, table, base, s"c$v-$writer"))
         return v
       } catch {
         case _: CommitConflictException if attempt < maxRetries =>
@@ -855,41 +885,19 @@ object Io {
   }
 
   // a vacuum that expires a delta commit's ancestors first writes the
-  // MATERIALIZED full list here (the checkpoint-before-expiry rule);
-  // readCommit prefers it, so retained chains never dangle
+  // MATERIALIZED full record here (the checkpoint-before-expiry rule);
+  // recordLines prefers it, so retained chains never dangle
   private def ckptPath(table: String, version: Long) =
     new org.apache.hadoop.fs.Path(table, f"_commits/$version%08d.ckpt")
 
-  private def readCommit(spark: SparkSession, table: String,
-      version: Long): Seq[String] = {
-    val fs = fsFor(spark, table)
-    val fin = new org.apache.hadoop.fs.Path(table,
-      f"_commits/$version%08d.commit")
-    require(fs.exists(fin), s"no version $version at $table")
-    val src = { val c = ckptPath(table, version)
-      if (fs.exists(c)) c else fin }
-    val in = fs.open(src)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = txt.split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-    lines.headOption match {
-      case Some(h) if h.startsWith("@delta ") =>
-        val base = readCommit(spark, table, h.stripPrefix("@delta ").toLong)
-        val removed = lines.tail.filter(_.startsWith("-"))
-          .map(_.stripPrefix("-")).toSet
-        val added = lines.tail.filter(_.startsWith("+")).map(_.stripPrefix("+"))
-        base.filterNot(removed) ++ added
-      case _ => lines
-    }
-  }
+  /** A version's raw (table-root-relative) file entries. */
+  private[graft] def commitEntries(spark: SparkSession, table: String,
+      version: Long): Seq[String] = record(spark, table, version).files
 
-  /** A version's file list, resolved to readable paths — the planning
-    * handle the DSv2 connector ([[GraftTableProvider]]) builds its
-    * [[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable]]
-    * from. */
+  /** A version's file list, resolved to readable paths. */
   private[graft] def versionFiles(spark: SparkSession, table: String,
       version: Long): Seq[String] =
-    readCommit(spark, table, version).map(resolve(table, _))
+    commitEntries(spark, table, version).map(resolve(table, _))
 
   private[graft] def trailOf(f: String): String = trail(f)
 
@@ -951,17 +959,13 @@ object Io {
     val fs = fsFor(spark, table)
     val dir = new org.apache.hadoop.fs.Path(table, "_commits")
     if (!fs.exists(dir)) return -1L
-    def commitAt(v: Long) = fs.exists(
-      new org.apache.hadoop.fs.Path(table, f"_commits/$v%08d.commit"))
+    def commitAt(v: Long) = fs.exists(commitPath(table, v))
     val hinted: Option[Long] =
       try {
         val p = headHintPath(table)
         if (!fs.exists(p)) None
         else {
-          val in = fs.open(p)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          val v = s.toLong
+          val v = readText(fs, p).trim.toLong
           if (v >= 0 && commitAt(v)) Some(v) else None
         }
       } catch { case _: Throwable => None }
@@ -979,91 +983,72 @@ object Io {
 
   // land a batch as immutable data files under data/<tag>/, returning
   // their table-root-relative paths (the _SUCCESS marker is not data).
-  // CHECK constraints validate here (round 14) — the chokepoint every
-  // DataFrame-shaped write path (appends, OCC, idempotent epochs,
-  // overwrites, COW rewrites, merges) flows through.
-  private def landData(df: DataFrame, table: String, tag: String): Seq[String] = {
-    val spark = df.sparkSession
-    val df1 = applyGenerated(spark, table, df)
-    checkConstraints(spark, table, df1)
+  // Generated columns and CHECK constraints of `base` apply here — the
+  // chokepoint every DataFrame-shaped write path (appends, OCC,
+  // idempotent epochs, overwrites, COW rewrites, merges) flows through.
+  private def landData(df: DataFrame, table: String, tag: String,
+      base: CommitRecord): Seq[String] = {
+    val df1 = applyGenerated(table, base.generated, df)
+    checkConstraints(table, base.constraints, df1)
     df1.write.mode("overwrite").parquet(s"$table/data/$tag")
-    val fs = fsFor(spark, table)
+    val fs = fsFor(df.sparkSession, table)
     fs.listStatus(new org.apache.hadoop.fs.Path(s"$table/data/$tag"))
       .map(_.getPath.getName).filter(_.startsWith("part-")).sorted
       .map(n => s"data/$tag/$n").toIndexedSeq
   }
 
+  /** `base` plus `df` landed under `tag` — the record of an append.
+    * Identity columns absent from the batch are assigned above the
+    * high water (base = highWater + step, plus
+    * monotonically_increasing_id()·step — per-partition blocks, gaps
+    * allowed, exactly Delta's allocation), and the record advances the
+    * high water to the landed max. Explicit values pass through (BY
+    * DEFAULT, not ALWAYS). A racing append that assigned from the same
+    * high water loses the version claim and re-lands. */
+  private def appended(df: DataFrame, table: String, base: CommitRecord,
+      tag: String): CommitRecord = {
+    val assign = base.identity.filterNot(i => df.columns.contains(i._1))
+    val fresh = landData(assign.foldLeft(df) { case (d, (c, _, step, hw)) =>
+      d.withColumn(c, lit(hw + step) + monotonically_increasing_id() * step)
+    }, table, tag, base)
+    val landedMax =
+      if (assign.isEmpty) Map.empty[String, Long]
+      else landedStats(df.sparkSession, table, tag, assign.map(_._1))
+        .toSeq.groupBy(_._1._2).map { case (c, es) => c -> es.map(_._2._2).max }
+    base.copy(files = base.files ++ fresh,
+      identity = base.identity.map { case (c, st, sp, hw) =>
+        (c, st, sp, landedMax.get(c).fold(hw)(math.max(hw, _))) })
+  }
+
   // Staged-CTAS plumbing (round 12, [[GraftCatalog]] stageCreate): the
   // SELECT's output lands under a writer-unique tag WITHOUT committing
-  // — the table stays invisible (no _commits, no _schema sidecar)
-  // until commitStaged lands v0 through the same OCC claim as every
-  // other commit (two racing atomic CTAS serialize; the loser's abort
+  // — the table stays invisible (no _commits, no _schema) until the
+  // staged commit lands v0 through the same OCC claim as every other
+  // commit (two racing atomic CTAS serialize; the loser's abort
   // removes only its own staging dir).
   private[graft] def stageLand(df: DataFrame, table: String,
-      tag: String): Seq[String] = landData(df, table, tag)
-
-  private[graft] def commitStaged(spark: SparkSession, table: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
-    writeCommit(spark, table, 0L, files, schema = schema)
-
-  /** REPLACE TABLE's commit (round 12): the next version lists ONLY
-    * the staged files — no carry, no DV sidecar (dv = None also
-    * scrubs any stale orphan at this number). History stays: every
-    * prior version keeps its own file list. */
-  private[graft] def commitReplaceAll(spark: SparkSession, table: String,
-      version: Long, files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
-    writeCommit(spark, table, version, files, schema = schema)
+      tag: String): Seq[String] =
+    landData(df, table, tag, headRecord(df.sparkSession, table))
 
   /** Create an EMPTY commit-log table at `path` with a declared schema
     * (round 14): the path-based twin of the catalog's CREATE TABLE —
-    * writes the `_schema` sidecar so reads serve the schema (empty
-    * scans) and the first append lands v0. Refuses an existing table. */
+    * declares the schema so reads serve it (empty scans) and the first
+    * append lands v0. Refuses an existing table. */
   def tableCreate(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     require(tableVersion(spark, path) < 0 &&
-      GraftTables.readSchemaSidecar(spark, path).isEmpty,
+      declaration(spark, path).isEmpty,
       s"table at $path already exists")
     fsFor(spark, path).mkdirs(new org.apache.hadoop.fs.Path(path))
-    GraftTables.writeSchemaSidecar(spark, path, schema)
+    declare(spark, path, schema)
   }
 
   // ---- COPY INTO (round 14 — Delta's idempotent landing-dir ingest):
   // each source file is ingested EXACTLY ONCE into the commit log,
-  // tracked in a table-level `_copyinto` ledger (one source path per
-  // line) that updates inside the commit's claimed-lock window — a
-  // re-run over the same landing dir is a no-op, a re-run after new
-  // files land ingests only those, and racing COPY INTOs serialize at
-  // the version claim (the loser recomputes its fresh set). ----
-
-  private def copyIntoSidecar(table: String) =
-    new org.apache.hadoop.fs.Path(table, "_copyinto")
-
-  /** Source files already ingested via [[tableCopyInto]]. */
-  private[graft] def readCopiedFiles(spark: SparkSession,
-      table: String): Set[String] = {
-    val fs = fsFor(spark, table)
-    val p = copyIntoSidecar(table)
-    if (!fs.exists(p)) return Set.empty
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty).toSet
-  }
-
-  private def writeCopiedSidecar(spark: SparkSession, table: String,
-      entries: Seq[String]): Unit = {
-    val fs = fsFor(spark, table)
-    if (entries.isEmpty) {
-      try fs.delete(copyIntoSidecar(table), false)
-      catch { case _: Throwable => () }
-    } else {
-      val out = fs.create(copyIntoSidecar(table), true)
-      try out.write(entries.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
+  // tracked in the record's ledger of ingested source paths — a re-run
+  // over the same landing dir is a no-op, a re-run after new files land
+  // ingests only those, and racing COPY INTOs serialize at the version
+  // claim (the loser recomputes its fresh set against the new HEAD). ----
 
   /** COPY INTO (round 14): ingest the parquet files under `sourceDir`
     * matching `pattern` into the commit-log table, EXACTLY ONCE per
@@ -1071,7 +1056,7 @@ object Io {
     * files ingested this call (0 = nothing new, no commit lands, HEAD
     * unmoved). The batch re-writes through the table's own write path
     * (never a by-reference rename: the source dir stays the caller's),
-    * so CHECK constraints validate and a declared `_schema` aligns the
+    * so CHECK constraints validate and a declared schema aligns the
     * batch — present columns must type-match, missing nullable columns
     * null-backfill, extra columns refuse. Cost ∝ the FRESH files only.
     */
@@ -1085,10 +1070,12 @@ object Io {
     val writer = java.util.UUID.randomUUID().toString
     var attempt = 0
     while (true) {
-      val fresh = found.filterNot(readCopiedFiles(spark, table))
+      val v = tableVersion(spark, table) + 1
+      val base = baseOf(spark, table, v)
+      val fresh = found.filterNot(base.copied)
       if (fresh.isEmpty) return 0L
       val raw = spark.read.parquet(fresh: _*)
-      val df = GraftTables.readSchemaSidecar(spark, table) match {
+      val df = base.schema match {
         case Some(decl) =>
           val names = raw.columns.toSet
           val extra = names -- decl.fieldNames
@@ -1111,78 +1098,49 @@ object Io {
           }: _*)
         case None => raw
       }
-      val v = tableVersion(spark, table) + 1
-      val prior = if (v == 0) Seq.empty else readCommit(spark, table, v - 1)
-      val landed = landData(df, table, s"c$v-copyinto-$writer-a$attempt")
       try {
-        writeCommit(spark, table, v, prior ++ landed,
-          carriedDv(spark, table, v), copiedAdd = Some(fresh))
+        writeCommit(spark, table, v, base,
+          appended(df, table, base, s"c$v-copyinto-$writer-a$attempt")
+            .copy(copied = base.copied ++ fresh))
         return fresh.size.toLong
       } catch {
         case _: CommitConflictException if attempt < maxRetries =>
-          attempt += 1 // HEAD moved or a racer ingested some of our
-          // files — recompute the fresh set against the new ledger
+          attempt += 1 // HEAD moved — recompute the fresh set against it
           Thread.sleep(20L * attempt)
       }
     }
     -1L // unreachable
   }
 
-  // ---- CHECK constraints (round 14 — Delta's table constraints):
-  // a `_constraints` sidecar of (name, SQL expression) rows; every
-  // write path validates its batch (SQL CHECK semantics: TRUE or NULL
-  // passes, FALSE refuses the whole write). Add/drop are
-  // claim-serialized commits like schema changes. ----
+  // ---- Table metadata verbs (round 14 — Delta's CHECK constraints,
+  // GENERATED ALWAYS AS columns, IDENTITY columns and TBLPROPERTIES):
+  // each declaration lives in the record and changes as one more
+  // version with the same files, DVs and stats, so racing metadata
+  // changes serialize at the version claim and a failed commit leaves
+  // HEAD's metadata as it was. ----
 
-  private def constraintsSidecar(table: String) =
-    new org.apache.hadoop.fs.Path(table, "_constraints")
-
-  /** Shared TSV-sidecar read: `key\tvalue` lines → pairs (the
-    * constraints / generated-columns / table-properties encoding). */
-  private def readKvSidecar(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Seq[(String, String)] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t')
-      (l.substring(0, i), l.substring(i + 1))
-    }
-  }
-
-  /** Shared TSV-sidecar write; an empty list deletes the sidecar. */
-  private def writeKvSidecar(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path, kvs: Seq[(String, String)]): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (kvs.isEmpty) {
-      try fs.delete(p, false) catch { case _: Throwable => () }
-    } else {
-      val out = fs.create(p, true)
-      try out.write(kvs.map { case (n, e) => s"$n\t$e" }
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+  /** Commit HEAD's record with `change` applied as the next version. */
+  private def commitMeta(spark: SparkSession, table: String)(
+      change: (Long, CommitRecord) => CommitRecord): Long = {
+    val v = tableVersion(spark, table)
+    require(v >= 0, s"no table at $table")
+    val base = record(spark, table, v)
+    writeCommit(spark, table, v + 1, base, change(v, base))
+    v + 1
   }
 
   /** The table's CHECK constraints — empty when none declared. */
   def readConstraints(spark: SparkSession,
       table: String): Seq[(String, String)] =
-    readKvSidecar(spark, constraintsSidecar(table))
+    headRecord(spark, table).constraints
 
-  private def writeConstraintsSidecar(spark: SparkSession, table: String,
-      cs: Seq[(String, String)]): Unit =
-    writeKvSidecar(spark, constraintsSidecar(table), cs)
-
-  /** Validate a batch against the table's CHECK constraints BEFORE it
-    * lands — SQL CHECK semantics (NULL passes); a violation refuses
-    * the WHOLE write with the constraint named. One `limit(1)` job
-    * per constraint, only on constraint-carrying tables (the sidecar
-    * probe is one exists() otherwise). */
-  private[graft] def checkConstraints(spark: SparkSession, table: String,
-      df: DataFrame): Unit =
-    readConstraints(spark, table).foreach { case (n, e) =>
+  /** Validate a batch against CHECK constraints BEFORE it lands — SQL
+    * CHECK semantics (NULL passes); a violation refuses the WHOLE
+    * write with the constraint named. One `limit(1)` job per
+    * constraint, only on constraint-carrying tables. */
+  private def checkConstraints(table: String,
+      constraints: Seq[(String, String)], df: DataFrame): Unit =
+    constraints.foreach { case (n, e) =>
       val bad = df.filter(!coalesce(expr(e), lit(true))).limit(1).count()
       require(bad == 0L,
         s"CHECK constraint $n ($e) violated — write to $table refused")
@@ -1197,13 +1155,13 @@ object Io {
     * refuses here). A violation throws before the commit lands — the
     * files stay orphans of the vacuum's usual class. */
   private[graft] def checkConstraintsFiles(spark: SparkSession,
-      table: String, fresh: Seq[String]): Unit =
+      table: String, base: CommitRecord, fresh: Seq[String]): Unit =
     if (fresh.nonEmpty &&
-        (readConstraints(spark, table).nonEmpty ||
-          readGenerated(spark, table).nonEmpty)) {
-      val df = readFilesDeclared(spark, table, fresh.map(resolve(table, _)))
-      checkConstraints(spark, table, df)
-      readGenerated(spark, table).foreach { case (n, e) =>
+        (base.constraints.nonEmpty || base.generated.nonEmpty)) {
+      val df = readFilesDeclared(spark, base.schema,
+        fresh.map(resolve(table, _)))
+      checkConstraints(table, base.constraints, df)
+      base.generated.foreach { case (n, e) =>
         if (df.columns.contains(n)) {
           val bad = df.filter(!(col(n) <=> expr(e))).limit(1).count()
           require(bad == 0L, s"generated column $n must equal ($e) — " +
@@ -1212,193 +1170,86 @@ object Io {
       }
     }
 
-  // ---- GENERATED columns (round 14 — Delta's GENERATED ALWAYS AS):
-  // a `_generated` sidecar of (column, SQL expression) rows; every
-  // DataFrame-shaped write COMPUTES absent generated columns at the
-  // landData chokepoint and VALIDATES explicitly-supplied ones
-  // (null-safe equality — a mismatch refuses the whole write);
-  // executor-written statements validate at their commits via
-  // checkConstraintsFiles. Declare/drop are claim-serialized commits
-  // like constraints. ----
-
-  private def generatedSidecar(table: String) =
-    new org.apache.hadoop.fs.Path(table, "_generated")
-
-  /** The table's generated-column definitions — empty when none. */
+  /** The table's generated-column definitions — empty when none.
+    * Every DataFrame-shaped write COMPUTES absent generated columns at
+    * the landData chokepoint and VALIDATES explicitly-supplied ones
+    * (null-safe equality — a mismatch refuses the whole write);
+    * executor-written statements validate at their commits via
+    * [[checkConstraintsFiles]]. */
   def readGenerated(spark: SparkSession,
       table: String): Seq[(String, String)] =
-    readKvSidecar(spark, generatedSidecar(table))
-
-  private def writeGeneratedSidecar(spark: SparkSession, table: String,
-      gs: Seq[(String, String)]): Unit =
-    writeKvSidecar(spark, generatedSidecar(table), gs)
-
-  // ---- IDENTITY columns (round 14 — Delta's GENERATED BY DEFAULT AS
-  // IDENTITY): an `_identity` sidecar of (col, start, step, highWater)
-  // rows. The append verbs ASSIGN system values when the column is
-  // absent from the batch — base = highWater + step, plus
-  // monotonically_increasing_id()·step on top (per-partition blocks,
-  // gaps allowed — exactly Delta's allocation) — and the high-water
-  // advance CASes INSIDE the commit's claimed-lock window, so racing
-  // OCC appends can never double-allocate: the loser's conflict
-  // bubbles into the tableAppendOcc retry loop, which re-lands the
-  // batch against the fresh high water. Explicit values pass through
-  // (BY DEFAULT, not ALWAYS — rewrite verbs re-land existing rows
-  // with their ids untouched). A crash after the sidecar write leaves
-  // only an id GAP, which the contract permits. ----
-
-  private def identitySidecar(table: String) =
-    new org.apache.hadoop.fs.Path(table, "_identity")
+    headRecord(spark, table).generated
 
   /** (column, start, step, highWater) per declared identity column. */
   def readIdentity(spark: SparkSession,
       table: String): Seq[(String, Long, Long, Long)] =
-    readKvSidecar(spark, identitySidecar(table)).map { case (c, v) =>
-      val Array(st, sp, hw) = v.split(","); (c, st.toLong, sp.toLong, hw.toLong)
-    }
-
-  private def writeIdentitySidecar(spark: SparkSession, table: String,
-      ids: Seq[(String, Long, Long, Long)]): Unit =
-    writeKvSidecar(spark, identitySidecar(table),
-      ids.map { case (c, st, sp, hw) => (c, s"$st,$sp,$hw") })
-
-  /** Assign absent identity columns; returns the frame plus the
-    * (column, highWaterAtAssign) pairs the commit must CAS on. */
-  private def assignIdentity(spark: SparkSession, table: String,
-      df: DataFrame): (DataFrame, Seq[(String, Long)]) = {
-    val ids = readIdentity(spark, table)
-    if (ids.isEmpty) return (df, Seq.empty)
-    val assigned = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    val out = ids.foldLeft(df) { case (d, (c, _, step, hw)) =>
-      if (d.columns.contains(c)) d
-      else {
-        assigned += ((c, hw))
-        d.withColumn(c,
-          lit(hw + step) + monotonically_increasing_id() * step)
-      }
-    }
-    (out, assigned.toSeq)
-  }
-
-  /** The landed tag's max per assigned identity column → the CAS
-    * triple (col, expectedHw, newHw); an empty batch advances nothing. */
-  private def identityAdvOf(spark: SparkSession, table: String,
-      tag: String, assigned: Seq[(String, Long)])
-      : Option[Seq[(String, Long, Long)]] = {
-    if (assigned.isEmpty) return None
-    val st = landedStats(spark, table, tag, assigned.map(_._1))
-    Some(assigned.map { case (c, exp) =>
-      val mxs = st.collect { case ((_, `c`), (_, mx)) => mx }
-      (c, exp, if (mxs.isEmpty) exp else mxs.max)
-    })
-  }
+    headRecord(spark, table).identity
 
   /** Declare an identity column (round 14): the column must already
-    * EXIST (on a version with no data files: in the declared
-    * `_schema`), non-null, with the high water seeded from its max
-    * (Delta's SYNC IDENTITY shape; `start - step` with no rows); the sidecar
-    * lands claim-serialized. Subsequent appends without the column
-    * get system-assigned values, explicit values pass through. */
+    * EXIST (on a version with no data files: in the declared schema),
+    * non-null, with the high water seeded from its max (Delta's SYNC
+    * IDENTITY shape; `start - step` with no rows). Subsequent appends
+    * without the column get system-assigned values, explicit values
+    * pass through. */
   def tableAddIdentityColumn(spark: SparkSession, table: String,
       name: String, start: Long = 1L, step: Long = 1L): Long = {
     require(step > 0, "identity step must be positive")
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    val cur = readIdentity(spark, table)
-    require(!cur.exists(_._1 == name),
-      s"identity column $name already declared")
-    val head = readTableVersion(spark, table, v)
-    require(head.columns.contains(name),
-      s"cannot declare identity column $name: it does not exist at " +
-        s"$table (seed it with explicit unique values first)")
-    val r = head.agg(max(col(name).cast("long")), count(lit(1)),
-      count(col(name))).head()
-    require(r.getLong(1) == r.getLong(2),
-      s"identity column $name must be non-null")
-    val hw = if (r.getLong(1) == 0L) start - step else r.getLong(0)
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      identitySet = Some(cur :+ ((name, start, step, hw))))
-    nv
+    commitMeta(spark, table) { (v, base) =>
+      require(!base.identity.exists(_._1 == name),
+        s"identity column $name already declared")
+      val head = readTableVersion(spark, table, v)
+      require(head.columns.contains(name),
+        s"cannot declare identity column $name: it does not exist at " +
+          s"$table (seed it with explicit unique values first)")
+      val r = head.agg(max(col(name).cast("long")), count(lit(1)),
+        count(col(name))).head()
+      require(r.getLong(1) == r.getLong(2),
+        s"identity column $name must be non-null")
+      val hw = if (r.getLong(1) == 0L) start - step else r.getLong(0)
+      base.copy(identity = base.identity :+ ((name, start, step, hw)))
+    }
   }
 
   /** Drop an identity declaration (the column stays, as plain data). */
   def tableDropIdentityColumn(spark: SparkSession, table: String,
-      name: String): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    val cur = readIdentity(spark, table)
-    require(cur.exists(_._1 == name), s"no identity column $name at $table")
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      identitySet = Some(cur.filterNot(_._1 == name)))
-    nv
-  }
+      name: String): Long =
+    commitMeta(spark, table) { (_, base) =>
+      require(base.identity.exists(_._1 == name),
+        s"no identity column $name at $table")
+      base.copy(identity = base.identity.filterNot(_._1 == name))
+    }
 
-  // ---- TBLPROPERTIES (round 14 — Delta's table properties): a
-  // `_props` sidecar of key\tvalue rows; SET/UNSET land as
-  // claim-serialized commits (racing metadata mutations conflict
-  // loudly, like schema/constraint changes), DESCRIBE EXTENDED serves
-  // them through the connector's properties() map, clones carry them
-  // (the Delta clone-properties contract). ----
-
-  private def propsSidecar(table: String) =
-    new org.apache.hadoop.fs.Path(table, "_props")
-
-  /** The table's user properties — empty when none set. */
+  /** The table's user properties — empty when none set. DESCRIBE
+    * EXTENDED serves them through the connector's properties() map,
+    * clones carry them (the Delta clone-properties contract). */
   def readTableProps(spark: SparkSession,
       table: String): Seq[(String, String)] =
-    readKvSidecar(spark, propsSidecar(table))
+    headRecord(spark, table).props
 
-  private[graft] def writePropsSidecar(spark: SparkSession, table: String,
-      ps: Seq[(String, String)]): Unit =
-    writeKvSidecar(spark, propsSidecar(table), ps)
-
-  /** SET TBLPROPERTIES as a claim-serialized commit: upserts the
-    * given keys, every other key carries. */
+  /** SET TBLPROPERTIES: upserts the given keys, every other key
+    * carries. */
   def tableSetProperties(spark: SparkSession, table: String,
-      kvs: Seq[(String, String)]): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    require(kvs.forall { case (k, vv) =>
-      k.nonEmpty && !k.contains('\t') && !vv.contains('\n') },
-      "property keys must be tab-free and values single-line")
-    val cur = readTableProps(spark, table)
-    val keys = kvs.map(_._1).toSet
-    val next = cur.filterNot(p => keys(p._1)) ++ kvs
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      props = Some(next))
-    nv
-  }
+      kvs: Seq[(String, String)]): Long =
+    commitMeta(spark, table) { (_, base) =>
+      require(kvs.forall { case (k, vv) =>
+        k.nonEmpty && !k.contains('\t') && !vv.contains('\n') },
+        "property keys must be tab-free and values single-line")
+      val keys = kvs.map(_._1).toSet
+      base.copy(props = base.props.filterNot(p => keys(p._1)) ++ kvs)
+    }
 
-  /** UNSET TBLPROPERTIES — claim-serialized like the set; missing
-    * keys are a no-op (IF EXISTS semantics). */
+  /** UNSET TBLPROPERTIES — missing keys are a no-op (IF EXISTS
+    * semantics). */
   def tableUnsetProperties(spark: SparkSession, table: String,
-      keys: Seq[String]): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    val ks = keys.toSet
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      props = Some(readTableProps(spark, table).filterNot(p => ks(p._1))))
-    nv
-  }
+      keys: Seq[String]): Long =
+    commitMeta(spark, table) { (_, base) =>
+      base.copy(props = base.props.filterNot(p => keys.contains(p._1)))
+    }
 
   /** Compute absent generated columns / validate supplied ones — the
     * landData half of the GENERATED ALWAYS AS contract. */
-  private def applyGenerated(spark: SparkSession, table: String,
-      df: DataFrame): DataFrame = {
-    val gens = readGenerated(spark, table)
-    if (gens.isEmpty) return df
+  private def applyGenerated(table: String, gens: Seq[(String, String)],
+      df: DataFrame): DataFrame =
     gens.foldLeft(df) { case (d, (n, e)) =>
       if (!d.columns.contains(n)) d.withColumn(n, expr(e))
       else {
@@ -1408,97 +1259,68 @@ object Io {
         d
       }
     }
-  }
 
   /** Declare a generated column (round 14): the column must already
     * exist CONFORMING in the table (on a version with no data files:
-    * exist in the declared `_schema`) — one
-    * distributed scan, the ADD CONSTRAINT discipline — and the
-    * sidecar lands as a claim-serialized commit. Every subsequent
-    * DataFrame write computes it when absent and validates it when
-    * supplied; executor-written DML validates at commit. */
+    * exist in the declared schema) — one distributed scan, the ADD
+    * CONSTRAINT discipline. Every subsequent DataFrame write computes
+    * it when absent and validates it when supplied; executor-written
+    * DML validates at commit. */
   def tableAddGeneratedColumn(spark: SparkSession, table: String,
-      name: String, exprSql: String): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    require(name.nonEmpty && !name.contains('\t') && !exprSql.contains('\n'),
-      "generated-column names must be tab-free and expressions single-line")
-    val cur = readGenerated(spark, table)
-    require(!cur.exists(_._1 == name),
-      s"generated column $name already declared")
-    val head = readTableVersion(spark, table, v)
-    require(head.columns.contains(name),
-      s"cannot declare generated column $name: it does not exist at " +
-        s"$table (add the column with conforming values first)")
-    val bad = head.filter(!(col(name) <=> expr(exprSql))).limit(1).count()
-    require(bad == 0L, s"cannot declare generated column $name " +
-      s"($exprSql): existing rows at $table v$v do not conform")
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      generated = Some(cur :+ (name -> exprSql)))
-    nv
-  }
+      name: String, exprSql: String): Long =
+    commitMeta(spark, table) { (v, base) =>
+      require(name.nonEmpty && !name.contains('\t') && !exprSql.contains('\n'),
+        "generated-column names must be tab-free and expressions single-line")
+      require(!base.generated.exists(_._1 == name),
+        s"generated column $name already declared")
+      val head = readTableVersion(spark, table, v)
+      require(head.columns.contains(name),
+        s"cannot declare generated column $name: it does not exist at " +
+          s"$table (add the column with conforming values first)")
+      val bad = head.filter(!(col(name) <=> expr(exprSql))).limit(1).count()
+      require(bad == 0L, s"cannot declare generated column $name " +
+        s"($exprSql): existing rows at $table v$v do not conform")
+      base.copy(generated = base.generated :+ (name -> exprSql))
+    }
 
   /** Drop a generated-column declaration (the column stays, as plain
-    * data) — claim-serialized like the add. */
+    * data). */
   def tableDropGeneratedColumn(spark: SparkSession, table: String,
-      name: String): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    val cur = readGenerated(spark, table)
-    require(cur.exists(_._1 == name),
-      s"no generated column $name at $table")
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      generated = Some(cur.filterNot(_._1 == name)))
-    nv
-  }
+      name: String): Long =
+    commitMeta(spark, table) { (_, base) =>
+      require(base.generated.exists(_._1 == name),
+        s"no generated column $name at $table")
+      base.copy(generated = base.generated.filterNot(_._1 == name))
+    }
 
   /** Declare a CHECK constraint (round 14): existing data must already
     * satisfy it (one distributed scan — Delta's ADD CONSTRAINT
-    * contract), and the sidecar lands as a claim-serialized commit so
-    * racing metadata changes conflict loudly. Every subsequent write
-    * through any path (appends, OCC, streaming epochs, COW rewrites,
-    * MOR deltas, the DSv2/catalog writers) validates against it. */
+    * contract). Every subsequent write through any path (appends, OCC,
+    * streaming epochs, COW rewrites, MOR deltas, the DSv2/catalog
+    * writers) validates against it. */
   def tableAddConstraint(spark: SparkSession, table: String,
-      name: String, exprSql: String): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    require(name.nonEmpty && !name.contains('\t') && !exprSql.contains('\n'),
-      "constraint names must be tab-free and expressions single-line")
-    val cur = readConstraints(spark, table)
-    require(!cur.exists(_._1 == name), s"constraint $name already exists")
-    val bad = readTableVersion(spark, table, v)
-      .filter(!coalesce(expr(exprSql), lit(true))).limit(1).count()
-    require(bad == 0L,
-      s"cannot add CHECK constraint $name ($exprSql): existing rows " +
-        s"at $table v$v violate it")
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      constraints = Some(cur :+ (name -> exprSql)))
-    nv
-  }
+      name: String, exprSql: String): Long =
+    commitMeta(spark, table) { (v, base) =>
+      require(name.nonEmpty && !name.contains('\t') && !exprSql.contains('\n'),
+        "constraint names must be tab-free and expressions single-line")
+      require(!base.constraints.exists(_._1 == name),
+        s"constraint $name already exists")
+      val bad = readTableVersion(spark, table, v)
+        .filter(!coalesce(expr(exprSql), lit(true))).limit(1).count()
+      require(bad == 0L,
+        s"cannot add CHECK constraint $name ($exprSql): existing rows " +
+          s"at $table v$v violate it")
+      base.copy(constraints = base.constraints :+ (name -> exprSql))
+    }
 
-  /** Drop a CHECK constraint — claim-serialized like the add. */
+  /** Drop a CHECK constraint. */
   def tableDropConstraint(spark: SparkSession, table: String,
-      name: String): Long = {
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
-    val cur = readConstraints(spark, table)
-    require(cur.exists(_._1 == name), s"no constraint $name at $table")
-    val nv = v + 1
-    val files = readCommit(spark, table, v)
-    val st = carryStats(spark, table, v, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dvDirsOf(spark, table, v), st,
-      constraints = Some(cur.filterNot(_._1 == name)))
-    nv
-  }
+      name: String): Long =
+    commitMeta(spark, table) { (_, base) =>
+      require(base.constraints.exists(_._1 == name),
+        s"no constraint $name at $table")
+      base.copy(constraints = base.constraints.filterNot(_._1 == name))
+    }
 
   /** CONVERT a plain parquet directory into a commit-log table
     * (round 14 — Delta's CONVERT TO DELTA): the existing part files
@@ -1535,33 +1357,27 @@ object Io {
         !n.startsWith("."))
       .sorted.map(n => s"data/$tag/$n").toIndexedSeq
     require(moved.nonEmpty, s"no parquet part files to convert at $dir")
-    writeCommit(spark, dir, 0L, moved)
+    val base = baseOf(spark, dir, 0L)
+    writeCommit(spark, dir, 0L, base, base.copy(files = moved))
     0L
   }
 
   /** Land a DECLARED-SCHEMA change (ALTER TABLE ADD COLUMN) as a
     * claim-serialized commit (round 14, round-13 VERDICT #5): the next
-    * version carries the SAME file list (plus DV/stats sidecars by
-    * reference) and the evolved `_schema` sidecar lands inside the
-    * claimed-lock window — so a schema change is one more version in
-    * the history, two racing ALTERs serialize at the claim (the loser
-    * gets a catchable [[CommitConflictException]] against its stale
-    * base version), and ALTER-vs-REPLACE races conflict the same way.
+    * version carries the SAME files, DVs and stats with the evolved
+    * schema — so a schema change is one more version in the history,
+    * two racing ALTERs serialize at the claim (the loser gets a
+    * catchable [[CommitConflictException]] against its stale base
+    * version), and ALTER-vs-REPLACE races conflict the same way.
     * `basedOn` is the version the caller computed the new schema
     * against (CAS semantics); -1 creates v0 with an empty file list on
     * a created-but-never-written table. */
   private[graft] def commitSchemaChange(spark: SparkSession, table: String,
       basedOn: Long, schema: org.apache.spark.sql.types.StructType): Long = {
-    val nv = basedOn + 1
-    val files =
-      if (basedOn < 0) Seq.empty[String] else readCommit(spark, table, basedOn)
-    val dv =
-      if (basedOn < 0) Seq.empty[String] else dvDirsOf(spark, table, basedOn)
-    val st =
-      if (basedOn < 0) None
-      else carryStats(spark, table, basedOn, nv, files, Seq.empty)._2
-    writeCommit(spark, table, nv, files, dv, st, Some(schema))
-    nv
+    val base = baseOf(spark, table, basedOn + 1)
+    writeCommit(spark, table, basedOn + 1, base,
+      base.copy(schema = Some(schema)))
+    basedOn + 1
   }
 
   /** OVERWRITE as a commit (round 12): `INSERT OVERWRITE` /
@@ -1569,81 +1385,43 @@ object Io {
     * only the fresh files — the REPLACE TABLE semantics at write-path
     * granularity. Nothing is truncated physically: every prior
     * version keeps serving its own cut via time travel, and RESTORE
-    * can roll the overwrite back. Any DV state dies with the replaced
-    * content (dv = None scrubs stale sidecars at this number). */
+    * can roll the overwrite back. DV state and stats die with the
+    * replaced content. */
   def tableOverwrite(df: DataFrame, table: String): Long = {
     val spark = df.sparkSession
     val v = tableVersion(spark, table) + 1
     require(v > 0, s"no table at $table — overwrite needs an existing " +
       "commit log (create with tableAppend or catalog CTAS)")
-    writeCommit(spark, table, v, landData(df, table, s"c$v-ow"))
+    val base = record(spark, table, v - 1)
+    writeCommit(spark, table, v, base, base.copy(
+      files = landData(df, table, s"c$v-ow", base), dv = Seq.empty,
+      stats = None))
     v
   }
 
-  /** A version's raw (table-root-relative) commit entries — the
-    * row-level COW write's arithmetic handle. */
-  private[graft] def commitEntries(spark: SparkSession, table: String,
-      version: Long): Seq[String] = readCommit(spark, table, version)
-
   /** Read a HEAD-rewrite's file subset with the table's DECLARED
-    * schema (`_schema` sidecar) applied when one exists (round 14,
-    * round-13 ADVICE): after ALTER TABLE ADD COLUMN a table holds
-    * MIXED-schema files, and a bare `spark.read.parquet` infers from a
-    * single footer — a COW rewrite that picked a pre-evolution footer
-    * would silently drop the added column from post-evolution rows.
-    * The declared schema clips/null-backfills per file (the same
-    * semantics the DSv2 connector already serves at HEAD), so every
-    * rewrite verb is era-correct. Sidecar-less tables read exactly as
-    * before. */
-  private def readFilesDeclared(spark: SparkSession, table: String,
+    * schema applied when one exists (round 14, round-13 ADVICE): after
+    * ALTER TABLE ADD COLUMN a table holds MIXED-schema files, and a
+    * bare `spark.read.parquet` infers from a single footer — a COW
+    * rewrite that picked a pre-evolution footer would silently drop the
+    * added column from post-evolution rows. The declared schema
+    * clips/null-backfills per file (the same semantics the DSv2
+    * connector already serves at HEAD), so every rewrite verb is
+    * era-correct. */
+  private def readFilesDeclared(spark: SparkSession,
+      declared: Option[org.apache.spark.sql.types.StructType],
       paths: Seq[String]): DataFrame =
-    GraftTables.readSchemaSidecar(spark, table) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    declared.fold(spark.read)(s => spark.read.schema(s)).parquet(paths: _*)
 
-  /** Land a SQL row-level rewrite as the next version: `files` is the
-    * full (kept + fresh) list, the DV sidecar carries (a DELETE
-    * rewrite on a DV table keeps kept-file rows deleted; UPDATE/MERGE
-    * refuse DV tables upstream), and the OCC claim serializes racing
-    * DML — the loser surfaces a CommitConflictException and Spark
-    * fails that statement cleanly (re-run re-scans fresh state). */
-  private[graft] def commitReplace(spark: SparkSession, table: String,
-      version: Long, files: Seq[String],
-      stats: Option[Seq[(String, String, Long, Long)]] = None): Unit =
-    writeCommit(spark, table, version, files,
-      carriedDv(spark, table, version), stats)
-
-  /** Land a merge-on-read DELTA commit (round 13, the SupportsDelta
-    * write): prior files all carry, fresh inserted files append, and
-    * the statement's new dv/ dir of (file, pos) deletes joins the
-    * carried DV sidecar — one OCC version, nothing rewritten. */
-  private[graft] def commitDelta(spark: SparkSession, table: String,
-      version: Long, files: Seq[String], extraDv: Seq[String],
-      stats: Option[Seq[(String, String, Long, Long)]]): Unit =
-    writeCommit(spark, table, version, files,
-      carriedDv(spark, table, version) ++ extraDv, stats)
-
-  /** Commit `df` as the next version: an APPEND (prior files carried by
-    * reference + the new batch's files). Version 0 creates the table.
+  /** Commit `df` as the next version: an APPEND (prior files, DVs and
+    * metadata carried by reference + the new batch's files). Version 0
+    * creates the table.
     */
-  // deletion vectors (I25) carry forward by reference like the file
-  // list: EVERY append flavor must not resurrect rows deleted at v−1.
-  // This resolves the carried content; [[writeCommit]] lands the
-  // sidecar inside the version's claimed-lock window.
-  private def carriedDv(spark: SparkSession, table: String,
-      v: Long): Seq[String] =
-    if (v <= 0) Seq.empty else dvDirsOf(spark, table, v - 1)
-
   def tableAppend(df: DataFrame, table: String): Long = {
     val spark = df.sparkSession
     val v = tableVersion(spark, table) + 1
-    val prior = if (v == 0) Seq.empty else readCommit(spark, table, v - 1)
-    val (df2, idAssigned) = assignIdentity(spark, table, df)
-    val fresh = landData(df2, table, s"c$v")
-    writeCommit(spark, table, v, prior ++ fresh,
-      carriedDv(spark, table, v),
-      identityAdv = identityAdvOf(spark, table, s"c$v", idAssigned))
+    val base = baseOf(spark, table, v)
+    writeCommit(spark, table, v, base, appended(df, table, base, s"c$v"))
     v
   }
 
@@ -1665,11 +1443,9 @@ object Io {
     else {
       require(v == batchId - 1,
         s"batch $batchId delivered before batch ${batchId - 1} committed at $table")
-      val prior = if (batchId == 0) Seq.empty
-        else readCommit(spark, table, batchId - 1)
-      writeCommit(spark, table, batchId,
-        prior ++ landData(df, table, s"c$batchId"),
-        carriedDv(spark, table, batchId))
+      val base = baseOf(spark, table, batchId)
+      writeCommit(spark, table, batchId, base,
+        appended(df, table, base, s"c$batchId"))
       true
     }
   }
@@ -1678,7 +1454,9 @@ object Io {
     * VERDICT #1): micro-batch epoch k lands as table version k — the
     * [[tableAppendIdempotent]] contract at FILE granularity (executor
     * tasks already streamed the batch's parquet under the epoch's
-    * `data/` tag; this is the driver-side commit). Redelivery of an
+    * `data/` tag; this is the driver-side commit, which validates them
+    * against the CHECK constraints first — a violating micro-batch
+    * fails the query instead of poisoning the table). Redelivery of an
     * already-committed epoch is a NO-OP (returns false; the replayed
     * attempt's parts are orphans of the vacuum's usual class), so
     * Structured Streaming's at-least-once epoch delivery becomes
@@ -1693,10 +1471,10 @@ object Io {
       require(v == epochId - 1,
         s"epoch $epochId delivered before epoch ${epochId - 1} " +
           s"committed at $table (direct-sink tables map version ≡ epoch)")
-      val prior =
-        if (epochId == 0) Seq.empty else readCommit(spark, table, epochId - 1)
-      writeCommit(spark, table, epochId, prior ++ files,
-        carriedDv(spark, table, epochId))
+      val base = baseOf(spark, table, epochId)
+      checkConstraintsFiles(spark, table, base, files)
+      writeCommit(spark, table, epochId, base,
+        base.copy(files = base.files ++ files))
       true
     }
   }
@@ -1713,12 +1491,13 @@ object Io {
       pred: Column): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    require(dvDirsOf(spark, table, v).isEmpty,
+    val base = record(spark, table, v)
+    require(base.dv.isEmpty,
       s"table at $table carries deletion vectors — plain COW delete " +
         "would scan raw files and resurrect DV-deleted rows; use " +
         "tableDeleteWhereDv (or optimizeTableDv first)")
-    val files = readCommit(spark, table, v)
-    val cur = readFilesDeclared(spark, table, files.map(resolve(table, _)))
+    val files = base.files
+    val cur = readFilesDeclared(spark, base.schema, files.map(resolve(table, _)))
     // trailing data/<tag>/<part> segment of each scanned row's source
     // file (collect is ∝ #touched files — metadata-scale, same class
     // as the commit log); matched back to entries via trail() so
@@ -1728,18 +1507,17 @@ object Io {
       .distinct().collect().map(_.getString(0)).toSet
     val nv = v + 1
     val touchedFull = files.filter(f => touched(trail(f)))
-    val rewritten0 =
+    val rewritten =
       if (touchedFull.isEmpty) Seq.empty[String]
       else landData(
-        readFilesDeclared(spark, table, touchedFull.map(resolve(table, _)))
+        readFilesDeclared(spark, base.schema, touchedFull.map(resolve(table, _)))
           // SQL DELETE removes rows where pred IS TRUE — a NULL
           // predicate row is NOT deleted, so the keep filter must be
           // `NOT coalesce(pred, false)` (a bare `!pred` is NULL on
           // those rows and filter would silently drop them)
-          .filter(!coalesce(pred, lit(false))), table, s"c$nv")
-    val keptFiles = files.filterNot(f => touched(trail(f)))
-    val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)
-    writeCommit(spark, table, nv, keptFiles ++ rewritten, stats = st)
+          .filter(!coalesce(pred, lit(false))), table, s"c$nv", base)
+    writeCommit(spark, table, nv, base, rewrite(spark, table, base,
+      files.filterNot(f => touched(trail(f))), rewritten, s"c$nv"))
     nv
   }
 
@@ -1752,7 +1530,7 @@ object Io {
     * backfill can never leak rows into regions it did not claim —
     * validation is one pass over the batch, refusal lands nothing).
     * Surviving region rows and the fresh batch land under one tag so
-    * the stats sidecar re-derives in one pass; DV tables refuse like
+    * the stats re-derive in one pass; DV tables refuse like
     * tableDeleteWhere (a COW region rewrite over raw files would
     * resurrect DV-deleted rows; optimizeTableDv first). At 100 TB the
     * rewrite is ∝ the replaced region, never the table.
@@ -1761,7 +1539,8 @@ object Io {
     val spark = df.sparkSession
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    require(dvDirsOf(spark, table, v).isEmpty,
+    val base = record(spark, table, v)
+    require(base.dv.isEmpty,
       s"table at $table carries deletion vectors — replaceWhere's COW " +
         "region rewrite would resurrect DV-deleted rows; run " +
         "optimizeTableDv first")
@@ -1769,13 +1548,13 @@ object Io {
     require(bad == 0L, s"replaceWhere at $table: $bad batch rows fall " +
       "outside the predicate — the batch may only write the region it " +
       "replaces")
-    val files = readCommit(spark, table, v)
+    val files = base.files
     // an empty table (staged CTAS, never written) has no region to
     // delete — the replace is a plain first insert
     val touched =
       if (files.isEmpty) Set.empty[String]
       else {
-        val cur = readFilesDeclared(spark, table,
+        val cur = readFilesDeclared(spark, base.schema,
           files.map(resolve(table, _)))
         val relFile =
           regexp_extract(input_file_name(), "data/[^/]+/[^/]+$", 0)
@@ -1784,7 +1563,7 @@ object Io {
       }
     val nv = v + 1
     val touchedFull = files.filter(f => touched(trail(f)))
-    val aligned = GraftTables.readSchemaSidecar(spark, table) match {
+    val aligned = base.schema match {
       case Some(decl) =>
         df.select(decl.fieldNames.toIndexedSeq.map(col): _*)
       case None => df
@@ -1792,17 +1571,15 @@ object Io {
     val unioned =
       if (touchedFull.isEmpty) aligned
       else {
-        val survivors = readFilesDeclared(spark, table,
+        val survivors = readFilesDeclared(spark, base.schema,
             touchedFull.map(resolve(table, _)))
           .filter(!coalesce(pred, lit(false)))
         survivors.unionByName(aligned.select(
           survivors.columns.toIndexedSeq.map(col): _*))
       }
-    val landed = landData(unioned, table, s"c$nv-rw")
-    val keptFiles = files.filterNot(f => touched(trail(f)))
-    val (fresh, st) =
-      carryStatsFor(spark, table, v, keptFiles, landed, s"c$nv-rw")
-    writeCommit(spark, table, nv, keptFiles ++ fresh, stats = st)
+    val landed = landData(unioned, table, s"c$nv-rw", base)
+    writeCommit(spark, table, nv, base, rewrite(spark, table, base,
+      files.filterNot(f => touched(trail(f))), landed, s"c$nv-rw"))
     nv
   }
 
@@ -1816,7 +1593,7 @@ object Io {
     * metadata-scale), only files holding matched keys are rewritten
     * (matched rows dropped, all source rows landed alongside), every
     * other file carries by reference, and history stays immutable.
-    * Stats sidecars carry ([[carryStats]]). Join sizing is left to
+    * Stats carry ([[rewrite]]). Join sizing is left to
     * AQE — merge sources range from a trickle to a backfill, so
     * nothing is force-broadcast. DV-carrying tables COMPOSE (round 13,
     * positional DVs): the target view is merge-on-read, so a source
@@ -1839,26 +1616,23 @@ object Io {
     // Without the flag a source/target column mismatch refuses below,
     // exactly as before.
     if (schemaEvolution) {
-      val cur = GraftTables.readSchemaSidecar(spark, table)
+      val cur = record(spark, table, v).schema
         .getOrElse(readTableVersion(spark, table, v).schema)
       val extra = source.schema.fields
         .filterNot(f => cur.fieldNames.contains(f.name))
-      if (extra.nonEmpty) {
-        val evolved = extra.foldLeft(cur)((s, f) =>
-          s.add(f.name, f.dataType, nullable = true))
-        commitSchemaChange(spark, table, v, evolved)
-        v += 1
-      }
+      if (extra.nonEmpty)
+        v = commitSchemaChange(spark, table, v, extra.foldLeft(cur)((s, f) =>
+          s.add(f.name, f.dataType, nullable = true)))
     }
-    val priorDv = dvDirsOf(spark, table, v)
-    val files = readCommit(spark, table, v)
+    val base = record(spark, table, v)
+    val files = base.files
     val raw = withFilePos(
-      readFilesDeclared(spark, table, files.map(resolve(table, _))))
+      readFilesDeclared(spark, base.schema, files.map(resolve(table, _))))
     // the MOR view with (file, pos) attribution: matched-file discovery
     // and the rewrite both honor prior deletes (a DV-deleted row can
     // neither match nor resurrect)
     val live =
-      if (priorDv.isEmpty) raw else dvJoin(raw, dvEntries(spark, table, priorDv))
+      if (base.dv.isEmpty) raw else dvJoin(raw, dvEntries(spark, table, base.dv))
     val dataCols = raw.columns.filterNot(Set("__f", "__p")).toIndexedSeq
     require(dataCols.toSet == source.columns.toSet,
       s"merge source columns ${source.columns.mkString(",")} must match " +
@@ -1898,12 +1672,11 @@ object Io {
           .join(tgt.select(col(keyCol)), Seq(keyCol), "left_anti")
         updated.unionByName(untouchedRows).unionByName(inserts)
       }
-    val landed = landData(out, table, s"c$nv")
-    val keptFiles = files.filterNot(f => touched(trail(f)))
-    val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, landed)
+    val landed = landData(out, table, s"c$nv", base)
     // carried DV dirs keep applying to kept files; entries for the
     // rewritten files point at trails no longer in the list — inert
-    writeCommit(spark, table, nv, keptFiles ++ rewritten, priorDv, st)
+    writeCommit(spark, table, nv, base, rewrite(spark, table, base,
+      files.filterNot(f => touched(trail(f))), landed, s"c$nv"))
     nv
   }
 
@@ -1966,21 +1739,18 @@ object Io {
     require(v >= 0, s"no table at $srcTable")
     require(tableVersion(spark, dstTable) == -1L,
       s"$dstTable already exists (clone target must be fresh)")
-    require(dvDirsOf(spark, srcTable, v).isEmpty,
+    val src = record(spark, srcTable, v)
+    require(src.dv.isEmpty,
       s"source at $srcTable carries deletion vectors — a by-reference " +
         "clone would resurrect deleted rows; optimizeTableDv first")
     // table-level metadata travels with the clone (round 14): the
-    // declared schema and CHECK constraints are part of the table's
-    // contract, exactly as Delta clones copy table properties
-    writeCommit(spark, dstTable, 0L,
-      readCommit(spark, srcTable, v).map(resolve(srcTable, _)),
-      schema = GraftTables.readSchemaSidecar(spark, srcTable),
-      constraints = Some(readConstraints(spark, srcTable))
-        .filter(_.nonEmpty),
-      generated = Some(readGenerated(spark, srcTable))
-        .filter(_.nonEmpty),
-      props = Some(readTableProps(spark, srcTable))
-        .filter(_.nonEmpty))
+    // declared schema, CHECK constraints, generated columns and
+    // properties are part of the table's contract, exactly as Delta
+    // clones copy table properties
+    writeCommit(spark, dstTable, 0L, CommitRecord(), CommitRecord(
+      files = src.files.map(resolve(srcTable, _)), schema = src.schema,
+      constraints = src.constraints, generated = src.generated,
+      props = src.props))
     0L
   }
 
@@ -1998,8 +1768,8 @@ object Io {
     val latest = tableVersion(spark, table)
     require(retainFrom >= 0 && retainFrom <= latest,
       s"retainFrom $retainFrom out of range [0, $latest] at $table")
-    val live = (retainFrom to latest)
-      .flatMap(readCommit(spark, table, _)).map(trail).toSet
+    val retained = (retainFrom to latest).map(record(spark, table, _))
+    val live = retained.flatMap(_.files).map(trail).toSet
     val dataDir = new org.apache.hadoop.fs.Path(table, "data")
     var removed = 0L
     if (fs.exists(dataDir)) fs.listStatus(dataDir).foreach { tag =>
@@ -2010,10 +1780,9 @@ object Io {
         }
       }
     }
-    // deletion-vector dirs (I25) are live iff a RETAINED version's .dv
-    // sidecar references them — same liveness rule as data files
-    val liveDv = (retainFrom to latest)
-      .flatMap(dvDirsOf(spark, table, _)).toSet
+    // deletion-vector dirs (I25) are live iff a RETAINED version's
+    // record references them — same liveness rule as data files
+    val liveDv = retained.flatMap(_.dv).toSet
     val dvRoot = new org.apache.hadoop.fs.Path(table, "dv")
     if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { d =>
       if (d.isDirectory && !liveDv(s"dv/${d.getPath.getName}")) {
@@ -2024,40 +1793,30 @@ object Io {
     }
     // delta-encoded commits resolve through their predecessors:
     // expiring below a delta commit would orphan every retained commit
-    // chained onto it — so the earliest RETAINED commit is first
-    // MATERIALIZED as a full list (content-identical, the Delta
+    // chained onto it — so the earliest RETAINED record is first
+    // MATERIALIZED in full as its `.ckpt` (the Delta
     // checkpoint-before-expiry rule; atomic replace so readers never
-    // see it missing), and only then do the ancestors expire. The
+    // see it missing), and only then do the ancestors expire: every
+    // file of an expired version (commit, checkpoint, claim lock,
+    // crashed attempts' tmp files) leaves `_commits`. The
     // expired-version contract is unchanged: reads below retainFrom
     // refuse with "no version".
-    def isFull(v: Long): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(table, f"_commits/$v%08d.commit")
-      if (!fs.exists(p)) return false
-      val in = fs.open(p)
-      try {
-        val head = new Array[Byte](7)
-        val n = in.read(head)
-        n < 7 || new String(head, 0, n, "UTF-8") != "@delta "
-      } finally in.close()
-    }
-    if (retainFrom > 0 && !isFull(retainFrom)) {
-      val full = readCommit(spark, table, retainFrom).mkString("\n")
+    if (retainFrom > 0) {
       val fin = ckptPath(table, retainFrom)
       val tmp = new org.apache.hadoop.fs.Path(table,
         f"_commits/$retainFrom%08d.ckpt.tmp-${java.util.UUID.randomUUID()}")
       val out = fs.create(tmp, true)
-      try out.write(full.getBytes("UTF-8")) finally out.close()
-      // overwrite-semantics like the stats sidecar (re-vacuum writes
-      // the same deterministic content)
+      try out.write((LogToken +: retained.head.lines).mkString("\n")
+        .getBytes("UTF-8")) finally out.close()
+      // a re-vacuum writes the same deterministic content
       try fs.delete(fin, false) catch { case _: Throwable => () }
       require(fs.rename(tmp, fin),
         s"checkpoint write for v$retainFrom failed at $table")
     }
-    (0L until retainFrom).foreach { ver =>
-      fs.delete(new org.apache.hadoop.fs.Path(table,
-        f"_commits/$ver%08d.commit"), false)
-      fs.delete(ckptPath(table, ver), false)
-      fs.delete(dvFin(table, ver), false)
+    fs.listStatus(new org.apache.hadoop.fs.Path(table, "_commits")).foreach { st =>
+      val n = st.getPath.getName
+      if (n.length > 8 && n.take(8).forall(_.isDigit) &&
+          n.take(8).toLong < retainFrom) fs.delete(st.getPath, false)
     }
     removed
   }
@@ -2090,21 +1849,21 @@ object Io {
     * table size. */
   def changeFeedMor(spark: SparkSession, table: String,
       fromV: Long, toV: Long): DataFrame = {
-    val from = readCommit(spark, table, fromV).toSet
-    val to = readCommit(spark, table, toV).toSet
-    val fromDv = dvDirsOf(spark, table, fromV)
-    val toDv = dvDirsOf(spark, table, toV)
+    val (fromRec, toRec) = (record(spark, table, fromV), record(spark, table, toV))
+    val (from, to) = (fromRec.files.toSet, toRec.files.toSet)
+    val (fromDv, toDv) = (fromRec.dv, toRec.dv)
+    val declared = declaredSchema(spark, table)
     def entries(dirs: Seq[String]): Option[DataFrame] =
       if (dirs.isEmpty) None else Some(dvEntries(spark, table, dirs))
     // MOR view of a file subset under a version's DV set (positional)
-    // feed reads serve the DECLARED (HEAD) schema when a sidecar
-    // exists: a feed spanning an ALTER ADD COLUMN evolution aligns
-    // both diff sides on one schema (era-1 rows null-backfill) instead
-    // of failing the union on mixed footers
+    // feed reads serve the DECLARED (HEAD) schema when there is one:
+    // a feed spanning an ALTER ADD COLUMN evolution aligns both diff
+    // sides on one schema (era-1 rows null-backfill) instead of
+    // failing the union on mixed footers
     def readMor(fs: Set[String], dv: Seq[String]): Option[DataFrame] =
       if (fs.isEmpty) None
       else {
-        val base = readFilesDeclared(spark, table,
+        val base = readFilesDeclared(spark, declared,
           fs.toSeq.sorted.map(f => resolve(table, f)))
         entries(dv) match {
           case Some(e) => Some(dvJoin(withFilePos(base), e).drop("__f", "__p"))
@@ -2149,7 +1908,7 @@ object Io {
             case Some(old) => e.join(old, Seq("__f", "__p"), "left_anti")
             case None => e
           }
-          val shared = withFilePos(readFilesDeclared(spark, table,
+          val shared = withFilePos(readFilesDeclared(spark, declared,
             sharedFiles.toSeq.sorted.map(f => resolve(table, f))))
           Some(dvJoin(shared, fresh, "left_semi").drop("__f", "__p")
             .withColumn("change_type", lit(changeType)))
@@ -2327,30 +2086,20 @@ object Io {
     val latest = tableVersion(spark, table)
     require(toVersion >= 0 && toVersion <= latest,
       s"restore target $toVersion out of range [0, $latest] at $table")
-    val files = readCommit(spark, table, toVersion)
+    val target = record(spark, table, toVersion)
     val fs = fsFor(spark, table)
-    files.foreach { f =>
+    // restored state ≡ the old version's CONTENT — its files, deletion
+    // vectors and stats (so a DV-free target restored over a
+    // DV-carrying HEAD rolls the deletes back too, exactly the Delta
+    // RESTORE contract) — each file and dv/ dir checked to have
+    // survived vacuum; the table metadata stays HEAD's
+    (target.files ++ target.dv).foreach { f =>
       require(fs.exists(new org.apache.hadoop.fs.Path(resolve(table, f))),
         s"cannot restore to $toVersion: $f was vacuumed")
     }
-    // restored state ≡ the old version's CONTENT, which includes its
-    // deletion vectors: carry the target's DV sidecar (and verify its
-    // dv/ dirs survived vacuum, the per-file check's DV twin). A
-    // DV-free target restored over a DV-carrying HEAD writes no
-    // sidecar — writeCommit clears any stale one, so the restore also
-    // rolls back deletes, exactly the Delta RESTORE contract.
-    val dvDirs = dvDirsOf(spark, table, toVersion)
-    dvDirs.foreach { d =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(resolve(table, d))),
-        s"cannot restore to $toVersion: $d was vacuumed")
-    }
-    // file list identical to the target ⇒ its stats sidecar is too
-    // (landed inside the claimed-lock window like every sidecar)
-    val st =
-      if (!fs.exists(statsFin(table, toVersion))) None
-      else Some(readStatsFile(spark, table, toVersion)
-        .toSeq.map { case ((f, c), (mn, mx)) => (f, c, mn, mx) })
-    writeCommit(spark, table, latest + 1, files, dvDirs, st)
+    val base = record(spark, table, latest)
+    writeCommit(spark, table, latest + 1, base, base.copy(
+      files = target.files, dv = target.dv, stats = target.stats))
     latest + 1
   }
 
@@ -2366,11 +2115,14 @@ object Io {
     */
   def tableOptimize(spark: SparkSession, table: String,
       targetFiles: Int): Long = {
+    val v = tableVersion(spark, table)
+    require(v >= 0, s"no table at $table")
+    val base = record(spark, table, v)
     // round 14 (the liquid-clustering shape): a table declaring
     // `graft.clusterBy = "x,y"` in its TBLPROPERTIES routes every
     // OPTIMIZE through the z-order re-cluster — compaction keeps the
     // clustered layout without the caller naming the columns
-    readTableProps(spark, table).toMap.get("graft.clusterBy") match {
+    base.props.toMap.get("graft.clusterBy") match {
       case Some(cols) =>
         val parts = cols.split(",").map(_.trim).filter(_.nonEmpty)
         require(parts.length == 2,
@@ -2380,8 +2132,6 @@ object Io {
           targetFiles)
       case None => ()
     }
-    val v = tableVersion(spark, table)
-    require(v >= 0, s"no table at $table")
     val nv = v + 1
     // the rewrite input is HEAD's version read, not the raw files:
     // OPTIMIZE on a DV-carrying table materializes the deletes into
@@ -2389,10 +2139,10 @@ object Io {
     // DV-free — a raw-file rewrite would permanently resurrect
     // DV-deleted rows (round-11 ADVICE high) — and HEAD serves the
     // DECLARED schema (I42), so mixed-era files keep the evolved column
-    val packed0 = landData(
-      readTableVersion(spark, table, v).coalesce(targetFiles), table, s"c$nv")
-    val (packed, st) = carryStats(spark, table, v, nv, Seq.empty, packed0)
-    writeCommit(spark, table, nv, packed, stats = st)
+    val packed = landData(readTableVersion(spark, table, v)
+      .coalesce(targetFiles), table, s"c$nv", base)
+    writeCommit(spark, table, nv, base,
+      rewrite(spark, table, base.copy(dv = Seq.empty), Seq.empty, packed, s"c$nv"))
     nv
   }
 
@@ -2402,8 +2152,8 @@ object Io {
     * machinery — range-repartition + in-partition sort on the
     * interleaved-bit value, so every output file stays range-bounded
     * in BOTH dimensions) and committed as the next version with
-    * IDENTICAL content; the commit's stats sidecar RE-DERIVES per new
-    * file (carryStats' fresh pass), so a subsequent I22 stats-skipping
+    * IDENTICAL content; the commit's stats RE-DERIVE per new file
+    * ([[rewrite]]'s fresh pass), so a subsequent I22 stats-skipping
     * band read on EITHER column prunes most files — the point of the
     * rewrite. Prior versions stay readable through the original
     * layout; at 100 TB the re-cluster is one shuffle ∝ data and the
@@ -2414,6 +2164,7 @@ object Io {
       xCol: String, yCol: String, targetFiles: Int): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
+    val base = record(spark, table, v)
     val nv = v + 1
     val input = readTableVersion(spark, table, v)
     // RANGE-ID normalization (what Delta's ZORDER actually interleaves
@@ -2507,9 +2258,9 @@ object Io {
     val clustered = spark.createDataFrame(parted, schema)
       .sortWithinPartitions(col("__z"))
       .drop("__z", "__band")
-    val packed0 = landData(clustered, table, s"c$nv")
-    val (packed, st) = carryStats(spark, table, v, nv, Seq.empty, packed0)
-    writeCommit(spark, table, nv, packed, stats = st)
+    val packed = landData(clustered, table, s"c$nv", base)
+    writeCommit(spark, table, nv, base,
+      rewrite(spark, table, base.copy(dv = Seq.empty), Seq.empty, packed, s"c$nv"))
     nv
   }
 
@@ -2523,9 +2274,9 @@ object Io {
   def optimizeRead(spark: SparkSession, dir: String): DataFrame = {
     val t = fixture(spark, dir, "graft_io_opt") { tt =>
       buildEventsTable(spark, dir, tt)
-      val before = readCommit(spark, tt, 2L).size
+      val before = record(spark, tt, 2L).files.size
       val v = tableOptimize(spark, tt, 1)
-      require(v == 3L && readCommit(spark, tt, 3L).size < before,
+      require(v == 3L && record(spark, tt, 3L).files.size < before,
         s"optimize did not shrink the file list at $tt")
     }
     readTableVersion(spark, t, 3L).transform(typeSummary)
@@ -2548,13 +2299,14 @@ object Io {
       tableAppendStats(flat, tt, "event_id", "cents")
       val (ilo, ihi, clo, chi) = zoptBands(spark, tt)
       def keep(v: Long, c: String, lo: Long, hi: Long): Int =
-        statsBand(spark, tt, v, readCommit(spark, tt, v), c, lo, hi).size
+        { val rec = record(spark, tt, v)
+          statsBand(tt, v, rec, rec.files, c, lo, hi).size }
       require(keep(0L, "event_id", ilo, ihi) == 8 &&
         keep(0L, "cents", clo, chi) == 8,
         s"scrambled pre-state at $tt must keep all 8 files on both bands")
       val v = tableOptimizeZorder(spark, tt, "event_id", "cents", 16)
       require(v == 1L, s"expected zorder commit v1 at $tt, got $v")
-      val nf = readCommit(spark, tt, 1L).size
+      val nf = record(spark, tt, 1L).files.size
       require(keep(1L, "event_id", ilo, ihi) < nf,
         s"z-ordered layout at $tt must prune the event_id band")
       require(keep(1L, "cents", clo, chi) < nf,
@@ -2622,8 +2374,8 @@ object Io {
         .option("replaceWhere", "typ = 'purchase'").save(tt)
       require(tableVersion(spark, tt) == 1L,
         s"replaceWhere at $tt must land exactly one commit")
-      require(readCommit(spark, tt, 1L).toSet
-          .intersect(readCommit(spark, tt, 0L).toSet).nonEmpty,
+      require(record(spark, tt, 1L).files.toSet
+          .intersect(record(spark, tt, 0L).files.toSet).nonEmpty,
         s"replaceWhere at $tt must carry untouched files by reference")
     }
     readTableVersion(spark, t, tableVersion(spark, t)).transform(typeSummary)
@@ -2765,36 +2517,12 @@ object Io {
   // ---- I22: commit-embedded file statistics + data-skipping reads —
   // the Delta add-action stats / Iceberg manifest-entry bounds: the
   // I12 manifest idea captured IN THE WRITE COMMIT itself, so stats
-  // are version-consistent by construction (each version's sidecar
+  // are version-consistent by construction (each version's record
   // covers exactly its file list, carried forward like the files),
   // and a time-travel read can skip files with zero extra passes.
-  // At 100 TB: planning reads one sidecar ∝ #files — no footer
+  // At 100 TB: planning reads one record ∝ #files — no footer
   // round-trips, no post-hoc manifest job, and the pruned band scan
   // reads only the overlapping files. ----
-
-  private def statsFin(table: String, version: Long) =
-    new org.apache.hadoop.fs.Path(table, f"_commits/$version%08d.stats")
-
-  private def writeStatsFile(spark: SparkSession, table: String,
-      version: Long, entries: Seq[(String, String, Long, Long)]): Unit = {
-    val fs = fsFor(spark, table)
-    val tmp = new org.apache.hadoop.fs.Path(table,
-      f"_commits/$version%08d.stats.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.map { case (f, c, mn, mx) => s"$f\t$c\t$mn\t$mx" }
-      .mkString("\n").getBytes("UTF-8")) finally out.close()
-    // Called ONLY from [[writeCommit]]'s claimed-lock window (round 13
-    // — the DV-sidecar discipline applied to stats: the claim winner
-    // alone writes it, immediately before the commit rename). Overwrite
-    // semantics: an ORPHAN left by a crash between the stats rename and
-    // the commit must not wedge a later attempt at the same version —
-    // rename-onto-existing returns false on HDFS/file, so clear the
-    // stale fin first.
-    try fs.delete(statsFin(table, version), false)
-    catch { case _: Throwable => () }
-    require(fs.rename(tmp, statsFin(table, version)),
-      s"stats rename failed at $table v$version")
-  }
 
   /** Per-file [min, max] of `cols` over a just-landed data dir — ONE
     * distributed pass grouped by file; collect ∝ #files × #cols
@@ -2813,120 +2541,86 @@ object Io {
       }.toMap
   }
 
-  /** Carry the prior version's stats sidecar across a rewrite commit
-    * (round 12 — makes stats skipping compose with DV deletes and
-    * OPTIMIZE): carried files keep their entries (conservative under
-    * deletes — min/max may widen, pruning stays file-correct),
-    * rewritten files get a fresh [[landedStats]] pass. Returns
-    * (`rewritten` minus any zero-row part — those carry no data and no
-    * stats row, the tableAppendStats exclusion; the sidecar ENTRIES
-    * for [[writeCommit]] to land inside the claimed-lock window —
-    * round 13, nothing is written here). (rewritten, None) when the
-    * prior version had no sidecar. */
-  private def carryStats(spark: SparkSession, table: String, priorV: Long,
-      nv: Long, kept: Seq[String], rewritten: Seq[String])
-      : (Seq[String], Option[Seq[(String, String, Long, Long)]]) =
-    carryStatsFor(spark, table, priorV, kept, rewritten, s"c$nv")
+  /** `base` rewritten to the file list `kept ++ fresh`, `fresh` landed
+    * under `tag` (round 12 — makes stats skipping compose with DV
+    * deletes, OPTIMIZE and SQL DML): kept files keep their stats
+    * entries (conservative under deletes — min/max may widen, pruning
+    * stays file-correct), fresh files get one [[landedStats]] pass, and
+    * a zero-row fresh part — no data, no stats row, the
+    * tableAppendStats exclusion — is dropped. A stats-free base stays
+    * stats-free. */
+  private[graft] def rewrite(spark: SparkSession, table: String,
+      base: CommitRecord, kept: Seq[String], fresh: Seq[String],
+      tag: String): CommitRecord =
+    base.stats.filter(_.nonEmpty) match {
+      case None => base.copy(files = kept ++ fresh)
+      case Some(ps) =>
+        val cols = ps.keys.map(_._2).toSeq.distinct.sorted
+        val st =
+          if (fresh.isEmpty) Map.empty[(String, String), (Long, Long)]
+          else landedStats(spark, table, tag, cols)
+        val landed = fresh.filter(f => st.contains((trail(f), cols.head)))
+        val keep = kept.toSet
+        base.copy(files = kept ++ landed, stats = Some(
+          ps.filter { case ((f, _), _) => keep(f) } ++
+            landed.flatMap(f => cols.map(c => (f, c) -> st((trail(f), c))))))
+    }
 
-  // tag-general form (round 12): the SQL row-level COW write lands its
-  // fresh files under a writer-unique tag, not c<nv>
-  private[graft] def carryStatsFor(spark: SparkSession, table: String,
-      priorV: Long, kept: Seq[String], rewritten: Seq[String],
-      tag: String)
-      : (Seq[String], Option[Seq[(String, String, Long, Long)]]) = {
-    if (!fsFor(spark, table).exists(statsFin(table, priorV)))
-      return (rewritten, None)
-    val ps = readStatsFile(spark, table, priorV)
-    val cols = ps.keys.map(_._2).toSeq.distinct.sorted
-    val fresh =
-      if (rewritten.isEmpty) Map.empty[(String, String), (Long, Long)]
-      else landedStats(spark, table, tag, cols)
-    val keptRewritten = rewritten.filter(f =>
-      fresh.contains((trail(f), cols.head)))
-    val entries =
-      // kept files without a prior entry (a plain/OCC append onto the
-      // stats table) simply carry no entry — they stay un-prunable on
-      // the read side rather than crashing the rewrite
-      kept.flatMap(f => cols.flatMap { c =>
-        ps.get((trail(f), c)).map { case (mn, mx) => (f, c, mn, mx) }
-      }) ++
-        keptRewritten.flatMap(f => cols.map { c =>
-          val (mn, mx) = fresh((trail(f), c)); (f, c, mn, mx)
-        })
-    (keptRewritten, Some(entries))
-  }
-
-  /** (file trail, column) → [min, max]. */
+  /** (file entry, column) → [min, max] at `version`. */
   private[graft] def readStatsFile(spark: SparkSession, table: String,
-      version: Long): Map[(String, String), (Long, Long)] = {
-    val fs = fsFor(spark, table)
-    val fin = statsFin(table, version)
-    require(fs.exists(fin),
-      s"no commit stats at $table v$version — built without tableAppendStats?")
-    val in = fs.open(fin)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { l =>
-      val Array(f, c, mn, mx) = l.split("\t")
-      (f, c) -> (mn.toLong, mx.toLong)
-    }.toMap
-  }
+      version: Long): Map[(String, String), (Long, Long)] =
+    statsAt(table, version, record(spark, table, version))
+
+  private def statsAt(table: String, version: Long,
+      rec: CommitRecord): Map[(String, String), (Long, Long)] =
+    rec.stats.getOrElse(throw new IllegalArgumentException(
+      s"no commit stats at $table v$version — built without tableAppendStats?"))
 
   /** Append `df` as the next version WITH per-file [min, max] stats of
-    * every named column embedded in the commit (a `.stats` sidecar
-    * next to the `.commit` — the Delta multi-column add-action stats).
-    * Stats for the new files come from ONE distributed pass over
-    * just-landed data grouped by file (collect ∝ #files × #cols —
-    * metadata-scale); prior entries carry forward by reference exactly
-    * like the file list.
+    * every named column embedded in the commit record (the Delta
+    * multi-column add-action stats). Stats for the new files come from
+    * ONE distributed pass over just-landed data grouped by file
+    * (collect ∝ #files × #cols — metadata-scale); prior entries carry
+    * forward by reference exactly like the file list.
     */
   def tableAppendStats(df: DataFrame, table: String,
       statsCols: String*): Long = {
     require(statsCols.nonEmpty, "tableAppendStats needs ≥1 stats column")
     val spark = df.sparkSession
     val v = tableVersion(spark, table) + 1
-    val prior = if (v == 0) Seq.empty else readCommit(spark, table, v - 1)
+    val base = baseOf(spark, table, v)
     val priorStats =
       if (v == 0) Map.empty[(String, String), (Long, Long)]
-      else readStatsFile(spark, table, v - 1)
-    require(prior.forall(f => statsCols.forall(c =>
+      else statsAt(table, v - 1, base)
+    require(base.files.forall(f => statsCols.forall(c =>
         priorStats.contains((trail(f), c)))),
       s"prior version at $table is missing stats entries for " +
         s"${statsCols.mkString(",")} — mixed stats/plain appends (or " +
         "changed stats columns) are not supported")
-    val landed = landData(df, table, s"c$v")
+    val landed = landData(df, table, s"c$v", base)
     val freshStats = landedStats(spark, table, s"c$v", statsCols)
     // A zero-row part file (possible under repartitionByRange skew)
     // produces no stats row — exclude it from the committed file list
-    // (it carries no data) so every committed entry has a sidecar
-    // entry.
+    // (it carries no data) so every committed entry has stats.
     val fresh = landed.filter(f =>
       freshStats.contains((trail(f), statsCols.head)))
-    val allStats =
-      prior.flatMap(f => statsCols.map { c =>
-        val (mn, mx) = priorStats((trail(f), c)); (f, c, mn, mx)
-      }) ++
-        fresh.flatMap(f => statsCols.map { c =>
-          val (mn, mx) = freshStats((trail(f), c)); (f, c, mn, mx)
-        })
-    // same 'EVERY append flavor' DV invariant as tableAppend: a stats
-    // append onto a DV-carrying table must not resurrect v−1's deletes.
-    // The sidecar lands inside writeCommit's claimed-lock window.
-    writeCommit(spark, table, v, prior ++ fresh, carriedDv(spark, table, v),
-      Some(allStats))
+    writeCommit(spark, table, v, base, base.copy(
+      files = base.files ++ fresh,
+      stats = Some(priorStats.filter { case ((_, c), _) => statsCols.contains(c) } ++
+        fresh.flatMap(f => statsCols.map(c => (f, c) -> freshStats((trail(f), c)))))))
     v
   }
 
   // ---- I25 (round 11, POSITIONAL since round 13): DELETION VECTORS —
   // merge-on-read DELETE. The Delta-DV / Iceberg-v2-position-delete
   // idea on the commit log: when the matched rows are a small fraction
-  // of their files, DELETE writes a tiny sidecar table of deleted
+  // of their files, DELETE writes a tiny table of deleted
   // (file, rowPos) POSITIONS instead of rewriting whole data files
   // (COW turns a 1-row delete into a multi-GB rewrite at 100 TB);
   // the connector's scan filters the version's DV positions out, and
   // OPTIMIZE materializes them back into clean files. DV state is VERSIONED
-  // exactly like the file list: a `.dv` sidecar per commit names the
-  // dv/ parquet dirs that apply to THAT version (carried forward by
+  // exactly like the file list: each commit record names the dv/
+  // parquet dirs that apply to THAT version (carried forward by
   // appends, dropped by OPTIMIZE), so time travel composes — an old
   // version's reads see exactly its own deletes. Entries are
   // (file trail, row index within the file) — Delta's actual DV shape:
@@ -2939,53 +2633,10 @@ object Io {
   // storage.h delete_series must compose with a later re-ingest of
   // the SAME series, which only position-identity supports. ----
 
-  private def dvFin(table: String, version: Long) =
-    new org.apache.hadoop.fs.Path(table, f"_commits/$version%08d.dv")
-
-  /** Write the version's DV sidecar: a `pos` marker line + the dv/
-    * dirs applying to this version. Called ONLY from [[writeCommit]]'s
-    * claimed-lock window (round 12) — the claim winner alone writes
-    * it, immediately before the commit rename. Overwrite semantics so
-    * an orphan from a crash never wedges the version. */
-  private def writeDvFile(spark: SparkSession, table: String,
-      version: Long, dvDirs: Seq[String]): Unit = {
-    val fs = fsFor(spark, table)
-    val tmp = new org.apache.hadoop.fs.Path(table,
-      f"_commits/$version%08d.dv.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(("pos" +: dvDirs).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    try fs.delete(dvFin(table, version), false)
-    catch { case _: Throwable => () }
-    require(fs.rename(tmp, dvFin(table, version)),
-      s"dv sidecar rename failed at $table v$version")
-  }
-
   /** The dv/ dirs applying to a version — empty when the version has
-    * no deletion vectors. Refuses the retired key-based sidecar format
-    * loudly (a pre-round-13 fixture: rebuild it — /tmp fixtures are
-    * recreated per JVM, so this only fires on a hand-kept table). */
+    * no deletion vectors. */
   private[graft] def dvDirsOf(spark: SparkSession, table: String,
-      version: Long): Seq[String] = {
-    val fs = fsFor(spark, table)
-    val fin = dvFin(table, version)
-    if (!fs.exists(fin)) return Seq.empty
-    val in = fs.open(fin)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = txt.split("\n").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-    require(lines.headOption.contains("pos"),
-      s"DV sidecar at $table v$version uses the retired key-based " +
-        "format — rebuild the table (positional DVs since round 13)")
-    lines.drop(1)
-  }
-
-  /** A version's dv/ dirs resolved to readable paths — the DSv2
-    * connector's planning handle (round 12: MOR reads through
-    * `format("graft")`). */
-  private[graft] def dvDirsResolved(spark: SparkSession, table: String,
-      version: Long): Seq[String] =
-    dvDirsOf(spark, table, version).map(resolve(table, _))
+      version: Long): Seq[String] = record(spark, table, version).dv
 
   /** Distinct deleted (file trail, row position) entries of a DV dir
     * set, aliased (`__f`, `__p`) for the positional anti-join. */
@@ -3026,13 +2677,13 @@ object Io {
       pred: Column, cowFraction: Double = 0.2): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val priorDv = dvDirsOf(spark, table, v)
-    val files = readCommit(spark, table, v)
+    val base = record(spark, table, v)
+    val (priorDv, files) = (base.dv, base.files)
     // the MOR view of v with (file, pos) attribution: matches must
     // honor PRIOR deletes (a row deleted at v must not be re-matched)
     // and per-file totals drive the COW threshold
     val raw = withFilePos(
-      readFilesDeclared(spark, table, files.map(resolve(table, _))))
+      readFilesDeclared(spark, base.schema, files.map(resolve(table, _))))
     val live =
       if (priorDv.isEmpty) raw else dvJoin(raw, dvEntries(spark, table, priorDv))
     val perFile = live.withColumn("__m", when(pred, 1L).otherwise(0L))
@@ -3042,8 +2693,7 @@ object Io {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val nv = v + 1
     if (perFile.isEmpty) { // no-op delete still commits a version
-      val (_, st0) = carryStats(spark, table, v, nv, files, Seq.empty)
-      writeCommit(spark, table, nv, files, priorDv, st0)
+      writeCommit(spark, table, nv, base, base)
       return nv
     }
     val cowSet = perFile.filter { case (_, rows, nm) =>
@@ -3065,7 +2715,7 @@ object Io {
     // materialize away — their file trails leave the list, the
     // carried entries are inert)
     val cowFull = files.filter(f => cowSet(trail(f)))
-    val rewritten0 =
+    val rewritten =
       if (cowFull.isEmpty) Seq.empty[String]
       else landData(
         // `NOT coalesce(pred, false)`: NULL-predicate rows are not
@@ -3073,11 +2723,10 @@ object Io {
         // NULL there and filter would drop them)
         live.filter(col("__f").isInCollection(cowSet) &&
             !coalesce(pred, lit(false)))
-          .drop("__f", "__p"), table, s"c$nv")
-    val keptFiles = files.filterNot(f => cowSet(trail(f)))
-    val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)
-    writeCommit(spark, table, nv, keptFiles ++ rewritten,
-      priorDv ++ newDv, st)
+          .drop("__f", "__p"), table, s"c$nv", base)
+    writeCommit(spark, table, nv, base, rewrite(spark, table, base,
+      files.filterNot(f => cowSet(trail(f))), rewritten, s"c$nv")
+      .copy(dv = priorDv ++ newDv))
     nv
   }
 
@@ -3088,28 +2737,27 @@ object Io {
   def optimizeTableDv(spark: SparkSession, table: String): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val dvDirs = dvDirsOf(spark, table, v)
-    val files = readCommit(spark, table, v)
-    if (dvDirs.isEmpty) return v // nothing to materialize
-    val dv = dvEntries(spark, table, dvDirs)
+    val base = record(spark, table, v)
+    val files = base.files
+    if (base.dv.isEmpty) return v // nothing to materialize
+    val dv = dvEntries(spark, table, base.dv)
     val touched = dv.select(col("__f")).distinct()
       .collect().map(_.getString(0)).toSet
     val touchedFull = files.filter(f => touched(trail(f)))
     val nv = v + 1
-    val rewritten0 =
+    val rewritten =
       if (touchedFull.isEmpty) Seq.empty[String]
-      else landData(dvJoin(withFilePos(
-        readFilesDeclared(spark, table, touchedFull.map(resolve(table, _)))), dv)
-        .drop("__f", "__p"), table, s"c$nv")
-    val keptFiles = files.filterNot(f => touched(trail(f)))
-    val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)
-    // no .dv sidecar at nv: absence = no deletion vectors
-    writeCommit(spark, table, nv, keptFiles ++ rewritten, stats = st)
+      else landData(dvJoin(withFilePos(readFilesDeclared(spark, base.schema,
+        touchedFull.map(resolve(table, _)))), dv)
+        .drop("__f", "__p"), table, s"c$nv", base)
+    writeCommit(spark, table, nv, base, rewrite(spark, table, base,
+      files.filterNot(f => touched(trail(f))), rewritten, s"c$nv")
+      .copy(dv = Seq.empty))
     nv
   }
 
-  /** DV-sidecar COMPACTION (round 13): MOR DML appends one small dv/
-    * dir per statement, so a mutation-heavy table accumulates sidecar
+  /** DV COMPACTION (round 13): MOR DML appends one small dv/ dir per
+    * statement, so a mutation-heavy table accumulates DV dir
     * fan-out (every MOR read unions the dirs) until OPTIMIZE rewrites
     * data files. This is the CHEAP middle ground: union HEAD's dv/
     * dirs into ONE fresh dir and commit a version with the SAME file
@@ -3119,25 +2767,23 @@ object Io {
   def compactTableDv(spark: SparkSession, table: String): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val dirs = dvDirsOf(spark, table, v)
-    if (dirs.size <= 1) return v
+    val base = record(spark, table, v)
+    if (base.dv.size <= 1) return v
     val nv = v + 1
     val d = f"dv/d$nv%08d-compact"
-    val files = readCommit(spark, table, v)
     // round 14: compaction also DROPS INERT entries — (f, p) rows whose
     // trail left the file list (COW rewrites, OPTIMIZE) filter nothing
     // but still cost every read's collect + broadcast
-    val live = files.map(trail).toSet
-    val kept = dvEntries(spark, table, dirs)
+    val live = base.files.map(trail).toSet
+    val kept = dvEntries(spark, table, base.dv)
       .filter(col("__f").isInCollection(live))
       .select(col("__f").as("f"), col("__p").as("p"))
-    val (_, st) = carryStats(spark, table, v, nv, files, Seq.empty)
-    if (kept.isEmpty) { // every entry inert: the compacted state is DV-free
-      writeCommit(spark, table, nv, files, Seq.empty, st)
-    } else {
+    // every entry inert: the compacted state is DV-free
+    val dv = if (kept.isEmpty) Seq.empty[String] else {
       kept.write.mode("overwrite").parquet(s"$table/$d")
-      writeCommit(spark, table, nv, files, Seq(d), st)
+      Seq(d)
     }
+    writeCommit(spark, table, nv, base, base.copy(dv = dv))
     nv
   }
 
@@ -3153,9 +2799,9 @@ object Io {
   private[graft] def dvOverThresholdFiles(spark: SparkSession,
       table: String, version: Long, cowFraction: Double,
       minEntries: Long): Set[String] = {
-    val dirs = dvDirsOf(spark, table, version)
+    val rec = record(spark, table, version)
+    val (dirs, files) = (rec.dv, rec.files)
     if (dirs.isEmpty) return Set.empty
-    val files = readCommit(spark, table, version)
     val live = files.map(trail).toSet
     val counts = dvEntries(spark, table, dirs)
       .groupBy(col("__f")).agg(count(lit(1)).as("n"))
@@ -3188,19 +2834,18 @@ object Io {
       table: String, onlyTrails: Set[String]): Long = {
     val v = tableVersion(spark, table)
     require(v >= 0, s"no table at $table")
-    val dvDirs = dvDirsOf(spark, table, v)
-    if (dvDirs.isEmpty || onlyTrails.isEmpty) return v
-    val files = readCommit(spark, table, v)
+    val base = record(spark, table, v)
+    if (base.dv.isEmpty || onlyTrails.isEmpty) return v
+    val files = base.files
     val touchedFull = files.filter(f => onlyTrails(trail(f)))
     if (touchedFull.isEmpty) return v
-    val dv = dvEntries(spark, table, dvDirs)
+    val dv = dvEntries(spark, table, base.dv)
     val nv = v + 1
-    val rewritten0 = landData(dvJoin(withFilePos(
-      readFilesDeclared(spark, table, touchedFull.map(resolve(table, _)))), dv)
-      .drop("__f", "__p"), table, s"c$nv")
+    val rewritten = landData(dvJoin(withFilePos(readFilesDeclared(spark,
+      base.schema, touchedFull.map(resolve(table, _)))), dv)
+      .drop("__f", "__p"), table, s"c$nv", base)
     val keptFiles = files.filterNot(f => onlyTrails(trail(f)))
     val keptTrails = keptFiles.map(trail).toSet
-    val (rewritten, st) = carryStats(spark, table, v, nv, keptFiles, rewritten0)
     // consolidate: only entries still pointing at kept files survive
     val keep = dv.filter(col("__f").isInCollection(keptTrails))
     val newDv =
@@ -3211,21 +2856,22 @@ object Io {
           .write.mode("overwrite").parquet(s"$table/$d")
         Seq(d)
       }
-    writeCommit(spark, table, nv, keptFiles ++ rewritten, newDv, st)
+    writeCommit(spark, table, nv, base,
+      rewrite(spark, table, base, keptFiles, rewritten, s"c$nv").copy(dv = newDv))
     nv
   }
 
   /** The `files` of `version` whose commit stats on `statsCol` overlap
     * [lo, hi) — the stats pruning of the connector's `skipCol` read.
-    * The COLUMN must be covered by the sidecar (a typo'd column refuses
+    * The COLUMN must be covered by the stats (a typo'd column refuses
     * loudly instead of scanning everything), but coverage is per-FILE
     * lenient (round-12 ADVICE): an append that writes no stats (a
     * connector V1Write → tableAppendOcc) leaves its files without
     * entries, and those stay un-prunable. */
-  private[graft] def statsBand(spark: SparkSession, table: String,
-      version: Long, files: Seq[String], statsCol: String, lo: Long,
+  private[graft] def statsBand(table: String, version: Long,
+      rec: CommitRecord, files: Seq[String], statsCol: String, lo: Long,
       hi: Long): Seq[String] = {
-    val stats = readStatsFile(spark, table, version)
+    val stats = statsAt(table, version, rec)
     require(files.isEmpty || stats.keys.exists(_._2 == statsCol),
       s"no commit stats for column $statsCol at $table v$version — " +
         "skipCol needs a version written via tableAppendStats " +
@@ -3283,7 +2929,7 @@ object Io {
     * MERGE-ON-READ and aggregated — v0 (everything), v1 (after the
     * DV-path point delete), v2 (after the bulk delete's COW fallback).
     * The oracle replays each cut from the raw source, so the gate
-    * proves write→DV-sidecar→positional-scan-filter content AND
+    * proves write→DV→positional-scan-filter content AND
     * version isolation (v1 still serves rows v2 deleted). */
   def dvRead(spark: SparkSession, dir: String): DataFrame = {
     val t = dvTable(spark, dir)
@@ -3319,7 +2965,7 @@ object Io {
 
   /** MERGE × positional-DV gate (round 13): v0 = the flat table
     * (type-clustered layout); v1 DV-deletes the error ∧ (id%7=0) class
-    * (merge-on-read sidecar, no rewrite); v2 MERGEs a source that
+    * (merge-on-read DV, no rewrite); v2 MERGEs a source that
     * UPDATES every non-error id%5=0 row (cents → 2·cents+1) and
     * RE-INSERTS the id%14=0 half of the DELETED class with the same
     * transform — legal only under positional DVs (the round-12 key
@@ -3345,7 +2991,7 @@ object Io {
       val v2 = tableMerge(spark, tt, src, "event_id")
       require(v2 == 2L, s"expected merge commit v2 at $tt, got $v2")
       require(dvDirsOf(spark, tt, 2L).nonEmpty,
-        s"merge at $tt must carry the DV sidecar for kept files")
+        s"merge at $tt must carry the DV dirs for kept files")
     }
     def agg(v: Long): DataFrame =
       readTableVersion(spark, t, v).transform(versionSummary(v))
@@ -3353,8 +2999,8 @@ object Io {
   }
 
   /** Catalog gate (round 12), oracle-gated: the whole table lifecycle
-    * as `graft.<ns>.<table>` SQL identifiers — CREATE TABLE (schema
-    * sidecar), INSERT INTO ... SELECT (V1Write → OCC, v0 creates),
+    * as `graft.<ns>.<table>` SQL identifiers — CREATE TABLE (declared
+    * schema), INSERT INTO ... SELECT (V1Write → OCC, v0 creates),
     * DELETE FROM (COW commit), then the aggregation SELECT back
     * through the catalog; the DuckDB oracle replays insert-minus-
     * delete from the raw source, so identifier-addressed DML is
@@ -3630,7 +3276,7 @@ object Io {
           s"MOR v$v must carry EVERY prior file by reference " +
             s"(missing: ${prev -- cur})")
         require(dvDirsOf(spark, t, v).nonEmpty,
-          s"MOR v$v must carry a DV sidecar")
+          s"MOR v$v must carry a DV dir")
       }
     }
     require(wh.nonEmpty)
@@ -3965,7 +3611,7 @@ object Io {
       val flat = centsOf(spark, dir, withUs = true)
       // three stats-carrying commits by day band, each range-laid-out
       // into 3 time-bounded files (the Z-order/I11 discipline in one
-      // dimension) so the sidecar bounds are tight per file; stats
+      // dimension) so the stats bounds are tight per file; stats
       // collected on BOTH us and cents (round 11: multi-column — the
       // Delta add-action shape), skipping reads pick their column
       def batch(loUs: Long, hiUs: Long): Unit = {

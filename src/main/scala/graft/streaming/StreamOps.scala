@@ -207,13 +207,16 @@ object StreamOps extends Serializable {
     }
 
   /** A gate whose output persists across JVMs in the `_done`-landed
-    * fixture `<tmpdir>/graft_<gate>_<fp>` (see [[graft.Memo.landed]]),
-    * once per (session, dataset): a fresh landing would feed an old
-    * checkpoint new part-file names and double every count. */
+    * fixture `<tmpdir>/graft_<gate>_<layout>_<fp>` (see
+    * [[graft.Memo.landed]]), once per (session, dataset): a fresh
+    * landing would feed an old checkpoint new part-file names and
+    * double every count. Several gates keep commit-log tables there,
+    * so the name carries [[graft.sources.Io.LogLayout]]: a layout
+    * change rebuilds them instead of refusing their commits. */
   private def landedGate(spark: SparkSession, dir: String, gate: String,
       source: String = "events.parquet")(build: String => Unit): String =
     graft.Memo(spark, s"stream.$gate:$dir") {
-      graft.Memo.landed(s"graft_$gate",
+      graft.Memo.landed(s"graft_${gate}_${graft.sources.Io.LogLayout}",
         graft.Tables.fingerprint(s"$dir/$source"))(b => build(b.toString)).toString
     }
 

@@ -330,8 +330,8 @@ class ExtensionsSpec extends AnyFunSuite {
       s"USING graft OPTIONS (path '$t', deleteKey 'k')")
     s.sql("DELETE FROM gdel WHERE k = 7")
     assert(sources.Io.tableVersion(s, t) == 1L)
-    assert(new java.io.File(s"$t/_commits/00000001.dv").exists(),
-      "point delete must ride the DV sidecar")
+    assert(sources.Io.dvDirsOf(s, t, 1L).nonEmpty,
+      "point delete must ride a DV dir")
     assert(sources.Io.readTableVersion(s, t, 1L).count() == 19)
     // without deleteKey the delete is COW — but the table now carries
     // DVs, so the plain path refuses (no resurrect) until OPTIMIZE
@@ -344,7 +344,7 @@ class ExtensionsSpec extends AnyFunSuite {
       s"USING graft OPTIONS (path '$t')")
     s.sql("DELETE FROM gdel3 WHERE k <= 5")
     assert(sources.Io.readTableVersion(s, t, 3L).count() == 14)
-    assert(!new java.io.File(s"$t/_commits/00000003.dv").exists(),
+    assert(sources.Io.dvDirsOf(s, t, 3L).isEmpty,
       "keyless delete is copy-on-write")
     // reads through the TVF see the DML results (k=7 and k≤5 gone)
     index.IndexSql.register(s)
@@ -369,7 +369,7 @@ class ExtensionsSpec extends AnyFunSuite {
     s.sql("DELETE FROM gdelc.table WHERE k <=> 8")
     assert(sources.Io.tableVersion(s, t) == 4L)
     assert(sources.Io.readTableVersion(s, t, 4L).count() == 13)
-    assert(!new java.io.File(s"$t/_commits/00000004.dv").exists(),
+    assert(sources.Io.dvDirsOf(s, t, 4L).isEmpty,
       "rewrite delete is copy-on-write")
     // round 12: skipCol over a stats-less table refuses with the
     // actionable message, not a bare NoSuchElementException
@@ -637,7 +637,7 @@ class ExtensionsSpec extends AnyFunSuite {
       (1L to 20L).map(k => (k, k * 10L)).toDF("k", "v"), t)
     sources.Io.tableDeleteWhereDv(s,
       t, org.apache.spark.sql.functions.col("k") === 3L)
-    assert(new java.io.File(s"$t/_commits/00000001.dv").exists())
+    assert(sources.Io.dvDirsOf(s, t, 1L).nonEmpty)
     assert(sources.Io.readTableVersion(s, t, 1L).count() == 19)
     // catalog DELETE with an untranslatable predicate → COW rewrite
     s.conf.set("spark.sql.catalog.grldv", "graft.sources.GraftCatalog")
@@ -1365,7 +1365,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // second claim must conflict loudly (the racing-ALTER shape, made
     // deterministic by replaying the stale base)
     val base = sources.Io.tableVersion(s, t)
-    val sch = sources.GraftTables.readSchemaSidecar(s, t).get
+    val sch = sources.Io.declaredSchema(s, t).get
     sources.Io.commitSchemaChange(s, t, base, sch.add("b",
       org.apache.spark.sql.types.LongType, nullable = true))
     intercept[sources.Io.CommitConflictException] {
@@ -1374,11 +1374,11 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     // the winner's column is the one that landed; the loser's never
     // interleaved into the sidecar
-    val after = sources.GraftTables.readSchemaSidecar(s, t).get
+    val after = sources.Io.declaredSchema(s, t).get
     assert(after.fieldNames.contains("b") && !after.fieldNames.contains("c"))
     // sequential ALTERs (each reading fresh state) compose fine
     s.sql("ALTER TABLE gaocc.db.t ADD COLUMN d BIGINT")
-    assert(sources.GraftTables.readSchemaSidecar(s, t).get
+    assert(sources.Io.declaredSchema(s, t).get
       .fieldNames.toSeq.containsSlice(Seq("b", "d")))
     // and the evolved table still reads: old rows null-backfill
     val row = s.sql("SELECT k, a, b, d FROM gaocc.db.t").head()

@@ -585,7 +585,7 @@ class IoSpec extends AnyFunSuite {
     assert(Io.tableDeleteWhereDv(spark, t, col("k") === 3) == 1L)
     val commit1 = Io.versionFiles(spark, t, 1L).toSet
     assert(commit1 == commit0, "DV delete must not rewrite data files")
-    assert(new java.io.File(s"$t/_commits/00000001.dv").exists())
+    assert(Io.dvDirsOf(spark, t, 1L).nonEmpty)
     assert(Io.readTableVersion(spark, t, 1L).count() == 19)
     assert(!Io.readTableVersion(spark, t, 1L)
       .filter(col("k") === 3).collect().nonEmpty)
@@ -644,8 +644,14 @@ class IoSpec extends AnyFunSuite {
     spark.conf.set("graft.log.checkpointInterval", "4")
     try {
       (0 to 8).foreach(i => Io.tableAppend(Seq(i.toLong).toDF("k"), t))
-      def commitText(v: Long) = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(t, "_commits", f"$v%08d.commit")), "UTF-8")
+      // every record opens with the log-layout token; the body follows
+      def commitText(v: Long) = {
+        val txt = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(t, "_commits", f"$v%08d.commit")), "UTF-8")
+        val token = s"@graft ${Io.LogLayout}\n"
+        assert(txt.startsWith(token), s"v$v must open with the layout token")
+        txt.stripPrefix(token)
+      }
       // checkpoints (0, 4, 8) are FULL lists; the rest are deltas
       // whose size is the commit's own changes, not the table's
       for (v <- Seq(0L, 4L, 8L))
@@ -713,7 +719,7 @@ class IoSpec extends AnyFunSuite {
     assert(Io.readTableVersion(spark, t, 1L).count() == 19)
     val v2 = Io.optimizeTableDv(spark, t)
     assert(v2 == 2L)
-    assert(!new java.io.File(s"$t/_commits/00000002.dv").exists(),
+    assert(Io.dvDirsOf(spark, t, 2L).isEmpty,
       "optimize must commit a DV-free version")
     // the PLAIN read of the optimized version is already clean
     assert(Io.readTableVersion(spark, t, 2L).count() == 19)
@@ -1036,7 +1042,7 @@ class IoSpec extends AnyFunSuite {
     // is the MOR view (19 rows, no k=3) and the commit is DV-free —
     // the raw-file rewrite would have resurrected k=3 permanently
     assert(Io.tableOptimize(spark, t, 1) == 2L)
-    assert(!new java.io.File(s"$t/_commits/00000002.dv").exists(),
+    assert(Io.dvDirsOf(spark, t, 2L).isEmpty,
       "optimize must commit DV-free")
     assert(Io.readTableVersion(spark, t, 2L).count() == 19)
     assert(Io.readTableVersion(spark, t, 2L)
@@ -1044,16 +1050,16 @@ class IoSpec extends AnyFunSuite {
     // (2) RESTORE back to the DV-carrying v1: the restored commit must
     // carry v1's sidecar — content ≡ v1 (19 rows), not its raw files (20)
     assert(Io.tableRestore(spark, t, 1L) == 3L)
-    assert(new java.io.File(s"$t/_commits/00000003.dv").exists(),
-      "restore must reproduce the target version's DV sidecar")
+    assert(Io.dvDirsOf(spark, t, 3L).nonEmpty,
+      "restore must reproduce the target version's DV dirs")
     assert(Io.readTableVersion(spark, t, 3L).count() == 19)
     assert(Io.readTableVersion(spark, t, 3L)
       .filter(col("k") === 3).count() == 0)
     // (3) and RESTORE to the DV-FREE v0 from the DV-carrying HEAD must
     // clear the sidecar — deletes roll back with the content
     assert(Io.tableRestore(spark, t, 0L) == 4L)
-    assert(!new java.io.File(s"$t/_commits/00000004.dv").exists(),
-      "restore to a DV-free version must not inherit HEAD's sidecar")
+    assert(Io.dvDirsOf(spark, t, 4L).isEmpty,
+      "restore to a DV-free version must not inherit HEAD's DV dirs")
     assert(Io.readTableVersion(spark, t, 4L).count() == 20)
   }
 
@@ -1067,8 +1073,8 @@ class IoSpec extends AnyFunSuite {
     // DV-path delete (1 of 10 rows in file 1): stats must carry so the
     // skipping read still plans — and must NOT serve the deleted row
     Io.tableDeleteWhereDv(spark, t, col("k") === 3) // v1
-    assert(new java.io.File(s"$t/_commits/00000001.stats").exists(),
-      "DV delete must carry the stats sidecar")
+    assert(Io.readStatsFile(spark, t, 1L).nonEmpty,
+      "DV delete must carry the stats")
     val skip1 = Io.readTableVersionSkipping(spark, t, 1L, "k", 1L, 11L)
     assert(skip1.count() == 9 && skip1.filter(col("k") === 3).count() == 0)
     // count the DATA files the connector's scan plans (its pruned
@@ -1091,8 +1097,8 @@ class IoSpec extends AnyFunSuite {
     assert(skip2.count() == 3) // 8, 9, 10
     // stats appends onto the DV-carrying table keep both sidecars
     Io.tableAppendStats(Seq(100L).toDF("k"), t, "k") // v3
-    assert(new java.io.File(s"$t/_commits/00000003.dv").exists(),
-      "stats append must carry the DV sidecar (round-11 ADVICE)")
+    assert(Io.dvDirsOf(spark, t, 3L).nonEmpty,
+      "stats append must carry the DV dirs (round-11 ADVICE)")
     assert(Io.readTableVersion(spark, t, 3L).count() == 14)
     val skip3 = Io.readTableVersionSkipping(spark, t, 3L, "k", 90L, 200L)
     assert(skip3.count() == 1 && scanned(skip3) == 1)

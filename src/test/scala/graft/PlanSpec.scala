@@ -490,4 +490,31 @@ class PlanSpec extends AnyFunSuite {
     val pruned = df.select(col("k")).queryExecution.executedPlan.toString
     assert(pruned.contains("ColumnarToRow"), pruned)
   }
+
+  test("PlanDump normalizes what changes between runs, and keeps table " +
+      "versions") {
+    val tmp = System.getProperty("java.io.tmpdir")
+    val run = Seq(
+      "HashAggregate(keys=[typ#12], functions=[count(1)], output=[typ#12, n#40L])",
+      "Exchange hashpartitioning(typ#12, 4), ENSURE_REQUIREMENTS, [plan_id=387]",
+      "+- ShuffleQueryStage 11",
+      "+- *(4) Project [k#1L]",
+      s"Location: InMemoryFileIndex(2 paths)[file:$tmp/graft_jvm_7/t/data/c..., PartitionFilters: []",
+      "MapElements graft.tsdb.Tsdb$$$Lambda$5518/0x00007ff395541e88@55e9b119, obj#9",
+      "lshbuckets(v, [[D@2313c291), [Lscala.Tuple2;@e934485",
+      "BatchScan graft:/tmp/graft_jvm_2668095796558621944/graft_io_tt_e7a2c5e9_4@2[k#1L]",
+      "BatchScan graft:/tmp/graft_copyinto_e7a2c5e92931625006801286219/table@1[k#2L]",
+      "BatchScan graft:/tmp/graft_h34_rec1_e7a2c5e9/wh/g/t@3[k#3L]")
+    assert(PlanDump.normalize(run.mkString("\n")).split("\n").toSeq == Seq(
+      "HashAggregate(keys=[typ#N], functions=[count(1)], output=[typ#N, n#NL])",
+      "Exchange hashpartitioning(typ#N, 4), ENSURE_REQUIREMENTS, [plan_id=N]",
+      "+- ShuffleQueryStage N",
+      "+- *(N) Project [k#NL]",
+      "Location: InMemoryFileIndex(2 paths)[tmp], PartitionFilters: []",
+      "MapElements graft.tsdb.Tsdb$$$Lambda@H, obj#N",
+      "lshbuckets(v, [[D@H), [Lscala.Tuple2;@H",
+      "BatchScan graft:/tmp/graft_jvm_N/graft_io_tt_e7a2c5e9_N@2[k#NL]",
+      "BatchScan graft:/tmp/graft_copyinto_e7a2c5e9N/table@1[k#NL]",
+      "BatchScan graft:/tmp/graft_h34_rec1_e7a2c5e9/wh/g/t@3[k#NL]"))
+  }
 }

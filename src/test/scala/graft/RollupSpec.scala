@@ -82,7 +82,7 @@ class RollupSpec extends AnyFunSuite {
     val root = Rollup.tierRoot(spark, dir)
     // the tier store is a real commit-log table (commit + stats)
     assert(new java.io.File(s"$root/1h/_commits/00000000.commit").exists())
-    assert(new java.io.File(s"$root/1h/_commits/00000000.stats").exists())
+    assert(sources.Io.readStatsFile(spark, s"$root/1h", 0L).nonEmpty)
     // pruned read plans fewer data files than the full tier
     def dataFiles(df: org.apache.spark.sql.DataFrame) =
       df.select(input_file_name()).distinct().count()
