@@ -9,9 +9,9 @@ package graft
   * server (the reference keeps one warm MemIndex per store) but would
   * accumulate in a process that cycles through many datasets.
   * [[clear]] drops and releases every entry of every session; call it
-  * between dataset generations. Fixture directories stay on disk:
-  * `_done`-marked ones are reused by the next build, the rest are
-  * rebuilt.
+  * between dataset generations. A clear deletes the directories of
+  * `Memo.fresh` fixtures with their entries; `_done`-landed
+  * directories stay on disk and are reused by the next build.
   */
 object Caches {
   def clear(): Unit = Memo.clearAll()

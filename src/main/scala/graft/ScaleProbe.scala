@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.Fixture.{inCatalog, withConfs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -343,13 +344,11 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      spark.conf.set("spark.sql.catalog.gprobe",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gprobe.warehouse",
-        new java.io.File(rloDir, "wh").toString)
-      t("rowlevel_update") {
-        spark.sql("UPDATE gprobe.t SET cents = cents + 1 " +
-          "WHERE event_id >= 5000 AND event_id < 15000")
+      inCatalog(spark, rloDir.toString, s"$rloDir/wh") { c =>
+        t("rowlevel_update") {
+          spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
+            "WHERE event_id >= 5000 AND event_id < 15000")
+        }
       }
     }
     // round 13: the same fixed-band UPDATE through the MERGE-ON-READ
@@ -371,15 +370,12 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      spark.conf.set("spark.sql.catalog.gmprobe",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gmprobe.warehouse",
-        new java.io.File(morDir, "wh").toString)
-      spark.conf.set("graft.dml.mode", "mor")
-      try t("mor_update") {
-        spark.sql("UPDATE gmprobe.t SET cents = cents + 1 " +
-          "WHERE event_id >= 5000 AND event_id < 15000")
-      } finally spark.conf.unset("graft.dml.mode")
+      inCatalog(spark, morDir.toString, s"$morDir/wh") { c =>
+        withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_update") {
+          spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
+            "WHERE event_id >= 5000 AND event_id < 15000")
+        })
+      }
     }
     // round 14: BULK MOR delete — ~40% of every file matches, so the
     // over-threshold fallback (GraftDeltaWrite commit guard) must
@@ -400,15 +396,12 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      spark.conf.set("spark.sql.catalog.gmbprobe",
-        "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.gmbprobe.warehouse",
-        new java.io.File(mbDir, "wh").toString)
-      spark.conf.set("graft.dml.mode", "mor")
-      try t("mor_bulk_delete") {
-        spark.sql("DELETE FROM gmbprobe.t " +
-          "WHERE typ IN ('view', 'click') AND cents % 1 = 0")
-      } finally spark.conf.unset("graft.dml.mode")
+      inCatalog(spark, mbDir.toString, s"$mbDir/wh") { c =>
+        withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_bulk_delete") {
+          spark.sql(s"DELETE FROM $c.t " +
+            "WHERE typ IN ('view', 'click') AND cents % 1 = 0")
+        })
+      }
       val t2 = tdir
       val head = sources.Io.tableVersion(spark, t2)
       println(s"mor_bulk_delete: head v$head, dv dirs " +

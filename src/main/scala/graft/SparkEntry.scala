@@ -1,5 +1,6 @@
 package graft
 
+import graft.gates.{Fixture, IoGates, StreamGates}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver gate: a query builder and how the driver checks its
@@ -147,13 +148,13 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin)),
     // H1: the final Complete-mode state of a real multi-micro-batch
     // streaming windowed aggregation must equal the batch GROUP BY
-    Gate("stream_window_agg", streaming.StreamOps.windowedAggStreamed _, Oracle(
+    Gate("stream_window_agg", StreamGates.windowedAggStreamed _, Oracle(
       """SELECT epoch_us(date_trunc('hour', ts)) // 1000000 AS win_start_sec,
         |  event_type AS typ, count(*) AS n
         |FROM events GROUP BY 1, 2""".stripMargin)),
     // H19: the streamed accept/reject routing read back from its landed
     // sinks ≡ the batch gopher predicate partition (integer-only agg)
-    Gate("stream_quality_route", streaming.StreamOps.qualityRouteStreamed _, Oracle(
+    Gate("stream_quality_route", StreamGates.qualityRouteStreamed _, Oracle(
       """WITH t AS (SELECT doc_id, n_chars, string_split(text, ' ') AS w
         |  FROM documents),
         |m AS (SELECT doc_id, len(w) AS nw, n_chars - (len(w) - 1) AS sum_len,
@@ -174,7 +175,7 @@ object SparkEntry {
     // hashed-bigram buckets, λ table, and dyadic per-doc scores as
     // F34's oracle; the accept cut (score > 0) and the per-verdict
     // score SUM are exact because every addend is dyadic
-    Gate("stream_dsir_route", streaming.StreamOps.dsirRouteStreamed _, Oracle(
+    Gate("stream_dsir_route", StreamGates.dsirRouteStreamed _, Oracle(
       """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w
         |  FROM documents),
         |f AS (SELECT doc_id, lang, unnest(list_concat(w,
@@ -214,7 +215,7 @@ object SparkEntry {
         |FROM sco GROUP BY 1""".stripMargin)),
     // H30: the stream-maintained native histogram must serve the SAME
     // p90 as the batch model — one oracle for B55 and its live twin
-    Gate("stream_native_hist", streaming.StreamOps.nativeHistStreamed _, Oracle(
+    Gate("stream_native_hist", StreamGates.nativeHistStreamed _, Oracle(
       """WITH e AS (SELECT event_type AS typ, value AS v FROM events
         |  WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
         |    AND ts < TIMESTAMP '2024-01-08 00:00:00'),
@@ -244,7 +245,7 @@ object SparkEntry {
         |FROM hit WHERE rn = 1""".stripMargin)),
     // H33: the stream-maintained NHCB must serve the SAME p90 as the
     // batch model — one oracle for B59 and its live twin
-    Gate("stream_nhcb", streaming.StreamOps.nhcbStreamed _, Oracle(
+    Gate("stream_nhcb", StreamGates.nhcbStreamed _, Oracle(
       """WITH e AS (SELECT event_type AS typ, value AS v FROM events
         |  WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
         |    AND ts < TIMESTAMP '2024-01-08 00:00:00'),
@@ -264,7 +265,7 @@ object SparkEntry {
         |FROM q""".stripMargin)),
     // H31: the stream-built TermStore must answer F14's ranking
     // exactly — same oracle as bm25_topk
-    Gate("stream_bm25", streaming.StreamOps.bm25Streamed _, Oracle(bm25Sql)),
+    Gate("stream_bm25", StreamGates.bm25Streamed _, Oracle(bm25Sql)),
     // D16: disjoint width-20 tiling, global keep-first on the tile
     // string, ordered reassembly, and the dual byte-polynomial hash of
     // the cleaned text — content pinned, not just counts
@@ -324,7 +325,7 @@ object SparkEntry {
         |FROM j GROUP BY 1""".stripMargin)),
     // H20: the streamed SQ8 store decoded back ≡ E8's batch
     // quantization (identical oracle — the landed codes are checked)
-    Gate("stream_embed_ingest", streaming.StreamOps.embedIngestStreamed _, Oracle(
+    Gate("stream_embed_ingest", StreamGates.embedIngestStreamed _, Oracle(
       """WITH v AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |  FROM embeddings),
@@ -345,19 +346,19 @@ object SparkEntry {
     // H8: the streamed input carries every event TWICE; matching the
     // batch GROUP BY over the original events proves the streaming
     // dedup dropped every duplicate and nothing else
-    Gate("stream_dedup", streaming.StreamOps.dedupStreamed _, Oracle(
+    Gate("stream_dedup", StreamGates.dedupStreamed _, Oracle(
       """SELECT event_type AS typ, count(*) AS n
         |FROM events GROUP BY 1""".stripMargin)),
     // H24: watermark-bounded dedup of the doubled ordered replay must
     // reproduce the batch distinct set (= the original events) exactly
-    Gate("stream_wm_dedup", streaming.StreamOps.wmDedupStreamed _, Oracle(
+    Gate("stream_wm_dedup", StreamGates.wmDedupStreamed _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents
         |FROM events GROUP BY 1""".stripMargin)),
     // H12: the streaming heap's final state ≡ the batch ranking (same
     // raw doubles, same (v desc, usr, typ) tie order)
-    Gate("stream_topk", streaming.StreamOps.topkStreamed _, Oracle(
+    Gate("stream_topk", StreamGates.topkStreamed _, Oracle(
       """SELECT typ, rk, usr, v FROM (
         |  SELECT event_type AS typ, CAST(user_id AS VARCHAR) AS usr,
         |    value AS v,
@@ -367,14 +368,14 @@ object SparkEntry {
         |WHERE rk <= 3""".stripMargin)),
     // H2: the custom-state series tracker's monotone nSamples — max
     // per key over all Update-mode emissions = final state = batch count
-    Gate("stream_series_state", streaming.StreamOps.trackSeriesStreamed _, Oracle(
+    Gate("stream_series_state", StreamGates.trackSeriesStreamed _, Oracle(
       """SELECT CAST(user_id AS VARCHAR) AS usr, event_type AS typ,
         |  count(*) AS n_samples
         |FROM events GROUP BY 1, 2""".stripMargin)),
     // H14: the streamed histogram's final state (selected by the
     // monotone total) interpolates with the same IEEE expression as
     // B19's oracle — which therefore gates the streaming path verbatim
-    Gate("stream_histq", streaming.StreamOps.histogramQuantileStreamed _, Oracle(
+    Gate("stream_histq", StreamGates.histogramQuantileStreamed _, Oracle(
       """WITH h AS (SELECT event_type AS typ, count(*) AS total,
         |    sum(CASE WHEN value <= 25 THEN 1 ELSE 0 END) AS c25,
         |    sum(CASE WHEN value <= 50 THEN 1 ELSE 0 END) AS c50,
@@ -397,7 +398,7 @@ object SparkEntry {
         |FROM h""".stripMargin)),
     // H10: below-capacity Misra–Gries is exact counting (≈400 buckets
     // < 1024): final streamed summary top-5 ≡ batch ranking
-    Gate("stream_freq_items", streaming.StreamOps.freqItemsStreamed _, Oracle(
+    Gate("stream_freq_items", StreamGates.freqItemsStreamed _, Oracle(
       """WITH b AS (SELECT event_type AS typ,
         |    CAST(floor(value) AS BIGINT) AS bucket, count(*) AS n
         |  FROM events GROUP BY 1, 2)
@@ -408,7 +409,7 @@ object SparkEntry {
         |WHERE rk <= 5""".stripMargin)),
     // H15: merge-on-read over the per-micro-batch MV segments ≡ the
     // one-shot batch aggregation; all-integer state, exact oracle
-    Gate("stream_mv", streaming.StreamOps.mvStreamed _, Oracle(
+    Gate("stream_mv", StreamGates.mvStreamed _, Oracle(
       """SELECT CAST(user_id AS VARCHAR) AS usr, event_type AS typ,
         |  count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS s,
@@ -419,7 +420,7 @@ object SparkEntry {
     // table, re-aggregated per error (static error set re-enters the
     // zero-match rows), must equal the batch left-outer interval join —
     // C10's oracle verbatim
-    Gate("stream_interval_join", streaming.StreamOps.intervalJoinStreamed _, Oracle(
+    Gate("stream_interval_join", StreamGates.intervalJoinStreamed _, Oracle(
       """SELECT e.event_id, CAST(e.user_id AS VARCHAR) AS usr,
         |  count(p.event_id) AS n_nearby
         |FROM events e LEFT JOIN events p
@@ -430,7 +431,7 @@ object SparkEntry {
     // H11: append-mode session windows (sentinel-flushed) ≡ the batch
     // gap sessionization — B18's oracle with the value summed in exact
     // integer cents (the streaming state merge has no FP surface)
-    Gate("stream_sessions", streaming.StreamOps.sessionAggStreamed _, Oracle(
+    Gate("stream_sessions", StreamGates.sessionAggStreamed _, Oracle(
       """WITH e AS (SELECT CAST(user_id AS VARCHAR) AS usr,
         |    event_type AS typ, value, event_id,
         |    epoch_us(ts)//1000000 AS sec, epoch_us(ts) AS us
@@ -448,7 +449,7 @@ object SparkEntry {
     // H13: the streamed verdicts (stream-static corpus join +
     // cross-micro-batch hash state) ≡ D8's batch classes — the
     // dedup_incremental oracle verbatim
-    Gate("stream_incr_dedup", streaming.StreamOps.corpusDedupStreamed _, Oracle(
+    Gate("stream_incr_dedup", StreamGates.corpusDedupStreamed _, Oracle(
       """WITH orig AS (SELECT doc_id, text FROM documents),
         |b0 AS (SELECT doc_id, (doc_id // 5) % 4 AS i4 FROM documents
         |       WHERE doc_id % 5 = 0),
@@ -468,7 +469,7 @@ object SparkEntry {
         |FROM r""".stripMargin)),
     // H18: the streamed per-source open-bin cursor ≡ F11's greedy fold
     // — the seq_pack recursive-CTE oracle verbatim (pure integers)
-    Gate("stream_seq_pack", streaming.StreamOps.seqPackStreamed _, Oracle(
+    Gate("stream_seq_pack", StreamGates.seqPackStreamed _, Oracle(
       """WITH RECURSIVE
         |d AS (SELECT source,
         |    list_sort(list(struct_pack(doc_id := doc_id,
@@ -491,7 +492,7 @@ object SparkEntry {
         |SELECT doc_id, source, n_tok, bin FROM pk""".stripMargin)),
     // H21: the streamed alert state machine must reproduce the batch
     // gaps-and-islands derivation verbatim — same oracle as B49
-    Gate("stream_alerts", streaming.StreamOps.alertsStreamed _, Oracle(
+    Gate("stream_alerts", StreamGates.alertsStreamed _, Oracle(
       """WITH g AS (SELECT unnest(generate_series(0, 28)) AS i),
         |w AS (
         |  SELECT CAST(e.user_id AS VARCHAR) AS usr, g.i
@@ -510,7 +511,7 @@ object SparkEntry {
         |       THEN 'firing' ELSE 'pending' END AS alertstate
         |FROM a""".stripMargin)),
     // H22: streamed SCD2 cursor ≡ the batch derivation's CLOSED rows
-    Gate("stream_scd2", streaming.StreamOps.scd2Streamed _, Oracle(
+    Gate("stream_scd2", StreamGates.scd2Streamed _, Oracle(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type AS attr, epoch_us(ts) AS us
         |  FROM events),
@@ -530,7 +531,7 @@ object SparkEntry {
         |FROM v WHERE valid_to_us IS NOT NULL""".stripMargin)),
     // H23: the streamed per-user rolling history ≡ the batch trailing
     // window verbatim — same oracle as C26
-    Gate("stream_features", streaming.StreamOps.featuresStreamed _, Oracle(
+    Gate("stream_features", StreamGates.featuresStreamed _, Oracle(
       """WITH w AS (
         |  SELECT event_id, user_id, event_type,
         |    list(event_type) OVER (PARTITION BY user_id
@@ -542,16 +543,16 @@ object SparkEntry {
         |  CAST(coalesce(len(hist), 0) AS INT) AS n_prev
         |FROM w WHERE event_type = 'purchase'""".stripMargin)),
     // H25: the live serving loop must produce the identical grid
-    Gate("stream_gapfill", streaming.StreamOps.gapfillStreamed _, Oracle(gapfillSql)),
+    Gate("stream_gapfill", StreamGates.gapfillStreamed _, Oracle(gapfillSql)),
     // H26: the stream-maintained tier must serve the identical
     // dashboard (stream ≡ batch tier ≡ raw)
-    Gate("stream_rollup", streaming.StreamOps.rollupStreamed _, Oracle(rollupDailySql)),
+    Gate("stream_rollup", StreamGates.rollupStreamed _, Oracle(rollupDailySql)),
     // H27: the streaming bounded-heap sample must equal the batch
     // draw bit-for-bit (priorities are pure functions of the doc)
-    Gate("stream_wsample", streaming.StreamOps.weightedSampleStreamed _, Oracle(wsampleSql)),
+    Gate("stream_wsample", StreamGates.weightedSampleStreamed _, Oracle(wsampleSql)),
     // H28: the stream-maintained series catalog must serve the
     // identical churn dashboard (same oracle as A22)
-    Gate("stream_churn", streaming.StreamOps.churnStreamed _, Oracle(churnSql)),
+    Gate("stream_churn", StreamGates.churnStreamed _, Oracle(churnSql)),
     // A22: series churn — births/deaths per day from the per-series
     // time bounds, ~30-row running net
     Gate("index_churn", index.IndexQueries.indexChurn _, Oracle(churnSql)),
@@ -575,7 +576,7 @@ object SparkEntry {
         |FROM r GROUP BY 1""".stripMargin)),
     // H32: the stream-maintained first-seen table must admit exactly
     // like the batch guard — same oracle as index_guard
-    Gate("stream_guard", streaming.StreamOps.cardinalityGuardStreamed _, Oracle(
+    Gate("stream_guard", StreamGates.cardinalityGuardStreamed _, Oracle(
       """WITH s AS (SELECT event_type AS typ,
         |    CAST(user_id AS VARCHAR) AS usr,
         |    epoch_us(min(ts)) AS first_us, count(*) AS n_samples
@@ -594,7 +595,7 @@ object SparkEntry {
     // monotone count, exploded per dimension) ≡ the batch per-label
     // dyadic component sums — exact doubles, the ann_centroid
     // quantization chain replayed from the raw embeddings
-    Gate("stream_centroid", streaming.StreamOps.centroidStreamed _, Oracle(
+    Gate("stream_centroid", StreamGates.centroidStreamed _, Oracle(
       """WITH v AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |  FROM embeddings WHERE label IS NOT NULL),
@@ -610,7 +611,7 @@ object SparkEntry {
     // emit-on-next-bucket or timeout-flush) ≡ the batch hourly
     // aggregation; the in-state double fold runs in (ts, event_id)
     // order under ordered replay, replayed here via list_reduce
-    Gate("stream_rate", streaming.StreamOps.rateStreamed _, Oracle(
+    Gate("stream_rate", StreamGates.rateStreamed _, Oracle(
       """WITH e AS (SELECT CAST(user_id AS VARCHAR) AS usr,
         |    event_type AS typ, value, event_id, epoch_us(ts) AS us,
         |    epoch_us(ts)//1000000//3600*3600 AS bucket
@@ -626,7 +627,7 @@ object SparkEntry {
     // H3: the landed day-partitioned lakehouse (written through the
     // checkpointed foreachBatch commit loop) re-read and aggregated —
     // nothing dropped, nothing doubled, day routing correct
-    Gate("stream_store_ingest", streaming.StreamOps.storeIngestStreamed _, Oracle(
+    Gate("stream_store_ingest", StreamGates.storeIngestStreamed _, Oracle(
       """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type AS typ,
         |  count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
@@ -2115,28 +2116,28 @@ object SparkEntry {
     // I1-I4: the LANDED FILES of each format answer the gate
     // — write→parse→read of csv/json/orc, and the day-routed parquet
     // layout, each must reproduce the batch aggregation over events
-    Gate("io_csv", sources.Io.csvRoundtrip _, Oracle(
+    Gate("io_csv", IoGates.csvRoundtrip _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id,
         |  min(epoch_us(ts)) AS min_us, max(epoch_us(ts)) AS max_us
         |FROM events GROUP BY 1""".stripMargin)),
-    Gate("io_json", sources.Io.jsonRoundtrip _, Oracle(
+    Gate("io_json", IoGates.jsonRoundtrip _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id,
         |  min(epoch_us(ts)) AS min_us, max(epoch_us(ts)) AS max_us
         |FROM events GROUP BY 1""".stripMargin)),
-    Gate("io_orc", sources.Io.orcRoundtrip _, Oracle(
+    Gate("io_orc", IoGates.orcRoundtrip _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id,
         |  min(epoch_us(ts)) AS min_us, max(epoch_us(ts)) AS max_us
         |FROM events GROUP BY 1""".stripMargin)),
-    Gate("io_daily", sources.Io.dailyPartitionRead _, Oracle(
+    Gate("io_daily", IoGates.dailyPartitionRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2148,19 +2149,19 @@ object SparkEntry {
     // compaction and z-ordering must preserve content exactly, the
     // manifest-pruned band must be exact, and the post-MERGE table
     // must equal the oracle's replay of the deterministic update batch
-    Gate("io_compacted", sources.Io.compactedRead _, Oracle(
+    Gate("io_compacted", IoGates.compactedRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM events GROUP BY 1""".stripMargin)),
-    Gate("io_zorder", sources.Io.zorderRead _, Oracle(
+    Gate("io_zorder", IoGates.zorderRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
         |FROM events GROUP BY 1""".stripMargin)),
-    Gate("io_pruned", sources.Io.prunedRead _, Oracle(
+    Gate("io_pruned", IoGates.prunedRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(c) AS BIGINT) AS sum_cents,
         |  min(event_id) AS min_id, max(event_id) AS max_id
@@ -2169,7 +2170,7 @@ object SparkEntry {
         |      FROM events)
         |WHERE c >= 2000 AND c <= 6000
         |GROUP BY 1""".stripMargin)),
-    Gate("io_upsert", sources.Io.upsertedRead _, Oracle(
+    Gate("io_upsert", IoGates.upsertedRead _, Oracle(
       """WITH e AS (SELECT event_id, event_type, value,
         |    strftime(ts, '%Y-%m-%d') AS day FROM events),
         |d AS (SELECT * FROM e WHERE day = '2024-01-10'),
@@ -2193,7 +2194,7 @@ object SparkEntry {
     // I9: mergeSchema unions the two eras' footers and
     // backfills era-1's missing quality column with null — the oracle
     // replays both eras and the backfill arithmetic
-    Gate("io_evolved", sources.Io.evolvedRead _, Oracle(
+    Gate("io_evolved", IoGates.evolvedRead _, Oracle(
       """WITH f AS (SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
         |  FROM events),
@@ -2212,7 +2213,7 @@ object SparkEntry {
     // I24: schema evolution ON THE COMMIT LOG — v0 is the old schema
     // (no typ), v1 appends typed rows; both version reads replayed
     // from the source cuts (n_typed counts only v1's own rows)
-    Gate("io_evolve_log", sources.Io.evolveLogRead _, Oracle(
+    Gate("io_evolve_log", IoGates.evolveLogRead _, Oracle(
       """WITH f AS (SELECT event_id, epoch_us(ts) AS us,
         |    event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2231,7 +2232,7 @@ object SparkEntry {
         |SELECT * FROM v0 UNION ALL SELECT * FROM v1""".stripMargin)),
     // I5+I8: the bucketed layout's per-user agg + window + co-located
     // join, replayed from the source table (write→bucket→read ≡ batch)
-    Gate("io_bucketed", sources.Io.bucketedRead _, Oracle(
+    Gate("io_bucketed", IoGates.bucketedRead _, Oracle(
       """WITH e AS (SELECT event_id, CAST(user_id AS VARCHAR) AS usr,
         |    event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2249,7 +2250,7 @@ object SparkEntry {
         |FROM a JOIN l ON a.usr = l.usr JOIN p ON a.usr = p.usr""".stripMargin)),
     // I13: day-partition retention vacuum — surviving files ≡ the
     // source filtered to the cutoff (write→vacuum→read ≡ batch)
-    Gate("io_retention", sources.Io.retentionRead _, Oracle(
+    Gate("io_retention", IoGates.retentionRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2261,12 +2262,12 @@ object SparkEntry {
     // I14: commit-log time travel — v1 (days 1-20, all types, read
     // back AFTER the v2 delete: history immutable) and v2 (purchases
     // copy-on-write-deleted), each ≡ the source cut
-    Gate("io_timetravel", sources.Io.timetravelRead _, Oracle(ioTimetravelSql)),
+    Gate("io_timetravel", IoGates.timetravelRead _, Oracle(ioTimetravelSql)),
     // CONVERT a plain parquet dir to a commit-log table —
     // v0 serves the original content byte-for-byte (zero copy), a
     // post-convert COW DELETE (typ='view') and an append (displaced
     // clicks) land as v1/v2; v0 and HEAD both replayed from source
-    Gate("io_convert", sources.Io.convertRead _, Oracle(
+    Gate("io_convert", IoGates.convertRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2291,7 +2292,7 @@ object SparkEntry {
     // valid appends land, violating append/MERGE refuse atomically,
     // drop re-opens; final cut = src ∪ valid clicks ∪ post-drop
     // negated errors
-    Gate("io_constraint", sources.Io.constraintRead _, Oracle(
+    Gate("io_constraint", IoGates.constraintRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2311,7 +2312,7 @@ object SparkEntry {
     // band = cents % 97 (computed at the chokepoint for the slice
     // written without it, validated for the explicit ones; the
     // mismatching batch refused before landing)
-    Gate("io_generated", sources.Io.generatedRead _, Oracle(
+    Gate("io_generated", IoGates.generatedRead _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2325,7 +2326,7 @@ object SparkEntry {
     // own commit), pre-evolution rows read score NULL, new restock
     // keys insert; min_v arithmetic matches the builder's pmod on the
     // PRE-offset id for inserts
-    Gate("io_merge_evolve", sources.Io.mergeEvolveRead _, Oracle(
+    Gate("io_merge_evolve", IoGates.mergeEvolveRead _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2351,7 +2352,7 @@ object SparkEntry {
     // TYPE WIDENING — the INT-era slice (even ids) reads
     // through the BIGINT declared schema unrewritten, the post-widen
     // slice (odd ids) carries values past the int range
-    Gate("io_alter_widen", sources.Io.alterWidenRead _, Oracle(
+    Gate("io_alter_widen", IoGates.alterWidenRead _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2367,7 +2368,7 @@ object SparkEntry {
     // IDENTITY — per-type distinct-id count must equal the
     // row count (system-assigned values are globally unique; builder
     // asserts they clear the seeded range and advance the high water)
-    Gate("io_identity", sources.Io.identityRead _, Oracle(
+    Gate("io_identity", IoGates.identityRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n, count(*) AS n_ids,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2375,22 +2376,22 @@ object SparkEntry {
         |FROM events GROUP BY 1""".stripMargin)),
     // I26: the twin key of io_timetravel — one reader (the
     // format("graft") connector), one builder, one oracle
-    Gate("io_timetravel_dsv2", sources.Io.timetravelRead _, Oracle(ioTimetravelSql)),
+    Gate("io_timetravel_dsv2", IoGates.timetravelRead _, Oracle(ioTimetravelSql)),
     // I26: the twin key of io_skipping (same builder and oracle)
-    Gate("io_skipping_dsv2", sources.Io.skippingRead _, Oracle(ioSkippingSql)),
+    Gate("io_skipping_dsv2", IoGates.skippingRead _, Oracle(ioSkippingSql)),
     // I25: deletion vectors — v0 everything, v1 after the DV-path
     // point delete (error ∧ id≡0 mod 7), v2 after the bulk purchase
     // delete (per-file COW fallback); each version's merge-on-read
     // read ≡ the source cut, and v1 read back AFTER v2 committed
     // proves DV version isolation
-    Gate("io_dv", sources.Io.dvRead _, Oracle(ioDvSql)),
+    Gate("io_dv", IoGates.dvRead _, Oracle(ioDvSql)),
     // I26: the twin key of io_dv (same builder and oracle:
     // the connector's positional DV scan filter)
-    Gate("io_dv_dsv2", sources.Io.dvRead _, Oracle(ioDvSql)),
+    Gate("io_dv_dsv2", IoGates.dvRead _, Oracle(ioDvSql)),
     // I26 write path: two connector appends (V1Write ->
     // tableAppendOcc) onto an API-created v0 must reproduce the full
     // events aggregation -- write->commit->read is what's gated
-    Gate("io_write_dsv2", sources.Io.dsv2WriteRead _, Oracle(
+    Gate("io_write_dsv2", IoGates.dsv2WriteRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2400,7 +2401,7 @@ object SparkEntry {
     // the exactly-once (txnVersion) connector sink -- same
     // content contract as io_write_dsv2; a redelivered batch that
     // committed twice would double the purchase sums
-    Gate("io_write_txn", sources.Io.dsv2WriteTxnRead _, Oracle(
+    Gate("io_write_txn", IoGates.dsv2WriteTxnRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2409,7 +2410,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin)),
     // catalog DML lifecycle -- CREATE + INSERT + DELETE as
     // graft.<ns>.<table> identifiers; insert-minus-delete replayed
-    Gate("io_catalog", sources.Io.catalogRead _, Oracle(
+    Gate("io_catalog", IoGates.catalogRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2419,7 +2420,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin)),
     // atomic CTAS + SQL time travel -- VERSION AS OF 0 reads
     // the pre-delete cut, so the oracle is the FULL source aggregation
-    Gate("io_ctas", sources.Io.ctasRead _, Oracle(
+    Gate("io_ctas", IoGates.ctasRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2429,7 +2430,7 @@ object SparkEntry {
     // ALTER TABLE ADD COLUMN through the catalog — era 1
     // (even ids, 3 cols) null-backfills the added `band`, era 2 (odd
     // ids) carries it physically (band = cents % 10)
-    Gate("io_alter_add", sources.Io.alterAddRead _, Oracle(
+    Gate("io_alter_add", IoGates.alterAddRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2447,7 +2448,7 @@ object SparkEntry {
     // cross-era DML — the io_alter_add
     // evolution followed by a COW DELETE whose touched files span both
     // eras; era-2 rows must keep their band through the rewrite
-    Gate("io_alter_dml", sources.Io.alterDmlRead _, Oracle(
+    Gate("io_alter_dml", IoGates.alterDmlRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2464,7 +2465,7 @@ object SparkEntry {
         |FROM t WHERE typ <> 'view' GROUP BY 1""".stripMargin)),
     // INSERT OVERWRITE = one replace commit -- v0 is the
     // full table, v1 the purchases-only replacement; both cuts replay
-    Gate("io_overwrite", sources.Io.overwriteRead _, Oracle(
+    Gate("io_overwrite", IoGates.overwriteRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2484,7 +2485,7 @@ object SparkEntry {
     // every purchase (cents + 100000 by event_id) and inserts a
     // displaced copy of every click (event_id + 1e12); both cuts
     // replayed from the source prove update/insert/carry/isolation
-    Gate("io_merge", sources.Io.mergeRead _, Oracle(
+    Gate("io_merge", IoGates.mergeRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2513,7 +2514,7 @@ object SparkEntry {
     // id%14=0 half of the deleted class; the error file carries by
     // reference, so its remaining DV entries must stay load-bearing
     // (id%7=0 ∧ id%14≠0 hidden) while re-inserted keys serve fresh
-    Gate("io_merge_reinsert", sources.Io.mergeReinsertRead _, Oracle(
+    Gate("io_merge_reinsert", IoGates.mergeReinsertRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2542,7 +2543,7 @@ object SparkEntry {
         |SELECT * FROM v1a UNION ALL SELECT * FROM v2a""".stripMargin)),
     // SQL MERGE INTO through the catalog — the SAME replay
     // as io_merge (SQL statement ≡ API verb ≡ source)
-    Gate("io_merge_sql", sources.Io.mergeSqlRead _, Oracle(
+    Gate("io_merge_sql", IoGates.mergeSqlRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2568,7 +2569,7 @@ object SparkEntry {
         |SELECT * FROM v0 UNION ALL SELECT * FROM v1""".stripMargin)),
     // SQL UPDATE through the row-level COW rewrite — v0 is
     // the raw cut, v1 adds 100000 cents to every purchase
-    Gate("io_update", sources.Io.updateRead _, Oracle(
+    Gate("io_update", IoGates.updateRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2589,7 +2590,7 @@ object SparkEntry {
     // MERGE-ON-READ DML (SupportsDelta over positional DVs)
     // — UPDATE purchases to id%1000+7, RE-UPDATE the id%10=0 slice
     // (+5), DV-delete error∧(id%23=0); no data file ever rewritten
-    Gate("io_update_mor", sources.Io.updateMorRead _, Oracle(
+    Gate("io_update_mor", IoGates.updateMorRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2608,7 +2609,7 @@ object SparkEntry {
     // I25+I15: the DV change feed — v0→v1 deletes are the DV'd point
     // rows (no file changed), v1→v2 deletes are the purchases (COW +
     // DV mix); no inserts in either transition
-    Gate("io_dv_cdf", sources.Io.dvCdfRead _, Oracle(
+    Gate("io_dv_cdf", IoGates.dvCdfRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2624,7 +2625,7 @@ object SparkEntry {
         |SELECT * FROM d1 UNION ALL SELECT * FROM d2""".stripMargin)),
     // I15: change feed — v0→v1 is a pure insert of the appended days,
     // v1→v2 a pure delete of the purchases (COW survivors cancel)
-    Gate("io_cdf", sources.Io.cdfRead _, Oracle(
+    Gate("io_cdf", IoGates.cdfRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, epoch_us(ts) AS us,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2643,7 +2644,7 @@ object SparkEntry {
     // MOR-update CDC pairing — the
     // 0→1 feed emits update_preimage/update_postimage pairs for the
     // statement's rows, the 1→2 plain append stays insert
-    Gate("io_cdf_mor", sources.Io.cdfMorRead _, Oracle(
+    Gate("io_cdf_mor", IoGates.cdfMorRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2668,7 +2669,7 @@ object SparkEntry {
         |SELECT * FROM pre UNION ALL SELECT * FROM post
         |UNION ALL SELECT * FROM ins""".stripMargin)),
     // I16: table history — each version's row count ≡ its source cut
-    Gate("io_history", sources.Io.historyRead _, Oracle(
+    Gate("io_history", IoGates.historyRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, epoch_us(ts) AS us FROM events),
         |v0 AS (SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_rows
@@ -2682,7 +2683,7 @@ object SparkEntry {
     // I17: shallow clone + COW divergence — clone_v0 ≡ the source's v2
     // cut; the clone then deletes views (clone_v1) while the source
     // still serves them (src_v2): clone/source isolation
-    Gate("io_clone", sources.Io.cloneRead _, Oracle(
+    Gate("io_clone", IoGates.cloneRead _, Oracle(
       """WITH base AS (
         |  SELECT event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2702,7 +2703,7 @@ object SparkEntry {
         |UNION ALL SELECT * FROM s2""".stripMargin)),
     // I18: vacuum retained only the latest version; its read-back must
     // still reproduce the source cut exactly (GC removed only orphans)
-    Gate("io_vacuum", sources.Io.vacuumRead _, Oracle(
+    Gate("io_vacuum", IoGates.vacuumRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents
@@ -2713,7 +2714,7 @@ object SparkEntry {
     // I19: exactly-once streaming sink into the commit-log table —
     // every micro-batch delivered TWICE, retries must no-op, latest
     // version ≡ the batch aggregation over the source
-    Gate("io_stream_sink", streaming.StreamOps.tableSinkStreamed _, Oracle(
+    Gate("io_stream_sink", StreamGates.tableSinkStreamed _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents
@@ -2721,7 +2722,7 @@ object SparkEntry {
     // the DIRECT DSv2 streaming sink (writeStream
     // .format("graft"), no foreachBatch) — epochs ≡ versions, a full
     // fresh-checkpoint replay must no-op; same content contract as I19
-    Gate("stream_sink_dsv2", streaming.StreamOps.tableSinkDsv2Streamed _, Oracle(
+    Gate("stream_sink_dsv2", StreamGates.tableSinkDsv2Streamed _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents
@@ -2729,7 +2730,7 @@ object SparkEntry {
     // H34: streaming CDC upsert apply — two key-disjoint
     // change batches MERGEd through foreachBatch; final cut ≡ base
     // with purchases updated and clicks re-inserted displaced
-    Gate("stream_merge", streaming.StreamOps.mergeStreamed _, Oracle(
+    Gate("stream_merge", StreamGates.mergeStreamed _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2749,7 +2750,7 @@ object SparkEntry {
     // instructions (purchase: cents = id%1000+1, click: id%777+2)
     // applied as SQL UPDATE per micro-batch; final landed cut ≡ the
     // source with both type classes rewritten, others untouched
-    Gate("stream_update", streaming.StreamOps.updateStreamed _, Oracle(
+    Gate("stream_update", StreamGates.updateStreamed _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2768,7 +2769,7 @@ object SparkEntry {
     // readStream.format("graft") (commit versions as offsets, a
     // mid-stream append served by its own batch); final Complete-mode
     // aggregate ≡ the batch aggregation of the raw source
-    Gate("stream_table_source", streaming.StreamOps.tableSourceStreamed _, Oracle(
+    Gate("stream_table_source", StreamGates.tableSourceStreamed _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2778,7 +2779,7 @@ object SparkEntry {
     // DV-carrying table — batch 0 is the MOR cut of v1 (the id%3=0
     // slice minus the error∧(id%7=0) DV deletes), batch 1 the id%3=1
     // append; final aggregate ≡ the replayed union
-    Gate("stream_table_source_dv", streaming.StreamOps.tableSourceDvStreamed _, Oracle(
+    Gate("stream_table_source_dv", StreamGates.tableSourceDvStreamed _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2798,7 +2799,7 @@ object SparkEntry {
     // rows as `delete` (positional keep-filter over the shared files),
     // a MOR UPDATE as paired update_preimage/update_postimage, each
     // stamped with its _commit_version
-    Gate("stream_cdf_source", streaming.StreamOps.cdfSourceStreamed _, Oracle(
+    Gate("stream_cdf_source", StreamGates.cdfSourceStreamed _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
@@ -2832,7 +2833,7 @@ object SparkEntry {
     // snapshots land per micro-batch (purchases re-priced +100000,
     // clicks +5), every other region untouched; redelivery asserted a
     // content no-op before the gate reads the landed table
-    Gate("stream_replace", streaming.StreamOps.replaceStreamed _, Oracle(
+    Gate("stream_replace", StreamGates.replaceStreamed _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2851,7 +2852,7 @@ object SparkEntry {
     // COPY INTO — idempotent landing-dir ingest (exactly
     // once per source file; re-runs no-op, incremental runs ingest
     // only fresh files); final cut ≡ the whole source
-    Gate("io_copy_into", sources.Io.copyIntoRead _, Oracle(
+    Gate("io_copy_into", IoGates.copyIntoRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2862,7 +2863,7 @@ object SparkEntry {
     // asserted in the builder) must reproduce the oracle's band
     // replays; bands are quarter/eighth spans off each dimension's
     // [min, max] (positive values, so Long `/` ≡ DuckDB `//`)
-    Gate("io_optimize_zorder", sources.Io.optimizeZorderRead _, Oracle(
+    Gate("io_optimize_zorder", IoGates.optimizeZorderRead _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2886,7 +2887,7 @@ object SparkEntry {
     // replaceWhere — the predicate-scoped overwrite's final
     // cut: purchases re-priced by the replacement batch, every other
     // region untouched (violating batch refused before this landed)
-    Gate("io_replace_where", sources.Io.replaceWhereRead _, Oracle(
+    Gate("io_replace_where", IoGates.replaceWhereRead _, Oracle(
       """WITH src AS (
         |  SELECT event_id, event_type AS typ,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2901,7 +2902,7 @@ object SparkEntry {
         |FROM m GROUP BY 1""".stripMargin)),
     // I20: restore — latest (v3, the rollback commit) serves the v1
     // cut with purchases back; v2 still serves the post-delete cut
-    Gate("io_restore", sources.Io.restoreRead _, Oracle(
+    Gate("io_restore", IoGates.restoreRead _, Oracle(
       """WITH src AS (
         |  SELECT event_type AS typ, event_id,
         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -2919,7 +2920,7 @@ object SparkEntry {
         |SELECT * FROM r3 UNION ALL SELECT * FROM r2""".stripMargin)),
     // I21: optimize — a pure layout commit: the packed v3 read serves
     // exactly the v2 cut (days ≤ 01-20, purchases COW-deleted)
-    Gate("io_optimize", sources.Io.optimizeRead _, Oracle(
+    Gate("io_optimize", IoGates.optimizeRead _, Oracle(
       """SELECT event_type AS typ, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS sum_cents,
@@ -2929,7 +2930,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin)),
     // I22: commit-stats data skipping — the pruned band read must
     // reproduce the raw source cut (IoSpec pins the actual skipping)
-    Gate("io_skipping", sources.Io.skippingRead _, Oracle(ioSkippingSql)),
+    Gate("io_skipping", IoGates.skippingRead _, Oracle(ioSkippingSql)),
     // F28: NFC normalization — decomposed e+U+0301 injected on both
     // sides must recompose identically; whitespace collapsed both sides
     Gate("text_normalize", text.TextAnalysis.textNormalize _, Oracle(
@@ -4054,12 +4055,11 @@ object SparkEntry {
     // engines produce identical doubles before the 1e-4 quantization
     Gate("promql_rate_extrap", ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("graft.promql.extrapolate", "true")
-      try promql.PromQl.eval(s, dir,
-        """increase({typ="click"}[1d])""", "2024-01-08 00:00:00")
-        .select(col("usr"), col("typ"),
-          (floor(col("value") * 1e4 + 0.5) / 1e4).as("inc_x"))
-      finally s.conf.unset("graft.promql.extrapolate")
+      Fixture.withConfs(s, "graft.promql.extrapolate" -> "true")(
+        promql.PromQl.eval(s, dir,
+          """increase({typ="click"}[1d])""", "2024-01-08 00:00:00")
+          .select(col("usr"), col("typ"),
+            (floor(col("value") * 1e4 + 0.5) / 1e4).as("inc_x")))
     }), Oracle(
       """WITH w AS (SELECT e.user_id, e.value, epoch_us(e.ts) AS us,
         |    e.event_id

@@ -35,10 +35,7 @@ object Rollup {
     * linked. The serving reads below go through the connector.
     */
   def tierRoot(spark: SparkSession, dir: String): String =
-    graft.Memo(spark, s"rollup.tiers:$dir",
-        (b: String) => graft.Memo.wipe(new java.io.File(b))) {
-      val base = graft.Memo.fresh(
-        "graft_rollup_" + Tables.fingerprint(s"$dir/events.parquet")).toString
+    graft.gates.Fixture.fresh(spark, dir, "graft_rollup") { base =>
       graft.sources.Io.tableAppendStats(
         buildHourTier(spark, dir)
           .repartitionByRange(3, col("h_sec")), s"$base/1h", "h_sec")
@@ -49,7 +46,6 @@ object Rollup {
       graft.sources.Io.tableAppendStats(
         dailyFromHours(readTier(spark, s"$base/1h"))
           .repartitionByRange(2, col("day_sec")), s"$base/1d", "day_sec")
-      base
     }
 
   /** A tier read THROUGH the DSv2 connector — the proof any vanilla

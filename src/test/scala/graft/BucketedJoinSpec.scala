@@ -65,7 +65,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val df = sources.Io.bucketedRead(spark, dir)
+      val df = gates.IoGates.bucketedRead(spark, dir)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),

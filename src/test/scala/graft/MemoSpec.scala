@@ -152,11 +152,11 @@ class MemoSpec extends AnyFunSuite {
   test("Caches.clear drops a streaming gate's sink table; the gate reruns") {
     def sinks = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_h12_")).toSet
-    val first = streaming.StreamOps.topkStreamed(spark, dir).collect().toSet
+    val first = gates.StreamGates.topkStreamed(spark, dir).collect().toSet
     assert(sinks.nonEmpty)
     Caches.clear()
     assert(sinks.isEmpty)
-    assert(streaming.StreamOps.topkStreamed(spark, dir).collect().toSet == first)
+    assert(gates.StreamGates.topkStreamed(spark, dir).collect().toSet == first)
   }
 
   test("io fixture: a second session's build leaves the first's table whole") {
@@ -173,20 +173,41 @@ class MemoSpec extends AnyFunSuite {
     assert(inA.collect().map(_.toSeq).toSet.nonEmpty)
   }
 
-  test("no hand-rolled memo maps under src/main outside graft/Memo.scala") {
+  private val root = new File("src/main/scala")
+
+  /** The main sources, but `except`. */
+  private def sources(except: String): Seq[File] = {
     def scala(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scala)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val root = new File("src/main/scala")
     val files = scala(root)
     assert(files.nonEmpty, s"no sources under ${root.getAbsolutePath}")
+    files.filter(_.getPath != new File(root, except).getPath)
+  }
+
+  test("no hand-rolled memo maps under src/main outside graft/Memo.scala") {
     val offenders = for {
-      f <- files if f.getPath != new File(root, "graft/Memo.scala").getPath
+      f <- sources(except = "graft/Memo.scala")
       src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       pat <- Seq("computeIfAbsent", "new java.util.concurrent.ConcurrentHashMap",
         "new ConcurrentHashMap") if src.contains(pat)
     } yield s"${f.getPath}: $pat"
     assert(offenders.isEmpty,
       "derived state belongs in the graft.Memo registry:\n" + offenders.mkString("\n"))
+  }
+
+  test("fixture directories come from graft/Memo.scala and catalogs are bound in graft/gates/Fixture.scala") {
+    // code lines only: a doc comment may show a catalog conf
+    def uses(pat: String)(f: File): Boolean =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n")
+        .exists(l => !l.trim.startsWith("*") && !l.trim.startsWith("/") && l.contains(pat))
+    val offenders =
+      sources(except = "graft/Memo.scala").filter(uses("createTempDirectory"))
+        .map(f => s"${f.getPath}: createTempDirectory") ++
+      sources(except = "graft/gates/Fixture.scala").filter(uses("\"spark.sql.catalog."))
+        .map(f => s"${f.getPath}: a spark.sql.catalog. conf")
+    assert(offenders.isEmpty,
+      "a fixture's directory is a graft.Memo one, and its catalog binding goes " +
+        "through graft.gates.Fixture.inCatalog:\n" + offenders.mkString("\n"))
   }
 }
