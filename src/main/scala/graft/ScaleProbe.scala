@@ -1,6 +1,6 @@
 package graft
 
-import graft.gates.Fixture.{inCatalog, withConfs}
+import graft.gates.Fixture.{catalog, withConfs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -344,11 +344,10 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      inCatalog(spark, rloDir.toString, s"$rloDir/wh") { c =>
-        t("rowlevel_update") {
-          spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
-            "WHERE event_id >= 5000 AND event_id < 15000")
-        }
+      val c = catalog(spark, rloDir.toString, s"$rloDir/wh")
+      t("rowlevel_update") {
+        spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
+          "WHERE event_id >= 5000 AND event_id < 15000")
       }
     }
     // round 13: the same fixed-band UPDATE through the MERGE-ON-READ
@@ -370,12 +369,11 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      inCatalog(spark, morDir.toString, s"$morDir/wh") { c =>
-        withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_update") {
-          spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
-            "WHERE event_id >= 5000 AND event_id < 15000")
-        })
-      }
+      val c = catalog(spark, morDir.toString, s"$morDir/wh")
+      withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_update") {
+        spark.sql(s"UPDATE $c.t SET cents = cents + 1 " +
+          "WHERE event_id >= 5000 AND event_id < 15000")
+      })
     }
     // round 14: BULK MOR delete — ~40% of every file matches, so the
     // over-threshold fallback (GraftDeltaWrite commit guard) must
@@ -396,12 +394,11 @@ object ScaleProbe {
           .repartitionByRange(32 * math.max(1, factor / 2),
             col("event_id")),
         tdir)
-      inCatalog(spark, mbDir.toString, s"$mbDir/wh") { c =>
-        withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_bulk_delete") {
-          spark.sql(s"DELETE FROM $c.t " +
-            "WHERE typ IN ('view', 'click') AND cents % 1 = 0")
-        })
-      }
+      val c = catalog(spark, mbDir.toString, s"$mbDir/wh")
+      withConfs(spark, "graft.dml.mode" -> "mor")(t("mor_bulk_delete") {
+        spark.sql(s"DELETE FROM $c.t " +
+          "WHERE typ IN ('view', 'click') AND cents % 1 = 0")
+      })
       val t2 = tdir
       val head = sources.Io.tableVersion(spark, t2)
       println(s"mor_bulk_delete: head v$head, dv dirs " +

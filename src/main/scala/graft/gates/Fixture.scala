@@ -14,28 +14,27 @@ import org.apache.spark.sql.functions._
   *    when the build returns) or in a `_done`-landed one that later
   *    JVMs reuse ([[landed]]);
   *  - the SQL catalog: a [[graft.sources.GraftCatalog]] is bound under a
-  *    name taken from the fixture directory ([[inCatalog]]). Spark keeps
+  *    name taken from the fixture directory ([[catalog]]). Spark keeps
   *    a catalog instance for the session's life, and the instance reads
   *    its warehouse once, so a name shared by two builds would send the
-  *    second build's SQL into the first one's directory;
-  *  - the session confs: set only while the build runs, then each
-  *    gets back the value it had ([[withConfs]]).
+  *    second build's SQL into the first one's directory. The binding,
+  *    like the instance, lasts the session's life;
+  *  - the other session confs: set only while the build runs, then
+  *    each gets back the value it had ([[withConfs]]).
   * The warehouse gates are data ([[Warehouse]]), run by [[warehouse]].
   */
 object Fixture {
 
-  private def fingerprint(dir: String, source: String): String =
-    Tables.fingerprint(s"$dir/$source")
-
   /** One fixture per (session, dataset): `build` fills a directory of
     * its own, `<prefix>_<fp>_<n>` (fp: the fingerprint of
-    * `dir/source`; see [[graft.Memo.fresh]]), which the registry holds
-    * and a clear deletes. Another session's build of the same gate
-    * lands in a directory of its own. */
-  def fresh(spark: SparkSession, dir: String, prefix: String,
-      source: String = "events.parquet")(build: String => Unit): String =
+    * `dir/events.parquet`; see [[graft.Memo.fresh]]), which the
+    * registry holds and a clear deletes. Another session's build of
+    * the same gate lands in a directory of its own. */
+  def fresh(spark: SparkSession, dir: String, prefix: String)(
+      build: String => Unit): String =
     Memo(spark, s"gates.$prefix:$dir", (p: String) => Memo.wipe(new File(p))) {
-      val p = Memo.fresh(s"${prefix}_${fingerprint(dir, source)}").toString
+      val fp = Tables.fingerprint(s"$dir/events.parquet")
+      val p = Memo.fresh(s"${prefix}_$fp").toString
       build(p)
       p
     }
@@ -47,7 +46,8 @@ object Fixture {
   def landed(spark: SparkSession, dir: String, prefix: String,
       source: String = "events.parquet")(build: String => Unit): String =
     Memo(spark, s"gates.$prefix:$dir") {
-      Memo.landed(prefix, fingerprint(dir, source))(b => build(b.toString)).toString
+      Memo.landed(prefix, Tables.fingerprint(s"$dir/$source"))(
+        b => build(b.toString)).toString
     }
 
   /** `body` given a directory of its own ([[graft.Memo.fresh]]), deleted
@@ -69,17 +69,24 @@ object Fixture {
     }
   }
 
-  /** `body` given the name of a GraftCatalog over `warehouse`, bound
-    * while it runs. The name is the fixture directory's, so no two
-    * builds share it. SQL resolves table names when a frame is made,
-    * so frames made in `body` stay readable after it. */
-  def inCatalog[T](spark: SparkSession, fixture: String,
-      warehouse: String)(body: String => T): T = {
-    val name = new File(fixture).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    withConfs(spark,
-      s"spark.sql.catalog.$name" -> "graft.sources.GraftCatalog",
-      s"spark.sql.catalog.$name.warehouse" -> warehouse)(body(name))
+  /** The name of a GraftCatalog over `warehouse`, bound in `spark`.
+    * The name is the fixture directory's ([[catalogName]]), so no two
+    * builds share it. The binding is not undone: Spark's
+    * CatalogManager keeps the instance it loads under a name for the
+    * session's life, and neither unsetting the conf nor a registry
+    * clear drops it, so the confs stay set with it. Each fixture
+    * directory thus adds one small catalog to the session. */
+  def catalog(spark: SparkSession, fixture: String, warehouse: String): String = {
+    val name = catalogName(fixture)
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    name
   }
+
+  /** The catalog name [[catalog]] binds for the fixture directory
+    * `fixture`. */
+  private def catalogName(fixture: String): String =
+    new File(fixture).getName.replaceAll("[^A-Za-z0-9_]", "_")
 
   /** The mode conf that switches SQL DML to merge-on-read deletion
     * vectors, with the copy-on-write fallback off: the gates that set
@@ -97,32 +104,29 @@ object Fixture {
     * `source` view (made from [[centsOf]]), the `sql` statements run
     * in order under `confs`, the invariants the built table `holds`,
     * and the `read` that answers the gate. In a statement, `{t}` is
-    * the table `g.<table>` of the bound catalog and `{src}` the view. */
+    * the table `g.ev` of the bound catalog and `{src}` the view. */
   final case class Warehouse(prefix: String, sql: Seq[String],
       read: Table => DataFrame,
       source: DataFrame => DataFrame = identity,
-      table: String = "ev",
       confs: Seq[(String, String)] = Nil,
       holds: Table => Unit = _ => ())
 
   /** The [[Warehouse]] gate `w` over the dataset at `dir`, built in a
-    * [[fresh]] warehouse. */
+    * [[fresh]] warehouse whose [[catalog]] stays bound for the read. */
   def warehouse(spark: SparkSession, dir: String, w: Warehouse): DataFrame = {
-    def table(wh: String)(c: String) =
-      Table(spark, s"$c.g.${w.table}", s"$wh/g/${w.table}")
+    def table(wh: String) = Table(spark, s"${catalogName(wh)}.g.ev", s"$wh/g/ev")
     val wh = fresh(spark, dir, w.prefix) { wh =>
-      inCatalog(spark, wh, wh) { c =>
-        val src = s"${c}_src"
-        w.source(centsOf(spark, dir)).createOrReplaceTempView(src)
-        try {
-          spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $c.g")
-          withConfs(spark, w.confs: _*)(w.sql.foreach(s => spark.sql(
-            s.replace("{t}", s"$c.g.${w.table}").replace("{src}", src))))
-        } finally spark.catalog.dropTempView(src)
-        w.holds(table(wh)(c))
-      }
+      val c = catalog(spark, wh, wh)
+      val src = s"${c}_src"
+      w.source(centsOf(spark, dir)).createOrReplaceTempView(src)
+      try {
+        spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $c.g")
+        withConfs(spark, w.confs: _*)(w.sql.foreach(s => spark.sql(
+          s.replace("{t}", s"$c.g.ev").replace("{src}", src))))
+      } finally spark.catalog.dropTempView(src)
+      w.holds(table(wh))
     }
-    inCatalog(spark, wh, wh)(c => w.read(table(wh)(c)))
+    w.read(table(wh))
   }
 
   /** The file entries versions `a` and `b` of the table at `t` share:

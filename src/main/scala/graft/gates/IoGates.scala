@@ -585,7 +585,7 @@ object IoGates {
     * delete from the raw source, so identifier-addressed DML is
     * content-checked end to end. */
   def catalogRead(spark: SparkSession, dir: String): DataFrame =
-    warehouse(spark, dir, Warehouse("graft_warehouse", table = "events_flat",
+    warehouse(spark, dir, Warehouse("graft_warehouse",
       sql = Seq("CREATE TABLE {t} (event_id BIGINT, typ STRING, cents BIGINT)",
         "INSERT INTO {t} SELECT * FROM {src}",
         "DELETE FROM {t} WHERE typ = 'view'"),
@@ -942,7 +942,6 @@ object IoGates {
     * API merge ≡ source replay. */
   def mergeSqlRead(spark: SparkSession, dir: String): DataFrame =
     warehouse(spark, dir, Warehouse("graft_msql_wh", source = clustered,
-      table = "ms",
       sql = Seq("CREATE TABLE {t} AS SELECT * FROM {src}",
         """MERGE INTO {t} AS tg USING (
           |  SELECT event_id, typ, cents + 100000 AS cents FROM {src}
@@ -981,7 +980,7 @@ object IoGates {
     * through the later delete: CTAS content + version isolation are
     * both content-checked. */
   def ctasRead(spark: SparkSession, dir: String): DataFrame =
-    warehouse(spark, dir, Warehouse("graft_ctas_wh", table = "events_flat",
+    warehouse(spark, dir, Warehouse("graft_ctas_wh",
       sql = Seq("CREATE TABLE {t} AS SELECT * FROM {src}",
         "DELETE FROM {t} WHERE typ = 'view'"),
       read = t => typeSummary(t.at(0L))))

@@ -766,16 +766,15 @@ object StreamGates extends Serializable {
       // redelivery: the whole change set is re-merged afterwards —
       // absolute row images make it a content no-op (one more
       // version, same cut)
-      inCatalog(spark, b, s"$b/wh") { c =>
-        applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, id) =>
-          batch.createOrReplaceTempView(s"__h34_src_$id")
-          s.sql(
-            s"""MERGE INTO $c.g.t AS tg USING __h34_src_$id AS src
-               |ON tg.event_id = src.event_id
-               |WHEN MATCHED THEN UPDATE SET *
-               |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-          ()
-        }
+      val c = catalog(spark, b, s"$b/wh")
+      applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, id) =>
+        batch.createOrReplaceTempView(s"__h34_src_$id")
+        s.sql(
+          s"""MERGE INTO $c.g.t AS tg USING __h34_src_$id AS src
+             |ON tg.event_id = src.event_id
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        ()
       }
     }
     typeSummary(latest(spark, s"$base/wh/g/t"))
@@ -871,9 +870,10 @@ object StreamGates extends Serializable {
       require(Io.dvDirsOf(spark, table, 2L).nonEmpty,
         s"fixture at $table must carry DVs at v2")
       // v3: MOR UPDATE through the catalog — pre/post-image pairing
-      inCatalog(spark, base, s"$base/wh")(c => withConfs(spark, mor: _*)(
+      val c = catalog(spark, base, s"$base/wh")
+      withConfs(spark, mor: _*)(
         spark.sql(s"UPDATE $c.g.ev SET cents = cents + 100000 " +
-          "WHERE typ = 'purchase' AND event_id % 5 = 0")))
+          "WHERE typ = 'purchase' AND event_id % 5 = 0"))
       val feed = spark.readStream.format("graft")
         .option("readChangeFeed", "true").load(table)
         .groupBy(col("_change_type").as("change_type"), col("typ"))
@@ -956,19 +956,18 @@ object StreamGates extends Serializable {
         .coalesce(1).write.mode("append").parquet(landing)
       // redelivery: re-apply the WHOLE instruction set — absolute SET
       // expressions make it a content no-op (more versions, same cut)
-      inCatalog(spark, b, s"$b/wh") { c =>
-        applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, _) =>
-          // instruction batches are 1-row files — the collect is the
-          // CDC-instruction envelope, never data-scale. Values bind as
-          // NAMED PARAMETERS: instruction payloads must never be
-          // string-interpolated into SQL
-          batch.collect().foreach { r =>
-            s.sql(s"UPDATE $c.g.t SET cents = " +
-              "event_id % :mult + :add WHERE typ = :typ",
-              Map("mult" -> r.getAs[Long]("mult"),
-                "add" -> r.getAs[Long]("add"),
-                "typ" -> r.getAs[String]("typ")))
-          }
+      val c = catalog(spark, b, s"$b/wh")
+      applyIdempotent(spark, landing, s"$b/ckpt", table) { (s, batch, _) =>
+        // instruction batches are 1-row files — the collect is the
+        // CDC-instruction envelope, never data-scale. Values bind as
+        // NAMED PARAMETERS: instruction payloads must never be
+        // string-interpolated into SQL
+        batch.collect().foreach { r =>
+          s.sql(s"UPDATE $c.g.t SET cents = " +
+            "event_id % :mult + :add WHERE typ = :typ",
+            Map("mult" -> r.getAs[Long]("mult"),
+              "add" -> r.getAs[Long]("add"),
+              "typ" -> r.getAs[String]("typ")))
         }
       }
     }

@@ -208,6 +208,6 @@ class MemoSpec extends AnyFunSuite {
         .map(f => s"${f.getPath}: a spark.sql.catalog. conf")
     assert(offenders.isEmpty,
       "a fixture's directory is a graft.Memo one, and its catalog binding goes " +
-        "through graft.gates.Fixture.inCatalog:\n" + offenders.mkString("\n"))
+        "through graft.gates.Fixture.catalog:\n" + offenders.mkString("\n"))
   }
 }
